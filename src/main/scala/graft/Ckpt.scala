@@ -142,10 +142,18 @@ object Ckpt {
     * `spark.graft.superstep.rowsPerPartition` (default 250k rows ≈
     * 4-8 MB of narrow long columns) is the scale knob: at bench SFs it
     * yields single-digit partition counts, at 100 TB it grows linearly
-    * with the data — never a constant tuned to either. */
+    * with the data — never a constant tuned to either. The conf wins
+    * over the `SPARK_GRAFT_SUPERSTEP_ROWS` environment variable; a value
+    * that is not a positive integer fails here, naming its key. */
   def partsFor(s: org.apache.spark.sql.SparkSession, rows: Long): Int = {
-    val per = s.conf.get("spark.graft.superstep.rowsPerPartition",
-      sys.env.getOrElse("SPARK_GRAFT_SUPERSTEP_ROWS", "250000")).toLong
+    val confKey = "spark.graft.superstep.rowsPerPartition"
+    val envKey = "SPARK_GRAFT_SUPERSTEP_ROWS"
+    val (key, raw) = s.conf.getOption(confKey).map(confKey -> _)
+      .orElse(sys.env.get(envKey).map(envKey -> _))
+      .getOrElse(confKey -> "250000")
+    val per = raw.toLongOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a positive row count, got '$raw'"))
     math.max(1L, math.min((rows + per - 1) / per, 1L << 18)).toInt
   }
 

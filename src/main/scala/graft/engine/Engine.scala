@@ -54,13 +54,12 @@ object Engine {
   }
 
   /** One call-procedure hoist: the 2·|E| undirected src-partitioned
-    * edge frame with its measured row count, plus (built on first
-    * bfs/sssp use) the pinned distinct-endpoint spine universe and ITS
-    * count — the volume input for the loops' partition sizing
-    * ([[graft.Ckpt.partsFor]]) and the per-call spine base (an |V|-
-    * scale union instead of re-running the |E|-scale distinct every
-    * call). */
-  private[engine] final class Hoist(val ue: org.apache.spark.sql.DataFrame, val nUe: Long) {
+    * edge frame, plus (built on first bfs/sssp use) the pinned
+    * distinct-endpoint spine universe and its count — the volume input
+    * for the loops' partition sizing ([[graft.Ckpt.partsFor]]) and the
+    * per-call spine base (an |V|-scale union instead of re-running the
+    * |E|-scale distinct every call). */
+  private[engine] final class Hoist(val ue: org.apache.spark.sql.DataFrame) {
     lazy val endpoints: org.apache.spark.sql.DataFrame = graft.Ckpt.pinned(
       ue.select(org.apache.spark.sql.functions.col("dst").as("id")).distinct())
     lazy val nEndpoints: Long = endpoints.count()
@@ -553,39 +552,29 @@ object Engine {
         .getOrElse(spark.range(0).select(col("id").as("src"), col("id").as("dst")))
       // Loop-invariant frames are hoisted, REPARTITIONED BY THE PER-
       // SUPERSTEP JOIN KEY and materialized once before the iterative
-      // loops — the library discipline (GraphAlgos fixedPageRank's
-      // Ckpt.eagerPartitioned(edge.repartition(src))). Left lazy, every
-      // superstep would re-derive the edge union from the per-relation
-      // frames (a storage re-scan) AND re-exchange it for the join —
-      // measured 2× vs the library twins on the same graph (VERDICT
-      // r12), and at 100 TB the gap is supersteps×|E| of avoidable
-      // shuffle. Pinned (AQE off for the materialization) so the
-      // checkpoint reports the concrete hash partitioning instead of
-      // UnknownPartitioning.
+      // loops — the library discipline (GraphAlgos undirectedEdges).
+      // Left lazy, every superstep would re-derive the edge union from
+      // the per-relation frames (a storage re-scan) AND re-exchange it
+      // for the join — measured 2× vs the library twins on the same
+      // graph (VERDICT r12), and at 100 TB the gap is supersteps×|E| of
+      // avoidable shuffle. Pinned (AQE off for the materialization) so
+      // the checkpoint reports the concrete hash partitioning instead
+      // of UnknownPartitioning.
       //
-      // Round 18: the hoist is MEMOIZED per (session, relScope, graph
-      // edge-map identity) — the loader returns one PropertyGraph
-      // instance per (session, dir), so the 13+ whole-graph bridge
-      // queries in a bench session share ONE 2|E| hoist (the library's
-      // undirectedEdges discipline) instead of each paying the build
-      // shuffle + checkpoint. A MUTATED graph is a new map instance and
-      // re-hoists; the superseded pin for the same (session, scope) key
-      // is dropped on replacement, so a mutate-call-mutate program holds
-      // at most one pinned frame per scope (sessions are single-threaded
-      // per the Ckpt.confGate contract, so the evicted frame has no
-      // in-flight reader). Callers must NOT drop the returned frame.
+      // The hoist is MEMOIZED per (session, relScope, graph edge-map
+      // identity) — see [[Engine.ueHoists]] for the lifetime: the
+      // whole-graph bridge queries of a bench session share ONE 2|E|
+      // hoist, and a mutated graph is a new map instance with its own
+      // hoist. Callers must NOT drop the returned frame.
       def hoistUndirected(): Engine.Hoist =
         Engine.hoistMemo.synchronized {
           Engine.ueHoists.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
           val key = (spark, relScope.getOrElse(""),
             new Engine.GraphKey(st.graph.edges))
-          Engine.ueHoists.getOrElseUpdate(key, {
-            val df = graft.Ckpt.pinned(
-              allEdges.unionByName(
-                allEdges.select(col("dst").as("src"), col("src").as("dst")))
-                .repartition(col("src")))
-            new Engine.Hoist(df, df.count())
-          })
+          Engine.ueHoists.getOrElseUpdate(key, new Engine.Hoist(graft.Ckpt.pinned(
+            allEdges.unionByName(
+              allEdges.select(col("dst").as("src"), col("src").as("dst")))
+              .repartition(col("src")))))
         }
       // |V|, memoized per (session, graph version) — the volume input
       // for the |V|-scale bridge loops' partition sizing (guide §2)
@@ -599,75 +588,24 @@ object Engine {
         case other   => throw new IllegalStateException(s"$what arg: $other")
       }
       // Shared by triangles() and clustering(): per-node triangle
-      // counts and pair-degrees over the canonical undirected pair set,
-      // enumerated with the DEGREE-ORDERED orientation (each pair
-      // points from its lower-(degree, id) endpoint — every triangle
-      // produced once, wedge fan-out O(sqrt(m)) even on hubs; the
-      // library g_triangles shape). The |V|-scale degree table and
-      // |E|-scale oriented list are broadcast UNDER THE MEASURED-COUNT
-      // GATE ([[graft.Bcast]], VERDICT r15): the pair frame is cached
-      // and counted once up front (the count pays for itself — every
-      // leg used to re-derive the pair distinct), and on a graph whose
-      // edge list outgrows the cap the hints drop — the plan degrades
-      // to SMJ, still correct, never an executor-OOM broadcast. Counts
-      // are materialized NOW (pinned — the [[Engine.triHoists]] memo
-      // value, shared by triangles() and clustering() across calls) so
-      // the |E|-scale intermediates can be unpersisted immediately.
+      // counts and pair-degrees over the scoped canonical undirected
+      // pair set (the library triangleCounts build), pinned as the
+      // [[Engine.triHoists]] memo value.
       def pairTriangleCounts(): (DataFrame, DataFrame) =
         Engine.hoistMemo.synchronized {
           Engine.triHoists.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
           Engine.triHoists.getOrElseUpdate(
-            (spark, relScope.getOrElse(""), new Engine.GraphKey(st.graph.edges)),
-            pairTriangleCountsUncached())
+            (spark, relScope.getOrElse(""), new Engine.GraphKey(st.graph.edges)), {
+              val (counts, deg, cached) = graft.operators.GraphAlgos.triangleCounts(
+                allEdges.select(least(col("src"), col("dst")).as("a"),
+                  greatest(col("src"), col("dst")).as("b"))
+                  .filter(col("a") =!= col("b")).distinct())
+              val out = (graft.Ckpt.pinned(counts), graft.Ckpt.pinned(deg))
+              graft.Ckpt.drop(deg)
+              cached.foreach(_.unpersist(false))
+              out
+            })
         }
-
-      def pairTriangleCountsUncached(): (DataFrame, DataFrame) = {
-        val pairs = allEdges
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .filter(col("a") =!= col("b")).distinct().cache()
-        val m = pairs.count()
-        // materialized (ADVICE r16): deg feeds the keyed orientation
-        // TWICE here and outlives pairs.unpersist below in the
-        // `clustering` branch — an unmaterialized plan would re-run the
-        // |E|-scale distinct pair self-join to rebuild this |V|-scale
-        // table. PINNED (round 19): the frame is one half of the
-        // [[Engine.triHoists]] memo value, so it must survive the
-        // harness drain for the session lifetime.
-        val deg = graft.Ckpt.pinned(
-          pairs.select(col("a").as("id"))
-            .union(pairs.select(col("b").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("d")))
-        // gated on the MEASURED |V| (free off the checkpoint — round
-        // 17): the old 2·|E| bound was ~100× the real count and under
-        // the cell cap would degrade a 20k-row broadcast at sf0.1
-        val nDeg = deg.count()
-        val keyed = pairs
-          .join(graft.Bcast.gated(
-            deg.select(col("id").as("a"), col("d").as("da")), nDeg), Seq("a"))
-          .join(graft.Bcast.gated(
-            deg.select(col("id").as("b"), col("d").as("db")), nDeg), Seq("b"))
-        val aFirst = col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b"))
-        val o = keyed.select(
-          when(aFirst, col("a")).otherwise(col("b")).as("src"),
-          when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-          when(aFirst, col("db")).otherwise(col("da")).as("ddst")).cache()
-        val wedgeOrder = col("e1.ddst") < col("e2.ddst") ||
-          (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))
-        val tri = o.as("e1")
-          .join(graft.Bcast.gated(o.as("e2"), m),
-            col("e1.src") === col("e2.src") && wedgeOrder)
-          .select(col("e1.src").as("u"), col("e1.dst").as("v"), col("e2.dst").as("w"))
-          .join(graft.Bcast.gated(o.select(col("src").as("v"), col("dst").as("w")), m),
-            Seq("v", "w"), "left_semi")
-        val counts = graft.Ckpt.pinned(
-          tri.select(explode(array(col("u"), col("v"), col("w"))).as("id"))
-            .groupBy("id").agg(count(lit(1)).as("n_tri")))
-        o.unpersist(false)
-        pairs.unpersist(false)
-        (counts, deg)
-      }
       val table: DataFrame = proc match {
         case "degree" =>
           // out/in degree over EVERY relation type; isolated nodes
@@ -681,71 +619,18 @@ object Engine {
               coalesce(col("od"), lit(0L)).as(cols(1)),
               coalesce(col("ind"), lit(0L)).as(cols(2)))
         case "cc" =>
-          // delta min-label propagation to the fixed point (the
-          // library deltaCC's recurrence; comp = component min id).
-          // Diameter-bound loop with the usual loud non-convergence.
-          val ue = hoistUndirected().ue
-          // NOT partition-shrunk (round 19): unlike the frontier-delta
-          // loops, every superstep here joins the FULL |V| label frame
-          // against the compute-width edge hoist — shrinking the label
-          // side adds a full-|V| re-exchange per superstep to meet the
-          // hoist (measured +10s at sf0.1), and the r18 scaling data
-          // shows this loop was volume-bound (ratio 1.03), not
-          // overhead-bound.
-          var labels = graft.Ckpt.eager(allNodes.select(col("id"), col("id").as("comp")))
-          var converged = false
-          var stepN = 0
-          val maxIters = 20
-          while (stepN < maxIters && !converged) {
-            stepN += 1
-            val mins = ue.join(labels, ue("src") === labels("id"))
-              .select(ue("dst").as("id"), col("comp").as("cand"))
-              .groupBy("id").agg(min("cand").as("cand"))
-            val joined = graft.Ckpt.deferredPartitioned(
-              labels.join(mins, Seq("id"), "left"))
-            val changed = joined.filter(col("cand") < col("comp")).count()
-            val next = joined.select(col("id"),
-              least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"))
-            graft.Ckpt.drop(labels)
-            labels = next
-            converged = changed == 0L
-          }
-          require(converged, s"call cc(): not converged after $maxIters supersteps")
+          // component labels (comp = component min id) — the library
+          // deltaCC, diameter-bound at 20 supersteps with the usual
+          // loud non-convergence
+          val (labels, _) = graft.operators.GraphAlgos.deltaCC(
+            allNodes, hoistUndirected().ue, maxIters = 20,
+            graft.Ckpt.partsFor(spark, nNodes()))
           labels.select(col("id").as(cols(0)), col("comp").as(cols(1)))
         case "pagerank" =>
-          // the analytics library's fixed-point INTEGER PageRank
-          // recurrence (8 iterations, rank0 = 1e9, damping 0.85 in
-          // exact integer arithmetic: 150000000 + 85·Σ/100) over the
-          // graph's full edge set — deterministic, so oracle-checkable
-          // edge list FUSED with its out-degree (one static join, not
-          // one per iteration) and pre-placed on the probe key; nodes
-          // pre-partitioned by id so the per-iteration left join and
-          // the next round's probe both reuse the placement — the only
-          // per-superstep shuffle left is the contribution aggregation
-          // itself (the irreducible PageRank shuffle).
-          val od = allEdges.groupBy(col("src"))
-            .agg(count(lit(1)).as("od"))
-          val ed = graft.Ckpt.eagerPartitioned(
-            allEdges.join(od, Seq("src")).repartition(col("src")))
-          val nodesP = graft.Ckpt.eagerPartitioned(
-            allNodes.repartition(col("id")))
-          var rank = graft.Ckpt.eager(
-            nodesP.select(col("id"), lit(1000000000L).as("rank")))
-          for (_ <- 1 to 8) {
-            val contrib = ed.join(rank.withColumnRenamed("id", "src"), Seq("src"))
-              .select(col("dst").as("id"),
-                expr("rank div od").as("c"))
-              .groupBy("id").agg(sum(col("c")).as("s"))
-            val next = graft.Ckpt.eagerPartitioned(
-              nodesP.join(contrib, Seq("id"), "left")
-                .select(col("id"),
-                  (lit(150000000L) + expr("85 * coalesce(s, 0) div 100")).as("rank")))
-            graft.Ckpt.drop(rank)
-            rank = next
-          }
-          graft.Ckpt.drop(ed)
-          graft.Ckpt.drop(nodesP)
-          rank.select(col("id").as(cols(0)), col("rank").as(cols(1)))
+          // the library's fixed-point integer PageRank (8 iterations)
+          // over the scoped DIRECTED edge set
+          graft.operators.GraphAlgos.pageRank(allNodes, allEdges, iters = 8)
+            .select(col("id").as(cols(0)), col("rank").as(cols(1)))
         case "bfs" =>
           // undirected hop distances from the literal source id —
           // one-job-per-superstep spine loop (round 18; algorithm +
@@ -805,55 +690,11 @@ object Engine {
             graft.Ckpt.partsFor(spark, hoist.nEndpoints))
           dists.select(col("id").as(cols(0)), col("d").as(cols(1)))
         case "kcore" =>
-          // iterative k-core peel (the library g_kcore recurrence, k as
-          // the call argument): each round degrees the surviving edges
-          // (co-partitioned groupBy — the hoisted frame stays src-
-          // partitioned the whole loop), keeps nodes with >= k
-          // neighbors, filters edges to alive×alive (src side
-          // co-partitioned semi, dst side broadcast semi). Early exit
-          // on an unchanged alive count (the peel is monotone ⊇).
-          val k = intArg("kcore")
-          val ue = hoistUndirected().ue
-          var edges: DataFrame = ue
-          var nAlive = -1L
-          var converged = false
-          var stepN = 0
-          val maxIters = 12
-          var result: DataFrame = null
-          while (stepN < maxIters && !converged) {
-            stepN += 1
-            val deg = edges.groupBy("src").agg(count(lit(1)).as("c"))
-            val alive = graft.Ckpt.deferredPartitioned(
-              deg.filter(col("c") >= k).select(col("src").as("id")))
-            val n = alive.count()
-            if (n == nAlive) {
-              converged = true
-              // deg this round is over edges among the PREVIOUS alive
-              // set, which just proved equal to the current one — the
-              // in-core degrees
-              result = graft.Ckpt.eager(
-                deg.filter(col("c") >= k)
-                  .select(col("src").as(cols(0)), col("c").as(cols(1))))
-              graft.Ckpt.drop(alive)
-            } else {
-              nAlive = n
-              // dst side: alive is |V|-scale on the FIRST rounds (every
-              // endpoint), shrinking as the peel proceeds — the round's
-              // edge filter is the SHARED library helper (VERDICT r16:
-              // one conf, one gate — the old hard-coded 4M literal here
-              // could drift from the library twin's cap), so the
-              // broadcast hint rides the measured-count cell gate and
-              // degrades to the shuffled form past it.
-              val next = graft.Ckpt.eagerPartitioned(
-                graft.operators.GraphAlgos.kcoreAliveFilter(edges, alive, n))
-              if (edges ne ue) graft.Ckpt.drop(edges)
-              edges = next
-              graft.Ckpt.drop(alive)
-            }
-          }
-          if (edges ne ue) graft.Ckpt.drop(edges)
-          require(converged, s"call kcore(): not converged after $maxIters rounds")
-          result
+          // the library k-core peel, k as the call argument: in-core
+          // degrees of the k-core's nodes
+          graft.operators.GraphAlgos.kcore(hoistUndirected().ue, intArg("kcore"),
+            maxIters = 12)
+            .select(col("id").as(cols(0)), col("c").as(cols(1)))
         case "triangles" =>
           // per-node triangle counts (see pairTriangleCounts);
           // zero-participation nodes surface with 0
@@ -932,81 +773,17 @@ object Engine {
           val labels = graft.operators.GraphAlgos.coloringSCC(allNodes, allEdges)
           labels.select(col("id").as(cols(0)), col("scc").as(cols(1)))
         case "hits" =>
-          // Kleinberg HITS (round 15): 8 two-phase power iterations in
-          // max-normalized 1e6 fixed point — the library g_hits
-          // recurrence over the scoped edge set. Both orientation
-          // copies of the loop-invariant edge frame are hoisted once;
-          // each phase's max-rescale probe materializes its DEFERRED
-          // checkpoint (one job per phase). max(1, …) keeps an empty
-          // scoped edge set at all-zero scores instead of a div/0.
-          val eS = graft.Ckpt.eagerPartitioned(allEdges.repartition(col("src")))
-          val eD = graft.Ckpt.eagerPartitioned(allEdges.repartition(col("dst")))
-          val nodesP = graft.Ckpt.eagerPartitioned(allNodes.repartition(col("id")))
-          var hub: DataFrame = nodesP.select(col("id"), lit(1000000L).as("hub"))
-          var auth: DataFrame = null
-          var prevA: DataFrame = null
-          var prevH: DataFrame = null
-          for (_ <- 1 to 8) {
-            val araw = graft.Ckpt.deferredPartitioned(
-              nodesP.join(
-                eS.join(hub.withColumnRenamed("id", "src"), Seq("src"))
-                  .groupBy(col("dst").as("id")).agg(sum("hub").as("s")),
-                Seq("id"), "left")
-                .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-            val mA = math.max(1L, araw.agg(max("r")).head.getLong(0))
-            if (prevA != null) graft.Ckpt.drop(prevA)
-            prevA = araw
-            auth = araw.select(col("id"), expr(s"r * 1000000L div ${mA}L").as("auth"))
-            val hraw = graft.Ckpt.deferredPartitioned(
-              nodesP.join(
-                eD.join(auth.withColumnRenamed("id", "dst"), Seq("dst"))
-                  .groupBy(col("src").as("id")).agg(sum("auth").as("s")),
-                Seq("id"), "left")
-                .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-            val mH = math.max(1L, hraw.agg(max("r")).head.getLong(0))
-            if (prevH != null) graft.Ckpt.drop(prevH)
-            prevH = hraw
-            hub = hraw.select(col("id"), expr(s"r * 1000000L div ${mH}L").as("hub"))
-          }
-          graft.Ckpt.drop(eS)
-          graft.Ckpt.drop(eD)
-          auth.join(hub, Seq("id"))
+          // the library HITS (8 fixed-point iterations) over the scoped
+          // DIRECTED edge set
+          graft.operators.GraphAlgos.hits(allNodes, allEdges, iters = 8)
             .select(col("id").as(cols(0)), col("auth").as(cols(1)),
               col("hub").as(cols(2)))
         case "labelprop" =>
-          // synchronous label propagation communities (round 15): every
-          // node simultaneously adopts the (most-frequent, then
-          // smallest) label of its CLOSED neighborhood (self-inclusion
-          // — own label counts once; pure neighbor-mode LPA oscillates
-          // wholesale on this multipartite graph) each round, for a
-          // FIXED 6 rounds — the library labelProp recurrence
-          // (GraphAlgos.lpIters; synchronous LPA has no convergence
-          // guarantee, so the fixed-round snapshot IS the semantics).
-          // Isolated/unscoped nodes keep their own id label (singleton
-          // communities). Per superstep: one (node,label) count shuffle
-          // over the message stream + the label-count-sized argmax
-          // re-key; the argmax covers every node (self leg), so there
-          // is no carry-over merge join, and labels come out hash-
-          // partitioned by id for the next round's message join.
-          val ue = hoistUndirected().ue
-          // NOT partition-shrunk (round 19): full-|V| label frame joins
-          // the hoist every round — see the cc() note above
-          var labels = graft.Ckpt.eagerPartitioned(
-            allNodes.select(col("id"), col("id").as("lbl"))
-              .repartition(col("id")))
-          for (_ <- 1 to 6) {
-            val msgs = ue.join(labels, ue("src") === labels("id"))
-              .select(ue("dst").as("id"), col("lbl"))
-              .unionByName(labels)
-            val next = graft.Ckpt.eagerPartitioned(
-              msgs.groupBy("id", "lbl").agg(count(lit(1)).as("cnt"))
-                .groupBy("id")
-                .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
-                .select(col("id"), col("m.l").as("lbl")))
-            graft.Ckpt.drop(labels)
-            labels = next
-          }
-          labels.select(col("id").as(cols(0)), col("lbl").as(cols(1)))
+          // the library synchronous LPA (fixed lpIters rounds); isolated
+          // or unscoped nodes keep their own id label
+          graft.operators.GraphAlgos.labelProp(allNodes, hoistUndirected().ue,
+            graft.operators.GraphAlgos.lpIters)
+            .select(col("id").as(cols(0)), col("lbl").as(cols(1)))
         case other =>
           throw new IllegalStateException(s"unreachable: unknown procedure $other")
       }

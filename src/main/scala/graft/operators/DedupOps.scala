@@ -978,13 +978,7 @@ object DedupOps {
     * (the backstop — the DuckDB oracle replays a fixed unrolling, so a
     * silent under-convergence would hash-match).
     *
-    * Same delta shape as GraphAlgos.deltaCC: only labels that DECREASED
-    * last superstep send messages (a neighbor unchanged since round r
-    * already contributed its value in round r+1, and labels only
-    * decrease — per-round labels are provably identical to full
-    * propagation), one deferred checkpoint per superstep whose
-    * convergence-probe count is the materializing job, previous
-    * checkpoint released as soon as the next materializes. Supersteps
+    * The loop is [[GraphAlgos.deltaCC]] over the pair graph. Supersteps
     * scale with CLUSTER diameter — dup clusters are near-cliques plus
     * short chains, so this converges in a handful of rounds regardless
     * of corpus size; a pathological long-chain corpus at 100 TB would
@@ -992,44 +986,17 @@ object DedupOps {
     * diameter) over the same pair frame. PipelineSpec pins an 11-hop
     * chain the fixed-depth loop would have aborted on. */
   private[graft] def dupClusterLabels(pairs: DataFrame, maxIters: Int): DataFrame = {
-    val und = pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
-    var prev: DataFrame = graft.Ckpt.eager(
-      pairs.select(col("a").as("doc_id"))
-        .union(pairs.select(col("b").as("doc_id"))).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster")))
-    // Round 19 (guide §2): per-superstep frames are bounded by the
-    // clustered-doc count (counted free off the checkpoint just
-    // materialized), so the loop's exchanges and checkpoints run at a
-    // volume-derived partition count instead of the session default —
-    // dup-pair frames are tiny next to the corpus.
-    graft.Ckpt.withShuffle(pairs.sparkSession,
-      graft.Ckpt.partsFor(pairs.sparkSession, prev.count())) {
-    var labels = prev
-    var changed = labels
-    var converged = false
-    var step = 0
-    while (step < maxIters && !converged) {
-      step += 1
-      val msgs = und.join(changed, und("a") === changed("doc_id"))
-        .select(und("b").as("doc_id"), col("cluster").as("cand"))
-        .groupBy("doc_id").agg(min("cand").as("cand"))
-      val joined = graft.Ckpt.deferredPartitioned(
-        labels.join(msgs, Seq("doc_id"), "left"))
-      // this count is the superstep's ONLY job: it materializes the
-      // deferred checkpoint AND is the convergence probe
-      val nChanged = joined.filter(col("cand") < col("cluster")).count()
-      graft.Ckpt.drop(prev)
-      prev = joined
-      labels = joined.select(col("doc_id"),
-        least(col("cluster"), coalesce(col("cand"), col("cluster"))).as("cluster"))
-      changed = joined.filter(col("cand") < col("cluster"))
-        .select(col("doc_id"), col("cand").as("cluster"))
-      converged = nChanged == 0L
-    }
-    require(converged,
-      s"dup clusters not converged after $maxIters supersteps")
-    labels
-    }
+    val docs = graft.Ckpt.eager(
+      pairs.select(col("a").as("id")).union(pairs.select(col("b").as("id"))).distinct())
+    val und = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    // per-superstep frames are bounded by the clustered-doc count
+    // (counted off the checkpoint just materialized) — dup-pair frames
+    // are tiny next to the corpus
+    val (labels, _) = GraphAlgos.deltaCC(docs, und, maxIters,
+      graft.Ckpt.partsFor(pairs.sparkSession, docs.count()))
+    graft.Ckpt.drop(docs)
+    labels.select(col("id").as("doc_id"), col("comp").as("cluster"))
   }
 
   /** `(doc_id, band, bh)` LSH band table of a shingle index: the 16-hash

@@ -301,51 +301,62 @@ object GraphAlgos {
   private def fixedPageRank(s: SparkSession, dir: String): DataFrame = memoLock.synchronized {
     prFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
     prFrames.getOrElseUpdate((s, dir), {
-      // Loop-invariant precomputation, partitioned by the per-step join
-      // key: the edge list FUSED with its out-degree (one static join
-      // instead of one per iteration), materialized once. Nodes are
-      // pre-partitioned by id — the checkpoint preserves the
-      // partitioning, so the per-iteration nodes⟕contribs join and the
-      // next round's ed⨝ranks probe both reuse it instead of
-      // re-shuffling the node set every superstep (the only per-step
-      // shuffle left is the contribution aggregation itself — the
-      // irreducible PageRank shuffle).
-      val e0 = allEdges(s, dir)
-      val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      // eagerPartitioned: a plain eager checkpoint under AQE reports
-      // UnknownPartitioning, so every per-iteration join would RE-SHUFFLE
-      // the loop-invariant frames the repartition exists to pre-place
-      val ed = Ckpt.eagerPartitioned(e0.join(outdeg, Seq("src")).repartition(col("src")))
-      // NOT partition-shrunk (round 19): every iteration joins the FULL
-      // |V| rank frame against the compute-width `ed` — shrinking the
-      // rank side adds a full-|V| re-exchange per iteration to meet it
-      // (measured; r18 scaling ratio 0.93 — volume-bound, not
-      // overhead-bound, unlike the frontier-delta loops).
-      val nodes = Ckpt.eagerPartitioned(allNodes(s, dir).repartition(col("id")))
-      var ranks = nodes.select(col("id"), lit(1000000000L).as("rank"))
-      var prev: DataFrame = null
-      for (i <- 1 to prIters) {
-        val contribs = ed
-          .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("dst").as("id"), expr("rank div d").as("c"))
-          .groupBy("id").agg(sum("c").as("s"))
-        ranks = nodes.join(contribs, Seq("id"), "left")
-          .select(col("id"),
-            expr("150000000L + (85 * coalesce(s, 0L)) div 100").as("rank"))
-        if (i % 4 == 0 && i < prIters) {
-          ranks = Ckpt.eagerPartitioned(ranks) // keeps the id partitioning live
-          if (prev != null) Ckpt.drop(prev)
-          prev = ranks
-        }
-      }
-      // Final ranks are pinned (session-lifetime cache); the loop's
-      // intermediate checkpoints and invariant frames are released.
+      // re-pinned OUTSIDE the drain ledger (session-lifetime cache), the
+      // [[lpaLabels]] discipline
+      val ranks = pageRank(allNodes(s, dir), allEdges(s, dir), prIters)
       val out = Ckpt.pinned(ranks)
-      if (prev != null) Ckpt.drop(prev)
-      Ckpt.drop(ed)
-      Ckpt.drop(nodes)
+      Ckpt.drop(ranks)
       out
     })
+  }
+
+  /** Fixed-point integer PageRank over a DIRECTED (src,dst) edge frame:
+    * `iters` power iterations from rank0 = 1e9, contributions
+    * `rank div outdeg`, damping `150000000 + (85·Σ) div 100` — all
+    * int64, so every engine computes bit-equal ranks; dangling mass is
+    * dropped. Returns (id, rank) for every node as a materialized
+    * checkpoint on the drain ledger. Shared by g_pagerank and
+    * `call pagerank()`.
+    *
+    * Loop-invariant precomputation, partitioned by the per-step join
+    * key: the edge list FUSED with its out-degree (one static join
+    * instead of one per iteration), materialized once. Nodes are
+    * pre-partitioned by id — the checkpoint preserves the partitioning,
+    * so the per-iteration nodes⟕contribs join and the next round's
+    * ed⨝ranks probe both reuse it instead of re-shuffling the node set
+    * every superstep (the only per-step shuffle left is the
+    * contribution aggregation itself — the irreducible PageRank
+    * shuffle). Every full |V| rank frame joins the compute-width `ed`,
+    * so the loop runs at session width: shrinking the rank side adds a
+    * full-|V| re-exchange per iteration to meet it. */
+  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    // eagerPartitioned: a plain eager checkpoint under AQE reports
+    // UnknownPartitioning, so every per-iteration join would RE-SHUFFLE
+    // the loop-invariant frames the repartition exists to pre-place
+    val ed = Ckpt.eagerPartitioned(edges.join(outdeg, Seq("src")).repartition(col("src")))
+    val nodesP = Ckpt.eagerPartitioned(nodes.repartition(col("id")))
+    var ranks = nodesP.select(col("id"), lit(1000000000L).as("rank"))
+    var prev: DataFrame = null
+    for (i <- 1 to iters) {
+      val contribs = ed
+        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+        .select(col("dst").as("id"), expr("rank div d").as("c"))
+        .groupBy("id").agg(sum("c").as("s"))
+      ranks = nodesP.join(contribs, Seq("id"), "left")
+        .select(col("id"),
+          expr("150000000L + (85 * coalesce(s, 0L)) div 100").as("rank"))
+      // lineage cut every 4th iteration and at the end; the id
+      // partitioning stays live through the checkpoint
+      if (i % 4 == 0 || i == iters) {
+        ranks = Ckpt.eagerPartitioned(ranks)
+        if (prev != null) Ckpt.drop(prev)
+        prev = ranks
+      }
+    }
+    Ckpt.drop(ed)
+    Ckpt.drop(nodesP)
+    ranks
   }
 
   // ---- shared oracle SQL fragments (mirror GraphLoader's id scheme) ----
@@ -569,19 +580,64 @@ object GraphAlgos {
   private val kcoreK = 3
   private val kcoreIters = 8
 
-  /** One k-core peel round's edge filter — edges among the alive set.
-    * Shared by the library g_kcore loop and the `call kcore()` bridge
-    * (Engine) so BOTH ride the same gate: src side is a co-partitioned
-    * semi join (zero exchange — edges arrive src-partitioned), dst side
-    * broadcasts the alive ids only under the measured-count cell cap
-    * ([[graft.Bcast]]); past it the hint drops and the join degrades to
-    * its shuffled form — one extra |E| exchange, never an OOM. Exposed
-    * private[graft] so PlanSpec can pin both shapes. */
+  /** One [[kcore]] peel round's edge filter — edges among the alive
+    * set. The src side is a co-partitioned semi join (zero exchange —
+    * edges arrive src-partitioned); the dst side broadcasts the alive
+    * ids only under the measured-count cell cap ([[graft.Bcast]] — the
+    * count is the round's convergence probe, so the gate is free); past
+    * it the hint drops and the join degrades to its shuffled form — one
+    * extra |E| exchange, never an OOM. Exposed private[graft] so
+    * PlanSpec can pin both shapes. */
   private[graft] def kcoreAliveFilter(edges: DataFrame, alive: DataFrame,
       nAlive: Long): DataFrame =
     edges.join(alive, col("src") === col("id"), "left_semi")
       .join(graft.Bcast.gated(alive.withColumnRenamed("id", "id2"), nAlive),
         col("dst") === col("id2"), "left_semi")
+
+  /** Iterative k-core peel over an UNDIRECTED, src-pre-partitioned edge
+    * frame: returns the in-core degree (id, c) of every node of the
+    * k-core, materialized (drain ledger). Shared by g_kcore and
+    * `call kcore(k)`.
+    *
+    * Each round: degrees over the surviving edge set (one co-partitioned
+    * groupBy — edges stay src-partitioned the whole loop), keep nodes
+    * with >= k neighbors, then filter edges to alive×alive through
+    * [[kcoreAliveFilter]]. Early exit on an unchanged alive count (the
+    * peel is monotone ⊇, so count equality ⟺ set equality) with the
+    * usual loud non-convergence failure; the deferred checkpoint's count
+    * doubles as the convergence probe (one job per round). */
+  def kcore(ue: DataFrame, k: Long, maxIters: Int): DataFrame = {
+    var edges: DataFrame = ue
+    var nAlive = -1L
+    var converged = false
+    var step = 0
+    var result: DataFrame = null
+    while (step < maxIters && !converged) {
+      step += 1
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("c"))
+      val alive = Ckpt.deferredPartitioned(
+        deg.filter(col("c") >= k).select(col("src").as("id")))
+      val n = alive.count()
+      if (n == nAlive) {
+        converged = true
+        // deg this round is over edges among the PREVIOUS alive set,
+        // which just proved equal to the current one — so these are
+        // exactly the in-core degrees
+        result = Ckpt.eager(
+          deg.filter(col("c") >= k).select(col("src").as("id"), col("c")))
+        Ckpt.drop(alive)
+      } else {
+        nAlive = n
+        val next = Ckpt.eagerPartitioned(kcoreAliveFilter(edges, alive, n))
+        if (edges ne ue) Ckpt.drop(edges)
+        edges = next
+        Ckpt.drop(alive)
+      }
+    }
+    if (edges ne ue) Ckpt.drop(edges)
+    require(converged, s"k-core peel not converged after $maxIters rounds")
+    result
+  }
 
   // Unrolled peel, same MATERIALIZED discipline as ccOracle. a0 = every
   // node with at least one edge; each round keeps nodes with >= k
@@ -697,12 +753,6 @@ object GraphAlgos {
       |FROM pairs JOIN d du ON pairs.u = du.p JOIN d dv ON pairs.v = dv.p
       |ORDER BY jac_ppm DESC, u, v LIMIT 100""".stripMargin
 
-  /** Co-partitioned full-outer merge of an (id, d) accumulator with an
-    * (id, d) delta — the delta's value wins on match, everything else
-    * carries over. Both sides arrive hash-partitioned by id (groupBy /
-    * previous merge outputs through [[Ckpt.eagerPartitioned]]), so the
-    * merge re-shuffles NEITHER side — the 1-exchange-per-superstep shape
-    * PlanSpec pins. Shared by the BFS and SSSP frontier loops. */
   /** Frontier-delta distance loop over a FULL key spine (round 18,
     * optimization guide §2.4/§1.2): `spine` carries every key the loop
     * can ever reach with `d` = 0 at the sources and NULL elsewhere, and
@@ -840,7 +890,7 @@ object GraphAlgos {
     * where the partition quality plateaus on this graph (measured
     * modularity of the snapshot: 0.31 at sf0.001, 0.41 at sf0.01, 0.40
     * at sf0.1; rounds beyond 6 only shuffle the residual churn tail). */
-  private[operators] val lpIters = 6
+  private[graft] val lpIters = 6
 
   /** Synchronous label propagation (Raghavan et al. 2007,
     * arXiv:0709.2938) with two determinism/stability choices over the
@@ -878,7 +928,7 @@ object GraphAlgos {
     // NOT partition-shrunk (round 19): every round joins the FULL |V|
     // label frame against the compute-width edge frame — shrinking the
     // label side adds a full-|V| re-exchange per round to meet it
-    // (measured on the bridge twin; r18 scaling ratio 1.12 —
+    // (measured; r18 scaling ratio 1.12 —
     // volume-bound, unlike the frontier-delta loops).
     var labels = Ckpt.eagerPartitioned(
       nodes.select(col("id"), col("id").as("lbl")).repartition(col("id")))
@@ -972,32 +1022,10 @@ object GraphAlgos {
 
   /** Per-node triangle corner counts and degrees over the part
     * co-purchase graph (distinct part pairs sharing an order) — the
-    * shared build behind g_triangles and g_clustering. Triangles are
-    * enumerated with the DEGREE-ORDERED orientation: each undirected
-    * edge points from its lower-(degree, id) endpoint to the higher, so
-    * every triangle is produced exactly once and the wedge fan-out per
-    * node is O(sqrt(m)) even on heavy hitters — the standard fix that
-    * keeps the wedge-check join from exploding on hub nodes at 100 TB.
-    * Both the wedge build side and the closing-edge semi side are the
-    * |E|-sized oriented list — orders of magnitude smaller than the
-    * wedge stream (41M wedges vs 1.2M edges at sf0.1). Broadcasting
-    * them means the wedge stream is generated, existence-checked, and
-    * partially aggregated IN PLACE: zero shuffle/sort of the 41M rows
-    * (it previously cost two 41M-row exchanges + sorts). The hints are
-    * GATED on the measured pair count ([[graft.Bcast]], VERDICT r15):
-    * the pair frame is cached and counted once up front (the count also
-    * pays for itself — every downstream leg used to re-derive the pair
-    * self-join), and on a graph whose edge list outgrows the cap the
-    * hints are absent — the plan degrades to the SMJ form, still
-    * correct, never an executor-OOM broadcast, and the degree
-    * orientation still bounds the per-task wedge fan-out (PlanSpec pins
-    * BOTH shapes). The oracles enumerate by id order instead; the
-    * triangle SET is identical under any acyclic orientation, so the
-    * per-node counts agree.
-    *
-    * Returns (triCounts id→n_tri over participating nodes only,
-    * degrees id→d over every node of the pair graph), memoized per
-    * (session, dir) as pinned checkpoints. */
+    * shared build behind g_triangles and g_clustering, memoized per
+    * (session, dir) as pinned checkpoints. Returns (triCounts id→n_tri
+    * over participating nodes only, degrees id→d over every node of the
+    * pair graph); the build is [[triangleCounts]]. */
   private val triFrames =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
 
@@ -1005,41 +1033,69 @@ object GraphAlgos {
     memoLock.synchronized {
       triFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
       triFrames.getOrElseUpdate((s, dir), {
-        val (tc, deg, cached) = coPurchaseTrianglesUncached(s, dir)
+        val (tc, deg, cached) = triangleCounts(coPurchasePairs(s, dir))
         // pin the |V|-scale outputs (drain-safe, session-lifetime), then
         // release the |E|-scale intermediates immediately — a raw cache
         // would otherwise pin edge-scale frames per query for the
         // session's lifetime
         val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
+        Ckpt.drop(deg)
         cached.foreach(_.unpersist(false))
         out
       })
     }
 
-  /** Returns (triangle counts, degrees, |E|-scale cached intermediates
-    * the caller must unpersist once the outputs are materialized). */
-  private[graft] def coPurchaseTrianglesUncached(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, Seq[DataFrame]) = {
+  /** The part co-purchase graph as canonical (a < b) distinct pairs. */
+  private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame = {
     val li = s.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    // cached + counted up front: the count feeds the broadcast gates
-    // below AND every downstream leg (deg build, orientation join) used
-    // to re-derive this self-join from storage
-    val pairs = li.as("x").join(li.as("y"),
+    li.as("x").join(li.as("y"),
         col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-      .select(col("x.pk").as("a"), col("y.pk").as("b")).distinct().cache()
+      .select(col("x.pk").as("a"), col("y.pk").as("b")).distinct()
+  }
+
+  /** Per-node triangle counts and pair-degrees over an undirected graph
+    * given as canonical pairs (a, b): distinct, a < b. Shared by
+    * g_triangles/g_clustering and `call triangles()`/`call
+    * clustering()`; each caller builds its own pair frame and memo.
+    *
+    * Triangles are enumerated with the DEGREE-ORDERED orientation: each
+    * undirected edge points from its lower-(degree, id) endpoint to the
+    * higher, so every triangle is produced exactly once and the wedge
+    * fan-out per node is O(sqrt(m)) even on heavy hitters — the standard
+    * fix that keeps the wedge-check join from exploding on hub nodes at
+    * 100 TB. Both the wedge build side and the closing-edge semi side
+    * are the |E|-sized oriented list — orders of magnitude smaller than
+    * the wedge stream (41M wedges vs 1.2M edges at sf0.1 on the
+    * co-purchase graph). Broadcasting them means the wedge stream is
+    * generated, existence-checked, and partially aggregated IN PLACE:
+    * zero shuffle/sort of the wedge rows. The hints are GATED on the
+    * measured pair count ([[graft.Bcast]]): the pair frame is cached and
+    * counted once up front (the count also pays for itself — every
+    * downstream leg would otherwise re-derive the pairs), and on a graph
+    * whose edge list outgrows the cap the hints are absent — the plan
+    * degrades to the SMJ form, still correct, never an executor-OOM
+    * broadcast, and the degree orientation still bounds the per-task
+    * wedge fan-out (PlanSpec pins BOTH shapes). The oracles enumerate
+    * by id order instead; the triangle SET is identical under any
+    * acyclic orientation, so the per-node counts agree.
+    *
+    * Returns (triangle counts id→n_tri over participating nodes only,
+    * degrees id→d materialized on the drain ledger, the |E|-scale cached
+    * intermediates the caller must unpersist once it has materialized
+    * the outputs). */
+  private[graft] def triangleCounts(
+      pairsIn: DataFrame): (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val pairs = pairsIn.cache()
     val m = pairs.count()
-    // degree table is |V|-sized (parts, not pairs) — broadcast under
-    // the gate, so the two endpoint-degree lookups never shuffle the
-    // edge list. MATERIALIZED once and gated on its MEASURED count
-    // (round 17): the old |V| ≤ 2·|E| bound was ~100× the real |V|
-    // here, and under the cell-denominated cap that slack started
-    // degrading a 20k-row broadcast to an |E|-scale SMJ at sf0.1; an
-    // unmaterialized deg would re-run the aggregation for the count,
-    // both join sides and the memo pin (the Engine twin's ADVICE-r16
-    // discipline). The checkpoint rides the drain ledger; the memoized
-    // wrapper pins its own session-lifetime copy.
-    val deg = graft.Ckpt.eager(
+    // degree table is |V|-sized — broadcast under the gate, so the two
+    // endpoint-degree lookups never shuffle the edge list. MATERIALIZED
+    // once and gated on its MEASURED count: a |V| ≤ 2·|E| bound is ~100×
+    // the real |V| of the co-purchase graph, and under the
+    // cell-denominated cap that slack degrades a 20k-row broadcast to
+    // an |E|-scale SMJ at sf0.1; an unmaterialized deg would re-run the
+    // aggregation for the count, both join sides and the caller's pin.
+    val deg = Ckpt.eager(
       pairs.select(col("a").as("id"))
         .union(pairs.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d")))
@@ -1068,16 +1124,66 @@ object GraphAlgos {
   // ---- HITS hubs & authorities (round 15) -----------------------------
   private val hitsIters = 8
 
-  /** Unrolled HITS (Kleinberg 1999) in max-normalized 1e6 fixed point:
+  /** Kleinberg HITS (1999) over a DIRECTED (src,dst) edge frame: `iters`
+    * two-phase power iterations in max-normalized 1e6 fixed point —
     * auth(v) = Σ_{u→v} hub(u), hub(u) = Σ_{u→v} auth(v), each phase
-    * rescaled to max = 1e6 by integer division — every engine computes
+    * rescaled to max = 1e6 by integer division, so every engine computes
     * bit-equal scores (the float L2 normalization of the textbook
     * formulation is replaced by the deterministic max rescale; the
     * RANKING is the same, which is what HITS is for). Overflow bound:
     * raw sums ≤ max-degree × 1e6 and the rescale multiplies by 1e6
     * before dividing, so the intermediate fits int64 while max-degree
     * < 9.2e6 — three orders above this corpus' hubs; at a scale beyond
-    * that, rescale with a 1e3 factor or decimal(38). */
+    * that, rescale with a 1e3 factor or decimal(38). Returns (id, auth,
+    * hub) for every node. Shared by g_hits and `call hits()`.
+    *
+    * The a-phase joins the src-PARTITIONED edge copy against the
+    * id-partitioned hub frame (no exchange on either side) and shuffles
+    * only the per-dst aggregation; the h-phase mirrors it on the
+    * dst-partitioned copy — one shuffle per phase, the PageRank
+    * discipline, with the two loop-invariant copies hoisted once. Each
+    * phase's checkpoint is DEFERRED: the max-rescale probe is the
+    * phase's ONLY job — it materializes the checkpoint AND reads the
+    * scalar (the deltaCC convergence-probe trick). Full-|V| hub/auth
+    * frames join the compute-width orientation copies, so the loop runs
+    * at session width (see [[pageRank]]). */
+  def hits(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val eS = Ckpt.eagerPartitioned(edges.repartition(col("src")))
+    val eD = Ckpt.eagerPartitioned(edges.repartition(col("dst")))
+    val nodesP = Ckpt.eagerPartitioned(nodes.repartition(col("id")))
+    var hub: DataFrame = nodesP.select(col("id"), lit(1000000L).as("hub"))
+    var auth: DataFrame = null
+    var prevA: DataFrame = null
+    var prevH: DataFrame = null
+    for (_ <- 1 to iters) {
+      val araw = Ckpt.deferredPartitioned(
+        nodesP.join(
+          eS.join(hub.withColumnRenamed("id", "src"), Seq("src"))
+            .groupBy(col("dst").as("id")).agg(sum("hub").as("s")),
+          Seq("id"), "left")
+          .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
+      // max(1, …): an all-zero frame (possible under an empty scoped
+      // edge set) keeps scores 0 instead of dividing by zero
+      val mA = math.max(1L, araw.agg(max("r")).head.getLong(0))
+      if (prevA != null) Ckpt.drop(prevA)
+      prevA = araw
+      auth = araw.select(col("id"), expr(s"r * 1000000L div ${mA}L").as("auth"))
+      val hraw = Ckpt.deferredPartitioned(
+        nodesP.join(
+          eD.join(auth.withColumnRenamed("id", "dst"), Seq("dst"))
+            .groupBy(col("src").as("id")).agg(sum("auth").as("s")),
+          Seq("id"), "left")
+          .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
+      val mH = math.max(1L, hraw.agg(max("r")).head.getLong(0))
+      if (prevH != null) Ckpt.drop(prevH)
+      prevH = hraw
+      hub = hraw.select(col("id"), expr(s"r * 1000000L div ${mH}L").as("hub"))
+    }
+    Ckpt.drop(eS)
+    Ckpt.drop(eD)
+    auth.join(hub, Seq("id"))
+  }
+
   /** Unrolled HITS steps for a DuckDB oracle: CTE chains `ar/a/hr/h
     * 1..iters` over pre-bound `nn(id)` and `e(src,dst)` CTEs plus
     * `h0(id, hub)`. `greatest(1, max)` guards the all-zero frame an
@@ -1391,7 +1497,7 @@ object GraphAlgos {
     // ---- triangle counting over the part co-purchase graph ------------
     // Edges = distinct part pairs that share an order (the classic
     // projected co-occurrence graph); enumeration/orientation/broadcast
-    // reasoning in [[coPurchaseTriangles]] (shared with g_clustering).
+    // reasoning in [[triangleCounts]] (shared with g_clustering).
     // Output: top-20 parts by triangle participation.
     Q("g_triangles",
       (s, dir) => {
@@ -1549,59 +1655,12 @@ object GraphAlgos {
 
     // ---- k-core decomposition: iterative peel -------------------------
     // The density-based graph-cleaning primitive (spam/noise stripping
-    // before community detection at 100 TB). Each round: degrees over
-    // the surviving edge set (one co-partitioned groupBy — edges stay
-    // src-partitioned the whole loop), keep nodes with >= k neighbors,
-    // then filter edges to alive×alive — the src side via a
-    // co-partitioned semi join (zero exchange), the dst side via a
-    // broadcast semi join GATED on the measured alive count
-    // ([[graft.Bcast]] — the count is the round's convergence probe, so
-    // the gate is free; past the cell cap the hint drops and the join
-    // degrades to its shuffled form — one extra |E| exchange per round,
-    // still correct, never an OOM). Early exit on an unchanged alive count (the
-    // peel is monotone ⊇, so count equality ⟺ set equality) with the
-    // usual loud non-convergence failure; the deferred checkpoint's
-    // count doubles as the convergence probe (one job per round).
+    // before community detection at 100 TB) — plan shape on [[kcore]].
+    // Output: the in-core degree histogram.
     Q("g_kcore",
-      (s, dir) => {
-        val ue = undirectedEdges(s, dir)
-        var edges: DataFrame = ue
-        var nAlive = -1L
-        var converged = false
-        var step = 0
-        var result: DataFrame = null
-        while (step < kcoreIters && !converged) {
-          step += 1
-          val deg = edges.groupBy("src").agg(count(lit(1)).as("c"))
-          val alive = Ckpt.deferredPartitioned(
-            deg.filter(col("c") >= kcoreK).select(col("src").as("id")))
-          val n = alive.count()
-          if (n == nAlive) {
-            converged = true
-            // deg this round is over edges among the PREVIOUS alive set,
-            // which just proved equal to the current one — so these are
-            // exactly the in-core degrees the oracle's fd computes.
-            result = Ckpt.eager(
-              deg.filter(col("c") >= kcoreK)
-                .groupBy("c").agg(count(lit(1)).as("n_nodes"))
-                .select(col("c").as("core_degree"), col("n_nodes")))
-            Ckpt.drop(alive)
-          } else {
-            nAlive = n
-            // dst side rides the measured-count gate (VERDICT r16): the
-            // first peel rounds' alive set is |V|-scale, and a 3-core
-            // past the cell cap must degrade to the shuffled semi join
-            // instead of OOM-broadcasting a multi-GB id set.
-            val next = Ckpt.eagerPartitioned(kcoreAliveFilter(edges, alive, n))
-            if (edges ne ue) Ckpt.drop(edges)
-            edges = next
-            Ckpt.drop(alive)
-          }
-        }
-        if (edges ne ue) Ckpt.drop(edges)
-        require(converged, s"k-core peel not converged after $kcoreIters rounds")
-        result
-      },
+      (s, dir) => kcore(undirectedEdges(s, dir), kcoreK, kcoreIters)
+        .groupBy("c").agg(count(lit(1)).as("n_nodes"))
+        .select(col("c").as("core_degree"), col("n_nodes")),
       Some(kcoreOracle)),
 
     // ---- resource-allocation link prediction over part co-purchase ----
@@ -1779,61 +1838,10 @@ object GraphAlgos {
       Some(modularityOracle)),
 
     // ---- HITS hubs & authorities (round 15) ----------------------------
-    // Power iteration over BOTH edge orientations: the a-phase joins the
-    // src-PARTITIONED edge copy against the id-partitioned hub frame
-    // (no exchange on either side) and shuffles only the per-dst
-    // aggregation; the h-phase mirrors it on the dst-partitioned copy —
-    // one shuffle per phase, the PageRank discipline, with the two
-    // loop-invariant copies hoisted once. The max rescale is a driver
-    // scalar over the just-materialized checkpoint (metadata-rate).
-    // See [[hitsOracle]] for the fixed-point formulation and bounds.
+    // Top-20 authorities; formulation, bounds and plan shape on [[hits]].
     Q("g_hits",
-      (s, dir) => {
-        val e = allEdges(s, dir)
-        val eS = Ckpt.eagerPartitioned(e.repartition(col("src")))
-        val eD = Ckpt.eagerPartitioned(e.repartition(col("dst")))
-        // NOT partition-shrunk (round 19): full-|V| hub/auth frames
-        // join the compute-width orientation copies every phase — see
-        // fixedPageRank's note (bridge twin measured +3s shrunk; r18
-        // scaling ratio 1.2).
-        val nodesP = Ckpt.eagerPartitioned(allNodes(s, dir).repartition(col("id")))
-        var hub: DataFrame = nodesP.select(col("id"), lit(1000000L).as("hub"))
-        var auth: DataFrame = null
-        var prevA: DataFrame = null
-        var prevH: DataFrame = null
-        for (_ <- 1 to hitsIters) {
-          // deferred checkpoints: the max-rescale probe is the phase's
-          // ONLY job — it materializes the checkpoint AND reads the
-          // scalar (the deltaCC convergence-probe trick; an eager
-          // checkpoint would pay a second job per phase)
-          val araw = Ckpt.deferredPartitioned(
-            nodesP.join(
-              eS.join(hub.withColumnRenamed("id", "src"), Seq("src"))
-                .groupBy(col("dst").as("id")).agg(sum("hub").as("s")),
-              Seq("id"), "left")
-              .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-          // max(1, …): an all-zero frame (possible under an empty
-          // scoped edge set) keeps scores 0 instead of dividing by zero
-          val mA = math.max(1L, araw.agg(max("r")).head.getLong(0))
-          if (prevA != null) Ckpt.drop(prevA)
-          prevA = araw
-          auth = araw.select(col("id"), expr(s"r * 1000000L div ${mA}L").as("auth"))
-          val hraw = Ckpt.deferredPartitioned(
-            nodesP.join(
-              eD.join(auth.withColumnRenamed("id", "dst"), Seq("dst"))
-                .groupBy(col("src").as("id")).agg(sum("auth").as("s")),
-              Seq("id"), "left")
-              .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-          val mH = math.max(1L, hraw.agg(max("r")).head.getLong(0))
-          if (prevH != null) Ckpt.drop(prevH)
-          prevH = hraw
-          hub = hraw.select(col("id"), expr(s"r * 1000000L div ${mH}L").as("hub"))
-        }
-        Ckpt.drop(eS)
-        Ckpt.drop(eD)
-        auth.join(hub, Seq("id"))
-          .orderBy(col("auth").desc, col("id")).limit(20)
-      },
+      (s, dir) => hits(allNodes(s, dir), allEdges(s, dir), hitsIters)
+        .orderBy(col("auth").desc, col("id")).limit(20),
       Some(hitsOracle)),
 
     // ---- local clustering coefficient over part co-purchase ------------

@@ -2,13 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
+import graft.engine.Engine
 import graft.sources.GraphLoader
 
 /** In-JVM differential tests for the iterative graph analytics at
   * sf0.001: recompute connected components (union-find) and fixed-point
   * PageRank (the identical integer formula) over the collected edge list
   * and require exact equality — the algorithms are all-integer, so there
-  * is no tolerance. */
+  * is no tolerance. The cc, PageRank, HITS, k-core and clustering
+  * replays also check the `call` door, over the whole loaded graph. */
 class GraphAlgosSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -27,6 +29,42 @@ class GraphAlgosSpec extends AnyFunSuite {
     (g.nodes - "tag").values.flatMap(_.select(col("id")).collect().map(_.getLong(0))).toSeq
   }
 
+  /** The whole loaded graph as the `call` procedures see it: every node
+    * label and every relation type (the FK edges plus the derived nnext
+    * chain; tagged/flagged start empty). */
+  private def gqlGraph(): (Seq[Long], Seq[(Long, Long)]) = {
+    val (g, _) = GraphLoader.load(spark, dir)
+    (g.nodes.values.flatMap(_.select(col("id")).collect().map(_.getLong(0))).toSeq,
+      g.edges.values.flatMap(_.select(col("src"), col("dst")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))).toSeq)
+  }
+
+  /** Runs one MiniGQL program against the loaded graph; rows as longs. */
+  private def gql(body: String): Seq[Seq[Long]] = {
+    val (g, nextId) = GraphLoader.load(spark, dir)
+    Engine.runSourceOn(spark, GraphLoader.headerGql + body, g, nextId,
+      Engine.Config(strict = false)).bindings.collect()
+      .map(r => r.toSeq.map(_.asInstanceOf[Long])).toSeq
+  }
+
+  /** Union-find components: node → component min id (the label
+    * min-propagation converges to). */
+  private def unionFind(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
   test("node ids are unique across the loaded graph (lineitem row_number fix)") {
     val ids = collectedNodes()
     assert(ids.size == ids.distinct.size)
@@ -36,24 +74,16 @@ class GraphAlgosSpec extends AnyFunSuite {
   // assertion (GraphAlgos requires the final-superstep delta be empty),
   // so an under-converged ccIters fails here, not just vs the oracle.
   test("connected components equals in-memory union-find") {
-    val nodes = collectedNodes()
-    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    collectedEdges().foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // canonical label = min id of the component (what min-propagation converges to)
-    val expected = nodes.groupBy(find).map { case (_, ns) => ns.min -> ns.size.toLong }
+    val comp = unionFind(collectedNodes(), collectedEdges())
+    val expected = comp.values.groupBy(identity).map { case (c, xs) => c -> xs.size.toLong }
     val got = SparkEntry.queries("g_connected_components")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
+    // the call door: every node's label over the whole gql graph
+    val (gn, ge) = gqlGraph()
+    val call = gql("call cc() yield id, comp\nreturn id, comp")
+      .map(r => r(0) -> r(1)).toMap
+    assert(call == unionFind(gn, ge))
   }
 
   test("weighted SSSP equals the in-memory Dijkstra replay") {
@@ -112,19 +142,7 @@ class GraphAlgosSpec extends AnyFunSuite {
     val adj = scala.collection.mutable.Map.empty[Long, List[Long]].withDefaultValue(Nil)
     edges.foreach { case (a, b) => adj(a) = b :: adj(a); adj(b) = a :: adj(b) }
     // components via union-find, root = min id (the CC label contract)
-    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
-    def find(x: Long): Long = {
-      var r = x; while (parent(r) != r) r = parent(r)
-      var c = x; while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val rootOf = nodes.groupBy(find).flatMap { case (_, ns) =>
-      val root = ns.min; ns.map(_ -> root)
-    }
+    val rootOf = unionFind(nodes, edges)
     // BFS depth from each component's root
     val dist = scala.collection.mutable.Map.empty[Long, Long]
     rootOf.values.toSet.foreach { (root: Long) =>
@@ -148,9 +166,8 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  test("fixed-point PageRank equals the in-memory integer replay") {
-    val nodes = collectedNodes()
-    val edges = collectedEdges()
+  /** In-memory fixed-point integer PageRank: 8 iterations, rank0 1e9. */
+  private def prReplay(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val out = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
     var rank = nodes.map(_ -> 1000000000L).toMap
     for (_ <- 1 to 8) {
@@ -158,10 +175,19 @@ class GraphAlgosSpec extends AnyFunSuite {
       edges.foreach { case (s, d) => in(d) += rank(s) / out(s) }
       rank = nodes.map(n => n -> (150000000L + (85L * in(n)) / 100L)).toMap
     }
+    rank
+  }
+
+  test("fixed-point PageRank equals the in-memory integer replay") {
+    val rank = prReplay(collectedNodes(), collectedEdges())
     val expected = rank.toSeq.sortBy { case (id, r) => (-r, id) }.take(100)
     val got = SparkEntry.queries("g_pagerank")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == expected)
+    val (gn, ge) = gqlGraph()
+    val call = gql("call pagerank() yield id, rank\nreturn id, rank")
+      .map(r => r(0) -> r(1)).toMap
+    assert(call == prReplay(gn, ge))
   }
 
   test("personalized PageRank equals the in-memory integer replay") {
@@ -187,24 +213,32 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(got.take(5) == (0 until 5).map(i => (1000000000L + i, 150000000L)))
   }
 
-  test("k-core peel equals the in-memory replay") {
-    val edges = collectedEdges()
+  /** In-memory k-core peel: node → in-core degree over the k-core. */
+  private def kcoreReplay(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
     val und = (edges ++ edges.map(_.swap)).distinct
     var alive = und.map(_._1).toSet
     var done = false
     while (!done) {
       val deg = und.filter { case (a, b) => alive(a) && alive(b) }
         .groupBy(_._1).map { case (n, es) => n -> es.size }
-      val next = deg.filter(_._2 >= 3).keySet
+      val next = deg.filter(_._2 >= k).keySet
       if (next == alive) done = true else alive = next
     }
-    val coreDeg = und.filter { case (a, b) => alive(a) && alive(b) }
-      .groupBy(_._1).map { case (_, es) => es.size }
-    val expected = coreDeg.groupBy(identity).map { case (d, xs) => d.toLong -> xs.size.toLong }
+    und.filter { case (a, b) => alive(a) && alive(b) }
+      .groupBy(_._1).map { case (n, es) => n -> es.size.toLong }
+  }
+
+  test("k-core peel equals the in-memory replay") {
+    val coreDeg = kcoreReplay(collectedEdges(), 3)
+    val expected = coreDeg.values.groupBy(identity).map { case (d, xs) => d -> xs.size.toLong }
     val got = SparkEntry.queries("g_kcore")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
     assert(got.keys.forall(_ >= 3L)) // every in-core degree is >= k
+    val (_, ge) = gqlGraph()
+    val call = gql("call kcore(3) yield id, c\nreturn id, c")
+      .map(r => r(0) -> r(1)).toMap
+    assert(call == kcoreReplay(ge, 3))
   }
 
   test("RA link prediction equals the in-memory replay") {
@@ -372,9 +406,9 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(row.getDouble(2) > 0.0)
   }
 
-  test("HITS equals the in-memory fixed-point replay") {
-    val nodes = collectedNodes()
-    val edges = collectedEdges()
+  /** In-memory HITS: 8 max-rescaled 1e6 fixed-point iterations;
+    * node → (auth, hub). */
+  private def hitsReplay(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     val zeros = nodes.map(n => n -> 0L).toMap
     var hub = nodes.map(n => n -> 1000000L).toMap
     var auth = Map.empty[Long, Long]
@@ -388,11 +422,35 @@ class GraphAlgosSpec extends AnyFunSuite {
       val mH = hr.values.max
       hub = hr.map { case (n, r) => n -> r * 1000000L / mH }
     }
-    val expected = nodes.map(n => (n, auth(n), hub(n)))
+    nodes.map(n => n -> (auth(n), hub(n))).toMap
+  }
+
+  test("HITS equals the in-memory fixed-point replay") {
+    val scores = hitsReplay(collectedNodes(), collectedEdges())
+    val expected = scores.toSeq.map { case (n, (a, h)) => (n, a, h) }
       .sortBy { case (n, a, _) => (-a, n) }.take(20)
     val got = SparkEntry.queries("g_hits")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected)
+    val (gn, ge) = gqlGraph()
+    val call = gql("call hits() yield id, auth, hub\nreturn id, auth, hub")
+      .map(r => r(0) -> (r(1), r(2))).toMap
+    assert(call == hitsReplay(gn, ge))
+  }
+
+  /** In-memory local clustering over canonical (a < b) pairs: every
+    * node of pair-degree >= 2 as (id, d, n_tri, coeff_ppm). */
+  private def clusteringReplay(pairs: Set[(Long, Long)]): Seq[(Long, Long, Long, Long)] = {
+    val adj = (pairs.toSeq ++ pairs.toSeq.map(_.swap))
+      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
+    val tri = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+    for ((u, v) <- pairs if u < v; w <- adj(u) if w > v && adj(v)(w)) {
+      tri(u) += 1; tri(v) += 1; tri(w) += 1
+    }
+    adj.toSeq.collect { case (n, ns) if ns.size >= 2 =>
+      val d = ns.size.toLong
+      (n, d, tri(n), 2000000L * tri(n) / (d * (d - 1)))
+    }
   }
 
   test("local clustering coefficient equals the in-memory replay") {
@@ -403,19 +461,17 @@ class GraphAlgosSpec extends AnyFunSuite {
       val ps = grp.map(_._2).distinct.sorted
       for (i <- ps.indices; j <- i + 1 until ps.size) yield (ps(i), ps(j))
     }.toSet
-    val adj = (pairs.toSeq ++ pairs.toSeq.map(_.swap))
-      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
-    val tri = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
-    for ((u, v) <- pairs if u < v; w <- adj(u) if w > v && adj(v)(w)) {
-      tri(u) += 1; tri(v) += 1; tri(w) += 1
-    }
-    val expected = adj.toSeq.collect { case (n, ns) if ns.size >= 2 =>
-      val d = ns.size.toLong
-      (n, d, tri(n), 2000000L * tri(n) / (d * (d - 1)))
-    }.sortBy { case (n, _, t, c) => (-c, -t, n) }.take(20)
+    val expected = clusteringReplay(pairs)
+      .sortBy { case (n, _, t, c) => (-c, -t, n) }.take(20)
     val got = SparkEntry.queries("g_clustering")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == expected)
+    // the call door over the gql graph's canonical undirected pair set
+    val (_, ge) = gqlGraph()
+    val gqlPairs = ge.collect { case (a, b) if a != b => (a min b, a max b) }.toSet
+    val call = gql("call clustering() yield id, lcc\nreturn id, lcc")
+      .map(r => r(0) -> r(1)).toMap
+    assert(call == clusteringReplay(gqlPairs).map { case (n, _, _, c) => n -> c }.toMap)
   }
 
   test("SCC coloring equals the in-memory Tarjan replay (round 16)") {
@@ -510,6 +566,41 @@ class GraphAlgosSpec extends AnyFunSuite {
       // a path is all singleton SCCs: every node labels itself
       assert(got == (0L until n).map(i => i -> i).toMap,
         "path graph must decompose into singleton SCCs")
+    } finally spark.conf.unset(key)
+  }
+
+  test("call cc() leaves a bounded RDD count, whatever its superstep count") {
+    // Each superstep's checkpoint must be released once the next one is
+    // materialized: what a call leaves cached may not grow with the
+    // number of supersteps. The whole graph needs ~8 supersteps at
+    // sf0.001, the nregion scope 2. A first pass of each builds the
+    // memoized edge hoist and node count, which are session pins, so
+    // the measured second pass excludes them.
+    val programs = Seq("call cc() yield id, comp\nreturn id, comp",
+      "call cc(\"nregion\") yield id, comp\nreturn id, comp")
+    programs.foreach(gql)
+    Ckpt.drain()
+    def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
+    val left = programs.map { p =>
+      val before = cachedRdds()
+      gql(p)
+      cachedRdds() - before
+    }
+    Ckpt.drain()
+    assert(left.forall(_ <= 2) && left.distinct.size == 1,
+      s"RDDs left cached per call (whole graph, nregion): $left")
+  }
+
+  test("superstep partition knob rejects a bad value at entry, naming its key") {
+    val key = "spark.graft.superstep.rowsPerPartition"
+    try {
+      for (bad <- Seq("many", "1.5", "0", "-4")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](Ckpt.partsFor(spark, 1000L))
+        assert(e.getMessage.contains(key), e.getMessage)
+      }
+      spark.conf.set(key, "300")
+      assert(Ckpt.partsFor(spark, 1000L) == 4)
     } finally spark.conf.unset(key)
   }
 }

@@ -836,7 +836,8 @@ class PlanSpec extends AnyFunSuite {
     // UNCACHED build — the query itself serves the round-15 memoized
     // checkpoint once any earlier query in the session built it, which
     // hides the wedge pipeline from its plan.
-    val (tc, _, cached) = graft.operators.GraphAlgos.coPurchaseTrianglesUncached(spark, dir)
+    val (tc, _, cached) = graft.operators.GraphAlgos.triangleCounts(
+      graft.operators.GraphAlgos.coPurchasePairs(spark, dir))
     tc.count()
     val p = tc.queryExecution.executedPlan.toString
     cached.foreach(_.unpersist(false))
@@ -850,7 +851,8 @@ class PlanSpec extends AnyFunSuite {
     // on the MEASURED pair count — above the cap the hints must be
     // absent (no executor-OOM broadcast of an |E|-scale frame) and the
     // plan must degrade to the sort-merge form, with IDENTICAL results.
-    val (tcB, _, cB) = graft.operators.GraphAlgos.coPurchaseTrianglesUncached(spark, dir)
+    val (tcB, _, cB) = graft.operators.GraphAlgos.triangleCounts(
+      graft.operators.GraphAlgos.coPurchasePairs(spark, dir))
     val base = tcB.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     cB.foreach(_.unpersist(false))
     // disable the size-based auto-broadcast too: at sf0.001 everything
@@ -862,7 +864,8 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set(key, "0")
     spark.conf.set(autoKey, "-1")
     try {
-      val (tc, _, cached) = graft.operators.GraphAlgos.coPurchaseTrianglesUncached(spark, dir)
+      val (tc, _, cached) = graft.operators.GraphAlgos.triangleCounts(
+        graft.operators.GraphAlgos.coPurchasePairs(spark, dir))
       val rows = tc.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val p = tc.queryExecution.executedPlan.toString
       cached.foreach(_.unpersist(false))
