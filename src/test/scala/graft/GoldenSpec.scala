@@ -5,8 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Engine
 
 /** End-to-end golden tests ported from the reference corpus
-  * ({tiny,entreprise,test2,test3}.q). tiny.q is in the test resources;
-  * the other three are read from the reference checkout.
+  * ({tiny,entreprise,test2,test3}.q), all read off the classpath from
+  * `src/test/resources/`. Only tiny.q is there verbatim (FIXTURES.md
+  * A.1); the entreprise.q, test2.q and test3.q tests fail, naming the
+  * missing resource, until the verbatim files are copied in.
+  * `entreprise_graph.q` is not the reference's entreprise.q: it rebuilds
+  * the recorded golden graph (FIXTURES.md A.2) with no final match, and
+  * is the starting graph of the `call` test here and of StoreSpec.
   * Expected values re-derived from the reference semantics; recorded
   * outputs in entreprise.t:3-22 and table.tex pin the non-obvious ones.
   */
@@ -25,18 +30,18 @@ object SparkTestSession {
   }
 }
 
-class GoldenSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  private def q(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-
-  /** A fixture copied into the test resources, read off the classpath. */
-  private def resource(name: String): String = {
+object TestResources {
+  /** A fixture in the test resources, read off the classpath. */
+  def resource(name: String): String = {
     val in = getClass.getResourceAsStream(s"/$name")
     require(in != null, s"test resource $name not on the classpath")
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
+}
+
+class GoldenSpec extends AnyFunSuite {
+  import TestResources.resource
+  lazy val spark = SparkTestSession.spark
 
   private def nodeIds(r: Engine.QueryResult, label: String): Seq[Long] =
     r.graph.nodes(label).select("id").collect().map(_.getLong(0)).toSeq.sorted
@@ -54,7 +59,7 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("entreprise.q: golden graph + 1-row result (entreprise.t:3-22)") {
-    val r = Engine.runSource(spark, q("/root/reference/graphDB/test/entreprise.q"))
+    val r = Engine.runSource(spark, resource("entreprise.q"))
     assert(nodeIds(r, "P") == Seq(0L, 2L))
     assert(nodeIds(r, "E") == Seq(1L, 3L))
     assert(edgeSet(r, ("P", "ami", "P")) == Set((0L, 2L)))
@@ -70,14 +75,14 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("test2.q: 20 nodes, rebinding, 2-hop multi-pattern match (table.tex)") {
-    val r = Engine.runSource(spark, q("/root/reference/graphDB/test/test2.q"))
+    val r = Engine.runSource(spark, resource("test2.q"))
     assert(nodeIds(r, "P").size + nodeIds(r, "E").size == 20)
     assert(r.bindings.columns.toSeq == Seq("p1", "p2", "e", "e2"))
     assert(r.bindings.collect().map(_.toSeq).toSeq == Seq(Seq(18L, 10L, 19L, 13L)))
   }
 
   test("test3.q: re-creating an existing edge dedups (set semantics)") {
-    val r = Engine.runSource(spark, q("/root/reference/graphDB/test/test3.q"))
+    val r = Engine.runSource(spark, resource("test3.q"))
     assert(edgeSet(r, ("P", "emp", "E")) == Set((0L, 1L)))
   }
 
@@ -1192,8 +1197,7 @@ class GoldenSpec extends AnyFunSuite {
     // entreprise graph: nodes 0:P 1:E 2:P 3:E; edges (0,ami,2),(3,f,1),
     // (2,emp,3),(0,emp,1) — degrees: 0→(2,0), 2→(1,1), 3→(1,1), 1→(0,2);
     // one component, min id 0
-    val pre = q("/root/reference/graphDB/test/entreprise.q")
-      .split("\n").takeWhile(!_.startsWith("match")).mkString("\n")
+    val pre = resource("entreprise_graph.q")
     val r = Engine.runSource(spark, pre +
       "\ncall degree() yield v, o, n\nreturn v, o, n")
     assert(r.bindings.collect().map(t =>
