@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftShim}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShim, SparkSession}
 
 /** Ledger of eager localCheckpoints, so their blocks can be released.
   *
@@ -32,13 +32,45 @@ object Ckpt {
     c
   }
 
-  /** Eager localCheckpoint OUTSIDE the drain ledger: for frames memoized
-    * across queries (the graph loader's undirected edge frame). A
-    * drained localCheckpoint is unrecoverable — lineage is gone — so a
-    * cross-query cache must never enter [[drain]]'s sweep; pinned frames
-    * live until their session stops (their owners evict on isStopped). */
+  /** Eager localCheckpoint OUTSIDE the drain ledger: for frames held in
+    * the [[memo]] across queries (edge hoists, memoized algorithm
+    * results). A drained localCheckpoint is unrecoverable — lineage is
+    * gone — so a cross-query cache must never enter [[drain]]'s sweep;
+    * pinned frames live as long as their memo entry. */
   def pinned(df: DataFrame): DataFrame =
     withoutAqe(df) { d => d.localCheckpoint(eager = true) }
+
+  /** One build slot per memo key; the slot's monitor serializes builds
+    * of ITS key only. */
+  private final class Slot { var value: Option[Any] = None }
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any), Slot]()
+
+  private def stopped(s: SparkSession): Boolean = s.sparkContext.isStopped
+
+  /** The session memo for graph-derived artifacts: the loaded graph,
+    * edge hoists, graph counts, memoized algorithm results (PageRank,
+    * LPA, triangles), dup pairs, BPE merges. Every entry is keyed by
+    * (session, `key`) — the key names the artifact and what it derives
+    * from: a data dir, or a graph version by map identity
+    * ([[graft.engine.Engine]]'s GraphKey) — and lives until its session
+    * stops: entries of stopped sessions are forgotten on the next call.
+    * What an entry holds (a pinned checkpoint, a `cache()`d frame or a
+    * plain value) is the caller's choice; the memo never releases it.
+    *
+    * `build` runs at most once per key, even for concurrent first
+    * callers (the losers wait on the key's slot, so no duplicate pin
+    * leaks); a build that throws caches nothing and the next call builds
+    * again. Builds may read other keys (lpaLabels → undirectedEdges →
+    * GraphLoader.load): the map's own lock only guards slot creation,
+    * and a build holds just its own slot's monitor. */
+  def memo[A](s: SparkSession, key: Any)(build: => A): A = {
+    memos.keySet.removeIf(k => stopped(k._1))
+    val slot = memos.computeIfAbsent((s, key), _ => new Slot)
+    slot.synchronized {
+      slot.value.getOrElse { val v = build; slot.value = Some(v); v }
+    }.asInstanceOf[A]
+  }
 
   /** [[eager]] DEFERRED: the frame is checkpoint-MARKED but not yet
     * materialized — the caller's next full-scan action over it (a count,
@@ -86,8 +118,8 @@ object Ckpt {
     * materialization makes the captured partitioning concrete
     * (hashpartitioning, fixed partition count); consuming queries still
     * run under AQE and see a leaf they can co-partition against.
-    * Sessions here are single-threaded per harness (the documented
-    * memoLock assumption), so the temporary conf flip is safe. */
+    * The temporary conf flip assumes a single-threaded session, which
+    * [[withConfGate]] polices. */
   def eagerPartitioned(df: DataFrame): DataFrame =
     withoutAqe(df)(eager)
 
@@ -175,9 +207,12 @@ object Ckpt {
     GraftShim.unpersistCheckpoint(ds)
   }
 
-  /** Release every tracked checkpoint (harness hook, between queries). */
+  /** Release every tracked checkpoint (harness hook, between queries).
+    * The ledger is global to the JVM: checkpoints of a stopped session
+    * have no blocks left to release (unpersisting them fails inside the
+    * dead context's block manager), so they are only forgotten. */
   def drain(): Unit = {
-    live.forEach(GraftShim.unpersistCheckpoint(_))
+    live.forEach(d => if (!stopped(d.sparkSession)) GraftShim.unpersistCheckpoint(d))
     live.clear()
   }
 }

@@ -41,10 +41,10 @@ import graft.lang.Typing._
   */
 object Engine {
 
-  /** Identity key for the hoist memo: two graph versions are the same
-    * hoist iff their edge MAPS are the same instance (mutation builds a
-    * new map). Structural Map equality would be wrong (a re-created
-    * equal graph may hold different frames) and expensive. */
+  /** Graph-version part of a [[graft.Ckpt.memo]] key: two graph versions
+    * share an entry iff their edge (or node) MAPS are the same instance
+    * (mutation builds a new map). Structural Map equality would be wrong
+    * (a re-created equal graph may hold different frames) and expensive. */
   private final class GraphKey(val ref: AnyRef) {
     override def hashCode: Int = System.identityHashCode(ref)
     override def equals(o: Any): Boolean = o match {
@@ -64,42 +64,6 @@ object Engine {
       ue.select(org.apache.spark.sql.functions.col("dst").as("id")).distinct())
     lazy val nEndpoints: Long = endpoints.count()
   }
-
-  /** Session-lifetime memo of the call-procedure bridge's hoisted
-    * undirected edge frame, keyed (session, relScope, graph edge-map
-    * IDENTITY) — round 19 (ADVICE r18): keying BY the identity instead
-    * of guarding on it lets two graphs (or a graph and its mutated
-    * successor) coexist instead of evicting each other, and removes the
-    * drop-on-replacement that could invalidate still-lazy bindings
-    * referencing the superseded pin (call bfs → mutate → call: the old
-    * result's trivial-convergence path reads the old spine). Values are
-    * drain-ledger-exempt pinned checkpoints that live until their
-    * session stops (swept on access); a mutation-heavy session holds one
-    * 2·|E| pin per graph VERSION it ran a whole-graph procedure on —
-    * bounded by the program's own mutation count, and the price of not
-    * unpersisting frames lazy plans may still reference. */
-  private val hoistMemo = new Object
-  private val ueHoists = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, GraphKey), Hoist]
-
-  /** |V| per (session, graph node-map identity) — one count job per
-    * graph version, feeds the bridges' volume-derived superstep
-    * partition sizing (guide §2). */
-  private val nodeCounts = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, GraphKey), Long]
-
-  /** Per-node triangle counts + pair-degrees of the scoped undirected
-    * pair graph, memoized per (session, relScope, graph edge-map
-    * identity) — round 19 (VERDICT r18 item 3): `call triangles()` and
-    * `call clustering()` consume the SAME |E|-scale wedge enumeration,
-    * and the library twins have shared it via coPurchaseTriangles'
-    * session memo since round 15 — this is the bridge-side parity move.
-    * Values are |V|-scale pinned checkpoints (drain-exempt, live until
-    * session stop, same lifecycle as [[ueHoists]]); the |E|-scale
-    * intermediates are released at build time. */
-  private val triHoists = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, GraphKey),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
 
   /** Execution config. `strict=true` reproduces the reference's
     * runtime-error semantics for reads of unset attributes / dangling
@@ -561,50 +525,49 @@ object Engine {
       // the checkpoint reports the concrete hash partitioning instead
       // of UnknownPartitioning.
       //
-      // The hoist is MEMOIZED per (session, relScope, graph edge-map
-      // identity) — see [[Engine.ueHoists]] for the lifetime: the
-      // whole-graph bridge queries of a bench session share ONE 2|E|
-      // hoist, and a mutated graph is a new map instance with its own
-      // hoist. Callers must NOT drop the returned frame.
+      // The hoist is memoized ([[graft.Ckpt.memo]]) per (session,
+      // relScope, graph edge-map IDENTITY): keying by the identity lets
+      // two graphs, or a graph and its mutated successor, coexist, and
+      // no superseded pin is dropped while a still-lazy binding may read
+      // it (call bfs → mutate → call: the old result's trivial-
+      // convergence path reads the old spine). The whole-graph bridge
+      // queries of a bench session share ONE 2|E| hoist; a mutation-
+      // heavy session holds one per graph VERSION it ran a whole-graph
+      // procedure on. Callers must NOT drop the returned frame.
       def hoistUndirected(): Engine.Hoist =
-        Engine.hoistMemo.synchronized {
-          Engine.ueHoists.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-          val key = (spark, relScope.getOrElse(""),
-            new Engine.GraphKey(st.graph.edges))
-          Engine.ueHoists.getOrElseUpdate(key, new Engine.Hoist(graft.Ckpt.pinned(
+        graft.Ckpt.memo(spark, ("call.hoist", relScope, new Engine.GraphKey(st.graph.edges))) {
+          new Engine.Hoist(graft.Ckpt.pinned(
             allEdges.unionByName(
               allEdges.select(col("dst").as("src"), col("src").as("dst")))
-              .repartition(col("src")))))
+              .repartition(col("src"))))
         }
-      // |V|, memoized per (session, graph version) — the volume input
-      // for the |V|-scale bridge loops' partition sizing (guide §2)
-      def nNodes(): Long = Engine.hoistMemo.synchronized {
-        Engine.nodeCounts.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        Engine.nodeCounts.getOrElseUpdate(
-          (spark, new Engine.GraphKey(st.graph.nodes)), allNodes.count())
-      }
+      // |V|, memoized per (session, graph node-map identity) — the
+      // volume input for the |V|-scale bridge loops' partition sizing
+      // (guide §2)
+      def nNodes(): Long =
+        graft.Ckpt.memo(spark, ("call.nNodes", new Engine.GraphKey(st.graph.nodes))) {
+          allNodes.count()
+        }
       def intArg(what: String): Long = args.head match {
         case IntV(v) => v
         case other   => throw new IllegalStateException(s"$what arg: $other")
       }
-      // Shared by triangles() and clustering(): per-node triangle
-      // counts and pair-degrees over the scoped canonical undirected
-      // pair set (the library triangleCounts build), pinned as the
-      // [[Engine.triHoists]] memo value.
+      // Shared by triangles() and clustering() (VERDICT r18 item 3, the
+      // bridge-side twin of GraphAlgos.coPurchaseTriangles): per-node
+      // triangle counts and pair-degrees over the scoped canonical
+      // undirected pair set (the library triangleCounts build), memoized
+      // like the hoist. Values are |V|-scale pins; the |E|-scale
+      // intermediates are released at build time.
       def pairTriangleCounts(): (DataFrame, DataFrame) =
-        Engine.hoistMemo.synchronized {
-          Engine.triHoists.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-          Engine.triHoists.getOrElseUpdate(
-            (spark, relScope.getOrElse(""), new Engine.GraphKey(st.graph.edges)), {
-              val (counts, deg, cached) = graft.operators.GraphAlgos.triangleCounts(
-                allEdges.select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-                  .filter(col("a") =!= col("b")).distinct())
-              val out = (graft.Ckpt.pinned(counts), graft.Ckpt.pinned(deg))
-              graft.Ckpt.drop(deg)
-              cached.foreach(_.unpersist(false))
-              out
-            })
+        graft.Ckpt.memo(spark, ("call.triangles", relScope, new Engine.GraphKey(st.graph.edges))) {
+          val (counts, deg, cached) = graft.operators.GraphAlgos.triangleCounts(
+            allEdges.select(least(col("src"), col("dst")).as("a"),
+              greatest(col("src"), col("dst")).as("b"))
+              .filter(col("a") =!= col("b")).distinct())
+          val out = (graft.Ckpt.pinned(counts), graft.Ckpt.pinned(deg))
+          graft.Ckpt.drop(deg)
+          cached.foreach(_.unpersist(false))
+          out
         }
       val table: DataFrame = proc match {
         case "degree" =>

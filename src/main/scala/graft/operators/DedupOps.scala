@@ -458,7 +458,7 @@ object DedupOps {
     // cluster id and keep flag.
     Q("p_dedup_clusters",
       (s, dir) => {
-        // memoized + cached across queries (see pairsMemo), then snapshot
+        // memoized + cached across queries (see minhashPairs), then snapshot
         // to a localCheckpoint HERE: the checkpoint leaf truncates the
         // plan under the superstep loop (the loop's plan doubles per
         // superstep over whatever sits beneath it — over the cached-but-
@@ -941,21 +941,16 @@ object DedupOps {
              |FROM parts GROUP BY 1""".stripMargin)),
   )
 
-  // Verified-pairs frame per (session, dir): the pair operator and the
-  // clustering/survivor pipeline share the whole signature→band→verify
-  // pipeline, and production materializes the pair list exactly once
-  // before clustering (same pattern as GraphLoader's id frame). cache()
-  // (not localCheckpoint) so the harnesses' Ckpt.drain() between queries
-  // can't invalidate the memoized frame. Stopped sessions are evicted.
-  private val pairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** MinHash signature -> LSH band candidates -> exact-Jaccard-verified
     * near-duplicate pairs (a < b). Shared by the pair operator and the
-    * clustering/survivor pipeline; memoized + cached per (session, dir). */
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    pairsMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    pairsMemo.getOrElseUpdate((s, dir), {
+    * clustering/survivor pipeline, which share the whole
+    * signature→band→verify pipeline: production materializes the pair
+    * list exactly once before clustering, memoized per (session, dir)
+    * ([[graft.Ckpt.memo]]). cache() (not localCheckpoint) so the
+    * harnesses' Ckpt.drain() between queries can't invalidate the
+    * memoized frame. */
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Ckpt.memo(s, ("minhashPairs", dir)) {
       val df = buildMinhashPairs(s, dir).cache()
       // Materialize NOW (one action): a lazy cache under the clustering
       // pipeline's many subplan references gets planned without sizes and
@@ -963,8 +958,7 @@ object DedupOps {
       // populated cache.
       df.count()
       df
-    })
-  }
+    }
 
   /** Connected components over a dup-pair frame `(a, b)` by
     * CONVERGENCE-DRIVEN delta min-label propagation: every clustered

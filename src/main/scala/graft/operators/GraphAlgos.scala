@@ -56,39 +56,16 @@ object GraphAlgos {
     (g.nodes - "tag").values.map(_.select("id")).reduce(_ union _)
   }
 
-  /** The undirected, src-pre-partitioned edge frame every label/distance
-    * propagation joins against — built (one 2×|E| shuffle + checkpoint)
-    * ONCE per (session, dir) and shared by CC and BFS instead of each
-    * op re-shuffling it. Pinned outside the Ckpt drain ledger (a
-    * drained localCheckpoint is unrecoverable); evicted when its
-    * session stops, same discipline as GraphLoader's lineitem cache. */
-  private val ueFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Single-evaluation memoization lock for the three session caches
-    * below: TrieMap.getOrElseUpdate alone does NOT guarantee one build —
-    * two concurrent first callers may both build, and the loser's
-    * persisted graph / pinned checkpoint would leak for the session's
-    * lifetime with no handle to unpersist it (ADVICE r05). The builds
-    * are rare (once per session × dir) and the harnesses are
-    * single-threaded, so one coarse lock is cheap insurance, not a
-    * bottleneck. */
-  private val memoLock = new Object
-
   /** (|V|, directed |E|) counted ONCE per (session, dir) — feeds the
     * volume-derived superstep partition counts ([[graft.Ckpt.partsFor]],
     * guide §2): every iterative loop here sizes its per-superstep
     * label/frontier exchanges and checkpoints to these instead of
     * inheriting the session's core-count default. Two count jobs per
     * session, amortized over every graph query. */
-  private val sizeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Long, Long)]
-
-  private def graphScale(s: SparkSession, dir: String): (Long, Long) = memoLock.synchronized {
-    sizeMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    sizeMemo.getOrElseUpdate((s, dir),
-      (allNodes(s, dir).count(), allEdges(s, dir).count()))
-  }
+  private def graphScale(s: SparkSession, dir: String): (Long, Long) =
+    Ckpt.memo(s, ("graphScale", dir)) {
+      (allNodes(s, dir).count(), allEdges(s, dir).count())
+    }
 
   /** Partition count for |V|-scale per-superstep frames of this graph. */
   private def nodeParts(s: SparkSession, dir: String): Int =
@@ -98,15 +75,18 @@ object GraphAlgos {
   private def edgeParts(s: SparkSession, dir: String): Int =
     Ckpt.partsFor(s, 2L * graphScale(s, dir)._2)
 
-  private def undirectedEdges(s: SparkSession, dir: String): DataFrame = memoLock.synchronized {
-    ueFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ueFrames.getOrElseUpdate((s, dir), {
+  /** The undirected, src-pre-partitioned edge frame every label/distance
+    * propagation joins against — built (one 2×|E| shuffle + checkpoint)
+    * ONCE per (session, dir) and shared by CC and BFS instead of each
+    * op re-shuffling it. Pinned: a drained localCheckpoint is
+    * unrecoverable. */
+  private def undirectedEdges(s: SparkSession, dir: String): DataFrame =
+    Ckpt.memo(s, ("undirectedEdges", dir)) {
       val e = allEdges(s, dir)
       Ckpt.pinned(
         e.union(e.select(col("dst").as("src"), col("src").as("dst")))
           .repartition(col("src")))
-    })
-  }
+    }
 
   /** Delta min-label propagation CC over a pre-built UNDIRECTED edge
     * frame (both orientations present, ideally src-pre-partitioned).
@@ -259,35 +239,29 @@ object GraphAlgos {
     * GraphX integration ops instead of each re-building it. Kept
     * persisted for the session like [[undirectedEdges]]; the ops still
     * unpersist their own RESULT graphs. */
-  private val gxGraphs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.graphx.Graph[Unit, Unit]]
-
   private def gxGraph(s: SparkSession, dir: String)
-      : org.apache.spark.graphx.Graph[Unit, Unit] = memoLock.synchronized {
+      : org.apache.spark.graphx.Graph[Unit, Unit] = Ckpt.memo(s, ("gxGraph", dir)) {
     import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
-    gxGraphs.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    gxGraphs.getOrElseUpdate((s, dir), {
-      val sp = s
-      import sp.implicits._
-      val eDf = allEdges(s, dir)
-      // Size edge partitions to DATA VOLUME, not to the loader plan's
-      // partitioning: the union-of-scans arrives in O(#frames × scan
-      // splits) partitions, and RDD Pregel (no AQE coalescing) pays
-      // 3 stages × P tasks of fixed cost EVERY iteration, plus
-      // EdgePartition2D replicates each vertex to ≤ 2√P partitions —
-      // both costs scale with P, so P must track |E|. ~1M edges
-      // (~32 MB of Edge[Unit]) per partition: thousands of partitions
-      // at 100 TB, single digits at bench SFs.
-      val parts = math.max(4, (eDf.count() / 1_000_000L).toInt)
-      val edgeRdd = eDf.as[(Long, Long)].rdd
-        .map { case (a, b) => Edge(a, b, ()) }
-        .coalesce(parts)
-      // EdgePartition2D bounds each vertex's replication at 2*sqrt(P)
-      // partitions, shrinking the per-iteration vertex-to-edge shuffle
-      // (the dominant cost of RDD Pregel on a star-heavy FK graph).
-      Graph.fromEdges(edgeRdd, defaultValue = ())
-        .partitionBy(PartitionStrategy.EdgePartition2D)
-    })
+    val sp = s
+    import sp.implicits._
+    val eDf = allEdges(s, dir)
+    // Size edge partitions to DATA VOLUME, not to the loader plan's
+    // partitioning: the union-of-scans arrives in O(#frames × scan
+    // splits) partitions, and RDD Pregel (no AQE coalescing) pays
+    // 3 stages × P tasks of fixed cost EVERY iteration, plus
+    // EdgePartition2D replicates each vertex to ≤ 2√P partitions —
+    // both costs scale with P, so P must track |E|. ~1M edges
+    // (~32 MB of Edge[Unit]) per partition: thousands of partitions
+    // at 100 TB, single digits at bench SFs.
+    val parts = math.max(4, (eDf.count() / 1_000_000L).toInt)
+    val edgeRdd = eDf.as[(Long, Long)].rdd
+      .map { case (a, b) => Edge(a, b, ()) }
+      .coalesce(parts)
+    // EdgePartition2D bounds each vertex's replication at 2*sqrt(P)
+    // partitions, shrinking the per-iteration vertex-to-edge shuffle
+    // (the dominant cost of RDD Pregel on a star-heavy FK graph).
+    Graph.fromEdges(edgeRdd, defaultValue = ())
+      .partitionBy(PartitionStrategy.EdgePartition2D)
   }
 
   /** Final fixed-point PageRank frame (id, rank: 1e-9 int64), computed
@@ -295,20 +269,14 @@ object GraphAlgos {
     * and g_pagerank_graphx cross-validates GraphX against it vertex by
     * vertex — the second consumer costs nothing beyond its own GraphX
     * run. Pinned like [[undirectedEdges]] (outside the drain ledger). */
-  private val prFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def fixedPageRank(s: SparkSession, dir: String): DataFrame = memoLock.synchronized {
-    prFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    prFrames.getOrElseUpdate((s, dir), {
-      // re-pinned OUTSIDE the drain ledger (session-lifetime cache), the
-      // [[lpaLabels]] discipline
+  private def fixedPageRank(s: SparkSession, dir: String): DataFrame =
+    Ckpt.memo(s, ("fixedPageRank", dir)) {
+      // re-pinned OUTSIDE the drain ledger, the [[lpaLabels]] discipline
       val ranks = pageRank(allNodes(s, dir), allEdges(s, dir), prIters)
       val out = Ckpt.pinned(ranks)
       Ckpt.drop(ranks)
       out
-    })
-  }
+    }
 
   /** Fixed-point integer PageRank over a DIRECTED (src,dst) edge frame:
     * `iters` power iterations from rank0 = 1e9, contributions
@@ -948,23 +916,16 @@ object GraphAlgos {
   }
 
   /** LPA labels memoized per (session, dir): g_labelprop and
-    * g_modularity share the 6-round propagation. Same discipline as
-    * [[ueFrames]] — the memoized frame is re-pinned OUTSIDE the drain
-    * ledger (the loop's own final checkpoint is drained between
-    * queries, so it must not be the cached handle) and evicted when its
-    * session stops. */
-  private val lpFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def lpaLabels(s: SparkSession, dir: String): DataFrame = memoLock.synchronized {
-    lpFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    lpFrames.getOrElseUpdate((s, dir), {
+    * g_modularity share the 6-round propagation. The memoized frame is
+    * re-pinned OUTSIDE the drain ledger (the loop's own final checkpoint
+    * is drained between queries, so it must not be the cached handle). */
+  private def lpaLabels(s: SparkSession, dir: String): DataFrame =
+    Ckpt.memo(s, ("lpaLabels", dir)) {
       val labels = labelProp(allNodes(s, dir), undirectedEdges(s, dir), lpIters)
       val out = Ckpt.pinned(labels)
       Ckpt.drop(labels)
       out
-    })
-  }
+    }
 
   /** Unrolled LPA steps for a DuckDB oracle: CTEs `l0..l{iters}` over
     * pre-bound `nn(id)` and `ue(src,dst)` CTEs. Every step references
@@ -1026,23 +987,17 @@ object GraphAlgos {
     * (session, dir) as pinned checkpoints. Returns (triCounts id→n_tri
     * over participating nodes only, degrees id→d over every node of the
     * pair graph); the build is [[triangleCounts]]. */
-  private val triFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private def coPurchaseTriangles(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memoLock.synchronized {
-      triFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      triFrames.getOrElseUpdate((s, dir), {
-        val (tc, deg, cached) = triangleCounts(coPurchasePairs(s, dir))
-        // pin the |V|-scale outputs (drain-safe, session-lifetime), then
-        // release the |E|-scale intermediates immediately — a raw cache
-        // would otherwise pin edge-scale frames per query for the
-        // session's lifetime
-        val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
-        Ckpt.drop(deg)
-        cached.foreach(_.unpersist(false))
-        out
-      })
+    Ckpt.memo(s, ("coPurchaseTriangles", dir)) {
+      val (tc, deg, cached) = triangleCounts(coPurchasePairs(s, dir))
+      // pin the |V|-scale outputs (drain-safe), then release the
+      // |E|-scale intermediates immediately — a raw cache would
+      // otherwise pin edge-scale frames per query for the session's
+      // lifetime
+      val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
+      Ckpt.drop(deg)
+      cached.foreach(_.unpersist(false))
+      out
     }
 
   /** The part co-purchase graph as canonical (a < b) distinct pairs. */

@@ -76,17 +76,6 @@ object TextOps {
   private val bpeCkptEvery = 8
   private def bpeCkptCadence(k: Int): Int = math.max(bpeCkptEvery, k / 32)
 
-  /** Trained merges memoized per (session, dir, corpus contentTag):
-    * training is deterministic and both the train-table and encode
-    * operators need the same merge list — without the memo the encode
-    * query replays the whole K-round driver loop. The contentTag in the
-    * key (file listing + sizes + mtimes, the PipeData srcTag discipline)
-    * invalidates the memo when the documents under dir are rewritten
-    * within one session. Stopped sessions are swept on access (the
-    * GraphLoader memo discipline). */
-  private val trainMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Seq[(String, String)]]()
-
   /** Spaced-token form of word `w`: `" c h a r s "`. Built with a
     * regexp_replace (each char → "char "), identical in both engines. */
   private def spaced(w: Column): Column =
@@ -94,13 +83,16 @@ object TextOps {
 
   /** Train: the K merge pairs in rank order (ties broken by pair string
     * ascending). One corpus pass + K vocabulary-table aggregates, with a
-    * lineage cut every [[bpeCkptEvery]] rounds. Memoized per
-    * (session, dir). */
-  private[operators] def bpeTrain(s: SparkSession, dir: String): Seq[(String, String)] = {
-    trainMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    trainMemo.computeIfAbsent((s, dir, PipeData.contentTag(dir)),
-      { _ => bpeTrainUncached(s, dir) })
-  }
+    * lineage cut every [[bpeCkptEvery]] rounds. Memoized per (session,
+    * dir, corpus contentTag) ([[graft.Ckpt.memo]]): training is
+    * deterministic and both the train-table and encode operators need
+    * the same merge list — without the memo the encode query replays the
+    * whole K-round driver loop. The contentTag in the key (file listing
+    * + sizes + mtimes, the PipeData srcTag discipline) invalidates the
+    * memo when the documents under dir are rewritten within one
+    * session. */
+  private[operators] def bpeTrain(s: SparkSession, dir: String): Seq[(String, String)] =
+    graft.Ckpt.memo(s, ("bpeTrain", dir, contentTag(dir)))(bpeTrainUncached(s, dir))
 
   /** Uncached train. `kMerges` rounds (default the oracle-pinned K=64);
     * `stopAtExhaustion` turns the loud corpus-exhaustion failure into a

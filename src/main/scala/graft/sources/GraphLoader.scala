@@ -44,11 +44,6 @@ object GraphLoader {
   val LineitemBase = 10000000000L
   val FreshBase    = 20000000000L // first id handed to `create`
 
-  // lineitem-with-ids frame per (session, dir) — see the memoization
-  // note in load(); TrieMap for lock-free concurrent loads.
-  private val lidFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Declared graph schema: node attribute types (MiniGQL int/string
     * only) and relation types, including the extension label `tag` used
     * by create/delete test queries. */
@@ -197,25 +192,18 @@ object GraphLoader {
     g.edges.foreach { case ((_, rel, _), df) => df.createOrReplaceTempView(s"edge_$rel") }
   }
 
-  // Loaded-graph memo per (session, dir) — round 18: the frames are lazy
-  // deterministic projections (memoizing them changes nothing about what
-  // executes), but returning the SAME PropertyGraph instance gives
-  // downstream per-graph caches an identity key: Engine's call-procedure
-  // bridge keys its hoisted undirected edge frame on the graph's edge
-  // map, so 13+ whole-graph bridge queries share ONE 2|E| hoist per
-  // session instead of paying one each, while a MUTATED graph (new map
-  // instance) still re-hoists. Same (session, dir) key and staleness
-  // stance as lidFrames above.
-  private val graphMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (PropertyGraph, Long)]
-
   /** Load the property graph from a testdata directory. Returns the
     * graph plus the first free node id for `create`. Memoized per
-    * (session, dir) — see [[graphMemo]]. */
-  def load(spark: SparkSession, dir: String): (PropertyGraph, Long) = {
-    graphMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    graphMemo.getOrElseUpdate((spark, dir), loadUncached(spark, dir))
-  }
+    * (session, dir) ([[graft.Ckpt.memo]]) — round 18: the frames are
+    * lazy deterministic projections (memoizing them changes nothing
+    * about what executes), but returning the SAME PropertyGraph
+    * instance gives downstream per-graph memo entries an identity key:
+    * Engine's call-procedure bridge keys its hoisted undirected edge
+    * frame on the graph's edge map, so 13+ whole-graph bridge queries
+    * share ONE 2|E| hoist per session instead of paying one each, while
+    * a MUTATED graph (new map instance) still re-hoists. */
+  def load(spark: SparkSession, dir: String): (PropertyGraph, Long) =
+    graft.Ckpt.memo(spark, ("GraphLoader.load", dir))(loadUncached(spark, dir))
 
   private def loadUncached(spark: SparkSession, dir: String): (PropertyGraph, Long) = {
     def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
@@ -235,19 +223,14 @@ object GraphLoader {
     // stage is parallel; the only extra cost is zipWithIndex's
     // per-partition count pass.
     //
-    // Memoized per (session, dir): the RDD hop produces a NEW plan object
-    // per call, which Spark's cache manager can NOT dedup the way it
-    // dedups identical declarative plans — without memoization every
-    // load() would re-sort and re-number the biggest table. One entry per
-    // scale-factor dir per session; all derived frames (1 node + 3 edge
-    // projections × every query) share the single cached materialization.
-    // (At cluster scale: assign ids once, persist via GraphStore.)
-    // Evict entries whose session has been stopped (ADVICE r03): the map
-    // would otherwise pin dead sessions' DataFrames for the JVM's life in
-    // long-lived processes (test suite, REPL) that restart sessions.
-    lidFrames.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val lineitem = lidFrames.getOrElseUpdate((spark, dir),
-      loadOrBuildLids(spark, dir).cache())
+    // Built once per (session, dir) through load()'s memo: the RDD hop
+    // produces a NEW plan object per call, which Spark's cache manager
+    // can NOT dedup the way it dedups identical declarative plans —
+    // without the memo every load() would re-sort and re-number the
+    // biggest table. All derived frames (1 node + 3 edge projections ×
+    // every query) share the single cached materialization. (At cluster
+    // scale: assign ids once, persist via GraphStore.)
+    val lineitem = loadOrBuildLids(spark, dir).cache()
 
     val lineId = col("lid")
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.engine.Engine
+import graft.engine.{Engine, PropertyGraph}
 import graft.sources.GraphLoader
 
 /** In-JVM differential tests for the iterative graph analytics at
@@ -589,6 +589,48 @@ class GraphAlgosSpec extends AnyFunSuite {
     Ckpt.drain()
     assert(left.forall(_ <= 2) && left.distinct.size == 1,
       s"RDDs left cached per call (whole graph, nregion): $left")
+  }
+
+  test("call cc() keys its edge hoist by graph version: one pin per new edge map") {
+    // The hoist is memoized per edge-map IDENTITY: a second call on the
+    // same version, or on a node-only successor (same edge map), reuses
+    // it; an edge create makes a new edge map and exactly one new hoist.
+    // A call also leaves its own drain-ledger frames (constant per call,
+    // see the test above), so each delta is compared with a call on a
+    // version whose hoist already exists.
+    val cc = "call cc() yield id, comp\nreturn id, comp"
+    def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
+    def run(g: PropertyGraph, nextId: Long, body: String): Engine.QueryResult = {
+      val r = Engine.runSourceOn(spark, GraphLoader.headerGql + body, g, nextId,
+        Engine.Config(strict = false))
+      r.bindings.collect()
+      r
+    }
+    def added(g: PropertyGraph): Int = {
+      val before = cachedRdds()
+      run(g, 0L, cc)
+      cachedRdds() - before
+    }
+    val (g0, nextId) = GraphLoader.load(spark, dir)
+    run(g0, nextId, cc)
+    Ckpt.drain()
+    // same version: nothing is left once the call's ledger is drained
+    val before = cachedRdds()
+    run(g0, nextId, cc)
+    Ckpt.drain()
+    assert(cachedRdds() - before == 0, "a second call cc() on one version pinned an RDD")
+    val perCall = added(g0)
+    val created = run(g0, nextId, """match (n:nation)
+where n.regionkey = 0
+create (t:tag)
+create (n) -[:tagged]-> (t)""")
+    assert(!(created.graph.edges eq g0.edges))
+    assert(added(created.graph) == perCall + 1, "an edge create must add exactly one hoist")
+    val set = run(created.graph, created.nextId,
+      "match (p:part) where p.psize < 5 set p.psize = p.psize * 100 + 7")
+    assert(set.graph.edges eq created.graph.edges)
+    assert(added(set.graph) == perCall, "a node-only set must reuse the edge hoist")
+    Ckpt.drain()
   }
 
   test("superstep partition knob rejects a bad value at entry, naming its key") {
