@@ -30,7 +30,7 @@ object Bcast {
   val defaultCap = 4000000L
 
   def cap(df: DataFrame): Long =
-    df.sparkSession.conf.get(confKey, defaultCap.toString).toLong
+    Knob.long(confKey, df.sparkSession.conf.get(confKey, defaultCap.toString), min = 0)
 
   /** `broadcast(df)` when the MEASURED row count of the frame (or a
     * conservative upper bound on it — e.g. the edge count for a

@@ -38,7 +38,7 @@ object Ckpt {
     * gone — so a cross-query cache must never enter [[drain]]'s sweep;
     * pinned frames live as long as their memo entry. */
   def pinned(df: DataFrame): DataFrame =
-    withoutAqe(df) { d => d.localCheckpoint(eager = true) }
+    GraftShim.nonAdaptive(df).localCheckpoint(eager = true)
 
   /** One build slot per memo key; the slot's monitor serializes builds
     * of ITS key only. */
@@ -101,12 +101,11 @@ object Ckpt {
   def deferredShared(df: DataFrame): DataFrame =
     GraftShim.dropOriginConstraints(deferred(df))
 
-  /** [[deferred]] with the hash partitioning preserved — same AQE flip
-    * as [[eagerPartitioned]]; the plan (and with it the partitioning the
-    * LogicalRDD leaf reports) is captured at mark time, so the flip only
-    * needs to cover the mark, not the later materializing action. */
+  /** [[deferred]] with the hash partitioning preserved, as in
+    * [[eagerPartitioned]]: the leaf's partitioning is fixed at mark time,
+    * so the later materializing action plans as usual. */
   def deferredPartitioned(df: DataFrame): DataFrame =
-    withoutAqe(df)(deferred)
+    deferred(GraftShim.nonAdaptive(df))
 
   /** [[eager]], but the checkpoint's hash partitioning survives: under
     * AQE, `localCheckpoint` captures the ADAPTIVE plan's output
@@ -114,52 +113,23 @@ object Ckpt {
     * re-shuffles the checkpointed frame even when it was just hash-
     * partitioned by the join key (measured: the SSSP/CC/BFS superstep
     * merge paid one extra full exchange of the accumulated frame per
-    * superstep). Disabling AQE only for the checkpoint's own
-    * materialization makes the captured partitioning concrete
-    * (hashpartitioning, fixed partition count); consuming queries still
-    * run under AQE and see a leaf they can co-partition against.
-    * The temporary conf flip assumes a single-threaded session, which
-    * [[withConfGate]] polices. */
+    * superstep). Planning only the checkpoint itself without AQE
+    * ([[GraftShim.nonAdaptive]]) keeps the concrete hashpartitioning;
+    * consumers still run under AQE and co-partition against the leaf. */
   def eagerPartitioned(df: DataFrame): DataFrame =
-    withoutAqe(df)(eager)
+    eager(GraftShim.nonAdaptive(df))
 
-  /** Polices the single-threaded-session assumption every temporary
-    * conf flip here relies on (ADVICE r06): a SECOND thread flipping
-    * session conf mid-flip would silently run queries with AQE off or
-    * the wrong shuffle-partition count. Reentrant (nested flips on one
-    * thread compose); a cross-thread overlap fails loudly instead of
-    * producing skewed plans. Shared with StreamingOps.withStreamShuffle. */
-  private[graft] val confGate = new java.util.concurrent.locks.ReentrantLock()
-  private[graft] def withConfGate[A](what: String)(body: => A): A = {
-    if (!confGate.tryLock())
-      throw new IllegalStateException(
-        s"concurrent session-conf mutation ($what): the temporary conf " +
-          "flips assume a single-threaded session")
-    try body finally confGate.unlock()
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `parts` —
-    * the §2 lever for iterative superstep loops, whose per-superstep
-    * label/frontier frames are orders of magnitude smaller than the
-    * session default (= core count) assumes. Every exchange, aggregate
-    * and checkpoint PLANNED inside `body` lands at `parts`; frames
-    * built before the flip (the heavy loop-invariant edge hoists) keep
-    * their compute-width placement, and a join between the two shuffles
-    * only the small side up to the wide side's count (measured on
-    * Spark 4.1: EnsureRequirements reuses the pre-partitioned side).
-    * Same restore-or-unset + single-threaded-session discipline as
-    * [[withoutAqe]]; reentrant with it (one lock). */
-  def withShuffle[A](s: org.apache.spark.sql.SparkSession, parts: Int)(body: => A): A =
-    withConfGate("loop shuffle partitions") {
-      val conf = s.conf
-      val key = "spark.sql.shuffle.partitions"
-      val prev = conf.getOption(key)
-      conf.set(key, parts.toString)
-      try body finally prev match {
-        case Some(v) => conf.set(key, v)
-        case None    => conf.unset(key)
-      }
-    }
+  /** Run `body` with `spark.sql.shuffle.partitions` at `parts` — the §2
+    * lever for superstep loops, whose label/frontier frames are orders of
+    * magnitude smaller than the session default (= core count) assumes.
+    * Every exchange and checkpoint planned on this thread inside `body`
+    * lands at `parts`; frames planned before (the edge hoists) keep
+    * their width, and a join against one keeps that width or broadcasts
+    * the loop side (both in the sf0.001 superstep plans, plans/pr9/).
+    * A thread-scoped overlay ([[GraftShim.withConf]]): the session conf
+    * never changes. */
+  def withShuffle[A](s: SparkSession, parts: Int)(body: => A): A =
+    GraftShim.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Volume-derived shuffle-partition count for an iterative loop's
     * per-superstep frames (guide §2: size partitions to DATA, not to
@@ -183,23 +153,9 @@ object Ckpt {
     val (key, raw) = s.conf.getOption(confKey).map(confKey -> _)
       .orElse(sys.env.get(envKey).map(envKey -> _))
       .getOrElse(confKey -> "250000")
-    val per = raw.toLongOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"$key must be a positive row count, got '$raw'"))
+    val per = Knob.long(key, raw, min = 1)
     math.max(1L, math.min((rows + per - 1) / per, 1L << 18)).toInt
   }
-
-  private def withoutAqe(df: DataFrame)(f: DataFrame => DataFrame): DataFrame =
-    withConfGate("disable AQE for checkpoint") {
-      val conf = df.sparkSession.conf
-      val key = "spark.sql.adaptive.enabled"
-      val prev = conf.getOption(key) // restore-or-unset, never bake in a default
-      conf.set(key, "false")
-      try f(df) finally prev match {
-        case Some(v) => conf.set(key, v)
-        case None    => conf.unset(key)
-      }
-    }
 
   /** Release one checkpoint's blocks now. */
   def drop(ds: Dataset[_]): Unit = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.GraphLoader
-import graft.{Bcast, Ckpt}
+import graft.{Bcast, Ckpt, Knob}
 
 /** Iterative graph analytics over the parquet→graph projection — the
   * GraphX-flavored extension axis of the engine (reference has none;
@@ -71,10 +71,6 @@ object GraphAlgos {
   private def nodeParts(s: SparkSession, dir: String): Int =
     Ckpt.partsFor(s, graphScale(s, dir)._1)
 
-  /** Partition count for |E|-scale per-superstep frames (undirected). */
-  private def edgeParts(s: SparkSession, dir: String): Int =
-    Ckpt.partsFor(s, 2L * graphScale(s, dir)._2)
-
   /** The undirected, src-pre-partitioned edge frame every label/distance
     * propagation joins against — built (one 2×|E| shuffle + checkpoint)
     * ONCE per (session, dir) and shared by CC and BFS instead of each
@@ -123,7 +119,8 @@ object GraphAlgos {
     // `parts` (round 19, guide §2): the per-superstep min-aggregation
     // exchange and the label checkpoints land at this volume-derived
     // count; the pre-placed undirected edge frame keeps its compute
-    // width (only the shrinking `changed` side shuffles up to meet it).
+    // width (plans/pr9: at sf0.001 the `changed` side is broadcast into
+    // it, and the edge frame does not move).
     var prev: DataFrame = Ckpt.eager(
       nodes.select(col("id"), col("id").as("comp")))
     var labels = prev
@@ -766,9 +763,10 @@ object GraphAlgos {
     // the candidate aggregation, the spine's one-time placement — and
     // every checkpoint lands at this volume-derived count instead of
     // the session's core-count default. The loop-invariant edge frame
-    // the `step` closure joins against was built OUTSIDE this flip at
-    // compute width; only the (small) frontier side shuffles up to
-    // meet it, so map parallelism over |E| is unchanged.
+    // the `step` closure joins against was built OUTSIDE this overlay
+    // at compute width and keeps it (plans/pr9: at sf0.001 the frontier
+    // side is broadcast into it), so map parallelism over |E| is
+    // unchanged.
     var dists: DataFrame = spine
     var frontier: DataFrame = spine.filter(col("d").isNotNull)
     var prev: Option[DataFrame] = None
@@ -1894,10 +1892,12 @@ object GraphAlgos {
     val conf = nodesIn.sparkSession.conf
     val maxRounds =
       if (maxRoundsArg > 0) maxRoundsArg
-      else conf.get("spark.graft.sccMaxRounds", sccMaxRounds.toString).toInt
+      else Knob.int("spark.graft.sccMaxRounds",
+        conf.get("spark.graft.sccMaxRounds", sccMaxRounds.toString), min = 1)
     val maxSupersteps =
       if (maxSuperstepsArg > 0) maxSuperstepsArg
-      else conf.get("spark.graft.sccMaxSupersteps", sccMaxSupersteps.toString).toInt
+      else Knob.int("spark.graft.sccMaxSupersteps",
+        conf.get("spark.graft.sccMaxSupersteps", sccMaxSupersteps.toString), min = 1)
     var remaining = Ckpt.eagerPartitioned(
       nodesIn.select(col("id")).repartition(col("id")))
     var remS = Ckpt.eagerPartitioned(
@@ -1909,8 +1909,10 @@ object GraphAlgos {
     // edge counts (rounds only shrink the graph), so the whole FW-BW
     // machine runs at a volume-derived partition count — both counts
     // are free off the just-materialized checkpoints. The initial
-    // placement above stays at session width; the first shrink()
-    // re-places the remaining graph at the loop width.
+    // placement above stays at session width, and joins against it keep
+    // that width: in plans/pr9/g_scc_*.txt a shrink() leaves the
+    // src-keyed copy hash-partitioned by dst at session width, and only
+    // the dst-keyed copy (an explicit repartition) lands at loop width.
     val assignedOut: DataFrame = Ckpt.withShuffle(nodesIn.sparkSession,
       Ckpt.partsFor(nodesIn.sparkSession, math.max(nRemaining, remS.count()))) {
     var assigned: DataFrame = null // (id, scc), grows per extraction

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryProgress, Trigger}
 import scala.jdk.CollectionConverters._
 
 /** Structured Streaming surface. Each operator here runs a REAL streaming
@@ -27,9 +28,10 @@ object StreamingOps {
     * file the state-carry path never executes (VERDICT r02 item 3). */
   val stagedFiles = 3
 
-  /** Data micro-batches observed by the most recent [[runToTable]] run —
-    * asserted >= stagedFiles by PipelineSpec. */
-  @volatile var lastRunDataBatches: Int = -1
+  /** Progress of the most recent [[runStream]] run; its data micro-batch
+    * count is asserted >= stagedFiles by PipelineSpec. */
+  @volatile var lastRunProgress: Array[StreamingQueryProgress] = Array.empty
+  def lastRunDataBatches: Int = lastRunProgress.count(_.numInputRows > 0)
 
   /** Content tag of the events source: path AND fingerprint (mtime+size,
     * recursive for directory-shaped parquet), so a regenerated
@@ -152,70 +154,58 @@ object StreamingOps {
     * carries ~13k state rows per batch, so 8 partitions is generous. At
     * 100 TB you raise this (it is pinned per-checkpoint by Spark's
     * OffsetSeqMetadata, so a production job picks it once at first
-    * start). */
-  val streamStatePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8").toInt
+    * start). Read at each run's start. */
+  def streamStatePartitions: Int = graft.Knob.int("SPARK_GRAFT_STREAM_PARTS",
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"), min = 1)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * [[streamStatePartitions]] — the value a streaming query captures at
-    * start governs its state partitioning for the life of its
-    * checkpoint. Restores the session value afterwards; the
-    * single-threaded-session assumption is enforced by the shared
-    * [[graft.Ckpt.withConfGate]] (cross-thread overlap fails loudly). */
-  private def withStreamShuffle[A](s: SparkSession)(body: => A): A =
-    graft.Ckpt.withConfGate("stream shuffle partitions") {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, streamStatePartitions.toString)
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+  /** Run the streaming query `start` makes of `df` to completion on a
+    * clone of `df`'s session whose `spark.sql.shuffle.partitions` is
+    * [[streamStatePartitions]] (a query's state width is the value it
+    * captures at start), so the caller's session conf never changes;
+    * then release the run's residue and `ckpt`. Returns the clone, where
+    * a memory sink's view registers. */
+  private def runStream(df: DataFrame, ckpt: java.nio.file.Path)(
+      start: DataFrame => StreamingQuery): SparkSession = {
+    val ss = GraftShim.cloneSession(df.sparkSession)
+    ss.conf.set("spark.sql.shuffle.partitions", streamStatePartitions.toString)
+    val q = start(GraftShim.rebind(ss, df))
+    try q.awaitTermination()
+    finally {
+      lastRunProgress = q.recentProgress
+      q.stop()
+      releaseStreamingResidue(ss)
+      GraftShim.detachStreamListeners(q)
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
     }
+    ss
+  }
 
   private def runToTable(df: DataFrame, mode: String)(implicit s: SparkSession): DataFrame = {
     val name = "sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ckpt = ckptScratch.resolve(name)
-    val q = withStreamShuffle(s) {
-      df.writeStream.format("memory").queryName(name)
+    val ss = runStream(df, ckpt)(
+      _.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    }
-    try q.awaitTermination()
-    finally {
-      lastRunDataBatches = q.recentProgress.count(_.numInputRows > 0)
-      q.stop()
-      releaseStreamingResidue(s)
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-    }
-    // Freeze the result off the sink and drop the temp view: the memory
-    // sink holds the full result per run and would otherwise accumulate
-    // one copy per invocation for the life of the session.
-    val frozen = graft.Ckpt.eager(s.table(name))
-    s.catalog.dropTempView(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start())
+    // Freeze the result off the sink (read back into the caller's
+    // session) and drop the temp view: the memory sink holds the full
+    // result per run and would otherwise accumulate one copy per
+    // invocation for the life of the session.
+    val frozen = graft.Ckpt.eager(GraftShim.rebind(s, ss.table(name)))
+    ss.catalog.dropTempView(name)
     frozen
   }
 
-  /** Leave the session exactly as the streaming query found it. Stopping
-    * a query does NOT release its state-store residue: every partition's
-    * StateStoreProvider stays loaded (HDFSBacked keeps the latest state
-    * maps in executor memory) and the shared maintenance thread keeps
-    * waking up to snapshot/clean providers whose temp checkpoints are
-    * already deleted. Across this 12-query family that residue is why
-    * in-sequence bench timings stopped matching isolated ones under the
-    * driver's environment (BENCH_r05: p_stream_stream_left 52.8 s vs
-    * 3.3 s isolated; every family after p_stream inflated 2-6× — VERDICT
-    * r05 item 1). Unloading all providers + stopping the maintenance
-    * task after each completed run makes the op hermetic; the
-    * maintenance task restarts lazily on the next StateStore.get, so
-    * later streaming queries are unaffected. resetTerminated() drops the
-    * session's grown terminated-query list (minor, same hygiene). */
-  private def releaseStreamingResidue(s: SparkSession): Unit =
-    if (!sys.env.contains("GRAFT_NO_STREAM_CLEANUP")) {
-      org.apache.spark.sql.GraftShim.unloadStreamingState()
-      s.streams.resetTerminated()
-    }
+  /** Leave the session as the streaming query found it. A stopped query
+    * keeps its state stores loaded ([[GraftShim.unloadStreamingState]]);
+    * across this 12-query family that residue made in-sequence timings
+    * 2-6× worse than isolated ones (BENCH_r05: p_stream_stream_left
+    * 52.8 s vs 3.3 s isolated, VERDICT r05 item 1). resetTerminated()
+    * drops the session's grown terminated-query list. */
+  private def releaseStreamingResidue(s: SparkSession): Unit = {
+    GraftShim.unloadStreamingState()
+    s.streams.resetTerminated()
+  }
 
   /** Per-batch reduce of the upsert pipeline: latest (ts, event_id) row
     * per key within ONE micro-batch — a |batch|-scale hash-partitioned
@@ -650,15 +640,14 @@ object StreamingOps {
     // the shuffled volume at |batch|, never |target|.
     Q("p_stream_upsert",
       (s, dir) => {
-        implicit val sp: SparkSession = s
         val target = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
         val name = "upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
         val ckpt = ckptScratch.resolve(name)
-        val q = withStreamShuffle(s) {
-          stream(s, dir).writeStream
+        runStream(stream(s, dir), ckpt)(
+          _.writeStream
             .option("checkpointLocation", ckpt.toString)
             .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
               val incoming = upsertReduce(batch)
               val prev = target.get()
               val merged = graft.Ckpt.eagerPartitioned(
@@ -667,15 +656,7 @@ object StreamingOps {
               target.set(merged)
               ()
             }
-            .start()
-        }
-        try q.awaitTermination()
-        finally {
-          lastRunDataBatches = q.recentProgress.count(_.numInputRows > 0)
-          q.stop()
-          releaseStreamingResidue(s)
-          org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-        }
+            .start())
         require(target.get() != null, "upsert stream produced no batches")
         target.get()
       },
@@ -701,18 +682,17 @@ object StreamingOps {
     // discipline as p_dedup_incremental_ingest, driven from a stream.
     Q("p_stream_dedup_store",
       (s, dir) => {
-        implicit val sp: SparkSession = s
         val name = "graft_bkt_seen_" +
           java.util.UUID.randomUUID().toString.replace("-", "")
         s.sql(s"CREATE TABLE $name (user_id BIGINT) USING parquet " +
           "CLUSTERED BY (user_id) SORTED BY (user_id) INTO 16 BUCKETS")
         val target = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
         val ckpt = ckptScratch.resolve(name)
-        val q = withStreamShuffle(s) {
-          stream(s, dir).writeStream
+        try runStream(stream(s, dir), ckpt)(
+          _.writeStream
             .option("checkpointLocation", ckpt.toString)
             .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
               val firsts = batch.groupBy("user_id")
                 .agg(min(struct(col("ts"), col("event_id"))).as("w"))
                 .select(col("user_id"), col("w.event_id").as("first_event_id"),
@@ -729,16 +709,8 @@ object StreamingOps {
               s.catalog.refreshTable(name)
               ()
             }
-            .start()
-        }
-        try q.awaitTermination()
-        finally {
-          lastRunDataBatches = q.recentProgress.count(_.numInputRows > 0)
-          q.stop()
-          releaseStreamingResidue(s)
-          org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-          s.sql(s"DROP TABLE IF EXISTS $name")
-        }
+            .start())
+        finally s.sql(s"DROP TABLE IF EXISTS $name")
         require(target.get() != null, "dedup-store stream produced no batches")
         target.get()
       },

@@ -119,17 +119,15 @@ object TextOps {
     // order), so the trained vocabulary is byte-identical.
     val nVocab = wf0.count()
     val vParts = graft.Ckpt.partsFor(s, nVocab)
-    graft.Ckpt.withShuffle(s, vParts) {
     // Whole-stage codegen OFF for the K driver-paced rounds: every
     // round's plan is new (one more chained replace), so codegen
     // compiles a fresh generated class per round — tens of ms × K of
     // pure janino time for a vocabulary-scale table where interpreted
-    // evaluation is instant. Restore-or-unset, same discipline as the
-    // shuffle flip above (single-threaded session, confGate-policed).
-    val cgKey = "spark.sql.codegen.wholeStage"
-    val cgPrev = s.conf.getOption(cgKey)
-    s.conf.set(cgKey, "false")
-    try {
+    // evaluation is instant. Both settings are a thread-scoped overlay,
+    // as in Ckpt.withShuffle: the session's own conf never changes.
+    org.apache.spark.sql.GraftShim.withConf(s,
+        "spark.sql.shuffle.partitions" -> vParts.toString,
+        "spark.sql.codegen.wholeStage" -> "false") {
     var wf: DataFrame = graft.Ckpt.eager(wf0.repartition(vParts))
     wf0.unpersist()
     var lastCk: Option[DataFrame] = Some(wf)
@@ -165,10 +163,6 @@ object TextOps {
     }
     lastCk.foreach(graft.Ckpt.drop)
     merges.result()
-    } finally cgPrev match {
-      case Some(v) => s.conf.set(cgKey, v)
-      case None    => s.conf.unset(cgKey)
-    }
     }
   }
 
@@ -281,7 +275,7 @@ object TextOps {
     Q("p_text_bpe_scale",
       (s, dir) => {
         import s.implicits._
-        val k = s.conf.get("spark.graft.bpeK", "1024").toInt
+        val k = graft.Knob.int("spark.graft.bpeK", s.conf.get("spark.graft.bpeK", "1024"), min = 1)
         val merges = bpeTrainUncached(s, dir, k, stopAtExhaustion = true)
         val blob = merges.map { case (a, b) => s"$a $b" }.mkString("\n")
         val digest = java.security.MessageDigest.getInstance("MD5")

@@ -10,6 +10,28 @@ object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df`'s analyzed plan over session `s` (its conf, its views). */
+  def rebind(s: SparkSession, df: DataFrame): DataFrame = ofRows(s, df.queryExecution.analyzed)
+
+  /** A copy of `s` with its own conf, temp views and streaming queries. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Run `body` with `settings` over a copy of `s`'s SQL conf, for THIS
+    * thread only: Catalyst reads `SQLConf.get`, which prefers the
+    * thread's existing conf to its session's, so what `body` plans sees
+    * the overlay while the session conf, read by every other thread,
+    * never changes. */
+  def withConf[A](s: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val overlay = s.asInstanceOf[classic.SparkSession].sessionState.conf.clone()
+    settings.foreach { case (k, v) => overlay.setConfString(k, v) }
+    internal.SQLConf.withExistingConf(overlay)(body)
+  }
+
+  /** `df`, its own actions planned without AQE; see [[execution.NonAdaptive]]. */
+  def nonAdaptive(df: DataFrame): DataFrame =
+    execution.NonAdaptive(df.asInstanceOf[classic.Dataset[Row]])
+
   /** Release the storage blocks behind an (eager local) checkpointed
     * Dataset. `Dataset.localCheckpoint` persists the physical plan's RDD
     * and wraps it in a LogicalRDD — there is no public API to unpersist
@@ -68,6 +90,19 @@ object GraftShim {
   def unloadStreamingState(): Unit =
     execution.streaming.state.StateStore.stop()
 
+  /** Detach the streaming-query listener buses of the session the
+    * finished query `q` was started from and of the clone it ran in from
+    * the SparkContext's bus. A session's streaming query manager adds its
+    * bus there for good, so each throwaway session would leave one behind
+    * for the life of the context. Only for a throwaway starting session. */
+  def detachStreamListeners(q: streaming.StreamingQuery): Unit = {
+    val run = q.asInstanceOf[execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+    val bus = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    Seq(run.sparkSession, run.sparkSessionForStream).foreach(s => s.sparkContext.listenerBus
+      .removeListener(bus.get(s.streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface]))
+  }
+
   /** Loaded state-store provider count (bench diagnostic; -1 if the
     * private field moved — reflection only, nothing depends on it). */
   def loadedStateStores(): Int =
@@ -78,4 +113,30 @@ object GraftShim {
       m.invoke(execution.streaming.state.StateStore)
         .asInstanceOf[scala.collection.mutable.Map[_, _]].size
     } catch { case _: Throwable => -1 }
+}
+
+package execution {
+  import org.apache.spark.sql.catalyst.encoders.RowEncoder
+  import org.apache.spark.sql.catalyst.rules.Rule
+
+  /** A Dataset over `ds`'s plan whose physical preparation is the rule
+    * list of a session with AQE off (`ReuseExchangeAndSubquery`
+    * included). Under AQE an action's plan is an `AdaptiveSparkPlanExec`
+    * with unknown output partitioning; a checkpoint of this Dataset
+    * keeps the concrete one (`hashpartitioning(id, n)`) in its
+    * `LogicalRDD` leaf. The AQE decision reads the session conf, not the
+    * thread's, so a conf overlay cannot make it. Frames derived from
+    * this Dataset plan as usual. Here because `QueryExecution.preparations`
+    * is `private[execution]`. */
+  private[sql] object NonAdaptive {
+    def apply(ds: classic.Dataset[Row]): classic.Dataset[Row] = {
+      val spark = ds.sparkSession
+      val qe = new QueryExecution(spark, ds.logicalPlan) {
+        override def preparations: Seq[Rule[SparkPlan]] =
+          QueryExecution.preparations(spark, None, subquery = false)
+      }
+      qe.assertAnalyzed()
+      new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(qe.analyzed.schema))
+    }
+  }
 }

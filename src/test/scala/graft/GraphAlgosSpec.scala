@@ -644,5 +644,29 @@ create (n) -[:tagged]-> (t)""")
       spark.conf.set(key, "300")
       assert(Ckpt.partsFor(spark, 1000L) == 4)
     } finally spark.conf.unset(key)
+    // the other numeric knobs, each read at its entry point (the bad
+    // value fails before any job or file read)
+    import spark.implicits._
+    val tiny = Seq(1L, 2L).toDF("id")
+    val scc = () => graft.operators.GraphAlgos.coloringSCC(tiny,
+      tiny.toDF("src").crossJoin(tiny.toDF("dst")))
+    val entries: Seq[(String, Seq[String], () => Any)] = Seq(
+      ("spark.graft.bcastRowCap", Seq("many", "1.5", "-4"), () => Bcast.gated(tiny, 2L)),
+      ("spark.graft.sccMaxRounds", Seq("many", "1.5", "0", "-4"), scc),
+      ("spark.graft.sccMaxSupersteps", Seq("many", "1.5", "0", "-4"), scc),
+      ("spark.graft.bpeK", Seq("many", "1.5", "0", "-4"),
+        () => SparkEntry.queries("p_text_bpe_scale")(spark, "/nonexistent")))
+    for ((k, bads, entry) <- entries) {
+      try {
+        for (bad <- bads) {
+          spark.conf.set(k, bad)
+          val e = intercept[IllegalArgumentException](entry())
+          assert(e.getMessage.contains(k), e.getMessage)
+        }
+      } finally spark.conf.unset(k)
+    }
+    spark.conf.set("spark.graft.bcastRowCap", "0")
+    try assert(Bcast.gated(tiny, 2L) eq tiny, "a 0 cap is valid and leaves the frame unhinted")
+    finally spark.conf.unset("spark.graft.bcastRowCap")
   }
 }
