@@ -101,22 +101,10 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // experiment knobs (default = driver conditions): shuffle partition
-      // count and AQE toggle, for isolating scheduling-latency effects
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.cpuSession()
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Alphabetical execution order: Map iteration order shifts whenever an
@@ -172,11 +160,6 @@ object Bench {
     // recorded in "retry_skipped" so the consumer knows the number is a
     // single contended pass, not a min-of-two.
     val retryBudget = sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET", "1800").toDouble
-    // Test knob (bench-harness only, never set by the driver): inflates
-    // each family total AS SEEN BY THE BAND CHECK, simulating a
-    // contended window so the provisional-total / retry-budget paths can
-    // be exercised on a fast SF without actually being slow.
-    val simSlow = sys.env.getOrElse("SPARK_GRAFT_SIM_SLOW", "1.0").toDouble
     val retrySkipped = scala.collection.mutable.ListBuffer.empty[String]
 
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -245,7 +228,7 @@ object Bench {
     famGroups.foreach { case (fam, qs) =>
       val t0 = System.nanoTime()
       qs.foreach { case (name, fn) => timeQuery(name, fn).foreach(timings(name) = _) }
-      val famTotal = qs.flatMap(q => timings.get(q._1)).sum * simSlow
+      val famTotal = qs.flatMap(q => timings.get(q._1)).sum
       val el = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] family $fam%-12s $el%7.1fs  " +
         s"loadedStateStores=${org.apache.spark.sql.GraftShim.loadedStateStores()}")

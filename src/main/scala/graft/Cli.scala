@@ -54,6 +54,11 @@ object Cli {
     (others.result(), ps.result())
   }
 
+  /** The harness session at `SPARK_GRAFT_MASTER` (default local[4]),
+    * 4 shuffle partitions; only errors are logged. */
+  private def session(): SparkSession = SparkEntry.session(
+    sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"), "4", logLevel = "ERROR")
+
   def main(args: Array[String]): Unit = args.toList match {
     case "f" :: file :: rest0 =>
       val (rest, params) = splitParams(rest0)
@@ -64,14 +69,7 @@ object Cli {
           System.err.println(s"bad option: ${bad.mkString(" ")} (expected --tex/--dot <path>)")
           sys.exit(2)
       }.toMap
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = session()
       try {
         val r = try Engine.runSource(spark, src, params = params) catch {
           // Reference-shaped parse-error path (interf.ml:43-46): print
@@ -109,14 +107,7 @@ object Cli {
       }
       val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
       val full = graft.sources.GraphLoader.headerGql + src
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = session()
       try {
         val r = try {
           val (g, nextId) = graft.sources.GraphLoader.load(spark, dir)
@@ -153,14 +144,7 @@ object Cli {
       }
       val src0 = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
       val full = if (dirOpt.isDefined) graft.sources.GraphLoader.headerGql + src0 else src0
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = session()
       try {
         val r = try dirOpt match {
           case Some(dir) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes `.explain("formatted")` for the named queries to files:
@@ -14,15 +13,7 @@ object PlanDump {
     val outDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.cpuSession()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

@@ -20,6 +20,29 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allOps.map(q => q.name -> q.run).toMap
 
+  /** The session the harness mains (Bench, Verify, PlanDump, Cli) run
+    * under: `master`, `partitions` shuffle partitions, AQE and ANSI on,
+    * UTC, no UI — so the timed run and the correctness dump plan alike. */
+  def session(master: String, partitions: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.ansi.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** [[session]] at `local[SPARK_GRAFT_CPUS]` (default 32) with as many
+    * shuffle partitions. */
+  def cpuSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    session(s"local[$cpus]", cpus)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

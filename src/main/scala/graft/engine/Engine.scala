@@ -68,18 +68,8 @@ object Engine {
   /** Execution config. `strict=true` reproduces the reference's
     * runtime-error semantics for reads of unset attributes / dangling
     * bindings via `raise_error` in the plan (sem.ml:148-158); `false`
-    * yields SQL NULL semantics (rows with NULL predicates drop).
-    * `deterministicIds=true` totally orders the binding table before
-    * allocating fresh node ids, so ids are a function of binding CONTENT,
-    * not partition layout — required for cross-engine result comparison;
-    * costs one sort per create-on-matched-table (skipped for the common
-    * create-from-unit-table case). `expandPaths=true` enables the
-    * cross-join → edge-join peephole (see compile below). */
-  final case class Config(
-      strict: Boolean = true,
-      checkpointEvery: Int = 24,
-      deterministicIds: Boolean = true,
-      expandPaths: Boolean = true)
+    * yields SQL NULL semantics (rows with NULL predicates drop). */
+  final case class Config(strict: Boolean = true)
 
   /** Lineage-cap key: a node label or an edge-type triple — kept distinct
     * so bump() can checkpoint the matching frame (a stringified edge key
@@ -135,89 +125,110 @@ object Engine {
   final case class QueryResult(graph: PropertyGraph, bindings: DataFrame,
       nextId: Long)
 
-  // --- physical instruction stream -----------------------------------
-  // The reference executes the IR literally: a pattern hop
-  // `(a)-[:r]->(b:B)` is a cartesian product with ALL b-labeled nodes
-  // followed by an existence semi-join (sem.ml:303-329) — O(|T|·|nodes|)
-  // intermediate. When the node instruction that introduces the new
-  // variable is immediately followed by the edge instruction that
-  // constrains it, the pair is equivalent to ONE inner equi-join against
-  // the (deduplicated, referentially intact) edge table: per existing
-  // row, cross+semi keeps one row per b-node with an (a,r,b) edge, and
-  // the edge table holds exactly one row per such pair. The rewrite
-  // turns the dominant pattern-match path into a broadcast/shuffle hash
-  // join Catalyst can plan well at any scale.
-  private sealed trait PhysOp
-  private final case class PExec(in: RInstr) extends PhysOp
-  /** Join bindings with edge table `key`; `boundVar`'s column matches the
-    * src (if `newIsDst`) or dst side; the other side becomes `newVar`.
-    * `rv` optionally registers a rel binding for the matched edge
-    * (round-10 edge properties) — it aliases the two endpoint columns,
-    * adding no join or column of its own. */
-  private final case class PExpand(
-      key: (String, String, String), boundVar: String, newVar: String,
-      newIsDst: Boolean, rv: Option[String] = None) extends PhysOp
-  /** Fused undirected hop: cross+semi over EITHER edge orientation fuses
-    * to one equi-join against the union of the declared orientation
-    * frames, deduplicated on the node pair — cross+semi yields exactly
-    * one row per connected (sv,tv) pair, and the union can hold a pair
-    * twice (reciprocal edges on a self-label relation), so unlike the
-    * directed [[PExpand]] the dedup is load-bearing. `sl`/`tl` are the
-    * pattern's sv-/tv-side labels, `fwd`/`rev` which orientations the
-    * schema declares (typing guarantees at least one). */
-  private final case class PExpandUndir(
-      sl: String, rl: String, tl: String, fwd: Boolean, rev: Boolean,
-      boundVar: String, newVar: String, newIsTv: Boolean) extends PhysOp
-  /** Fused `[:a|b]` alternation hop: one equi-join against the
-    * pair-deduped union of the resolved frames (each read in its
-    * pattern orientation — `flipped` frames dst-as-src). The dedup is
-    * load-bearing exactly like [[PExpandUndir]]'s: a pair connected by
-    * several listed types (or both orientations) must yield ONE row. */
-  private final case class PExpandAlt(
-      frames: List[((String, String, String), Boolean)],
-      boundVar: String, newVar: String, newIsTv: Boolean) extends PhysOp
-  /** Same peephole for a variable-length hop: cross+semi over the bounded
-    * closure fuses to one equi-join against the reach frame. `distVar`
-    * additionally binds the minimal hop count (`as d`). */
-  private final case class PExpandPath(
-      key: (String, String, String), lo: Int, hi: Int, boundVar: String,
-      newVar: String, newIsDst: Boolean,
-      distVar: Option[String] = None, undir: Boolean = false,
-      pathVar: Option[String] = None, allPaths: Boolean = false) extends PhysOp
+  // --- pattern hops --------------------------------------------------
+  // The reference executes a pattern hop `(a)-[:r]->(b:B)` literally: a
+  // cartesian product with ALL b-labeled nodes followed by an existence
+  // semi-join (sem.ml:303-329) — O(|T|·|nodes|) intermediate. Each hop
+  // kind (directed, undirected, `[:a|b]`, `*lo..hi`) has ONE pair
+  // builder, [[hopPairs]], and two join shapes read its pair frame:
+  //   - fused ([[expand]]): when the node instruction that introduces
+  //     the new variable is immediately followed by the hop that
+  //     constrains it, the pair is equivalent to ONE inner equi-join on
+  //     the bound side — per existing row, cross+semi keeps one row per
+  //     b-node paired with it, and the (deduplicated, referentially
+  //     intact) pair frame holds exactly one row per such pair. This
+  //     turns the dominant pattern-match path into a broadcast/shuffle
+  //     hash join Catalyst can plan well at any scale;
+  //   - bound-both (the hop's case in [[exec]]): a join on both
+  //     endpoints.
 
-  private def compilePlan(instrs: List[RInstr], cfg: Config): List[PhysOp] =
-    if (!cfg.expandPaths) instrs.map(PExec)
-    else instrs match {
-      case RMatchNode(v, _) :: RMatchEdge(sv, sl, rl, tv, tl, rv) :: rest
-          if tv == v && sv != v =>
-        // (bound sv)-[:rl]->(fresh v): new var is the edge's dst
-        PExpand((sl, rl, tl), sv, v, newIsDst = true, rv) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RMatchEdge(sv, sl, rl, tv, tl, rv) :: rest
-          if sv == v && tv != v =>
-        // (fresh v)-[:rl]->(bound tv): new var is the edge's src
-        PExpand((sl, rl, tl), tv, v, newIsDst = false, rv) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RMatchEdgeUndir(sv, sl, rl, tv, tl, f, r) :: rest
-          if tv == v && sv != v =>
-        // (bound sv)-[:rl]-(fresh v): new var is the pattern's tv side
-        PExpandUndir(sl, rl, tl, f, r, sv, v, newIsTv = true) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RMatchEdgeUndir(sv, sl, rl, tv, tl, f, r) :: rest
-          if sv == v && tv != v =>
-        PExpandUndir(sl, rl, tl, f, r, tv, v, newIsTv = false) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RMatchEdgeAlt(sv, _, tv, _, frames) :: rest
-          if tv == v && sv != v =>
-        PExpandAlt(frames, sv, v, newIsTv = true) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RMatchEdgeAlt(sv, _, tv, _, frames) :: rest
-          if sv == v && tv != v =>
-        PExpandAlt(frames, tv, v, newIsTv = false) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RVarPath(sv, key, lo, hi, tv, dist, undir, pathV, ap) :: rest
-          if tv == v && sv != v =>
-        PExpandPath(key, lo, hi, sv, v, newIsDst = true, dist, undir, pathV, ap) :: compilePlan(rest, cfg)
-      case RMatchNode(v, _) :: RVarPath(sv, key, lo, hi, tv, dist, undir, pathV, ap) :: rest
-          if sv == v && tv != v =>
-        PExpandPath(key, lo, hi, tv, v, newIsDst = false, dist, undir, pathV, ap) :: compilePlan(rest, cfg)
-      case i :: rest => PExec(i) :: compilePlan(rest, cfg)
-      case Nil       => Nil
+  /** A pattern hop's endpoint variables (sv, tv); None for every other
+    * instruction. */
+  private def hopEnds(in: RInstr): Option[(String, String)] = in match {
+    case h: RMatchEdge      => Some((h.sv, h.tv))
+    case h: RMatchEdgeUndir => Some((h.sv, h.tv))
+    case h: RMatchEdgeAlt   => Some((h.sv, h.tv))
+    case h: RVarPath        => Some((h.sv, h.tv))
+    case _                  => None
+  }
+
+  /** The hop's pair frame in pattern orientation: the sv side as `svAs`,
+    * the tv side as `tvAs`. Reverse orientations (the undirected hop's
+    * declared `rev` frame, an alternation's `flipped` frames) read
+    * dst-as-sv; multi-frame hops are the plain union, so a pair may
+    * appear twice (reciprocal edges on a self-label relation, a pair
+    * connected by several listed types). A varpath adds its minimal hop
+    * count (`as d`) as `<c>_d` and its witness node list (named path) as
+    * `<c>_p`; its closure expands FROM the distinct bound values of the
+    * sv side if `seedSv`, else the tv side — work scales with the seeds'
+    * reached frontier, not the relation's full closure (see
+    * [[varPathReachSeeded]]). */
+  private def hopPairs(st: ExecState, hop: RInstr, svAs: String, tvAs: String,
+      seedSv: Boolean, c: String): DataFrame = {
+    def read(key: (String, String, String), flipped: Boolean): DataFrame = {
+      val (s, t) = if (flipped) ("dst", "src") else ("src", "dst")
+      st.graph.edges(key).select(col(s).as(svAs), col(t).as(tvAs))
     }
+    hop match {
+      case RMatchEdge(_, sl, rl, _, tl, _) => read((sl, rl, tl), flipped = false)
+      case RMatchEdgeUndir(_, sl, rl, _, tl, fwd, rev) =>
+        (Option.when(fwd)(read((sl, rl, tl), flipped = false)) ++
+          Option.when(rev)(read((tl, rl, sl), flipped = true))).reduce(_ unionByName _)
+      case RMatchEdgeAlt(_, _, _, _, frames) =>
+        frames.map { case (key, flipped) => read(key, flipped) }.reduce(_ unionByName _)
+      case RVarPath(sv, key, lo, hi, tv, dist, undir, pathV, allPaths) =>
+        val seeds = st.bindings.select(col(st.colOf(if (seedSv) sv else tv)).as("seed")).distinct()
+        varPathReachSeeded(st.graph, key, lo, hi, seeds, seedIsSrc = seedSv,
+          dist = dist.nonEmpty, undir = undir, path = pathV.nonEmpty, allPaths = allPaths)
+          .select(Seq(col("src").as(svAs), col("dst").as(tvAs)) ++
+            dist.map(_ => col("hops").as(s"${c}_d")) ++
+            pathV.map(_ => col("path").as(s"${c}_p")): _*)
+      case other => throw new IllegalArgumentException(s"not a pattern hop: $other")
+    }
+  }
+
+  /** Fused `RMatchNode(v) :: hop` where `v` is exactly one of the hop's
+    * endpoints: an inner equi-join of the bindings with the hop's pair
+    * frame on the bound side. The undirected and alternation pair dedup
+    * is load-bearing here (cross+semi yields ONE row per connected
+    * pair); the directed and varpath frames already hold one row per
+    * pair (per witness walk under allShortestPaths). */
+  private def expand(st: ExecState, hop: RInstr, v: String): ExecState = {
+    val (sv, tv) = hopEnds(hop).get
+    val newIsTv = tv == v
+    val c = fresh(st)
+    val eS = s"${c}_src"
+    val (svAs, tvAs) = if (newIsTv) (eS, c) else (c, eS)
+    val pairs0 = hopPairs(st, hop, svAs, tvAs, seedSv = newIsTv, c)
+    val pairs = hop match {
+      case _: RMatchEdgeUndir | _: RMatchEdgeAlt => pairs0.dropDuplicates(svAs, tvAs)
+      case _                                     => pairs0
+    }
+    val joined = st.bindings
+      .join(pairs, col(st.colOf(if (newIsTv) sv else tv)) === col(eS))
+      .drop(eS)
+    bindHop(st.copy(bindings = joined, env = (v, c) :: st.env,
+      freshCounter = st.freshCounter + 1), hop, c)
+  }
+
+  /** What a hop binds besides its endpoints, after either join shape: a
+    * rel variable aliases the two endpoint columns (round-10 edge
+    * properties — no join or column of its own); a varpath binds `as d`
+    * and a named path, whose hidden `%rels_<p>` hop-label list (one
+    * label per hop; relationships(p) reads it) is a lazy per-row
+    * projection Catalyst prunes when unread. */
+  private def bindHop(st: ExecState, hop: RInstr, c: String): ExecState = hop match {
+    case RMatchEdge(sv, _, _, tv, _, Some(r)) =>
+      st.copy(edgeEnv = (r, (st.colOf(sv), st.colOf(tv))) :: st.edgeEnv)
+    case RVarPath(_, key, _, _, _, dist, _, pathV, _) =>
+      val (cD, cP, cR) = (s"${c}_d", s"${c}_p", s"${c}_r")
+      st.copy(
+        bindings = pathV.fold(st.bindings)(_ => st.bindings.withColumn(cR,
+          array_repeat(lit(key._2), size(col(cP)) - 1))),
+        env = pathV.toList.flatMap(p => List((s"%rels_$p", cR), (p, cP))) :::
+          dist.map(d => (d, cD)).toList ::: st.env)
+    case _ => st
+  }
 
   def run(spark: SparkSession, prog: TypedProg, graph: PropertyGraph,
           nextId: Long = 0L, config: Config = Config()): QueryResult = {
@@ -269,99 +280,22 @@ object Engine {
     if (outCols.isEmpty) st.bindings else st.bindings.select(outCols: _*)
   }
 
-  /** Fold the compiled physical ops over a state — the reference's
-    * instruction fold (sem.ml:299-378), also used recursively for
-    * pattern-predicate sub-plans (optional match / not exists). */
-  private def execPlan(spark: SparkSession, schema: Schema, st0: ExecState,
-      instrs: List[RInstr], config: Config): ExecState = {
-    var st = st0
-    compilePlan(instrs, config).foreach { op =>
-      val wasUnit = st.unitTable
-      op match {
-      case PExec(in) => st = exec(spark, schema, st, in, config)
-      case PExpand(key, boundVar, newVar, newIsDst, rv) =>
-        val c = fresh(st)
-        val eS = s"${c}_src"
-        val edf = st.graph.edges(key).select(col("src").as(if (newIsDst) eS else c),
-          col("dst").as(if (newIsDst) c else eS))
-        val joined = st.bindings
-          .join(edf, col(st.colOf(boundVar)) === col(eS))
-          .drop(eS)
-        // a rel binding aliases the endpoint columns of the fused join
-        val bc = st.colOf(boundVar)
-        st = st.copy(bindings = joined, env = (newVar, c) :: st.env,
-          freshCounter = st.freshCounter + 1,
-          edgeEnv = rv.fold(st.edgeEnv)(x =>
-            (x, if (newIsDst) (bc, c) else (c, bc)) :: st.edgeEnv))
-      case PExpandUndir(sl, rl, tl, fwd, rev, boundVar, newVar, newIsTv) =>
-        val c = fresh(st)
-        val eS = s"${c}_src"
-        // pair frame in pattern orientation (svSide, tvSide); the rev
-        // orientation's frame is read dst-as-svSide. Same broadcast/
-        // shuffle hash join as PExpand after the pair dedup.
-        val (svName, tvName) = if (newIsTv) (eS, c) else (c, eS)
-        val fdf = if (fwd) Some(st.graph.edges((sl, rl, tl))
-          .select(col("src").as(svName), col("dst").as(tvName))) else None
-        val rdf = if (rev) Some(st.graph.edges((tl, rl, sl))
-          .select(col("dst").as(svName), col("src").as(tvName))) else None
-        val pairs = (fdf.toSeq ++ rdf.toSeq).reduce(_ unionByName _)
-          .dropDuplicates(svName, tvName)
-        val joinedU = st.bindings
-          .join(pairs, col(st.colOf(boundVar)) === col(eS))
-          .drop(eS)
-        st = st.copy(bindings = joinedU, env = (newVar, c) :: st.env,
-          freshCounter = st.freshCounter + 1)
-      case PExpandAlt(frames, boundVar, newVar, newIsTv) =>
-        val c = fresh(st)
-        val eS = s"${c}_src"
-        val (svName, tvName) = if (newIsTv) (eS, c) else (c, eS)
-        val pairsA = frames.map { case (key, flipped) =>
-          val df = st.graph.edges(key)
-          if (flipped) df.select(col("dst").as(svName), col("src").as(tvName))
-          else df.select(col("src").as(svName), col("dst").as(tvName))
-        }.reduce(_ unionByName _).dropDuplicates(svName, tvName)
-        val joinedA = st.bindings
-          .join(pairsA, col(st.colOf(boundVar)) === col(eS))
-          .drop(eS)
-        st = st.copy(bindings = joinedA, env = (newVar, c) :: st.env,
-          freshCounter = st.freshCounter + 1)
-      case PExpandPath(key, lo, hi, boundVar, newVar, newIsDst, distVar, undir, pathVar, allPaths) =>
-        val c = fresh(st)
-        val eS = s"${c}_src"
-        val cD = s"${c}_d"
-        val cP = s"${c}_p"
-        // expand the closure FROM the bound side's distinct values —
-        // work scales with the seeds' reached frontier, not the
-        // relation's full closure (see varPathReachSeeded)
-        val seeds = st.bindings.select(col(st.colOf(boundVar)).as("seed")).distinct()
-        val rdf0 = varPathReachSeeded(st.graph, key, lo, hi, seeds,
-          seedIsSrc = newIsDst, dist = distVar.nonEmpty, undir = undir,
-          path = pathVar.nonEmpty, allPaths = allPaths)
-        val endpointCols = Seq(col("src").as(if (newIsDst) eS else c),
-          col("dst").as(if (newIsDst) c else eS))
-        val rdf = rdf0.select(
-          endpointCols ++ distVar.map(_ => col("hops").as(cD)) ++
-            pathVar.map(_ => col("path").as(cP)): _*)
-        val joined0 = st.bindings
-          .join(rdf, col(st.colOf(boundVar)) === col(eS))
-          .drop(eS)
-        // every named path binds its hidden `%rels_<p>` hop-label list
-        // alongside the witness (relationships(p) reads it; one label
-        // per hop — a lazy per-row projection Catalyst prunes when
-        // unread, so unconsumed companions cost nothing)
-        val cR = s"${c}_r"
-        val joined = pathVar.fold(joined0)(_ => joined0.withColumn(cR,
-          array_repeat(lit(key._2), size(col(cP)) - 1)))
-        st = st.copy(bindings = joined,
-          env = pathVar.map(p => (s"%rels_$p", cR)).toList :::
-            pathVar.map(p => (p, cP)).toList :::
-            distVar.map(d => (d, cD)).toList ::: (newVar, c) :: st.env,
-          freshCounter = st.freshCounter + 1)
-      }
-      // unit-ness survives nothing: even a constant where filters the row
-      if (wasUnit) st = st.copy(unitTable = false)
-    }
-    st
+  /** Fold the instructions over a state — the reference's instruction
+    * fold (sem.ml:299-378), also used recursively for pattern-predicate
+    * sub-plans (optional match / not exists). A node instruction
+    * followed by a hop that binds it on exactly one side runs as one
+    * fused [[expand]]. Unit-ness survives no instruction: even a
+    * constant where filters the row. */
+  @scala.annotation.tailrec
+  private def execPlan(spark: SparkSession, schema: Schema, st: ExecState,
+      instrs: List[RInstr], config: Config): ExecState = instrs match {
+    case RMatchNode(v, _) :: hop :: rest
+        if hopEnds(hop).exists { case (sv, tv) => (sv == v) != (tv == v) } =>
+      execPlan(spark, schema, expand(st, hop, v).copy(unitTable = false), rest, config)
+    case in :: rest =>
+      execPlan(spark, schema, exec(spark, schema, st, in, config).copy(unitTable = false),
+        rest, config)
+    case Nil => st
   }
 
   /** Execute a pattern-predicate's inner instruction list over the
@@ -379,6 +313,22 @@ object Engine {
       st.nextId, st.freshCounter,
       Map.empty[FrameKey, Int].withDefaultValue(0), st.nullable)
     (execPlan(spark, schema, sub0, inner, cfg), boundCols)
+  }
+
+  /** Join the outer rows to a pattern predicate's witnesses (the
+    * [[innerWitness]] sub-state `sub`) on the bound columns, with join
+    * type `how`: `left` for optional match, which carries the witness's
+    * fresh columns `carry`; `left_semi`/`left_anti` for exists / not
+    * exists, which keep or drop rows and carry nothing. */
+  private def joinWitness(st: ExecState, sub: ExecState, boundCols: List[String],
+      how: String, carry: List[String] = Nil): DataFrame = {
+    val wAliases = boundCols.indices.map(k => s"__w$k").toList
+    val witness = sub.bindings.select(
+      boundCols.zip(wAliases).map { case (bc, a) => col(bc).as(a) } ++ carry.map(col): _*)
+    val cond = boundCols.zip(wAliases)
+      .map { case (bc, a) => st.bindings(bc) === witness(a) }.reduce(_ && _)
+    val joined = st.bindings.join(witness, cond, how)
+    if (how == "left") joined.drop(wAliases: _*) else joined
   }
 
   /** Convenience: compile source and run against an empty graph.
@@ -433,12 +383,13 @@ object Engine {
     case RCreateNode(v, lb) =>
       // Must know the row count to allocate dense ids and advance the
       // counter (spec: PDF §3.6 — one fresh node per binding row).
-      // With deterministicIds, totally order the rows first so the
-      // id↔row pairing is a function of table content (duplicate rows
-      // are interchangeable, so ties are harmless); zipWithIndex then
-      // numbers rows in global sort order.
+      // Totally order the rows first so the id↔row pairing is a function
+      // of table content, not partition layout (duplicate rows are
+      // interchangeable, so ties are harmless); zipWithIndex then
+      // numbers rows in global sort order. A column-less table has
+      // nothing to sort: its rows are identical.
       val ordered =
-        if (cfg.deterministicIds && st.bindings.columns.nonEmpty)
+        if (st.bindings.columns.nonEmpty)
           st.bindings.orderBy(st.bindings.columns.map(col).toIndexedSeq: _*)
         else st.bindings
       val bindings = ordered.cache()
@@ -465,7 +416,7 @@ object Engine {
       val g2 = st.graph.copy(nodes = st.graph.nodes.updated(
         lb, st.graph.nodes(lb).unionByName(newNodes)))
       bump(st.copy(graph = g2, bindings = withIds, env = (v, c) :: st.env,
-        nextId = st.nextId + n, freshCounter = st.freshCounter + 1), Left(lb), cfg)
+        nextId = st.nextId + n, freshCounter = st.freshCounter + 1), Left(lb))
 
     case RMatchNode(v, lb) =>
       val c = fresh(st)
@@ -799,7 +750,7 @@ object Engine {
         applyActions(
           bump(st.copy(graph = g2, bindings = st.bindings.withColumn(c, lit(id)),
             env = (v, c) :: st.env, nextId = id + 1,
-            freshCounter = st.freshCounter + 1), Left(lb), cfg), onCreate)
+            freshCounter = st.freshCounter + 1), Left(lb)), onCreate)
       }
 
     case RCreateEdge(sv, sl, rl, tv, tl, props) =>
@@ -854,46 +805,28 @@ object Engine {
               attrNames.map(f => w.getField(f).as(f)): _*)
         }
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2))),
-        Right(key), cfg)
+        Right(key))
 
-    case RMatchEdge(sv, sl, rl, tv, tl, rv) =>
-      val edf = st.graph.edges((sl, rl, tl))
-      val joined = st.bindings.join(edf,
-        st.bindings(st.colOf(sv)) === edf("src") && st.bindings(st.colOf(tv)) === edf("dst"),
-        "left_semi")
-      st.copy(bindings = joined,
-        edgeEnv = rv.fold(st.edgeEnv)(x =>
-          (x, (st.colOf(sv), st.colOf(tv))) :: st.edgeEnv))
-
-    case RMatchEdgeAlt(sv, _, tv, _, frames) =>
-      // any-of existence: semi-join against the union of the resolved
-      // frames (flipped ones read dst-as-src); left_semi ignores
-      // multiplicity, so no pair dedup is needed on this path
-      val pairsAlt = frames.map { case (key, flipped) =>
-        val df = st.graph.edges(key)
-        if (flipped) df.select(col("dst").as("src"), col("src").as("dst"))
-        else df.select(col("src"), col("dst"))
-      }.reduce(_ unionByName _)
-      st.copy(bindings = st.bindings.join(pairsAlt,
-        st.bindings(st.colOf(sv)) === pairsAlt("src") &&
-          st.bindings(st.colOf(tv)) === pairsAlt("dst"),
-        "left_semi"))
-
-    case RMatchEdgeUndir(sv, sl, rl, tv, tl, fwd, rev) =>
-      // either-direction existence: semi-join against the union of the
-      // declared orientation frames (rev read dst-as-src). left_semi
-      // ignores multiplicity, so no pair dedup is needed here — the
-      // fused PExpandUndir path is where the dedup matters.
-      val fdf = if (fwd) Some(st.graph.edges((sl, rl, tl))
-        .select(col("src"), col("dst"))) else None
-      val rdf = if (rev) Some(st.graph.edges((tl, rl, sl))
-        .select(col("dst").as("src"), col("src").as("dst"))) else None
-      val pairs = (fdf.toSeq ++ rdf.toSeq).reduce(_ unionByName _)
-      val joinedU = st.bindings.join(pairs,
-        st.bindings(st.colOf(sv)) === pairs("src") &&
-          st.bindings(st.colOf(tv)) === pairs("dst"),
-        "left_semi")
-      st.copy(bindings = joinedU)
+    case hop @ (_: RMatchEdge | _: RMatchEdgeUndir | _: RMatchEdgeAlt | _: RVarPath) =>
+      // Both endpoints bound (normalize emits the node instructions
+      // first): keep the rows whose pair is in the hop's pair frame — a
+      // left_semi, which ignores multiplicity, so no pair dedup. A
+      // varpath binding `as d` or a path joins inner instead: one frame
+      // row per pair, so row multiplicity is unchanged, except under
+      // allShortestPaths, whose frame holds one row per MINIMAL-HOP
+      // WALK and fans each binding row out per witness (Cypher's
+      // enumeration semantics). The closure seeds from the sv side.
+      val (sv, tv) = hopEnds(hop).get
+      val c = fresh(st)
+      val pairs = hopPairs(st, hop, "src", "dst", seedSv = true, c)
+      val on = st.bindings(st.colOf(sv)) === pairs("src") &&
+        st.bindings(st.colOf(tv)) === pairs("dst")
+      hop match {
+        case p: RVarPath if p.dist.nonEmpty || p.pathV.nonEmpty =>
+          bindHop(st.copy(bindings = st.bindings.join(pairs, on).drop("src", "dst"),
+            freshCounter = st.freshCounter + 1), hop, c)
+        case _ => bindHop(st.copy(bindings = st.bindings.join(pairs, on, "left_semi")), hop, c)
+      }
 
     case RDeleteNode(v, lbl) =>
       val cs = st.env.collect { case (`v`, c) => c }
@@ -913,7 +846,7 @@ object Engine {
       bump(st.copy(graph = g2, bindings = st.bindings.drop(cs: _*),
         env = st.env.filterNot(_._1 == v),
         edgeEnv = st.edgeEnv.filterNot { case (_, (a, b)) => csSet(a) || csSet(b) }),
-        Left(lbl), cfg)
+        Left(lbl))
 
     case Typing.RDeleteAnyNode(v) =>
       // unlabeled delete (round 14): the binding carries only ids — ids
@@ -942,8 +875,8 @@ object Engine {
         env = st.env.filterNot(e => e._1 == v || e._1 == comp),
         edgeEnv = st.edgeEnv.filterNot { case (_, (a, b)) => csSet(a) || csSet(b) })
       // every frame mutated: advance each one's checkpoint cadence
-      val stE = st.graph.edges.keys.foldLeft(st2)((s2, k) => bump(s2, Right(k), cfg))
-      st.graph.nodes.keys.foldLeft(stE)((s2, l) => bump(s2, Left(l), cfg))
+      val stE = st.graph.edges.keys.foldLeft(st2)((s2, k) => bump(s2, Right(k)))
+      st.graph.nodes.keys.foldLeft(stE)((s2, l) => bump(s2, Left(l)))
 
     case RDeleteEdge(sv, sl, rl, tv, tl) =>
       val key = (sl, rl, tl)
@@ -951,7 +884,7 @@ object Engine {
         col(st.colOf(sv)).as("src"), col(st.colOf(tv)).as("dst")).distinct()
       val e2 = st.graph.edges(key).join(victims, Seq("src", "dst"), "left_anti")
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2))),
-        Right(key), cfg)
+        Right(key))
 
     case RReturn(vs) =>
       val projected = st.bindings.select(vs.map(v => col(st.colOf(v)).as(v)): _*)
@@ -1036,14 +969,7 @@ object Engine {
       // optional) never equals a witness key and binds NULL too.
       val (sub, boundCols) = innerWitness(spark, schema, st, inner, bound, cfg)
       val freshCols = freshVars.map { case (v, _) => sub.colOf(v) }.distinct
-      val wAliases = boundCols.indices.map(k => s"__w$k").toList
-      val witness = sub.bindings.select(
-        boundCols.zip(wAliases).map { case (bc, a) => col(bc).as(a) } ++
-          freshCols.map(col): _*)
-      val cond = boundCols.zip(wAliases)
-        .map { case (bc, a) => st.bindings(bc) === witness(a) }.reduce(_ && _)
-      val joined = st.bindings.join(witness, cond, "left").drop(wAliases: _*)
-      st.copy(bindings = joined,
+      st.copy(bindings = joinWitness(st, sub, boundCols, "left", freshCols),
         env = freshVars.reverse.map { case (v, _) => (v, sub.colOf(v)) } ::: st.env,
         freshCounter = sub.freshCounter,
         nullable = st.nullable ++ freshCols)
@@ -1054,14 +980,9 @@ object Engine {
       // (match-edge's join type, but existential: no bindings, no row
       // multiplication). A NULL bound column never equals a witness key
       // and drops, the complement of its not-exists survival.
-      val (subE, boundColsE) = innerWitness(spark, schema, st, inner, bound, cfg)
-      val wAliasesE = boundColsE.indices.map(k => s"__w$k").toList
-      val witnessE = subE.bindings.select(
-        boundColsE.zip(wAliasesE).map { case (bc, a) => col(bc).as(a) }: _*)
-      val condE = boundColsE.zip(wAliasesE)
-        .map { case (bc, a) => st.bindings(bc) === witnessE(a) }.reduce(_ && _)
-      st.copy(bindings = st.bindings.join(witnessE, condE, "left_semi"),
-        freshCounter = subE.freshCounter)
+      val (sub, boundCols) = innerWitness(spark, schema, st, inner, bound, cfg)
+      st.copy(bindings = joinWitness(st, sub, boundCols, "left_semi"),
+        freshCounter = sub.freshCounter)
 
     case RNotExists(inner, bound) =>
       // The mirror of match-edge's left_semi: keep rows with NO witness.
@@ -1069,60 +990,8 @@ object Engine {
       // existential); a NULL bound column trivially has no witness and
       // survives, consistent with the optional-match NULL semantics.
       val (sub, boundCols) = innerWitness(spark, schema, st, inner, bound, cfg)
-      val wAliases = boundCols.indices.map(k => s"__w$k").toList
-      val witness = sub.bindings.select(
-        boundCols.zip(wAliases).map { case (bc, a) => col(bc).as(a) }: _*)
-      val cond = boundCols.zip(wAliases)
-        .map { case (bc, a) => st.bindings(bc) === witness(a) }.reduce(_ && _)
-      st.copy(bindings = st.bindings.join(witness, cond, "left_anti"),
+      st.copy(bindings = joinWitness(st, sub, boundCols, "left_anti"),
         freshCounter = sub.freshCounter)
-
-    case RVarPath(sv, key, lo, hi, tv, dist, undir, pathV, allPaths) =>
-      // Both endpoints are bound (normalize emits the node instruction
-      // first); constrain existing rows to pairs in the bounded closure.
-      // both sides bound: seed the closure from the source side's
-      // distinct values (either side works; src keeps the expansion
-      // forward), then re-constrain both endpoints as before
-      val seeds = st.bindings.select(col(st.colOf(sv)).as("seed")).distinct()
-      if (dist.isEmpty && pathV.isEmpty) {
-        val reach = varPathReachSeeded(st.graph, key, lo, hi, seeds,
-          seedIsSrc = true, dist = false, undir = undir)
-        val joined = st.bindings.join(reach,
-          st.bindings(st.colOf(sv)) === reach("src") &&
-            st.bindings(st.colOf(tv)) === reach("dst"),
-          "left_semi")
-        st.copy(bindings = joined)
-      } else {
-        // same row filter, but each surviving row additionally binds
-        // the pair's minimal hop count and/or canonical witness list —
-        // an inner equi-join against the (src, dst, hops[, path]) frame
-        // (exactly one row per pair, so row multiplicity is unchanged
-        // vs the semi join; under allShortestPaths the frame holds one
-        // row per MINIMAL-HOP WALK, so the join fans each binding row
-        // out per witness — Cypher's enumeration semantics)
-        val cD = dist.map(_ => fresh(st))
-        val cP = pathV.map(_ => s"${fresh(st)}_p")
-        val reach0 = varPathReachSeeded(st.graph, key, lo, hi, seeds,
-          seedIsSrc = true, dist = dist.nonEmpty, undir = undir,
-          path = pathV.nonEmpty, allPaths = allPaths)
-        val reach = reach0.select(
-          col("src") +: col("dst") +:
-            (cD.map(c => col("hops").as(c)).toSeq ++
-              cP.map(c => col("path").as(c)).toSeq): _*)
-        val joined0 = st.bindings.join(reach,
-          st.bindings(st.colOf(sv)) === reach("src") &&
-            st.bindings(st.colOf(tv)) === reach("dst"))
-          .drop("src", "dst")
-        // hidden `%rels_<p>` hop-label companion, as in the fused
-        // PExpandPath case (pruned when unread)
-        val cR = cP.map(c => s"${c}r")
-        val joined = cP.fold(joined0)(c => joined0.withColumn(cR.get,
-          array_repeat(lit(key._2), size(col(c)) - 1)))
-        st.copy(bindings = joined,
-          env = pathV.zip(cR).map { case (p, c) => (s"%rels_$p", c) }.toList :::
-            pathV.zip(cP).toList ::: dist.zip(cD).toList ::: st.env,
-          freshCounter = st.freshCounter + 1)
-      }
 
     case Typing.RNamedPath(p, segs) =>
       // Pattern-order concatenation of the per-segment witnesses (round
@@ -1217,7 +1086,7 @@ object Engine {
         .join(upd, Seq("id"), "left")
         .withColumn(f, coalesce(col("__newv"), col(f)))
         .drop("__newv")
-      bump(st.copy(graph = st.graph.copy(nodes = st.graph.nodes.updated(lbl, n2))), Left(lbl), cfg)
+      bump(st.copy(graph = st.graph.copy(nodes = st.graph.nodes.updated(lbl, n2))), Left(lbl))
 
     case RRemove(v, lbl, f) =>
       // NULL-out the attribute on the bound nodes: a marker semi-join
@@ -1232,7 +1101,7 @@ object Engine {
         .withColumn(f, when(col("__rm").isNotNull, lit(null)).otherwise(col(f)))
         .drop("__rm")
       bump(st.copy(graph = st.graph.copy(nodes = st.graph.nodes.updated(lbl, n2R))),
-        Left(lbl), cfg)
+        Left(lbl))
 
     case RRemoveEdge(v, key, f) =>
       // edge twin through the rel binding's (src, dst) identity
@@ -1244,7 +1113,7 @@ object Engine {
         .withColumn(f, when(col("__rm").isNotNull, lit(null)).otherwise(col(f)))
         .drop("__rm")
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2R))),
-        Right(key), cfg)
+        Right(key))
 
     case RSetEdge(v, key, f, _, te) =>
       // `set x.f = e` through a rel binding: the node-set join-update
@@ -1261,7 +1130,7 @@ object Engine {
         .withColumn(f, coalesce(col("__newv"), col(f)))
         .drop("__newv")
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2))),
-        Right(key), cfg)
+        Right(key))
 
     case RDeleteEdgeBinding(v, key) =>
       // `delete x`: remove the bound (src, dst) pairs; the table keeps
@@ -1270,7 +1139,7 @@ object Engine {
       val victims = st.bindings.select(col(cS).as("src"), col(cD).as("dst")).distinct()
       val e2 = st.graph.edges(key).join(victims, Seq("src", "dst"), "left_anti")
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2)),
-        edgeEnv = st.edgeEnv.filterNot(_._1 == v)), Right(key), cfg)
+        edgeEnv = st.edgeEnv.filterNot(_._1 == v)), Right(key))
   }
 
   /** The shared return/with shaping: attribute joins, aggregation
@@ -1480,14 +1349,18 @@ object Engine {
     case StringV(s) => lit(s)
   }
 
+  /** Mutations of one node label / edge type between two lineage cuts
+    * ([[bump]]). */
+  private val checkpointCadence = 24
+
   /** Cap lineage growth on frequently re-written frames: after every
-    * `checkpointEvery` mutations of the same node label / edge type, cut
-    * the plan with an eager localCheckpoint (the engine-level
+    * [[checkpointCadence]] mutations of the same node label / edge type,
+    * cut the plan with an eager localCheckpoint (the engine-level
     * materialization policy of SURVEY.md §3.4 — Catalyst has no rule for
     * this). */
-  private def bump(st: ExecState, key: FrameKey, cfg: Config): ExecState = {
+  private def bump(st: ExecState, key: FrameKey): ExecState = {
     val d = st.mutationDepth(key) + 1
-    if (d >= cfg.checkpointEvery) {
+    if (d >= checkpointCadence) {
       val g = st.graph
       val g2 = key match {
         case Left(lbl) =>
@@ -1694,7 +1567,7 @@ object Engine {
     // exactly what keeps the per-hop joins exchange-free (PlanSpec pins
     // it), so a checkpoint would be a pessimization there. A freshly
     // MUTATED relation is the opposite: its frame carries up to
-    // checkpointEvery union+dedup+join layers of lineage, and
+    // checkpointCadence union+dedup+join layers of lineage, and
     // re-planning + re-executing that stack under AQE once per
     // superstep is quadratic — a 12-hop closure over a 12-create chain
     // took minutes (round 16). So hoist through ONE shared deferred

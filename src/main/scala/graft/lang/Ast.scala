@@ -324,7 +324,7 @@ final case class SimpPattern(np: NodePattern) extends Pattern
   * `->`, parser.mly:50-56). [[Rev]] — `(a)<-[:r]-(b)` — runs the edge
   * FROM the rest-side node TO this pattern's head: desugaring emits the
   * relation instruction with swapped endpoints and everything downstream
-  * (typing, the PExpand peephole, the seeded varpath) is reused
+  * (typing, the engine's fused hop join, the seeded varpath) is reused
   * unchanged. [[Undir]] — `(a)-[:r]-(b)` — matches the edge in EITHER
   * direction (Cypher's undirected relationship): match-only (direction
   * is storage, so create/merge reject it in typing), evaluated over the

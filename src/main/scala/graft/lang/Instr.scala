@@ -140,7 +140,7 @@ object Normalize {
     * drop or multiply the rows a set/where targets (create is 1:1 per
     * row, create-edge row-preserving; for match, filtering after the
     * joins is the same conjunction semantics), and appending keeps the
-    * node+edge adjacency the Engine's PExpand peephole fuses on. */
+    * node+edge adjacency the Engine's fused hop join fuses on. */
   private def declProps(pat: Pattern): List[(String, String, Expr)] = {
     def np(n: NodePattern): List[(String, String, Expr)] = n match {
       case DeclPattern(v, _, ps) => ps.map { case (f, e) => (v, f, e) }
@@ -158,7 +158,7 @@ object Normalize {
     * every hop carries a hidden per-segment witness binding, plus the
     * [[INamedPath]] that concatenates them — appended after the
     * clause's pattern instructions like property conjuncts (row-
-    * preserving, so the PExpand peephole's node+edge adjacency is
+    * preserving, so the node+edge adjacency the engine fuses on is
     * untouched). Non-named patterns pass through. The parser already
     * validated the chain (pure hops, no rel vars/props/alternation). */
   private def desugarNamed(fresh: () => String)(pat: Pattern): (Pattern, List[Instruction]) =
@@ -287,7 +287,7 @@ object Normalize {
     case Match(pats0) =>
       // match-edge property maps become `x.f = e` conjuncts through an
       // (auto-)bound rel variable, APPENDED like node props so the
-      // PExpand peephole still sees node+edge adjacency; general named
+      // engine's fused hop join still sees node+edge adjacency; general named
       // paths (round 13) desugar FIRST — their concat instruction is
       // appended last, after every hop's witness is bound
       val (plain, namedExtras) = pats0.map(desugarNamed(fresh)).unzip

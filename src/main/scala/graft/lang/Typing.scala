@@ -1342,7 +1342,7 @@ object Typing {
                 // the undirected closure symmetrizes ONE declared frame;
                 // two distinct declared orientations would need their
                 // union — reject rather than silently drop one side
-                // (the unnamed fixed hop handles that via PExpandUndir)
+                // (the unnamed fixed hop unions both declared frames)
                 if (fwd.isDefined && rev.isDefined && sl != tl)
                   Left(s"undirected single-hop -[:$rl]- between :$sl and :$tl is " +
                     "declared in both orientations — an unnamed pattern handles " +
@@ -1790,7 +1790,7 @@ object Typing {
     * (filtered by the other endpoint where known) agree on exactly one.
     * An unbound endpoint additionally gets an [[RMatchNode]] scan
     * inserted BEFORE the relational instruction — the exact sequence an
-    * explicit label produces, so the engine (and its PExpand peephole)
+    * explicit label produces, so the engine (and its fused node+hop join)
     * never sees a difference. A bound-at-%any endpoint only NARROWS
     * (rebinds the type-env label; node ids are globally unique, so
     * every row surviving the hop's id join belongs to the inferred

@@ -11,7 +11,7 @@ import graft.sources.GraphLoader
   * pairs it with the equivalent ANSI SQL the DuckDB oracle runs on the raw
   * parquet tables. Node ids are deterministic functions of the source keys
   * (see GraphLoader), and fresh ids from `create` are rank-ordered over the
-  * sorted binding table (Engine.Config.deterministicIds), so every result —
+  * sorted binding table (the engine's create), so every result —
   * including graph mutations — is SQL-reconstructible.
   *
   * strict=false here: the loaded graph has every declared attribute set, so
@@ -634,7 +634,7 @@ object GraphOps {
       Some("""SELECT DISTINCT CAST(n_nationkey AS BIGINT) + 2000000000 AS m
              |FROM nation WHERE n_regionkey = 0 OR n_nationkey < 4""".stripMargin)),
 
-    // bound-bound alternation: the semi-join path (no peephole), with
+    // bound-bound alternation: the semi-join path (no fused join), with
     // row multiplicity preserved like any match-edge
     Q("gql_match_alt_semi",
       bindings(
@@ -2069,7 +2069,7 @@ object GraphOps {
 
     // --- inline property maps (Cypher-shaped sugar; see Normalize):
     // on match, `(v:L {f: e})` desugars to where-conjuncts appended after
-    // the pattern — the PExpand peephole still fuses the hops
+    // the pattern — the engine still fuses the hops into equi-joins
     Q("gql_props_match",
       bindings(
         """match (c:customer {mktsegment: "BUILDING"}) -[:cnation]-> (n:nation {regionkey: 1})
@@ -2383,7 +2383,7 @@ object GraphOps {
     // --- reverse-direction patterns `<-[:r]-` (engine extension; the
     // reference grammar admits only `->`, parser.mly:50-56). The mixed
     // 2-hop below desugars to the SAME IR as gql_match_2hop read
-    // right-to-left — the PExpand peephole fuses both hops into
+    // right-to-left — the engine fuses both hops into
     // equi-joins exactly as in the forward form.
     Q("gql_match_rev",
       bindings(
@@ -2418,8 +2418,8 @@ object GraphOps {
     // undirected hop `-[:r]-` (Cypher's third direction): the edge may
     // run either way — on the self-label nnext chain each interior
     // nation pairs with BOTH neighbours. Match semantics stay
-    // cross+semi: one row per connected node pair (the fused
-    // PExpandUndir dedups the two-orientation union)
+    // cross+semi: one row per connected node pair (the fused join
+    // dedups the two-orientation union)
     Q("gql_match_undir",
       bindings(
         "match (a:nation) -[:nnext]- (b:nation) return a, b"),

@@ -236,9 +236,9 @@ class DifferentialSpec extends AnyFunSuite {
           }
         }
       case 5 => // variable-length path over a self-label relation
-        // the two forms exercise both engine paths: bound→bound is the
-        // reach semi-join (RVarPath), bound→fresh-decl the PExpandPath
-        // peephole (equi-join against the closure)
+        // the two forms exercise both join shapes: bound→bound is the
+        // reach semi-join, bound→fresh-decl the fused equi-join against
+        // the closure
         val starts = Seq(("P", "s"), ("Q", "t"))
           .flatMap { case (l, rl) => bound(l).map(a => (a, rl, l)) }
         if (starts.nonEmpty) {
@@ -258,7 +258,7 @@ class DifferentialSpec extends AnyFunSuite {
           // exercising the backward seeded expansion in the engine —
           // and another third UNDIRECTED `-[:rl*lo..hi]-` (round 9+):
           // the closure walks the symmetrized edge set on both engine
-          // paths (seeded expansion + the PExpandPath peephole)
+          // shapes (seeded expansion + the fused equi-join)
           val dirDraw = rnd.nextInt(3)
           def hop(src: String, tgt: String): String = dirDraw match {
             case 1 => s"match ($tgt) <-[:$rl*$lo..$hi$distSuffix]- ($src)\n"
@@ -272,9 +272,10 @@ class DifferentialSpec extends AnyFunSuite {
             val v = s"v$n"
             // reverse + fresh decl on the rest side binds v as the path
             // SOURCE (paths v→a) — the backward seeded expansion
-            // (PExpandPath newIsDst=false / varPathReachSeeded
-            // seedIsSrc=false), unreachable from forward-only programs;
-            // undirected + fresh decl is the undirected peephole
+            // (the fused hop seeds from its bound tv side:
+            // varPathReachSeeded seedIsSrc=false), unreachable from
+            // forward-only programs; undirected + fresh decl is the
+            // fused undirected closure
             dirDraw match {
               case 1 => sb ++= s"match ($a) <-[:$rl*$lo..$hi$distSuffix]- ($v:$l)\n"
               case 2 => sb ++= s"match ($a) -[:$rl*$lo..$hi$distSuffix]- ($v:$l)\n"
@@ -758,8 +759,8 @@ class DifferentialSpec extends AnyFunSuite {
         |merge (a) -[:s]-> (m2)
         |return a, m1, m2, m3
         |""".stripMargin,
-      // shortest-distance binding on BOTH engine paths: bound→fresh-decl
-      // (PExpandPath peephole) with d.hops in where AND return, under
+      // shortest-distance binding on BOTH join shapes: bound→fresh-decl
+      // (the fused equi-join) with d.hops in where AND return, under
       // path multiplicity (a→b direct edge and a→c→b 2-hop: minimum 1)
       """create (a:P {x: 1, nm: "alpha"})
         |create (b:P {x: 2, nm: "beta"})
@@ -773,7 +774,7 @@ class DifferentialSpec extends AnyFunSuite {
         |where d.hops >= 1
         |return u, w, d
         |""".stripMargin,
-      // bound→bound shortest path (the inner-join RVarPath path), with
+      // bound→bound shortest path (the bound-both inner join), with
       // the zero-length identity minimum (hops 0 beats the 1..2 routes)
       """create (a:P {x: 1, nm: "alpha"})
         |create (b:P {x: 2, nm: "beta"})
@@ -839,8 +840,8 @@ class DifferentialSpec extends AnyFunSuite {
         |return q2, w, src, d
         |""".stripMargin,
       // round 9: undirected hops — fixed hop from BOTH sides (fwd-only
-      // and rev-only orientations of RMatchEdgeUndir), the undirected
-      // peephole (fresh decl), and the undirected varpath incl. the
+      // and rev-only orientations of RMatchEdgeUndir), the fused
+      // undirected hop (fresh decl), and the undirected varpath incl. the
       // a-b-a walk self-pair and the distance binding over the
       // symmetrized closure
       """create (a:P {x: 1, nm: "alpha"})

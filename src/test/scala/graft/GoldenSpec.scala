@@ -49,6 +49,17 @@ class GoldenSpec extends AnyFunSuite {
   private def edgeSet(r: Engine.QueryResult, key: (String, String, String)): Set[(Long, Long)] =
     r.graph.edges(key).collect().map(row => (row.getLong(0), row.getLong(1))).toSet
 
+  /** A hop's two join shapes agree: `fused` declares the hop's far
+    * endpoint in the hop's own match (the fused equi-join), `boundBoth`
+    * binds both endpoints first (the join on both endpoints). Same bag
+    * of rows, and not an empty one. */
+  private def assertFusedIsBoundBoth(graph: String, fused: String, boundBoth: String): Unit = {
+    def bag(q: String): Seq[String] = Engine.runSource(spark, graph + q).bindings.collect()
+      .map(_.toSeq.mkString("[", ", ", "]")).toSeq.sorted
+    val (f, b) = (bag(fused), bag(boundBoth))
+    assert(f == b && f.nonEmpty, s"fused $f vs bound-both $b")
+  }
+
   test("tiny.q: two isolated creates") {
     val r = Engine.runSource(spark, resource("tiny.q"))
     assert(nodeIds(r, "A") == Seq(0L))
@@ -341,6 +352,12 @@ class GoldenSpec extends AnyFunSuite {
         |where l.val <> h.val
         |return l, h""".stripMargin)
     assert(rd.isEmpty, s"length(p) disagreed with the distance binding: $rd")
+    // the witness and its hop labels are the same in both join shapes
+    assertFusedIsBoundBoth(g,
+      "match p = (s:N) -[:r*1..3]-> (t:N)\n" +
+        "with s, t, nodes(p) as ns, relationships(p) as rs\nreturn s, t, ns, rs",
+      "match (s:N)\nmatch (t:N)\nmatch p = (s) -[:r*1..3]-> (t)\n" +
+        "with s, t, nodes(p) as ns, relationships(p) as rs\nreturn s, t, ns, rs")
     // multiplicity is UNCHANGED (canonical witness, not per-path rows):
     // a->d has 2 distinct 2-hop paths but exactly ONE row
     val rm = rows(
@@ -587,6 +604,12 @@ class GoldenSpec extends AnyFunSuite {
         |where id(s) = 0 and id(t) = 1
         |return length(p) as l""".stripMargin)
     assert(r1 == Seq(Seq(1L)), s"got $r1")
+    // one row per minimal walk in both join shapes
+    assertFusedIsBoundBoth(g,
+      "match p = allShortestPaths((s:N) -[:r*1..3]-> (t:N))\n" +
+        "with s, t, nodes(p) as ns\nreturn s, t, ns",
+      "match (s:N)\nmatch (t:N)\nmatch p = allShortestPaths((s) -[:r*1..3]-> (t))\n" +
+        "with s, t, nodes(p) as ns\nreturn s, t, ns")
   }
 
   test("named paths: fixed hops, multi-segment concat, relationships (round 13)") {
@@ -1308,6 +1331,10 @@ class GoldenSpec extends AnyFunSuite {
     assert(r.bindings.columns.toSeq == Seq("u", "v", "x_w"))
     assert(r.bindings.collect().map(t => (t.getLong(0), t.getLong(1), t.getLong(2))).toSet ==
       Set((1L, 2L, 100L))) // only b->c carries w=100; a->b has w=10
+    // the rel binding aliases the endpoint columns in both join shapes
+    assertFusedIsBoundBoth(edgeSrc,
+      "match (u:N) -[x:e]-> (v:N)\nwhere x.w >= 20\nreturn u, v, x.w",
+      "match (u:N)\nmatch (v:N)\nmatch (u) -[x:e]-> (v)\nwhere x.w >= 20\nreturn u, v, x.w")
     // the stored frame carries the typed column
     val e = r.graph.edges(("N", "e", "N")).orderBy("src").collect()
       .map(t => (t.getLong(0), t.getLong(1), t.getLong(2)))
@@ -1370,6 +1397,9 @@ class GoldenSpec extends AnyFunSuite {
       "match (u:N), (v:N)\nmatch (u) -[:e|f]-> (v)\nreturn u, v")
     assert(r2.bindings.collect().map(t => (t.getLong(0), t.getLong(1))).sorted.toSeq ==
       Seq((0L, 1L), (1L, 2L)))
+    assertFusedIsBoundBoth(altSrc,
+      "match (u:N) -[:e|f]-> (v:N)\nreturn u, v",
+      "match (u:N)\nmatch (v:N)\nmatch (u) -[:e|f]-> (v)\nreturn u, v")
     // undirected alternation: b's neighbours via either type, either way
     val r3 = Engine.runSource(spark, altSrc +
       "match (u:N) -[:e|f]- (v:N)\nwhere u.x = 2\nreturn v")
@@ -1511,6 +1541,14 @@ class GoldenSpec extends AnyFunSuite {
     // from n0 (id 0): n1→1, n2→1 (shortcut beats 0-1-2), n3→2 (0-2-3),
     // n4→3, n5→4
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    // the fused closure seeds from its bound side, the bound-both one
+    // from sv: same pairs and minima either way
+    assertFusedIsBoundBoth(shortcutSrc,
+      "match (a:N) -[:next*1..3]-> (b:N)\nreturn a, b",
+      "match (a:N)\nmatch (b:N)\nmatch (a) -[:next*1..3]-> (b)\nreturn a, b")
+    assertFusedIsBoundBoth(shortcutSrc,
+      "match (a:N) -[:next*1..3 as d]-> (b:N)\nreturn a, b, d.hops",
+      "match (a:N)\nmatch (b:N)\nmatch (a) -[:next*1..3 as d]-> (b)\nreturn a, b, d.hops")
   }
 
   test("shortest-path binding: lo > 1 windows the minimum; d usable in where and bare return") {
@@ -1660,10 +1698,18 @@ class GoldenSpec extends AnyFunSuite {
     val r = Engine.runSource(spark, chainSrc +
       "match (a:N {x: 20})\nmatch (b:N)\nmatch (a) -[:next]- (b)\nreturn b")
     assert(r.bindings.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 3L))
-    // fused form (PExpandUndir peephole) — same answer
+    // fused form (the equi-join on the deduped orientation union) —
+    // same answer
     val f = Engine.runSource(spark, chainSrc +
       "match (a:N {x: 20}) -[:next]- (b:N)\nreturn b")
     assert(f.bindings.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 3L))
+    // with a reciprocal edge n2 -> n1 the orientation union holds the
+    // pair (1, 2) twice: still one row per connected pair in both shapes
+    val reciprocal = chainSrc +
+      "match (a1:N), (a2:N) where a1.x = 10 and a2.x = 20\ncreate (a2) -[:next]-> (a1)\n"
+    assertFusedIsBoundBoth(reciprocal,
+      "match (a:N) -[:next]- (b:N)\nreturn a, b",
+      "match (a:N)\nmatch (b:N)\nmatch (a) -[:next]- (b)\nreturn a, b")
   }
 
   test("undirected varpath: exact-2 walks include the a-b-a self-pair") {

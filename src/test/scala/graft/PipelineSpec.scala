@@ -742,6 +742,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(first == second, "restarted file-sink run changed the landed data")
   }
 
+  test("file sink runs leave no streaming listener bus behind") {
+    // the query runs on the caller's session, whose streaming query
+    // manager puts one StreamingQueryListenerBus on the shared
+    // SparkContext's bus on the first run; a run that also left its
+    // stream clone's bus behind would grow the count on every run
+    def buses = org.apache.spark.ListenerBusProbe.streamBuses(spark.sparkContext)
+    run("p_stream_file_sink")
+    val after1 = buses
+    run("p_stream_file_sink")
+    run("p_stream_file_sink")
+    assert(buses == after1, s"streaming listener buses grew from $after1 to $buses over two runs")
+  }
+
   test("stream-stream interval join equals the batch interval join") {
     val got = run("p_stream_stream_join").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq

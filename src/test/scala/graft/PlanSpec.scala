@@ -49,22 +49,22 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("2-hop pattern match plans with no cartesian product") {
-    // the PExpand peephole fuses match-node × match-edge into equi-joins
+    // match-node × match-edge fuses into an equi-join on the bound side
     val p = plan("gql_match_2hop")
     assert(!p.contains("CartesianProduct"), s"unfused cross join in:\n$p")
   }
 
   test("named path keeps the varpath fusion: no cartesian, witness rides the reach join") {
-    // the pathVar-carrying PExpandPath must fuse exactly like the plain
-    // varpath — the witness array is one extra column on the reach
-    // frame, never a second join or a cross product
+    // a path-carrying varpath hop must fuse exactly like the plain one —
+    // the witness array is one extra column on the reach frame, never a
+    // second join or a cross product
     val p = plan("gql_named_path")
     assert(!p.contains("CartesianProduct"), s"unfused cross join in:\n$p")
   }
 
   test("inferred endpoints fuse like explicit labels: no cartesian") {
     // inference INSERTS the same RMatchNode an explicit label produces,
-    // so the PExpand peephole must fire identically
+    // so the hop must fuse identically
     for (q <- Seq("gql_match_any_edge", "gql_match_any_varpath")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q lost the fusion:\n$p")
@@ -91,10 +91,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("undirected hop fuses too: equi-join against the orientation union") {
-    // PExpandUndir — cross+semi over either orientation fuses to ONE
-    // equi-join against the (deduped) union of the declared orientation
-    // frames; same no-cartesian guarantee as the directed peephole, for
-    // both the fixed hop and the undirected varpath
+    // cross+semi over either orientation fuses to ONE equi-join against
+    // the (deduped) union of the declared orientation frames; same
+    // no-cartesian guarantee as the directed hop, for both the fixed
+    // hop and the undirected varpath
     for (q <- Seq("gql_match_undir", "gql_match_undir_mixed", "gql_varpath_undir")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"unfused cross join in $q:\n$p")
@@ -102,7 +102,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("alternation hop fuses too: equi-join against the type union") {
-    // PExpandAlt — cross+semi over any listed relation type fuses to
+    // cross+semi over any listed relation type fuses to
     // ONE equi-join against the pair-deduped union of the resolved
     // frames; the bound-bound form stays a semi-join (no cartesian
     // reintroduced by the union side)
