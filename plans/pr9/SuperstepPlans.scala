@@ -2,15 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 
 /** The SQL executions a query runs — action name and formatted executed
   * plan, expression/plan ids and checkpoint RDD names normalized — one
-  * file per query. Arguments: an output dir, a comma-separated list of
-  * `query:from-to` (1-based, inclusive execution window; a query alone
-  * keeps all) and the data dir. One session, queries in the given order,
-  * the Verify/Bench session settings at local[4]:
+  * file per query, `<query>.txt`. Next to it, `<query>.initial.txt` holds
+  * only each execution's initial plan, normalized the same way: the
+  * `== Initial Plan ==` subtree that adaptive execution fixes before any
+  * stage runs (a non-adaptive execution's whole plan is fixed up front).
+  * The full dump also shows the final plan, whose join sides, exchange
+  * reuse and stage ids AQE picks at run time and which can differ between
+  * runs of one commit; the initial plans do not, so one parent/change
+  * pair of them tells a plan change from run-time noise. Arguments: an
+  * output dir, a comma-separated list of `query:from-to` (1-based,
+  * inclusive execution window; a query alone keeps all) and the data dir.
+  * One session, queries in the given order, the Verify/Bench session
+  * settings at local[4]:
   *
   *   java -cp <this compiled>:target/scala-2.13/classes:<spark jars>:<scala-library> \
   *     graft.SuperstepPlans out g_bfs:3-4,g_scc:37-38 /path/to/sf0.001 */
@@ -25,6 +34,14 @@ object SuperstepPlans {
     renumber(renumber(noRdd, """#(\d+)""".r, i => s"#$i"), """plan_id=(\d+)""".r, i => s"plan_id=$i")
   }
 
+  /** The `== Initial Plan ==` subtree of an adaptive execution, or the
+    * whole physical plan of a non-adaptive one. */
+  def initialPlan(qe: QueryExecution): String =
+    "== Initial Plan ==\n" + (qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan.treeString
+      case p => p.treeString
+    })
+
   def main(args: Array[String]): Unit = {
     val Array(outDir, namesArg, dir) = args
     val spark = SparkSession.builder()
@@ -36,12 +53,16 @@ object SuperstepPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // (full dump, initial plan) per execution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        seen.add(s"==== $f ====\n" + normalize(qe.explainString(FormattedMode)))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(s"==== $f FAILED: $e ====")
+        seen.add((s"==== $f ====\n" + normalize(qe.explainString(FormattedMode)),
+          s"==== $f ====\n" + normalize(initialPlan(qe))))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = {
+        val failed = s"==== $f FAILED: $e ===="
+        seen.add((failed, failed))
+      }
     })
     Files.createDirectories(Paths.get(outDir))
     namesArg.split(",").foreach { spec =>
@@ -53,10 +74,15 @@ object SuperstepPlans {
       SparkEntry.queries(name)(spark, dir).collect()
       var n = -1
       while (n != seen.size) { n = seen.size; Thread.sleep(1500) }
-      val out = new StringBuilder(s"# $name: SQL executions ${window.start}-${math.min(window.end, n)} of $n\n")
+      val head = s"# $name: SQL executions ${window.start}-${math.min(window.end, n)} of $n\n"
+      val (out, initial) = (new StringBuilder(head), new StringBuilder(head))
       var i = 0
-      seen.forEach { p => i += 1; if (window.contains(i)) out.append(p).append('\n') }
+      seen.forEach { case (full, init) =>
+        i += 1
+        if (window.contains(i)) { out.append(full).append('\n'); initial.append(init).append('\n') }
+      }
       Files.writeString(Paths.get(outDir, s"$name.txt"), out.toString)
+      Files.writeString(Paths.get(outDir, s"$name.initial.txt"), initial.toString)
       Ckpt.drain()
       System.err.println(s"[superstep-plans] $name: $n executions")
     }

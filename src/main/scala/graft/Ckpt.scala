@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftShim, SparkSession}
   * slower at the end of a full bench run than in isolation, from block
   * eviction churn). Two release points:
   *
-  *   - operators [[drop]] a checkpoint the moment the next one is
-  *     materialized (nothing derives from it anymore);
+  *   - the superstep driver ([[Superstep]]) and the operators [[drop]] a
+  *     checkpoint the moment nothing live reads it anymore;
   *   - harnesses (Bench, Verify) [[drain]] whatever is left after fully
   *     consuming each query's result.
   *
@@ -118,18 +118,6 @@ object Ckpt {
     * consumers still run under AQE and co-partition against the leaf. */
   def eagerPartitioned(df: DataFrame): DataFrame =
     eager(GraftShim.nonAdaptive(df))
-
-  /** Run `body` with `spark.sql.shuffle.partitions` at `parts` — the §2
-    * lever for superstep loops, whose label/frontier frames are orders of
-    * magnitude smaller than the session default (= core count) assumes.
-    * Every exchange and checkpoint planned on this thread inside `body`
-    * lands at `parts`; frames planned before (the edge hoists) keep
-    * their width, and a join against one keeps that width or broadcasts
-    * the loop side (both in the sf0.001 superstep plans, plans/pr9/).
-    * A thread-scoped overlay ([[GraftShim.withConf]]): the session conf
-    * never changes. */
-  def withShuffle[A](s: SparkSession, parts: Int)(body: => A): A =
-    GraftShim.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Volume-derived shuffle-partition count for an iterative loop's
     * per-superstep frames (guide §2: size partitions to DATA, not to

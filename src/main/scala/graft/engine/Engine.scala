@@ -534,8 +534,7 @@ object Engine {
               coalesce(col("ind"), lit(0L)).as(cols(2)))
         case "cc" =>
           // component labels (comp = component min id) — the library
-          // deltaCC, diameter-bound at 20 supersteps with the usual
-          // loud non-convergence
+          // deltaCC, diameter-bound at 20 supersteps
           val (labels, _) = graft.operators.GraphAlgos.deltaCC(
             allNodes, hoistUndirected().ue, maxIters = 20,
             graft.Ckpt.partsFor(spark, nNodes()))
@@ -1454,49 +1453,10 @@ object Engine {
     case _: RRetVar            => Nil
   }
 
-  /** Distinct (src,dst) pairs connected by `lo..hi` consecutive edges of
-    * one label-homogeneous relation type — the FULL bounded transitive
-    * closure behind `-[:r*lo..hi]->`. Each extra hop is ONE distributed
-    * self-join of the edge frame followed by a distinct; the per-level
-    * dedup keeps the intermediate linear in reachable-pairs (path
-    * multiplicity never materializes) — the depth cap (typing: hi <= 10)
-    * bounds the join chain. The ENGINE no longer calls this directly:
-    * both varpath paths seed the expansion from the bound endpoints
-    * ([[varPathReachSeeded]]), whose work tracks the bindings' frontier
-    * instead of the whole relation; this full closure remains the
-    * exactness baseline the seeded path is differentially pinned
-    * against (PlanSpec / GoldenSpec). */
-  private[graft] def varPathReach(graph: PropertyGraph,
-      key: (String, String, String), lo: Int, hi: Int): DataFrame = {
-    val edges = graph.edges(key).select(col("src"), col("dst"))
-    // lo = 0 (Cypher zero-length path): seed with the identity pair of
-    // EVERY node of the homogeneous label — including isolated nodes,
-    // which have a zero-length path to themselves but touch no edge.
-    // The node frame is id-partitioned like the edge endpoints, so the
-    // union adds no exchange beyond the closure's own.
-    val ident =
-      if (lo == 0) Some(graph.nodes(key._1).select(col("id").as("src"), col("id").as("dst")))
-      else None
-    if (hi == 0) ident.get.dropDuplicates("src", "dst")
-    else {
-      var cur = edges // exactly-d-hop pairs (deduped), d = 1 …
-      var acc = if (lo <= 1) edges else null
-      for (d <- 2 to hi) {
-        val stepped = cur.as("p")
-          .join(edges.as("e"), col("p.dst") === col("e.src"))
-          .select(col("p.src").as("src"), col("e.dst").as("dst"))
-          .dropDuplicates("src", "dst")
-        cur = stepped
-        if (d >= lo) acc = if (acc == null) cur else acc.unionByName(cur)
-      }
-      val hops = if (acc == null) cur else acc
-      ident.fold(hops)(_.unionByName(hops)).dropDuplicates("src", "dst")
-    }
-  }
-
   /** Bindings-seeded bounded closure — the engine's varpath path.
     *
-    * [[varPathReach]]/[[varPathReachDist]] materialize the relation's
+    * The full closures (test scope: `VarPathClosure`, the exactness
+    * baseline this path is pinned against) materialize the relation's
     * FULL lo..hi closure before the bindings join, so their work scales
     * with |graph|² on a dense relation even when the binding table holds
     * a handful of rows. This variant expands hop-by-hop FROM the distinct
@@ -1661,34 +1621,26 @@ object Engine {
       else if (unbounded) {
         // convergence-driven closure (round 16, VERDICT r15 item 2): no
         // unrolled depth — each superstep's frontier of strictly-new
-        // pairs is checkpoint-marked shared (three consumers: the
-        // output union, the next hop's join, the later levels' prunes)
-        // and COUNTED, the count being the superstep's ONLY job (it
-        // materializes the deferred checkpoint AND is the convergence
-        // probe — the deltaCC discipline). Empty frontier ⟺ the
-        // reachability fixed point; exhausting varPathMaxSupersteps
-        // unconverged fails LOUDLY — never the silent truncation the
-        // old default-cap spelling had.
-        ident.foreach(df => reach(df))
-        val out = List.newBuilder[DataFrame]
-        var cur = graft.Ckpt.deferredShared(prune(level1))
-        var d = 1
-        var n = cur.count()
-        // every level joins the base closure regardless of lo — a
+        // pairs is one superstep of the driver, its checkpoint marked
+        // shared (three consumers: the output union, the next hop's
+        // join, the later levels' prunes) and its count the probe. Empty
+        // frontier ⟺ the reachability fixed point; exhausting
+        // varPathMaxSupersteps unconverged fails LOUDLY — never the
+        // silent truncation the old default-cap spelling had. Level 1
+        // joins the base closure even when empty, regardless of lo — a
         // floor >= 2 windows AFTER convergence (the `windowed`
-        // composition); empty frame is harmless
-        out += tag(cur, 1)
-        reach(cur)
-        while (n > 0) {
-          require(d < Typing.varPathMaxSupersteps,
-            s"unbounded variable-length path not converged after " +
-              s"${Typing.varPathMaxSupersteps} supersteps — write an explicit bound")
-          d += 1
-          cur = graft.Ckpt.deferredShared(prune(step(cur)))
-          n = cur.count()
-          if (n > 0) { out += tag(cur, d); reach(cur) }
+        // composition); an empty frame is harmless.
+        ident.foreach(df => reach(df))
+        val (found, _) = graft.Superstep.converge(seeds.sparkSession, "unbounded variable-length path",
+            Typing.varPathMaxSupersteps, hint = " — write an explicit bound")(
+            List.empty[DataFrame])(identity) { (found, d) =>
+          graft.Superstep.Probe(prune(found.headOption.fold(level1)(step)),
+              mark = graft.Ckpt.deferredShared) { (cur, n) =>
+            if (n == 0L && d > 1) graft.Superstep.Done(found)
+            else { reach(cur); graft.Superstep.doneIf(n == 0L)(cur :: found) }
+          }
         }
-        out.result()
+        found.reverse.zipWithIndex.map { case (cur, i) => tag(cur, i + 1) }
       }
       else {
         if (pruned) ident.foreach(df => reach(df))
@@ -1776,40 +1728,6 @@ object Engine {
       Seq(col("dst").as("src"), col("src").as("dst")) ++
         (if (withHops) Seq(col("hops")) else Nil) ++
         (if (path) Seq(col("path")) else Nil): _*)
-  }
-
-  /** [[varPathReach]] with the MINIMAL hop count per reachable pair —
-    * the shortest-path distance within the lo..hi window (`as d`).
-    * Levels are already deduped per hop count, so tagging each level
-    * with its depth and taking the per-pair min adds no asymptotic cost:
-    * the union holds ≤ (hi−lo+1)×|pairs| rows and the closing groupBy
-    * replaces the plain closure's dropDuplicates — same shuffle count,
-    * same per-level co-partitioned self-join chain at scale. A zero-
-    * length identity pair (lo = 0) is depth 0, trivially the minimum. */
-  private[graft] def varPathReachDist(graph: PropertyGraph,
-      key: (String, String, String), lo: Int, hi: Int): DataFrame = {
-    val edges = graph.edges(key).select(col("src"), col("dst"))
-    val ident =
-      if (lo == 0) Some(graph.nodes(key._1)
-        .select(col("id").as("src"), col("id").as("dst"), lit(0L).as("hops")))
-      else None
-    val levels =
-      if (hi == 0) Nil
-      else {
-        var cur = edges
-        val out = List.newBuilder[DataFrame]
-        if (lo <= 1) out += edges.withColumn("hops", lit(1L))
-        for (d <- 2 to hi) {
-          cur = cur.as("p")
-            .join(edges.as("e"), col("p.dst") === col("e.src"))
-            .select(col("p.src").as("src"), col("e.dst").as("dst"))
-            .dropDuplicates("src", "dst")
-          if (d >= lo) out += cur.withColumn("hops", lit(d.toLong))
-        }
-        out.result()
-      }
-    (ident.toList ++ levels).reduce(_ unionByName _)
-      .groupBy("src", "dst").agg(min("hops").as("hops"))
   }
 
   /** Compile a typed expression to a Spark SQL string. Integer division

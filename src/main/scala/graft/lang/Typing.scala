@@ -285,7 +285,7 @@ object Typing {
     * Cypher reachability on any-diameter graphs. A floor lo >= 2
     * composes: step^(lo-1) applied to the converged closure — exact
     * because the per-level step map distributes over the level union
-    * (see varPathReach's extension notes). */
+    * (see varPathReachSeeded's `windowed` notes). */
   val varPathUnbounded: Int = Int.MaxValue
 
   /** Loud superstep bound for the convergence-driven closure: 64 BFS

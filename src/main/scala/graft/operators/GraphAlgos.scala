@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.GraphLoader
-import graft.{Bcast, Ckpt, Knob}
+import graft.{Bcast, Ckpt, Knob, Superstep}
+import graft.Superstep.{Done, More, Probe, doneIf}
 
 /** Iterative graph analytics over the parquet→graph projection — the
   * GraphX-flavored extension axis of the engine (reference has none;
@@ -102,51 +103,37 @@ object GraphAlgos {
     * rounds: near zero). The classic delta-iteration shape (Flink/
     * Pregel) for LP at cluster scale.
     *
-    * ONE checkpoint AND ONE JOB per superstep: the joined frame is
-    * checkpoint-marked deferred, and the delta-count probe over it is
-    * the job that materializes it — labels and the delta are cheap
-    * projections over the materialized frame, and the previous
-    * superstep's checkpoint is released the moment the next one is
-    * materialized, so peak storage is 2 label frames, not 2×iters.
-    * deferredPartitioned preserves the id partitioning so the next
-    * superstep's left join does not re-shuffle the full |V| label frame
-    * (the AQE checkpoint pitfall; PlanSpec pins it). Early exit on
-    * convergence; maxIters is the BOUND — exhausting
-    * it unconverged fails loudly (the oracle replays the same count, so
-    * silent under-convergence would hash-match — VERDICT r02). */
+    * A superstep's frame is the left join of the labels with the
+    * candidate minima; labels and the delta are cheap projections over
+    * it, and the probe counts the delta ([[graft.Superstep]]'s one-job
+    * rule), so peak storage is 2 label frames, not 2×iters. The
+    * partitioned mark keeps the id partitioning, so the next superstep's
+    * left join does not re-shuffle the full |V| label frame (the AQE
+    * checkpoint pitfall; PlanSpec pins it). `parts` (round 19, guide
+    * §2) is the loop width: the min-aggregation exchange and the label
+    * checkpoints land at it, while the pre-placed undirected edge frame
+    * keeps its compute width (plans/pr9: at sf0.001 the `changed` side is
+    * broadcast into it, and the edge frame does not move). */
   def deltaCC(nodes: DataFrame, undirected: DataFrame, maxIters: Int,
-      parts: Int): (DataFrame, Int) = Ckpt.withShuffle(nodes.sparkSession, parts) {
-    // `parts` (round 19, guide §2): the per-superstep min-aggregation
-    // exchange and the label checkpoints land at this volume-derived
-    // count; the pre-placed undirected edge frame keeps its compute
-    // width (plans/pr9: at sf0.001 the `changed` side is broadcast into
-    // it, and the edge frame does not move).
-    var prev: DataFrame = Ckpt.eager(
-      nodes.select(col("id"), col("id").as("comp")))
-    var labels = prev
-    var changed = labels
-    var converged = false
-    var step = 0
-    while (step < maxIters && !converged) {
-      step += 1
+      parts: Int): (DataFrame, Int) = {
+    val lower = col("cand") < col("comp")
+    // (labels, changed labels, the checkpoint both read)
+    val ((labels, _, _), steps) = Superstep.converge(nodes.sparkSession,
+        "connected components", maxIters, parts) {
+      val first = Ckpt.eager(nodes.select(col("id"), col("id").as("comp")))
+      (first, first, first)
+    }(st => Seq(st._3)) { case ((labels, changed, _), _) =>
       val mins = undirected.join(changed, undirected("src") === changed("id"))
         .select(undirected("dst").as("id"), col("comp").as("cand"))
         .groupBy("id").agg(min("cand").as("cand"))
-      val joined = Ckpt.deferredPartitioned(labels.join(mins, Seq("id"), "left"))
-      // this count is the superstep's ONLY job: it materializes the
-      // deferred checkpoint AND is the convergence probe
-      val nChanged = joined.filter(col("cand") < col("comp")).count()
-      Ckpt.drop(prev)
-      prev = joined
-      labels = joined
-        .select(col("id"), least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp"))
-      changed = joined.filter(col("cand") < col("comp"))
-        .select(col("id"), col("cand").as("comp"))
-      converged = nChanged == 0L
+      Probe(labels.join(mins, Seq("id"), "left"), _.filter(lower).count()) { (joined, n) =>
+        val st = (joined.select(col("id"),
+            least(col("comp"), coalesce(col("cand"), col("comp"))).as("comp")),
+          joined.filter(lower).select(col("id"), col("cand").as("comp")), joined)
+        doneIf(n == 0L)(st)
+      }
     }
-    require(converged,
-      s"connected components not converged after $maxIters supersteps")
-    (labels, step)
+    (labels, steps)
   }
 
   /** Alternating large-star/small-star CC (Kiveris et al., "Connected
@@ -161,66 +148,55 @@ object GraphAlgos {
     * point as min-label propagation (PipelineSpec pins star ≡ delta
     * equality; GraphAlgosSpec pins the round-count advantage on a
     * chain+hub fixture). Each round is two groupBy+join passes over the
-    * current edge set (shrinking fast), with the same checkpoint-per-
-    * round lineage discipline as the delta iteration. */
+    * current edge set (shrinking fast), one superstep of the driver. */
   def starCC(nodes: DataFrame, e0: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    var edges = Ckpt.deferred(
+    val edges0 = Ckpt.deferred(
       e0.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v")).distinct())
-    var nEdges = edges.count() // materializes the deferred mark
-    var converged = false
-    var round = 0
+    val n0 = edges0.count() // materializes the deferred mark
     // Round 19 (guide §2): every round's frames are bounded by the
-    // canonical edge set (the rewire only shrinks it), so all round
-    // exchanges/checkpoints run at a volume-derived partition count —
-    // the initial distinct above still ran at session width.
-    Ckpt.withShuffle(nodes.sparkSession,
-      Ckpt.partsFor(nodes.sparkSession, 2L * nEdges)) {
-    while (round < maxRounds && !converged) {
-      round += 1
-      // neighborhoods over both orientations of the current edges
-      val und = edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val withM = und
-        .join(und.groupBy("u").agg(min("v").as("mn")), Seq("u"))
-        .withColumn("m", least(col("mn"), col("u")))
-      // large-star: strictly larger neighbors hang under m. ONE
-      // distinct here (it also canonicalizes: m < v always), so the
-      // small-star pass reads a deduped frame; self-loops (v == m)
-      // drop with the same filter.
-      val large = withM.filter(col("v") > col("u") && col("v") =!= col("m"))
-        .select(col("m").as("u"), col("v")).distinct()
-      val undL = large.select(col("u"), col("v"))
-        .union(large.select(col("v").as("u"), col("u").as("v")))
-      val withM2 = undL
-        .join(undL.groupBy("u").agg(min("v").as("mn")), Seq("u"))
-        .withColumn("m", least(col("mn"), col("u")))
-      // small-star: smaller neighbors AND the center hang under m;
-      // one terminal distinct canonicalizes (m is the smaller end)
-      val small = Ckpt.deferred(
-        withM2.filter(col("v") < col("u"))
+    // canonical edge set (the rewire only shrinks it), so the rounds run
+    // at a volume-derived width — the initial distinct above still ran
+    // at session width.
+    val s = nodes.sparkSession
+    val ((edges, _), rounds) = Superstep.converge(s, "star CC", maxRounds,
+        Ckpt.partsFor(s, 2L * n0))((edges0, n0))(st => Seq(st._1)) {
+      case ((edges, nEdges), round) =>
+        // neighborhoods over both orientations of the current edges
+        val und = edges.select(col("u"), col("v"))
+          .union(edges.select(col("v").as("u"), col("u").as("v")))
+        val withM = und
+          .join(und.groupBy("u").agg(min("v").as("mn")), Seq("u"))
+          .withColumn("m", least(col("mn"), col("u")))
+        // large-star: strictly larger neighbors hang under m. ONE
+        // distinct here (it also canonicalizes: m < v always), so the
+        // small-star pass reads a deduped frame; self-loops (v == m)
+        // drop with the same filter.
+        val large = withM.filter(col("v") > col("u") && col("v") =!= col("m"))
+          .select(col("m").as("u"), col("v")).distinct()
+        val undL = large.select(col("u"), col("v"))
+          .union(large.select(col("v").as("u"), col("u").as("v")))
+        val withM2 = undL
+          .join(undL.groupBy("u").agg(min("v").as("mn")), Seq("u"))
+          .withColumn("m", least(col("mn"), col("u")))
+        // small-star: smaller neighbors AND the center hang under m;
+        // one terminal distinct canonicalizes (m is the smaller end)
+        val small = withM2.filter(col("v") < col("u"))
           .select(col("m").as("u"), col("v").as("v2"))
           .union(withM2.select(col("m").as("u"), col("u").as("v2")))
           .filter(col("u") =!= col("v2"))
-          .select(col("u"), col("v2").as("v")).distinct())
-      // this count is the round's only mandatory job — it materializes
-      // the deferred checkpoint and is the cardinality half of the
-      // convergence probe (the previous round's count is carried over,
-      // never re-measured). Both sides are distinct sets: equal
-      // cardinality + empty one-sided difference <=> set equality; the
-      // anti-join only runs once counts agree, and never before round 3
-      // (the theoretical minimum here).
-      val nSmall = small.count()
-      converged = round >= 3 && nSmall == nEdges &&
-        small.exceptAll(edges).isEmpty
-      Ckpt.drop(edges)
-      edges = small
-      nEdges = nSmall
+          .select(col("u"), col("v2").as("v")).distinct()
+        // the probe is the cardinality half of the convergence test (the
+        // previous round's count is carried over, never re-measured).
+        // Both sides are distinct sets: equal cardinality + empty
+        // one-sided difference <=> set equality; the anti-join only runs
+        // once counts agree, and never before round 3 (the theoretical
+        // minimum here).
+        Probe(small, mark = Ckpt.deferred) { (small, n) =>
+          doneIf(round >= 3 && n == nEdges && small.exceptAll(edges).isEmpty)((small, n))
+        }
     }
-    }
-    require(converged,
-      s"star CC not converged after $maxRounds rounds")
     // converged edges are (leaf, root) stars; roots and isolated
     // nodes label themselves
     val comp = nodes
@@ -228,7 +204,7 @@ object GraphAlgos {
         .groupBy("id2").agg(min("root").as("root")),
         col("id") === col("id2"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
-    (comp, round)
+    (comp, rounds)
   }
 
   /** The GraphX graph over the FK edges — built (one fromEdges + 2D
@@ -276,12 +252,17 @@ object GraphAlgos {
     }
 
   /** Fixed-point integer PageRank over a DIRECTED (src,dst) edge frame:
-    * `iters` power iterations from rank0 = 1e9, contributions
-    * `rank div outdeg`, damping `150000000 + (85·Σ) div 100` — all
+    * `iters` power iterations from rank0 = 1e9·w, contributions
+    * `rank div outdeg`, damping `150000000·w + (85·Σ) div 100` — all
     * int64, so every engine computes bit-equal ranks; dangling mass is
-    * dropped. Returns (id, rank) for every node as a materialized
-    * checkpoint on the drain ledger. Shared by g_pagerank and
-    * `call pagerank()`.
+    * dropped. `restart` is the restart weight w over the node frame's
+    * columns: `lit(1L)` for global PageRank, an indicator of the seed set
+    * for personalized PageRank (g_ppr). Only rank > 0 rows send
+    * contributions — a zero rank adds 0 to every sum, so the filter is
+    * exact for any w, and under a sparse restart vector message volume
+    * tracks the reached set, not |V|. Returns (id, rank) for every node
+    * as a materialized checkpoint on the drain ledger. Shared by
+    * g_pagerank, g_ppr and `call pagerank()`.
     *
     * Loop-invariant precomputation, partitioned by the per-step join
     * key: the edge list FUSED with its out-degree (one static join
@@ -293,31 +274,25 @@ object GraphAlgos {
     * contribution aggregation itself — the irreducible PageRank
     * shuffle). Every full |V| rank frame joins the compute-width `ed`,
     * so the loop runs at session width: shrinking the rank side adds a
-    * full-|V| re-exchange per iteration to meet it. */
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    * full-|V| re-exchange per iteration to meet it. Lineage is cut every
+    * 4th iteration and at the end. */
+  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
+      restart: Column = lit(1L)): DataFrame = {
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // eagerPartitioned: a plain eager checkpoint under AQE reports
     // UnknownPartitioning, so every per-iteration join would RE-SHUFFLE
     // the loop-invariant frames the repartition exists to pre-place
     val ed = Ckpt.eagerPartitioned(edges.join(outdeg, Seq("src")).repartition(col("src")))
     val nodesP = Ckpt.eagerPartitioned(nodes.repartition(col("id")))
-    var ranks = nodesP.select(col("id"), lit(1000000000L).as("rank"))
-    var prev: DataFrame = null
-    for (i <- 1 to iters) {
+    val ranks = Superstep.rounds(iters, every = 4)(
+        nodesP.select(col("id"), (lit(1000000000L) * restart).as("rank"))) { ranks =>
       val contribs = ed
-        .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+        .join(ranks.filter(col("rank") > 0).withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), expr("rank div d").as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      ranks = nodesP.join(contribs, Seq("id"), "left")
+      nodesP.join(contribs, Seq("id"), "left")
         .select(col("id"),
-          expr("150000000L + (85 * coalesce(s, 0L)) div 100").as("rank"))
-      // lineage cut every 4th iteration and at the end; the id
-      // partitioning stays live through the checkpoint
-      if (i % 4 == 0 || i == iters) {
-        ranks = Ckpt.eagerPartitioned(ranks)
-        if (prev != null) Ckpt.drop(prev)
-        prev = ranks
-      }
+          (lit(150000000L) * restart + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
     }
     Ckpt.drop(ed)
     Ckpt.drop(nodesP)
@@ -567,41 +542,27 @@ object GraphAlgos {
     * Each round: degrees over the surviving edge set (one co-partitioned
     * groupBy — edges stay src-partitioned the whole loop), keep nodes
     * with >= k neighbors, then filter edges to alive×alive through
-    * [[kcoreAliveFilter]]. Early exit on an unchanged alive count (the
-    * peel is monotone ⊇, so count equality ⟺ set equality) with the
-    * usual loud non-convergence failure; the deferred checkpoint's count
-    * doubles as the convergence probe (one job per round). */
+    * [[kcoreAliveFilter]]. The alive set is the superstep's frame, its
+    * count the probe; the loop ends on an unchanged alive count (the
+    * peel is monotone ⊇, so count equality ⟺ set equality). */
   def kcore(ue: DataFrame, k: Long, maxIters: Int): DataFrame = {
-    var edges: DataFrame = ue
-    var nAlive = -1L
-    var converged = false
-    var step = 0
-    var result: DataFrame = null
-    while (step < maxIters && !converged) {
-      step += 1
+    // (surviving edges, alive count, the in-core degrees once converged)
+    val ((_, _, core), _) = Superstep.converge(ue.sparkSession, "k-core peel", maxIters)(
+        (ue, -1L, Option.empty[DataFrame])) {
+      case (edges, _, None) if !(edges eq ue) => Seq(edges)
+      case _ => Nil
+    } { case ((edges, nAlive, _), _) =>
       val deg = edges.groupBy("src").agg(count(lit(1)).as("c"))
-      val alive = Ckpt.deferredPartitioned(
-        deg.filter(col("c") >= k).select(col("src").as("id")))
-      val n = alive.count()
-      if (n == nAlive) {
-        converged = true
+      Probe(deg.filter(col("c") >= k).select(col("src").as("id"))) { (alive, n) =>
         // deg this round is over edges among the PREVIOUS alive set,
         // which just proved equal to the current one — so these are
         // exactly the in-core degrees
-        result = Ckpt.eager(
-          deg.filter(col("c") >= k).select(col("src").as("id"), col("c")))
-        Ckpt.drop(alive)
-      } else {
-        nAlive = n
-        val next = Ckpt.eagerPartitioned(kcoreAliveFilter(edges, alive, n))
-        if (edges ne ue) Ckpt.drop(edges)
-        edges = next
-        Ckpt.drop(alive)
+        if (n == nAlive) Done((edges, n,
+          Some(Ckpt.eager(deg.filter(col("c") >= k).select(col("src").as("id"), col("c"))))))
+        else More((Ckpt.eagerPartitioned(kcoreAliveFilter(edges, alive, n)), n, None))
       }
     }
-    if (edges ne ue) Ckpt.drop(edges)
-    require(converged, s"k-core peel not converged after $maxIters rounds")
-    result
+    core.get
   }
 
   // Unrolled peel, same MATERIALIZED discipline as ccOracle. a0 = every
@@ -731,19 +692,26 @@ object GraphAlgos {
     * superstep RE-EXCHANGED the whole accumulated frame; and the merge
     * was a SECOND job + checkpoint per superstep on top of the probe.
     * A LEFT join keeps the left side's hash partitioning, so here each
-    * superstep is exactly ONE job (the convergence-probe count, which
-    * doubles as the deferred checkpoint's materialization — the deltaCC
-    * rule), ONE checkpoint, and ONE exchange (the candidate
-    * aggregation; the spine side is placed once at step 1 and never
-    * re-shuffled). Iteration count and the result are UNCHANGED: the
-    * probe counts exactly the rows the old anti-join (or, with
-    * `improve`, the old improvement filter) produced, and unreached
-    * spine rows just stay NULL until discovery — the returned frame
-    * filters them out, matching the old accumulated frame row for row.
+    * superstep is exactly ONE job (the probe counts the improved rows),
+    * ONE checkpoint, and ONE exchange (the candidate aggregation; the
+    * spine side is placed once at step 1 and never re-shuffled).
+    * Iteration count and the result are UNCHANGED: the probe counts
+    * exactly the rows the old anti-join (or, with `improve`, the old
+    * improvement filter) produced, and unreached spine rows just stay
+    * NULL until discovery — the returned frame filters them out,
+    * matching the old accumulated frame row for row.
     *
     * `improve=false`: BFS semantics — a key is discovered once (the
     * frontier is the newly-reached set). `improve=true`: Bellman–Ford —
     * a smaller candidate re-enters the frontier (`cand < d`).
+    *
+    * `parts` (round 19, guide §2) is the loop width: every per-superstep
+    * exchange — the candidate aggregation, the spine's one-time
+    * placement — and every checkpoint lands at it. The loop-invariant
+    * edge frame the `step` closure joins against was built outside the
+    * loop at compute width and keeps it (plans/pr9: at sf0.001 the
+    * frontier side is broadcast into it), so map parallelism over |E| is
+    * unchanged.
     *
     * At 100 TB the spine costs |keys| rows per superstep checkpoint —
     * the same asymptotics as the old accumulated frame once the search
@@ -758,42 +726,25 @@ object GraphAlgos {
       improve: Boolean,
       maxIters: Int,
       what: String,
-      parts: Int): DataFrame = Ckpt.withShuffle(spine.sparkSession, parts) {
-    // `parts` (round 19, guide §2): every per-superstep exchange —
-    // the candidate aggregation, the spine's one-time placement — and
-    // every checkpoint lands at this volume-derived count instead of
-    // the session's core-count default. The loop-invariant edge frame
-    // the `step` closure joins against was built OUTSIDE this overlay
-    // at compute width and keeps it (plans/pr9: at sf0.001 the frontier
-    // side is broadcast into it), so map parallelism over |E| is
-    // unchanged.
-    var dists: DataFrame = spine
-    var frontier: DataFrame = spine.filter(col("d").isNotNull)
-    var prev: Option[DataFrame] = None
-    var converged = false
-    var stepN = 0
+      parts: Int): DataFrame = {
     val better =
       if (improve) col("cand").isNotNull &&
         (col("d").isNull || col("cand") < col("d"))
       else col("d").isNull && col("cand").isNotNull
-    while (stepN < maxIters && !converged) {
-      stepN += 1
-      val cand = step(frontier)
-      val joined = Ckpt.deferredPartitioned(dists.join(cand, keyCols, "left"))
-      // the superstep's ONLY job: materializes the checkpoint AND is
-      // the convergence probe
-      converged = joined.filter(better).count() == 0L
-      if (converged) Ckpt.drop(joined)
-      else {
-        dists = joined.select(
-          keyCols.map(col) :+ when(better, col("cand")).otherwise(col("d")).as("d"): _*)
-        frontier = joined.filter(better)
-          .select(keyCols.map(col) :+ col("cand").as("d"): _*)
-        prev.foreach(Ckpt.drop)
-        prev = Some(joined)
-      }
+    // (distances, frontier, the checkpoint both read)
+    val ((dists, _, _), _) = Superstep.converge(spine.sparkSession, what, maxIters, parts)(
+        (spine, spine.filter(col("d").isNotNull), Option.empty[DataFrame]))(_._3.toSeq) {
+      case (st @ (dists, frontier, _), _) =>
+        Probe(dists.join(step(frontier), keyCols, "left"), _.filter(better).count()) {
+          (joined, n) =>
+            if (n == 0L) Done(st)
+            else More((
+              joined.select(
+                keyCols.map(col) :+ when(better, col("cand")).otherwise(col("d")).as("d"): _*),
+              joined.filter(better).select(keyCols.map(col) :+ col("cand").as("d"): _*),
+              Some(joined)))
+        }
     }
-    require(converged, s"$what not converged after $maxIters supersteps")
     dists.filter(col("d").isNotNull)
   }
 
@@ -811,39 +762,27 @@ object GraphAlgos {
     * measured 2× worse still). Levels are disjoint co-partitioned
     * checkpoints (the message aggregation leaves cand hash-partitioned
     * by (seed,id), the anti-joins preserve it), so each superstep is
-    * ONE exchange and ONE job (the probe count materializes the level
-    * checkpoint), and total checkpoint volume across the whole run is
-    * K·|V| rows once. The final union is consumed by the caller's
-    * aggregate — one K·|V| exchange, once. */
+    * ONE exchange and ONE job, every level stays live as part of the
+    * result, and total checkpoint volume across the whole run is K·|V|
+    * rows once. The final union is consumed by the caller's aggregate —
+    * one K·|V| exchange, once. */
   private[graft] def multiSourceBfsLevels(seeds: DataFrame, ue: DataFrame,
-      maxIters: Int, parts: Int, what: String): DataFrame =
-    Ckpt.withShuffle(seeds.sparkSession, parts) {
-      var lvlPrev: Option[DataFrame] = None
-      var lvl: DataFrame = Ckpt.eagerPartitioned(
-        seeds.repartition(col("seed"), col("id")))
-      val levels = List.newBuilder[DataFrame]
-      levels += lvl
-      var converged = false
-      var step = 0
-      while (step < maxIters && !converged) {
-        step += 1
+      maxIters: Int, parts: Int, what: String): DataFrame = {
+    // the levels so far, newest first
+    val (levels, _) = Superstep.converge(seeds.sparkSession, what, maxIters, parts)(
+        List(Ckpt.eagerPartitioned(seeds.repartition(col("seed"), col("id")))))(identity) {
+      (levels, _) =>
+        val lvl = levels.head
         val cand = ue.join(lvl, ue("src") === lvl("id"))
           .select(col("seed"), ue("dst").as("id"), (col("d") + 1).as("d"))
           .groupBy("seed", "id").agg(min("d").as("d"))
         val fresh = cand.join(lvl, Seq("seed", "id"), "left_anti")
-        val next = Ckpt.deferredPartitioned(
-          lvlPrev.fold(fresh)(p => fresh.join(p, Seq("seed", "id"), "left_anti")))
-        converged = next.count() == 0L
-        if (converged) Ckpt.drop(next)
-        else {
-          levels += next
-          lvlPrev = Some(lvl)
-          lvl = next
+        Probe(levels.lift(1).fold(fresh)(p => fresh.join(p, Seq("seed", "id"), "left_anti"))) {
+          (next, n) => if (n == 0L) Done(levels) else More(next :: levels)
         }
-      }
-      require(converged, s"$what not converged after $maxIters supersteps")
-      levels.result().reduce(_ unionByName _)
     }
+    levels.reverse.reduce(_ unionByName _)
+  }
 
   // ---- label propagation communities (round 15) ----------------------
 
@@ -896,21 +835,16 @@ object GraphAlgos {
     // label side adds a full-|V| re-exchange per round to meet it
     // (measured; r18 scaling ratio 1.12 —
     // volume-bound, unlike the frontier-delta loops).
-    var labels = Ckpt.eagerPartitioned(
-      nodes.select(col("id"), col("id").as("lbl")).repartition(col("id")))
-    for (_ <- 1 to iters) {
+    Superstep.rounds(iters)(Ckpt.eagerPartitioned(
+        nodes.select(col("id"), col("id").as("lbl")).repartition(col("id")))) { labels =>
       val msgs = undirected.join(labels, undirected("src") === labels("id"))
         .select(undirected("dst").as("id"), col("lbl"))
         .unionByName(labels) // self-inclusion: own label counts once
       val counts = msgs.groupBy("id", "lbl").agg(count(lit(1)).as("cnt"))
-      val next = Ckpt.eagerPartitioned(
-        counts.groupBy("id")
-          .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
-          .select(col("id"), col("m.l").as("lbl")))
-      Ckpt.drop(labels)
-      labels = next
+      counts.groupBy("id")
+        .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
+        .select(col("id"), col("m.l").as("lbl"))
     }
-    labels
   }
 
   /** LPA labels memoized per (session, dir): g_labelprop and
@@ -1095,45 +1029,41 @@ object GraphAlgos {
     * only the per-dst aggregation; the h-phase mirrors it on the
     * dst-partitioned copy — one shuffle per phase, the PageRank
     * discipline, with the two loop-invariant copies hoisted once. Each
-    * phase's checkpoint is DEFERRED: the max-rescale probe is the
-    * phase's ONLY job — it materializes the checkpoint AND reads the
-    * scalar (the deltaCC convergence-probe trick). Full-|V| hub/auth
-    * frames join the compute-width orientation copies, so the loop runs
-    * at session width (see [[pageRank]]). */
+    * phase is one superstep of the driver, whose probe is the
+    * max-rescale scalar, so the state holds the last frame of each
+    * phase. Full-|V| hub/auth frames join the compute-width orientation
+    * copies, so the loop runs at session width (see [[pageRank]]). */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     val eS = Ckpt.eagerPartitioned(edges.repartition(col("src")))
     val eD = Ckpt.eagerPartitioned(edges.repartition(col("dst")))
     val nodesP = Ckpt.eagerPartitioned(nodes.repartition(col("id")))
-    var hub: DataFrame = nodesP.select(col("id"), lit(1000000L).as("hub"))
-    var auth: DataFrame = null
-    var prevA: DataFrame = null
-    var prevH: DataFrame = null
-    for (_ <- 1 to iters) {
-      val araw = Ckpt.deferredPartitioned(
-        nodesP.join(
-          eS.join(hub.withColumnRenamed("id", "src"), Seq("src"))
-            .groupBy(col("dst").as("id")).agg(sum("hub").as("s")),
-          Seq("id"), "left")
-          .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-      // max(1, …): an all-zero frame (possible under an empty scoped
-      // edge set) keeps scores 0 instead of dividing by zero
-      val mA = math.max(1L, araw.agg(max("r")).head.getLong(0))
-      if (prevA != null) Ckpt.drop(prevA)
-      prevA = araw
-      auth = araw.select(col("id"), expr(s"r * 1000000L div ${mA}L").as("auth"))
-      val hraw = Ckpt.deferredPartitioned(
-        nodesP.join(
-          eD.join(auth.withColumnRenamed("id", "dst"), Seq("dst"))
-            .groupBy(col("src").as("id")).agg(sum("auth").as("s")),
-          Seq("id"), "left")
-          .select(col("id"), coalesce(col("s"), lit(0L)).as("r")))
-      val mH = math.max(1L, hraw.agg(max("r")).head.getLong(0))
-      if (prevH != null) Ckpt.drop(prevH)
-      prevH = hraw
-      hub = hraw.select(col("id"), expr(s"r * 1000000L div ${mH}L").as("hub"))
+    // one phase: sum `score` over the edge copy keyed by `from`, per `to`
+    def phase(e: DataFrame, score: DataFrame, name: String, from: String, to: String) =
+      nodesP.join(
+        e.join(score.withColumnRenamed("id", from), Seq(from))
+          .groupBy(col(to).as("id")).agg(sum(name).as("s")),
+        Seq("id"), "left")
+        .select(col("id"), coalesce(col("s"), lit(0L)).as("r"))
+    // max(1, …): an all-zero frame (possible under an empty scoped
+    // edge set) keeps scores 0 instead of dividing by zero
+    val maxR = (f: DataFrame) => math.max(1L, f.agg(max("r")).head.getLong(0))
+    def scaled(raw: DataFrame, m: Long, name: String) =
+      raw.select(col("id"), expr(s"r * 1000000L div ${m}L").as(name))
+    // (auth, hub, the checkpoint each reads); odd supersteps are a-phases
+    val hub0 = nodesP.select(col("id"), lit(1000000L).as("hub"))
+    val ((auth, hub, _, _), _) = Superstep.converge(nodes.sparkSession, "HITS", 2 * iters)(
+        (null: DataFrame, hub0, null: DataFrame, null: DataFrame))(
+        st => Seq(st._3, st._4).filter(_ != null)) { case ((auth, hub, aRaw, hRaw), i) =>
+      if (i % 2 == 1) Probe(phase(eS, hub, "hub", "src", "dst"), maxR) { (raw, m) =>
+        More((scaled(raw, m, "auth"), hub, raw, hRaw))
+      }
+      else Probe(phase(eD, auth, "auth", "dst", "src"), maxR) { (raw, m) =>
+        doneIf(i == 2 * iters)((auth, scaled(raw, m, "hub"), aRaw, raw))
+      }
     }
     Ckpt.drop(eS)
     Ckpt.drop(eD)
+    Ckpt.drop(nodesP)
     auth.join(hub, Seq("id"))
   }
 
@@ -1205,13 +1135,9 @@ object GraphAlgos {
     // frame: distance-improvement delta iteration (a node re-enters the
     // frontier every time its distance DROPS — unlike BFS, weighted
     // relaxation can improve a settled node, so the frontier is the
-    // improved set, not the newly-discovered set). Per superstep: one
-    // relax shuffle (groupBy dst) and one co-partitioned full-outer merge
-    // — dists stays hash-partitioned by id across steps, so the merge
-    // never re-shuffles the accumulated distance frame. Early exit +
-    // loud non-convergence, checkpoint-per-superstep, exactly the CC/BFS
-    // discipline; at 100 TB this is the standard iterative SSSP shape
-    // (Pregel/Flink delta iteration), message volume ∝ improvements.
+    // improved set, not the newly-discovered set). At 100 TB this is the
+    // standard iterative SSSP shape (Pregel/Flink delta iteration),
+    // message volume ∝ improvements.
     Q("g_sssp",
       (s, dir) => {
         // One-job-per-superstep spine loop (round 18 — see
@@ -1239,8 +1165,7 @@ object GraphAlgos {
     // be set once in unweighted BFS, so the frontier is exactly the
     // newly-discovered set — message volume is each BFS level once,
     // sum |V| total, not |V|×diameter). Same pre-partitioned invariant
-    // edge frame, checkpoint-per-superstep, and early-exit + loud
-    // non-convergence discipline as the CC delta iteration.
+    // edge frame as the CC delta iteration.
     Q("g_bfs",
       (s, dir) => {
         // One-job-per-superstep spine loop (round 18 — see
@@ -1273,8 +1198,7 @@ object GraphAlgos {
     // 1/d in 1e-6 fixed point (integer div) keeps the sum order-free
     // and bit-equal cross-engine; top-50 with id tiebreak makes the
     // cut deterministic. Same frontier-delta discipline as g_bfs:
-    // newly-discovered (seed,id) pairs only, co-partitioned merge,
-    // checkpoint-per-superstep, early exit + loud non-convergence.
+    // newly-discovered (seed,id) pairs only.
     Q("g_harmonic_landmarks",
       (s, dir) => {
         // Round 19: per-LEVEL multi-source BFS ([[multiSourceBfsLevels]]
@@ -1368,8 +1292,7 @@ object GraphAlgos {
     // minima. Same fixed point as min-label propagation, so the same
     // unrolled oracle applies; PipelineSpec additionally pins star ≡
     // delta-iteration equality. Each round is two groupBy+join passes
-    // over the current edge set (shrinking fast), with the same
-    // checkpoint-per-round lineage discipline as the delta iteration.
+    // over the current edge set (shrinking fast).
     Q("g_connected_components_star",
       (s, dir) => {
         val (comp, _) = starCC(allNodes(s, dir), allEdges(s, dir), maxRounds = 8)
@@ -1554,55 +1477,21 @@ object GraphAlgos {
               |FROM nn""".stripMargin)),
 
     // ---- personalized PageRank from the region seed set ---------------
-    // Same 1-exchange-per-superstep power iteration as g_pagerank (fused
-    // edge+outdeg invariant frame, id-pre-partitioned node frame, the
-    // contribution aggregation as the only per-step shuffle) with two
-    // changes: mass flows over the REVERSED FK edges (the influence
-    // direction — see pprIters) and the teleport term lands only on the
-    // seeds. Contributions are additionally restricted to rank > 0 rows
-    // — a zero rank contributes exactly 0 to every sum, so the result is
-    // bit-identical while message volume tracks the REACHED set, not
-    // |V|: the sparsity win that makes PPR far cheaper than global
-    // PageRank on a 100 TB graph when the seed neighborhood is small.
+    // [[pageRank]] with a restart vector: the teleport term (and the
+    // initial rank) lands only on the seeds, and mass flows over the
+    // REVERSED FK edges (the influence direction — see pprIters). The
+    // kernel's rank > 0 contribution filter makes message volume track
+    // the REACHED set, not |V|: the sparsity win that makes PPR far
+    // cheaper than global PageRank on a 100 TB graph when the seed
+    // neighborhood is small.
     Q("g_ppr",
       (s, dir) => {
-        val rev = allEdges(s, dir)
-          .select(col("dst").as("src"), col("src").as("dst"))
-        val outdeg = rev.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        val ed = Ckpt.eagerPartitioned(
-          rev.join(outdeg, Seq("src")).repartition(col("src")))
-        // Round 19 (guide §2): |V|-scale side at volume-derived
-        // partitions, `ed` at compute width — the fixedPageRank shape.
-        Ckpt.withShuffle(s, nodeParts(s, dir)) {
-        val nodes = Ckpt.eagerPartitioned(
-          allNodes(s, dir).repartition(col("id")))
-        val isSeed = col("id") < 2000000000L
-        var ranks = nodes.select(col("id"),
-          when(isSeed, 1000000000L).otherwise(0L).as("rank"))
-        var prev: DataFrame = null
-        for (i <- 1 to pprIters) {
-          val contribs = ed
-            .join(ranks.filter(col("rank") > 0).withColumnRenamed("id", "src"),
-              Seq("src"))
-            .select(col("dst").as("id"), expr("rank div d").as("c"))
-            .groupBy("id").agg(sum("c").as("s"))
-          ranks = nodes.join(contribs, Seq("id"), "left")
-            .select(col("id"),
-              (when(isSeed, 150000000L).otherwise(0L) +
-                expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-          if (i % 3 == 0 && i < pprIters) {
-            ranks = Ckpt.eagerPartitioned(ranks)
-            if (prev != null) Ckpt.drop(prev)
-            prev = ranks
-          }
-        }
-        val out = Ckpt.eager(
-          ranks.orderBy(col("rank").desc, col("id")).limit(100))
-        if (prev != null) Ckpt.drop(prev)
-        Ckpt.drop(ed)
-        Ckpt.drop(nodes)
+        val ranks = pageRank(allNodes(s, dir),
+          allEdges(s, dir).select(col("dst").as("src"), col("src").as("dst")), pprIters,
+          restart = when(col("id") < 2000000000L, 1L).otherwise(0L))
+        val out = Ckpt.eager(ranks.orderBy(col("rank").desc, col("id")).limit(100))
+        Ckpt.drop(ranks)
         out
-        }
       },
       Some(pprOracle)),
 
@@ -1873,173 +1762,127 @@ object GraphAlgos {
     * Scale shape: each trim pass / coloring superstep / backward
     * superstep is one co-partitioned join + one keyed aggregate over
     * the REMAINING edge frame (hoisted per round in both orientations,
-    * the HITS discipline), with the deferred-checkpoint count as the
-    * sole per-step job (the deltaCC probe trick). Outer rounds are
-    * bounded by the condensation's root-chain depth — 3 on this corpus,
-    * loud failure at [[sccMaxRounds]] (both bounds session-configurable:
+    * the HITS discipline), one superstep of the driver each. Outer
+    * rounds (one extraction each) are bounded by the condensation's
+    * root-chain depth — 3 on this corpus, loud failure at
+    * [[sccMaxRounds]] (both bounds session-configurable:
     * `spark.graft.sccMaxRounds` / `spark.graft.sccMaxSupersteps`, the
     * high-diameter escape hatch). At 100 TB this is the standard
     * Spark SCC (GraphFrames ships the same FW-BW-coloring shape);
     * single-pivot FW-BW would idle the cluster on one pivot per round.
     * Returns (id, scc). */
-  private[graft] def coloringSCC(nodesIn: DataFrame, edgesIn: DataFrame,
-      maxRoundsArg: Int = 0, maxSuperstepsArg: Int = 0): DataFrame = {
-    // Bounds are SESSION CONFS with the arguments as test overrides
-    // (ADVICE r16: trim peels one DAG layer per pass and coloring needs
-    // ~diameter supersteps, so a high-diameter graph hits a hard-coded
-    // bound with no user-facing escape hatch — unlike the varpath's
-    // explicit-bound spelling). Defaults keep the corpus margins.
-    val conf = nodesIn.sparkSession.conf
-    val maxRounds =
-      if (maxRoundsArg > 0) maxRoundsArg
-      else Knob.int("spark.graft.sccMaxRounds",
-        conf.get("spark.graft.sccMaxRounds", sccMaxRounds.toString), min = 1)
-    val maxSupersteps =
-      if (maxSuperstepsArg > 0) maxSuperstepsArg
-      else Knob.int("spark.graft.sccMaxSupersteps",
-        conf.get("spark.graft.sccMaxSupersteps", sccMaxSupersteps.toString), min = 1)
-    var remaining = Ckpt.eagerPartitioned(
-      nodesIn.select(col("id")).repartition(col("id")))
-    var remS = Ckpt.eagerPartitioned(
+  private[graft] def coloringSCC(nodesIn: DataFrame, edgesIn: DataFrame): DataFrame = {
+    val s = nodesIn.sparkSession
+    // Bounds are session confs (ADVICE r16: trim peels one DAG layer per
+    // pass and coloring needs ~diameter supersteps, so a high-diameter
+    // graph hits a hard-coded bound with no user-facing escape hatch —
+    // unlike the varpath's explicit-bound spelling). Defaults keep the
+    // corpus margins.
+    def bound(key: String, default: Int): Int =
+      Knob.int(key, s.conf.get(key, default.toString), min = 1)
+    val maxRounds = bound("spark.graft.sccMaxRounds", sccMaxRounds)
+    val maxSupersteps = bound("spark.graft.sccMaxSupersteps", sccMaxSupersteps)
+    val nodes0 = Ckpt.eagerPartitioned(nodesIn.select(col("id")).repartition(col("id")))
+    val bySrc0 = Ckpt.eagerPartitioned(
       edgesIn.select(col("src"), col("dst")).repartition(col("src")))
-    var remD = Ckpt.eagerPartitioned(remS.repartition(col("dst")))
-    var nRemaining = remaining.count()
+    val g0 = SccRest(nodes0, bySrc0, Ckpt.eagerPartitioned(bySrc0.repartition(col("dst"))),
+      nodes0.count(), null)
     // Round 19 (guide §2): every trim pass / coloring superstep /
     // backward superstep's frames are bounded by the INITIAL node and
     // edge counts (rounds only shrink the graph), so the whole FW-BW
-    // machine runs at a volume-derived partition count — both counts
-    // are free off the just-materialized checkpoints. The initial
-    // placement above stays at session width, and joins against it keep
-    // that width: in plans/pr9/g_scc_*.txt a shrink() leaves the
-    // src-keyed copy hash-partitioned by dst at session width, and only
-    // the dst-keyed copy (an explicit repartition) lands at loop width.
-    val assignedOut: DataFrame = Ckpt.withShuffle(nodesIn.sparkSession,
-      Ckpt.partsFor(nodesIn.sparkSession, math.max(nRemaining, remS.count()))) {
-    var assigned: DataFrame = null // (id, scc), grows per extraction
-    def assign(rows: DataFrame): Unit = {
-      val next =
-        if (assigned == null) Ckpt.eager(rows)
-        else {
-          val a2 = Ckpt.eager(assigned.unionByName(rows))
-          Ckpt.drop(assigned); a2
-        }
-      assigned = next
-    }
+    // machine runs at a volume-derived width — both counts are free off
+    // the just-materialized checkpoints. The initial placement above
+    // stays at session width, and joins against it keep that width: in
+    // plans/pr9/g_scc_*.txt a shrink leaves the src-keyed copy
+    // hash-partitioned by dst at session width, and only the dst-keyed
+    // copy (an explicit repartition) lands at loop width.
+    val parts = Ckpt.partsFor(s, math.max(g0.n, bySrc0.count()))
+    def assign(g: SccRest, rows: DataFrame): DataFrame =
+      Ckpt.eager(if (g.assigned == null) rows else g.assigned.unionByName(rows))
     // shrink the remaining graph to `keep` (id-partitioned): src side
     // co-partitioned semi, dst side against the dst-keyed copy
-    def shrink(keep: DataFrame): Unit = {
+    def shrink(g: SccRest, keep: DataFrame, n: Long, assigned: DataFrame): SccRest = {
       val s2 = Ckpt.eagerPartitioned(
-        remS.join(keep, remS("src") === keep("id"), "left_semi")
+        g.bySrc.join(keep, g.bySrc("src") === keep("id"), "left_semi")
           .join(keep.withColumnRenamed("id", "id2"), col("dst") === col("id2"), "left_semi"))
-      val d2 = Ckpt.eagerPartitioned(s2.repartition(col("dst")))
-      Ckpt.drop(remS); Ckpt.drop(remD)
-      remS = s2; remD = d2
-      Ckpt.drop(remaining)
-      remaining = keep
+      SccRest(keep, s2, Ckpt.eagerPartitioned(s2.repartition(col("dst"))), n, assigned)
     }
-    var round = 0
-    while (nRemaining > 0) {
-      round += 1
-      require(round <= maxRounds,
-        s"SCC coloring not converged after $maxRounds rounds")
-      // ---- 1. trim fixpoint --------------------------------------------
-      var trimming = true
-      var trims = 0
-      while (trimming && nRemaining > 0) {
-        trims += 1
-        require(trims <= maxSupersteps,
-          s"SCC trim not converged after $maxSupersteps passes")
-        val hasOut = remS.select(col("src").as("id")).distinct()
-        val hasIn = remD.select(col("dst").as("id")).distinct()
-        val keep = Ckpt.deferredPartitioned(
-          remaining.join(hasOut, Seq("id"), "left_semi")
-            .join(hasIn, Seq("id"), "left_semi"))
-        val nKeep = keep.count()
-        if (nKeep == nRemaining) { trimming = false; Ckpt.drop(keep) }
+    // ---- 1. trim to fixpoint ---------------------------------------------
+    def trim(g: SccRest): SccRest =
+      Superstep.converge(s, "SCC trim", maxSupersteps)(g)(_.frames) { (g, _) =>
+        if (g.n == 0L) Done(g)
         else {
-          assign(remaining.join(keep, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc")))
-          shrink(keep)
-          nRemaining = nKeep
-        }
-      }
-      if (nRemaining > 0) {
-        // ---- 2. forward max-color propagation to fixpoint --------------
-        // the deltaCC frame lifecycle: each superstep's joined frame is
-        // the ONLY materialization (deferred checkpoint + count probe);
-        // colors/changed are lazy projections over it, and the previous
-        // superstep's frame is released only once the next one is
-        // materialized
-        var prevJ: DataFrame = Ckpt.eagerPartitioned(
-          remaining.select(col("id"), col("id").as("c")))
-        var colors: DataFrame = prevJ
-        var changed: DataFrame = prevJ
-        var steps = 0
-        var converged = false
-        while (!converged) {
-          steps += 1
-          require(steps <= maxSupersteps,
-            s"SCC coloring pass not converged after $maxSupersteps supersteps")
-          val cand = remS.join(changed, remS("src") === changed("id"))
-            .select(remS("dst").as("id"), col("c").as("cand"))
-            .groupBy("id").agg(max("cand").as("cand"))
-          val joined = Ckpt.deferredPartitioned(colors.join(cand, Seq("id"), "left"))
-          val nChanged = joined.filter(col("cand") > col("c")).count()
-          Ckpt.drop(prevJ)
-          prevJ = joined
-          colors = joined
-            .select(col("id"), greatest(col("c"), coalesce(col("cand"), col("c"))).as("c"))
-          changed = joined.filter(col("cand") > col("c"))
-            .select(col("id"), col("cand").as("c"))
-          converged = nChanged == 0L
-        }
-        // ---- 3. backward reach from roots within their color -----------
-        var members = Ckpt.eagerPartitioned(
-          colors.filter(col("id") === col("c")).select(col("id"), col("c").as("scc")))
-        var frontier = members
-        converged = false
-        steps = 0
-        while (!converged) {
-          steps += 1
-          require(steps <= maxSupersteps,
-            s"SCC backward reach not converged after $maxSupersteps supersteps")
-          val cand = remD.join(frontier.withColumnRenamed("id", "dst"), Seq("dst"))
-            .select(col("src").as("id"), col("scc")).distinct()
-          val inColor = cand.join(colors, Seq("id"))
-            .filter(col("scc") === col("c")).select(col("id"), col("scc"))
-          val fresh = Ckpt.deferredPartitioned(
-            inColor.join(members, Seq("id"), "left_anti"))
-          val nFresh = fresh.count()
-          // the previous frontier's one consumer (this superstep's cand
-          // join) just ran — release it now that `fresh` is materialized
-          // (ADVICE r16: non-empty frontiers stayed pinned until the
-          // harness drain, one checkpointed frame per superstep). The
-          // first frontier aliases `members`, which has its own
-          // lifecycle below — never drop it here.
-          if (frontier ne members) Ckpt.drop(frontier)
-          if (nFresh == 0L) { converged = true; Ckpt.drop(fresh) }
-          else {
-            val m2 = Ckpt.eagerPartitioned(members.unionByName(fresh))
-            Ckpt.drop(members)
-            members = m2
-            frontier = fresh
+          val hasOut = g.bySrc.select(col("src").as("id")).distinct()
+          val hasIn = g.byDst.select(col("dst").as("id")).distinct()
+          Probe(g.nodes.join(hasOut, Seq("id"), "left_semi").join(hasIn, Seq("id"), "left_semi")) {
+            (keep, n) =>
+              if (n == g.n) Done(g)
+              else doneIf(n == 0L)(shrink(g, keep, n, assign(g,
+                g.nodes.join(keep, Seq("id"), "left_anti").select(col("id"), col("id").as("scc")))))
           }
         }
-        assign(members)
-        val keep = Ckpt.deferredPartitioned(
-          remaining.join(members, Seq("id"), "left_anti"))
-        nRemaining = keep.count()
-        shrink(keep)
-        Ckpt.drop(members)
-        Ckpt.drop(prevJ) // the final colors frame, done serving backward
-      }
+      }._1
+    val (last, _) = Superstep.converge(s, "SCC rounds", maxRounds, parts)(trim(g0))(_.frames) {
+      (g, _) =>
+        if (g.n == 0L) Done(g)
+        else {
+          // ---- 2. forward max-color propagation to fixpoint ---------------
+          // the deltaCC loop with max for min: (colors, changed colors,
+          // the checkpoint both read)
+          val higher = col("cand") > col("c")
+          val ((colors, _, colored), _) = Superstep.converge(s, "SCC coloring", maxSupersteps) {
+            val first = Ckpt.eagerPartitioned(g.nodes.select(col("id"), col("id").as("c")))
+            (first, first, first)
+          }(st => Seq(st._3)) { case ((colors, changed, _), _) =>
+            val cand = g.bySrc.join(changed, g.bySrc("src") === changed("id"))
+              .select(g.bySrc("dst").as("id"), col("c").as("cand"))
+              .groupBy("id").agg(max("cand").as("cand"))
+            Probe(colors.join(cand, Seq("id"), "left"), _.filter(higher).count()) { (joined, n) =>
+              doneIf(n == 0L)((joined.select(col("id"),
+                  greatest(col("c"), coalesce(col("cand"), col("c"))).as("c")),
+                joined.filter(higher).select(col("id"), col("cand").as("c")), joined))
+            }
+          }
+          // ---- 3. backward reach from roots within their color ------------
+          // (members, frontier): the frontier is the last superstep's
+          // fresh members; the first is the roots themselves
+          val ((members, _), _) = Superstep.converge(s, "SCC backward reach", maxSupersteps) {
+            val roots = Ckpt.eagerPartitioned(
+              colors.filter(col("id") === col("c")).select(col("id"), col("c").as("scc")))
+            (roots, roots)
+          }(st => Seq(st._1, st._2)) { case ((members, frontier), _) =>
+            val cand = g.byDst.join(frontier.withColumnRenamed("id", "dst"), Seq("dst"))
+              .select(col("src").as("id"), col("scc")).distinct()
+            val inColor = cand.join(colors, Seq("id"))
+              .filter(col("scc") === col("c")).select(col("id"), col("scc"))
+            Probe(inColor.join(members, Seq("id"), "left_anti")) { (fresh, n) =>
+              if (n == 0L) Done((members, members))
+              else More((Ckpt.eagerPartitioned(members.unionByName(fresh)), fresh))
+            }
+          }
+          // ---- 4. remove the extracted SCCs, trim what is left ------------
+          val assigned = assign(g, members)
+          Probe(g.nodes.join(members, Seq("id"), "left_anti")) { (keep, n) =>
+            val shrunk = shrink(g, keep, n, assigned)
+            // the replaced graph and this round's last frames are dead:
+            // release them before the trim passes, not when the round ends
+            (g.frames :+ members :+ colored).foreach(Ckpt.drop)
+            val next = trim(shrunk)
+            doneIf(next.n == 0L)(next)
+          }
+        }
     }
-    assigned
-    }
-    Ckpt.drop(remaining); Ckpt.drop(remS); Ckpt.drop(remD)
-    if (assignedOut != null) assignedOut
-    else nodesIn.sparkSession.range(0)
-      .select(col("id"), col("id").as("scc"))
+    Ckpt.drop(last.nodes); Ckpt.drop(last.bySrc); Ckpt.drop(last.byDst)
+    if (last.assigned != null) last.assigned
+    else s.range(0).select(col("id"), col("id").as("scc"))
+  }
+
+  /** The graph [[coloringSCC]] has left: its nodes (id-partitioned), its
+    * edges keyed by src and by dst, the node count, and the (id, scc)
+    * rows assigned so far (null before the first). */
+  private final case class SccRest(nodes: DataFrame, bySrc: DataFrame, byDst: DataFrame,
+      n: Long, assigned: DataFrame) {
+    def frames: Seq[DataFrame] = Seq(nodes, bySrc, byDst) ++ Option(assigned)
   }
 
   private val sccMaxRounds = 12

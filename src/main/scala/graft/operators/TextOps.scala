@@ -124,7 +124,8 @@ object TextOps {
     // compiles a fresh generated class per round — tens of ms × K of
     // pure janino time for a vocabulary-scale table where interpreted
     // evaluation is instant. Both settings are a thread-scoped overlay,
-    // as in Ckpt.withShuffle: the session's own conf never changes.
+    // as in the superstep driver (graft.Superstep): the session's own conf
+    // never changes.
     org.apache.spark.sql.GraftShim.withConf(s,
         "spark.sql.shuffle.partitions" -> vParts.toString,
         "spark.sql.codegen.wholeStage" -> "false") {

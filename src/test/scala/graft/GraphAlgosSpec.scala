@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, min, when}
 import graft.engine.{Engine, PropertyGraph}
 import graft.sources.GraphLoader
 
@@ -589,6 +590,90 @@ class GraphAlgosSpec extends AnyFunSuite {
     Ckpt.drain()
     assert(left.forall(_ <= 2) && left.distinct.size == 1,
       s"RDDs left cached per call (whole graph, nregion): $left")
+  }
+
+  test("call hits() leaves only the frames its result reads") {
+    // The result reads the last checkpoint of each phase (auth, hub).
+    // The loop-invariant node and edge frames are released once the
+    // phases have materialized, so a call leaves exactly those two.
+    val p = "call hits() yield id, auth, hub\nreturn id, auth, hub"
+    gql(p)
+    Ckpt.drain()
+    def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
+    val before = cachedRdds()
+    gql(p)
+    val left = cachedRdds() - before
+    Ckpt.drain()
+    assert(left == 2, s"RDDs left cached by a second call hits(): $left")
+  }
+
+  test("every superstep loop fails loudly past its step limit, naming the loop") {
+    import spark.implicits._
+    val ga = graft.operators.GraphAlgos
+    val n = 20L
+    val nodes = (0L until n).toDF("id")
+    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val undirected = chain.union(chain.select(col("dst").as("src"), col("src").as("dst")))
+    def fails(loop: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.startsWith(s"$loop not converged after "), e.getMessage)
+    }
+    // the chain's diameter is 19: every bound below is under it
+    fails("connected components")(ga.deltaCC(nodes, undirected, maxIters = 3, parts = 1))
+    fails("star CC")(ga.starCC(nodes, chain, maxRounds = 2))
+    fails("k-core peel")(ga.kcore(undirected, 2, maxIters = 3))
+    val spine = nodes.select(col("id"), when(col("id") === 0L, 0L).as("d"))
+    val hop = (f: DataFrame) =>
+      undirected.join(f, undirected("src") === f("id"))
+        .select(undirected("dst").as("id"), (col("d") + 1).as("cand"))
+        .groupBy("id").agg(min("cand").as("cand"))
+    for (improve <- Seq(false, true))
+      fails(s"chain search $improve")(
+        ga.frontierLoop(spine, Seq("id"), hop, improve, 3, s"chain search $improve", parts = 1))
+    val seeds = nodes.filter(col("id") === 0L)
+      .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
+    fails("chain levels")(ga.multiSourceBfsLevels(seeds, undirected, 3, parts = 1, "chain levels"))
+
+    // SCC: each loop is exhausted on a graph that leaves the others short
+    def scc(key: String, limit: Int, edges: Seq[(Long, Long)]): Unit = {
+      val e = edges.toDF("src", "dst")
+      spark.conf.set(key, limit.toString)
+      try ga.coloringSCC(e.select(col("src").as("id")).union(e.select(col("dst"))).distinct(), e)
+        .collect()
+      finally spark.conf.unset(key)
+    }
+    val steps = "spark.graft.sccMaxSupersteps"
+    val path = (0L until n - 1).map(i => (i, i + 1))
+    // a path: trim peels its two ends per pass
+    fails("SCC trim")(scc(steps, 3, path))
+    // a cycle: nothing trims, the max id walks the cycle one hop a superstep
+    fails("SCC coloring")(scc(steps, 3, path :+ (n - 1, 0L)))
+    // 100 reaches every node in one hop (two coloring supersteps), but
+    // only the tail of the path reaches 100, one hop a superstep back
+    fails("SCC backward reach")(scc(steps, 5,
+      path ++ (0L until n).map(i => (100L, i)) :+ (n - 1, 100L)))
+    // six 2-cycles, each feeding the next lower one: one extraction per round
+    fails("SCC rounds")(scc("spark.graft.sccMaxRounds", 2,
+      (0L until 6L).flatMap(j => Seq((2 * j, 2 * j + 1), (2 * j + 1, 2 * j))) ++
+        (0L until 5L).map(j => (2 * j + 2, 2 * j))))
+
+    // an unbounded varpath over a chain longer than its superstep bound
+    val len = graft.lang.Typing.varPathMaxSupersteps + 6
+    val tp = graft.lang.Typing.compile(
+      "(:C {})\n(:C) -[:nx]-> (:C)\nmatch (s:C) -[:nx*]-> (t:C)\nreturn s, t\n")
+    val g = PropertyGraph(tp.schema, Map("C" -> (0L until len).toDF("id")),
+      Map(("C", "nx", "C") -> (0L until len - 1).map(i => (i, i + 1)).toDF("src", "dst")))
+    val e = intercept[IllegalArgumentException] {
+      Engine.run(spark, tp, g, len, Engine.Config(strict = false)).bindings.collect()
+    }
+    assert(e.getMessage.startsWith("unbounded variable-length path not converged after ") &&
+      e.getMessage.contains("write an explicit bound"), e.getMessage)
+
+    // fixed-round kernels end at their round count without error
+    assert(ga.pageRank(nodes, chain, 3).count() == n)
+    assert(ga.labelProp(nodes, undirected, 3).count() == n)
+    assert(ga.hits(nodes, chain, 3).count() == n)
+    Ckpt.drain()
   }
 
   test("call cc() keys its edge hoist by graph version: one pin per new edge map") {

@@ -298,7 +298,7 @@ class PlanSpec extends AnyFunSuite {
     // a CYCLIC graph with branching, distinct PATHS multiply per hop
     // (here: the a→{b,c}→d diamond doubles the path count every cycle
     // lap) while distinct (src,dst) PAIRS are bounded by |V|². The
-    // per-hop dropDuplicates (Engine.varPathReach) is what keeps the
+    // per-hop dropDuplicates (VarPathClosure.varPathReach) is what keeps the
     // joined frontier pair-bounded instead of path-exploding — the
     // blow-up guard behind the hi <= 10 typing cap. Pin it in the plan:
     // one pair-keyed dedup aggregate per expansion hop.
@@ -332,14 +332,14 @@ class PlanSpec extends AnyFunSuite {
     val g = graft.engine.PropertyGraph(r.graph.schema, r.graph.nodes,
       Map(key -> edges.toSeq.toDF("src", "dst")))
     for (d <- 1 to 6) {
-      val reach = graft.engine.Engine.varPathReach(g, key, d, d)
+      val reach = VarPathClosure.varPathReach(g, key, d, d)
       val a = reach.queryExecution.analyzed.toString
       assert("Deduplicate".r.findAllIn(a).size == d,
         s"hop $d: expected $d pair dedups in:\n$a")
     }
     // and the dedup survives optimization to execution as pair-keyed
     // hash aggregates, with every hop an equi-join (no cross join)
-    val full = graft.engine.Engine.varPathReach(g, key, 1, 6)
+    val full = VarPathClosure.varPathReach(g, key, 1, 6)
     assert(full.count() == expected.size)
     val p = full.queryExecution.executedPlan.toString
     assert("HashAggregate\\(keys=\\[src".r.findAllIn(p).size >= 2,
@@ -430,7 +430,7 @@ class PlanSpec extends AnyFunSuite {
       val seededD = Engine.varPathReachSeeded(g, key, lo, hi, allSeeds,
         seedIsSrc = true, dist = true)
         .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
-      val fullD = Engine.varPathReachDist(g, key, lo, hi)
+      val fullD = VarPathClosure.varPathReachDist(g, key, lo, hi)
         .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
       assert(seededD == fullD, s"($lo,$hi) seeded dist != full closure dist")
       assert(fullD == want, s"($lo,$hi) full closure dist != in-JVM oracle")

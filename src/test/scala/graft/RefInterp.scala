@@ -258,10 +258,10 @@ object RefInterp {
       // and the DuckDB oracle cover them instead)
       require(pathV.isEmpty, "RefInterp: named paths not modeled")
       // bounded closure over the rl edges, set semantics per level —
-      // mirrors Engine.varPathReach (incl. the lo = 0 identity seed over
+      // mirrors VarPathClosure.varPathReach (incl. the lo = 0 identity seed over
       // every node of the homogeneous label); with a distance binding,
       // per-pair MINIMAL depth within the window (first-seen level wins,
-      // levels ascending — mirrors Engine.varPathReachDist's min).
+      // levels ascending — mirrors VarPathClosure.varPathReachDist's min).
       // Undirected closures walk the symmetrized edge set, mirroring
       // varPathReachSeeded's undir union.
       val (cs, ct) = (st.colOf(sv), st.colOf(tv))
