@@ -52,8 +52,8 @@ object Ckpt {
     * edge hoists, graph counts, memoized algorithm results (PageRank,
     * LPA, triangles), dup pairs, BPE merges. Every entry is keyed by
     * (session, `key`) — the key names the artifact and what it derives
-    * from: a data dir, or a graph version by map identity
-    * ([[graft.engine.Engine]]'s GraphKey) — and lives until its session
+    * from: a data dir, or a graph version by map identity (the rule is
+    * on [[graft.operators.Topology]]) — and lives until its session
     * stops: entries of stopped sessions are forgotten on the next call.
     * What an entry holds (a pinned checkpoint, a `cache()`d frame or a
     * plain value) is the caller's choice; the memo never releases it.
@@ -61,8 +61,8 @@ object Ckpt {
     * `build` runs at most once per key, even for concurrent first
     * callers (the losers wait on the key's slot, so no duplicate pin
     * leaks); a build that throws caches nothing and the next call builds
-    * again. Builds may read other keys (lpaLabels → undirectedEdges →
-    * GraphLoader.load): the map's own lock only guards slot creation,
+    * again. Builds may read other keys (lpaLabels → the topology's hoist
+    * → GraphLoader.load): the map's own lock only guards slot creation,
     * and a build holds just its own slot's monitor. */
   def memo[A](s: SparkSession, key: Any)(build: => A): A = {
     memos.keySet.removeIf(k => stopped(k._1))

@@ -41,30 +41,6 @@ import graft.lang.Typing._
   */
 object Engine {
 
-  /** Graph-version part of a [[graft.Ckpt.memo]] key: two graph versions
-    * share an entry iff their edge (or node) MAPS are the same instance
-    * (mutation builds a new map). Structural Map equality would be wrong
-    * (a re-created equal graph may hold different frames) and expensive. */
-  private final class GraphKey(val ref: AnyRef) {
-    override def hashCode: Int = System.identityHashCode(ref)
-    override def equals(o: Any): Boolean = o match {
-      case k: GraphKey => k.ref eq ref
-      case _           => false
-    }
-  }
-
-  /** One call-procedure hoist: the 2·|E| undirected src-partitioned
-    * edge frame, plus (built on first bfs/sssp use) the pinned
-    * distinct-endpoint spine universe and its count — the volume input
-    * for the loops' partition sizing ([[graft.Ckpt.partsFor]]) and the
-    * per-call spine base (an |V|-scale union instead of re-running the
-    * |E|-scale distinct every call). */
-  private[engine] final class Hoist(val ue: org.apache.spark.sql.DataFrame) {
-    lazy val endpoints: org.apache.spark.sql.DataFrame = graft.Ckpt.pinned(
-      ue.select(org.apache.spark.sql.functions.col("dst").as("id")).distinct())
-    lazy val nEndpoints: Long = endpoints.count()
-  }
-
   /** Execution config. `strict=true` reproduces the reference's
     * runtime-error semantics for reads of unset attributes / dangling
     * bindings via `raise_error` in the plan (sem.ml:148-158); `false`
@@ -457,69 +433,15 @@ object Engine {
       // nodes surface as zero-degree / singleton components.
       val cols = yields.indices.map(k => s"__b${st.freshCounter + k}")
       val relScope: Option[String] = args.collectFirst { case StringV(r) => r }
-      val allNodes = st.graph.nodes.values.map(_.select(col("id")))
-        .reduceOption(_ unionByName _)
-        .getOrElse(spark.range(0).select(col("id")))
-      val allEdges = st.graph.edges
-        .collect { case ((_, rl, _), df) if relScope.forall(_ == rl) =>
-          df.select(col("src"), col("dst")) }
-        .reduceOption(_ unionByName _)
-        .getOrElse(spark.range(0).select(col("id").as("src"), col("id").as("dst")))
-      // Loop-invariant frames are hoisted, REPARTITIONED BY THE PER-
-      // SUPERSTEP JOIN KEY and materialized once before the iterative
-      // loops — the library discipline (GraphAlgos undirectedEdges).
-      // Left lazy, every superstep would re-derive the edge union from
-      // the per-relation frames (a storage re-scan) AND re-exchange it
-      // for the join — measured 2× vs the library twins on the same
-      // graph (VERDICT r12), and at 100 TB the gap is supersteps×|E| of
-      // avoidable shuffle. Pinned (AQE off for the materialization) so
-      // the checkpoint reports the concrete hash partitioning instead
-      // of UnknownPartitioning.
-      //
-      // The hoist is memoized ([[graft.Ckpt.memo]]) per (session,
-      // relScope, graph edge-map IDENTITY): keying by the identity lets
-      // two graphs, or a graph and its mutated successor, coexist, and
-      // no superseded pin is dropped while a still-lazy binding may read
-      // it (call bfs → mutate → call: the old result's trivial-
-      // convergence path reads the old spine). The whole-graph bridge
-      // queries of a bench session share ONE 2|E| hoist; a mutation-
-      // heavy session holds one per graph VERSION it ran a whole-graph
-      // procedure on. Callers must NOT drop the returned frame.
-      def hoistUndirected(): Engine.Hoist =
-        graft.Ckpt.memo(spark, ("call.hoist", relScope, new Engine.GraphKey(st.graph.edges))) {
-          new Engine.Hoist(graft.Ckpt.pinned(
-            allEdges.unionByName(
-              allEdges.select(col("dst").as("src"), col("src").as("dst")))
-              .repartition(col("src"))))
-        }
-      // |V|, memoized per (session, graph node-map identity) — the
-      // volume input for the |V|-scale bridge loops' partition sizing
-      // (guide §2)
-      def nNodes(): Long =
-        graft.Ckpt.memo(spark, ("call.nNodes", new Engine.GraphKey(st.graph.nodes))) {
-          allNodes.count()
-        }
+      // the kernels' inputs for this graph version (hoist, endpoint
+      // spine, counts, triangle pins), built once per version
+      val topo = graft.operators.Topology(spark, st.graph, rel => relScope.forall(_ == rel))
+      val allNodes = topo.nodes
+      val allEdges = topo.edges
       def intArg(what: String): Long = args.head match {
         case IntV(v) => v
         case other   => throw new IllegalStateException(s"$what arg: $other")
       }
-      // Shared by triangles() and clustering() (VERDICT r18 item 3, the
-      // bridge-side twin of GraphAlgos.coPurchaseTriangles): per-node
-      // triangle counts and pair-degrees over the scoped canonical
-      // undirected pair set (the library triangleCounts build), memoized
-      // like the hoist. Values are |V|-scale pins; the |E|-scale
-      // intermediates are released at build time.
-      def pairTriangleCounts(): (DataFrame, DataFrame) =
-        graft.Ckpt.memo(spark, ("call.triangles", relScope, new Engine.GraphKey(st.graph.edges))) {
-          val (counts, deg, cached) = graft.operators.GraphAlgos.triangleCounts(
-            allEdges.select(least(col("src"), col("dst")).as("a"),
-              greatest(col("src"), col("dst")).as("b"))
-              .filter(col("a") =!= col("b")).distinct())
-          val out = (graft.Ckpt.pinned(counts), graft.Ckpt.pinned(deg))
-          graft.Ckpt.drop(deg)
-          cached.foreach(_.unpersist(false))
-          out
-        }
       val table: DataFrame = proc match {
         case "degree" =>
           // out/in degree over EVERY relation type; isolated nodes
@@ -536,82 +458,43 @@ object Engine {
           // component labels (comp = component min id) — the library
           // deltaCC, diameter-bound at 20 supersteps
           val (labels, _) = graft.operators.GraphAlgos.deltaCC(
-            allNodes, hoistUndirected().ue, maxIters = 20,
-            graft.Ckpt.partsFor(spark, nNodes()))
+            allNodes, topo.undirected, maxIters = 20, topo.nodeWidth)
           labels.select(col("id").as(cols(0)), col("comp").as(cols(1)))
         case "pagerank" =>
           // the library's fixed-point integer PageRank (8 iterations)
           // over the scoped DIRECTED edge set
           graft.operators.GraphAlgos.pageRank(allNodes, allEdges, iters = 8)
             .select(col("id").as(cols(0)), col("rank").as(cols(1)))
-        case "bfs" =>
-          // undirected hop distances from the literal source id —
-          // one-job-per-superstep spine loop (round 18; algorithm +
-          // plan-shape notes on [[graft.operators.GraphAlgos.frontierLoop]]),
-          // reached nodes in the output, absent source reaches nothing
-          val hoist = hoistUndirected()
-          val ue = hoist.ue
-          val srcId = intArg("bfs")
-          // spine = the REACHABLE key universe, not allNodes: the edge
-          // frame may be relation-scoped (call bfs over one relation's
-          // subgraph), and a full-|V| spine checkpointed per superstep
-          // measured 1.7× slower on the _rel variants at sf0.1 — BFS can
-          // only reach edge endpoints plus the source. Round 19: the
-          // endpoint set is memoized on the hoist (pinned + counted), so
-          // the per-call distinct is |V|-scale, not |E|-scale, and its
-          // count sizes the loop's partitions (guide §2).
-          val spine = hoist.endpoints
-            .unionByName(allNodes.filter(col("id") === srcId).select(col("id")))
-            .distinct()
-            .select(col("id"), when(col("id") === srcId, 0L).as("d"))
-          val dists = graft.operators.GraphAlgos.frontierLoop(
-            spine, Seq("id"),
-            f => ue.join(f, ue("src") === f("id"))
-              .select(ue("dst").as("id"), (col("d") + 1).as("cand"))
-              .groupBy("id").agg(min("cand").as("cand")),
-            improve = false, maxIters = 20, "call bfs()",
-            graft.Ckpt.partsFor(spark, hoist.nEndpoints))
-          dists.select(col("id").as(cols(0)), col("d").as(cols(1)))
-        case "sssp" =>
-          // weighted Bellman–Ford delta iteration (the library g_sssp
-          // recurrence): deterministic integer weight w(u,v) = 1 +
-          // (u + v) mod 2 — no weight column materialized anywhere,
-          // exact in any engine. The frontier is the IMPROVED set (a
-          // settled node re-enters when its distance drops — weighted
-          // relaxation, unlike BFS, can improve a settled node).
-          // one-job-per-superstep spine loop (round 18 — see
-          // [[graft.operators.GraphAlgos.frontierLoop]]); improve=true
-          // is the Bellman–Ford frontier (a settled node re-enters when
-          // its distance drops)
-          val hoist = hoistUndirected()
-          val ue = hoist.ue
-          val srcId = intArg("sssp")
-          // reachable-endpoints spine, not allNodes — same scoped-edge-
-          // frame reasoning (and round-19 memoized endpoint set +
-          // volume-derived partitions) as the bfs case above
-          val spine = hoist.endpoints
-            .unionByName(allNodes.filter(col("id") === srcId).select(col("id")))
-            .distinct()
-            .select(col("id"), when(col("id") === srcId, 0L).as("d"))
-          val dists = graft.operators.GraphAlgos.frontierLoop(
-            spine, Seq("id"),
-            f => ue.join(f, ue("src") === f("id"))
-              .select(ue("dst").as("id"),
-                (col("d") + lit(1L) + (ue("src") + ue("dst")) % 2).as("cand"))
-              .groupBy("id").agg(min("cand").as("cand")),
-            improve = true, maxIters = 24, "call sssp()",
-            graft.Ckpt.partsFor(spark, hoist.nEndpoints))
+        case "bfs" | "sssp" =>
+          // hop distances from the literal source id over the undirected
+          // edges (GraphAlgos.hopDistances): sssp is the weighted
+          // Bellman–Ford recurrence of g_sssp. Reached nodes in the
+          // output; an absent source reaches nothing. The key universe
+          // is the REACHABLE one, not allNodes: the edge frame may be
+          // relation-scoped (call bfs over one relation's subgraph), and
+          // a full-|V| spine checkpointed per superstep measured 1.7×
+          // slower on the _rel variants at sf0.1 — a search can only
+          // reach edge endpoints plus the source. The endpoint set is
+          // pinned and counted per version, so the per-call distinct is
+          // |V|-scale, not |E|-scale, and its count sizes the loop.
+          val srcId = intArg(proc)
+          val weighted = proc == "sssp"
+          val dists = graft.operators.GraphAlgos.hopDistances(topo.undirected,
+            topo.endpoints.unionByName(allNodes.filter(col("id") === srcId)).distinct(),
+            srcId, weighted, maxIters = if (weighted) 24 else 20, s"call $proc()",
+            graft.Ckpt.partsFor(spark, topo.nEndpoints))
           dists.select(col("id").as(cols(0)), col("d").as(cols(1)))
         case "kcore" =>
           // the library k-core peel, k as the call argument: in-core
           // degrees of the k-core's nodes
-          graft.operators.GraphAlgos.kcore(hoistUndirected().ue, intArg("kcore"),
+          graft.operators.GraphAlgos.kcore(topo.undirected, intArg("kcore"),
             maxIters = 12)
             .select(col("id").as(cols(0)), col("c").as(cols(1)))
         case "triangles" =>
-          // per-node triangle counts (see pairTriangleCounts);
-          // zero-participation nodes surface with 0
-          val (counts, _) = pairTriangleCounts()
+          // per-node triangle counts over the scoped canonical
+          // undirected pair set (Topology.triangles, shared with
+          // clustering()); zero-participation nodes surface with 0
+          val (counts, _) = topo.triangles
           allNodes.join(counts, Seq("id"), "left")
             .select(col("id").as(cols(0)),
               coalesce(col("n_tri"), lit(0L)).as(cols(1)))
@@ -622,7 +505,7 @@ object Engine {
           // engine-exact ranking, no float) over the canonical
           // undirected pair set; nodes with pair-degree < 2 have no
           // defined coefficient and are omitted (matching the library)
-          val (counts, deg) = pairTriangleCounts()
+          val (counts, deg) = topo.triangles
           deg.filter(col("d") >= 2).join(counts, Seq("id"), "left")
             .select(col("id").as(cols(0)),
               expr("(2000000 * coalesce(n_tri, 0)) div (d * (d - 1))")
@@ -657,7 +540,7 @@ object Engine {
           // re-checkpointed the growing K·|V| frame every superstep.
           val bandArg = args.collectFirst { case IntV(v) => v }
           val band = bandArg.getOrElse(2000000000L)
-          val ue = hoistUndirected().ue
+          val ue = topo.undirected
           val seeds = allNodes.filter(col("id") < band)
             .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
           val nSeeds = seeds.count()
@@ -671,7 +554,7 @@ object Engine {
           }
           val dists = graft.operators.GraphAlgos.multiSourceBfsLevels(
             seeds, ue, maxIters = 20,
-            graft.Ckpt.partsFor(spark, nSeeds * nNodes()), "call harmonic()")
+            graft.Ckpt.partsFor(spark, nSeeds * topo.nNodes), "call harmonic()")
           dists.filter(col("d") > 0)
             .groupBy("id").agg(sum(expr("1000000 div d")).as("h"))
             .select(col("id").as(cols(0)), col("h").as(cols(1)))
@@ -694,7 +577,7 @@ object Engine {
         case "labelprop" =>
           // the library synchronous LPA (fixed lpIters rounds); isolated
           // or unscoped nodes keep their own id label
-          graft.operators.GraphAlgos.labelProp(allNodes, hoistUndirected().ue,
+          graft.operators.GraphAlgos.labelProp(allNodes, topo.undirected,
             graft.operators.GraphAlgos.lpIters)
             .select(col("id").as(cols(0)), col("lbl").as(cols(1)))
         case other =>

@@ -8,28 +8,26 @@ import graft.Superstep.{Done, More, Probe, doneIf}
 
 /** Iterative graph analytics over the parquet→graph projection — the
   * GraphX-flavored extension axis of the engine (reference has none;
-  * SURVEY.md §7.2 M7). Two oracle-checked DataFrame algorithms plus a
-  * genuine GraphX run:
+  * SURVEY.md §7.2 M7). Three layers:
   *
-  *   - connected components: min-label propagation, FIXED superstep
-  *     count (measured convergence + margin; see ccIters), every step a
-  *     join + min-agg —
-  *     integer labels, so results are exact and engine-independent. The
-  *     oracle replays the identical ccIters steps as unrolled CTEs.
-  *   - PageRank: 8 iterations in 1e-9 fixed point — contributions are
-  *     `rank div outdeg`, damping is `150000000 + (85 * in_sum) div 100`,
-  *     all int64, so every engine computes bit-equal ranks. Dangling mass
-  *     is dropped (not redistributed) on both sides — the standard
-  *     simplified formulation, chosen for cross-engine exactness.
-  *   - a GraphX staticPageRank over the same edges (rows-only check):
-  *     the library integration point for everything else GraphX offers.
-  *
-  * Scale: label propagation and power iteration are the 1000-executor
-  * classics — each superstep is one shuffle keyed by dst; lineage is cut
-  * with a localCheckpoint every few steps (else the chained shuffles build
-  * an unbounded plan). At 100 TB you'd swap CC for the large-star/
-  * small-star algorithm (fewer supersteps on skewed graphs), same join
-  * shapes.
+  *   - inputs: a [[Topology]] — one graph version's directed edges, node
+  *     ids, pinned undirected hoist, endpoint spine, |V| and triangle
+  *     pins, memoized per version. The `g_*` queries read the loaded
+  *     graph without its non-FK parts ([[topology]]); MiniGQL's `call`
+  *     procedures read the current graph state through the same class.
+  *   - kernels over (nodes, edges) frames, one per algorithm and shared
+  *     by both doors: [[deltaCC]], [[starCC]], [[pageRank]], [[hits]],
+  *     [[kcore]], [[labelProp]], [[triangleCounts]], [[coloringSCC]],
+  *     [[frontierLoop]] (with [[hopDistances]] for BFS and SSSP) and
+  *     [[multiSourceBfsLevels]]. Every iterative loop runs through
+  *     [[graft.Superstep]], which owns its width, checkpoints, step
+  *     limit and the loud non-convergence error.
+  *   - [[all]]: the `g_*` queries ([[Q]]), each a kernel call over the
+  *     library topology plus its output projection, paired with an
+  *     unrolled DuckDB oracle. Every result is integer (fixed-point
+  *     ranks and scores, min-id labels), so engine and oracle agree bit
+  *     for bit; the GraphX runs are checked against the same oracles or
+  *     against the DataFrame PageRank.
   */
 object GraphAlgos {
 
@@ -41,49 +39,14 @@ object GraphAlgos {
   private val ccIters = 9
   private val prIters = 8
 
-  /** All directed FK edges of the loaded graph as one (src,dst) frame.
-    * Excludes the non-FK relation types: `tagged` (mutable, starts empty)
-    * and `nnext` (derived successor chain for variable-length paths) —
-    * the analytics oracles reconstruct exactly the source foreign keys. */
-  private def allEdges(s: SparkSession, dir: String): DataFrame = {
-    val (g, _) = GraphLoader.load(s, dir)
-    val nonFk = Set("tagged", "nnext")
-    g.edges.collect { case (key, df) if !nonFk(key._2) => df.select("src", "dst") }
-      .reduce(_ union _)
-  }
-
-  private def allNodes(s: SparkSession, dir: String): DataFrame = {
-    val (g, _) = GraphLoader.load(s, dir)
-    (g.nodes - "tag").values.map(_.select("id")).reduce(_ union _)
-  }
-
-  /** (|V|, directed |E|) counted ONCE per (session, dir) — feeds the
-    * volume-derived superstep partition counts ([[graft.Ckpt.partsFor]],
-    * guide §2): every iterative loop here sizes its per-superstep
-    * label/frontier exchanges and checkpoints to these instead of
-    * inheriting the session's core-count default. Two count jobs per
-    * session, amortized over every graph query. */
-  private def graphScale(s: SparkSession, dir: String): (Long, Long) =
-    Ckpt.memo(s, ("graphScale", dir)) {
-      (allNodes(s, dir).count(), allEdges(s, dir).count())
-    }
-
-  /** Partition count for |V|-scale per-superstep frames of this graph. */
-  private def nodeParts(s: SparkSession, dir: String): Int =
-    Ckpt.partsFor(s, graphScale(s, dir)._1)
-
-  /** The undirected, src-pre-partitioned edge frame every label/distance
-    * propagation joins against — built (one 2×|E| shuffle + checkpoint)
-    * ONCE per (session, dir) and shared by CC and BFS instead of each
-    * op re-shuffling it. Pinned: a drained localCheckpoint is
-    * unrecoverable. */
-  private def undirectedEdges(s: SparkSession, dir: String): DataFrame =
-    Ckpt.memo(s, ("undirectedEdges", dir)) {
-      val e = allEdges(s, dir)
-      Ckpt.pinned(
-        e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(col("src")))
-    }
+  /** The library door's graph: the loaded graph's FK edges and nodes.
+    * The non-FK parts are dropped — the `tagged` relation and `tag`
+    * label (mutable, start empty) and the `nnext` relation (the derived
+    * successor chain for variable-length paths) — so the analytics
+    * oracles reconstruct exactly the source foreign keys. */
+  private def topology(s: SparkSession, dir: String): Topology =
+    Topology(s, GraphLoader.load(s, dir)._1, rel => rel != "tagged" && rel != "nnext",
+      _ != "tag")
 
   /** Delta min-label propagation CC over a pre-built UNDIRECTED edge
     * frame (both orientations present, ideally src-pre-partitioned).
@@ -208,44 +171,46 @@ object GraphAlgos {
   }
 
   /** The GraphX graph over the FK edges — built (one fromEdges + 2D
-    * partition shuffle) ONCE per (session, dir) and shared by the two
-    * GraphX integration ops instead of each re-building it. Kept
-    * persisted for the session like [[undirectedEdges]]; the ops still
-    * unpersist their own RESULT graphs. */
-  private def gxGraph(s: SparkSession, dir: String)
-      : org.apache.spark.graphx.Graph[Unit, Unit] = Ckpt.memo(s, ("gxGraph", dir)) {
-    import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
-    val sp = s
-    import sp.implicits._
-    val eDf = allEdges(s, dir)
-    // Size edge partitions to DATA VOLUME, not to the loader plan's
-    // partitioning: the union-of-scans arrives in O(#frames × scan
-    // splits) partitions, and RDD Pregel (no AQE coalescing) pays
-    // 3 stages × P tasks of fixed cost EVERY iteration, plus
-    // EdgePartition2D replicates each vertex to ≤ 2√P partitions —
-    // both costs scale with P, so P must track |E|. ~1M edges
-    // (~32 MB of Edge[Unit]) per partition: thousands of partitions
-    // at 100 TB, single digits at bench SFs.
-    val parts = math.max(4, (eDf.count() / 1_000_000L).toInt)
-    val edgeRdd = eDf.as[(Long, Long)].rdd
-      .map { case (a, b) => Edge(a, b, ()) }
-      .coalesce(parts)
-    // EdgePartition2D bounds each vertex's replication at 2*sqrt(P)
-    // partitions, shrinking the per-iteration vertex-to-edge shuffle
-    // (the dominant cost of RDD Pregel on a star-heavy FK graph).
-    Graph.fromEdges(edgeRdd, defaultValue = ())
-      .partitionBy(PartitionStrategy.EdgePartition2D)
+    * partition shuffle) ONCE per topology and shared by the two GraphX
+    * integration ops instead of each re-building it. Kept persisted for
+    * the session like the topology's hoist; the ops still unpersist
+    * their own RESULT graphs. */
+  private def gxGraph(s: SparkSession, dir: String): org.apache.spark.graphx.Graph[Unit, Unit] = {
+    val t = topology(s, dir)
+    t.memo("gxGraph") {
+      import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
+      val sp = s
+      import sp.implicits._
+      val eDf = t.edges
+      // Size edge partitions to DATA VOLUME, not to the loader plan's
+      // partitioning: the union-of-scans arrives in O(#frames × scan
+      // splits) partitions, and RDD Pregel (no AQE coalescing) pays
+      // 3 stages × P tasks of fixed cost EVERY iteration, plus
+      // EdgePartition2D replicates each vertex to ≤ 2√P partitions —
+      // both costs scale with P, so P must track |E|. ~1M edges
+      // (~32 MB of Edge[Unit]) per partition: thousands of partitions
+      // at 100 TB, single digits at bench SFs.
+      val parts = math.max(4, (eDf.count() / 1_000_000L).toInt)
+      val edgeRdd = eDf.as[(Long, Long)].rdd
+        .map { case (a, b) => Edge(a, b, ()) }
+        .coalesce(parts)
+      // EdgePartition2D bounds each vertex's replication at 2*sqrt(P)
+      // partitions, shrinking the per-iteration vertex-to-edge shuffle
+      // (the dominant cost of RDD Pregel on a star-heavy FK graph).
+      Graph.fromEdges(edgeRdd, defaultValue = ())
+        .partitionBy(PartitionStrategy.EdgePartition2D)
+    }
   }
 
   /** Final fixed-point PageRank frame (id, rank: 1e-9 int64), computed
-    * once per (session, dir) and shared: g_pagerank projects its top-100
-    * and g_pagerank_graphx cross-validates GraphX against it vertex by
+    * once per topology and shared: g_pagerank projects its top-100 and
+    * g_pagerank_graphx cross-validates GraphX against it vertex by
     * vertex — the second consumer costs nothing beyond its own GraphX
-    * run. Pinned like [[undirectedEdges]] (outside the drain ledger). */
-  private def fixedPageRank(s: SparkSession, dir: String): DataFrame =
-    Ckpt.memo(s, ("fixedPageRank", dir)) {
+    * run. Pinned like the topology's hoist (outside the drain ledger). */
+  private def fixedPageRank(t: Topology): DataFrame =
+    t.memo("fixedPageRank") {
       // re-pinned OUTSIDE the drain ledger, the [[lpaLabels]] discipline
-      val ranks = pageRank(allNodes(s, dir), allEdges(s, dir), prIters)
+      val ranks = pageRank(t.nodes, t.edges, prIters)
       val out = Ckpt.pinned(ranks)
       Ckpt.drop(ranks)
       out
@@ -748,6 +713,23 @@ object GraphAlgos {
     dists.filter(col("d").isNotNull)
   }
 
+  /** Hop distances from `src` over the undirected, src-partitioned edge
+    * frame `ue`: a [[frontierLoop]] over the key universe `keys` (id),
+    * with `src` at distance 0. Unweighted it is BFS (a key is discovered
+    * once); `weighted` it is Bellman–Ford under the deterministic
+    * integer weight w(u,v) = 1 + (u + v) mod 2 (no weight column
+    * materialized, exact in any engine), where a settled key re-enters
+    * the frontier when its distance drops. Returns (id, d) for every
+    * reached key. Shared by g_bfs/g_sssp and `call bfs`/`call sssp`. */
+  private[graft] def hopDistances(ue: DataFrame, keys: DataFrame, src: Long,
+      weighted: Boolean, maxIters: Int, what: String, parts: Int): DataFrame =
+    frontierLoop(keys.select(col("id"), when(col("id") === src, 0L).as("d")), Seq("id"),
+      f => ue.join(f, ue("src") === f("id"))
+        .select(ue("dst").as("id"), (if (weighted) col("d") + lit(1L) + (ue("src") + ue("dst")) % 2
+          else col("d") + 1).as("cand"))
+        .groupBy("id").agg(min("cand").as("cand")),
+      improve = weighted, maxIters, what, parts)
+
   /** Multi-source BFS over an undirected, src-pre-partitioned edge
     * frame: returns the (lazy union of) per-LEVEL distance frames
     * (seed, id, d) — every reached (seed, id) at its minimal hop
@@ -847,13 +829,13 @@ object GraphAlgos {
     }
   }
 
-  /** LPA labels memoized per (session, dir): g_labelprop and
-    * g_modularity share the 6-round propagation. The memoized frame is
-    * re-pinned OUTSIDE the drain ledger (the loop's own final checkpoint
-    * is drained between queries, so it must not be the cached handle). */
-  private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    Ckpt.memo(s, ("lpaLabels", dir)) {
-      val labels = labelProp(allNodes(s, dir), undirectedEdges(s, dir), lpIters)
+  /** LPA labels memoized per topology: g_labelprop and g_modularity
+    * share the 6-round propagation. The memoized frame is re-pinned
+    * OUTSIDE the drain ledger (the loop's own final checkpoint is drained
+    * between queries, so it must not be the cached handle). */
+  private def lpaLabels(t: Topology): DataFrame =
+    t.memo("lpaLabels") {
+      val labels = labelProp(t.nodes, t.undirected, lpIters)
       val out = Ckpt.pinned(labels)
       Ckpt.drop(labels)
       out
@@ -918,19 +900,10 @@ object GraphAlgos {
     * shared build behind g_triangles and g_clustering, memoized per
     * (session, dir) as pinned checkpoints. Returns (triCounts id→n_tri
     * over participating nodes only, degrees id→d over every node of the
-    * pair graph); the build is [[triangleCounts]]. */
+    * pair graph); the build is [[pinnedTriangles]]. The pairs are read
+    * straight from parquet, so the key is the dir. */
   private def coPurchaseTriangles(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    Ckpt.memo(s, ("coPurchaseTriangles", dir)) {
-      val (tc, deg, cached) = triangleCounts(coPurchasePairs(s, dir))
-      // pin the |V|-scale outputs (drain-safe), then release the
-      // |E|-scale intermediates immediately — a raw cache would
-      // otherwise pin edge-scale frames per query for the session's
-      // lifetime
-      val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
-      Ckpt.drop(deg)
-      cached.foreach(_.unpersist(false))
-      out
-    }
+    Ckpt.memo(s, ("coPurchaseTriangles", dir))(pinnedTriangles(coPurchasePairs(s, dir)))
 
   /** The part co-purchase graph as canonical (a < b) distinct pairs. */
   private[graft] def coPurchasePairs(s: SparkSession, dir: String): DataFrame = {
@@ -944,7 +917,8 @@ object GraphAlgos {
   /** Per-node triangle counts and pair-degrees over an undirected graph
     * given as canonical pairs (a, b): distinct, a < b. Shared by
     * g_triangles/g_clustering and `call triangles()`/`call
-    * clustering()`; each caller builds its own pair frame and memo.
+    * clustering()` through [[pinnedTriangles]]; each door builds its
+    * own pair frame.
     *
     * Triangles are enumerated with the DEGREE-ORDERED orientation: each
     * undirected edge points from its lower-(degree, id) endpoint to the
@@ -1006,6 +980,18 @@ object GraphAlgos {
     val tc = tri.select(explode(array(col("u"), col("v"), col("w"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
     (tc, deg, Seq(o, pairs))
+  }
+
+  /** [[triangleCounts]] with its outputs pinned (drain-safe) and its
+    * |E|-scale intermediates released at once — a raw cache would
+    * otherwise pin edge-scale frames per query for the session's
+    * lifetime. For memoized builds: returns (triangle counts, degrees). */
+  private[operators] def pinnedTriangles(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val (tc, deg, cached) = triangleCounts(pairs)
+    val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
+    Ckpt.drop(deg)
+    cached.foreach(_.unpersist(false))
+    out
   }
 
   // ---- HITS hubs & authorities (round 15) -----------------------------
@@ -1142,17 +1128,10 @@ object GraphAlgos {
       (s, dir) => {
         // One-job-per-superstep spine loop (round 18 — see
         // [[frontierLoop]] for why this replaced the anti-join +
-        // full-outer-merge shape): improve=true is the Bellman–Ford
-        // frontier — a settled node re-enters when its distance drops.
-        val ue = undirectedEdges(s, dir)
-        val spine = allNodes(s, dir)
-          .select(col("id"), when(col("id") === bfsSrc, 0L).as("d"))
-        val dists = frontierLoop(spine, Seq("id"),
-          f => ue.join(f, ue("src") === f("id"))
-            .select(ue("dst").as("id"),
-              (col("d") + lit(1L) + (ue("src") + ue("dst")) % 2).as("cand"))
-            .groupBy("id").agg(min("cand").as("cand")),
-          improve = true, ssspIters, "SSSP", nodeParts(s, dir))
+        // full-outer-merge shape) over every node.
+        val t = topology(s, dir)
+        val dists = hopDistances(t.undirected, t.nodes, bfsSrc, weighted = true, ssspIters,
+          "SSSP", t.nodeWidth)
         dists.groupBy(col("d").as("dist")).agg(count(lit(1)).as("n"))
       },
       Some(ssspOracle)),
@@ -1169,16 +1148,11 @@ object GraphAlgos {
     Q("g_bfs",
       (s, dir) => {
         // One-job-per-superstep spine loop (round 18 — see
-        // [[frontierLoop]]): the frontier is exactly the newly-
-        // discovered set, message volume each BFS level once.
-        val ue = undirectedEdges(s, dir)
-        val spine = allNodes(s, dir)
-          .select(col("id"), when(col("id") === bfsSrc, 0L).as("d"))
-        val dists = frontierLoop(spine, Seq("id"),
-          f => ue.join(f, ue("src") === f("id"))
-            .select(ue("dst").as("id"), (col("d") + 1).as("cand"))
-            .groupBy("id").agg(min("cand").as("cand")),
-          improve = false, bfsIters, "BFS", nodeParts(s, dir))
+        // [[frontierLoop]]) over every node: the frontier is exactly the
+        // newly-discovered set, message volume each BFS level once.
+        val t = topology(s, dir)
+        val dists = hopDistances(t.undirected, t.nodes, bfsSrc, weighted = false, bfsIters,
+          "BFS", t.nodeWidth)
         dists.groupBy(col("d").as("dist")).agg(count(lit(1)).as("n"))
       },
       Some(bfsOracle)),
@@ -1207,12 +1181,13 @@ object GraphAlgos {
         // full-outer-merge shape that re-checkpointed the growing
         // K·|V| frame every superstep. Result unchanged: the union of
         // disjoint levels is exactly the old accumulated frame.
-        val ue = undirectedEdges(s, dir)
-        val seeds = allNodes(s, dir).filter(col("id") < 2000000000L)
+        val t = topology(s, dir)
+        val ue = t.undirected
+        val seeds = t.nodes.filter(col("id") < 2000000000L)
           .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
         val nSeeds = seeds.count()
         val dists = multiSourceBfsLevels(seeds, ue, bfsIters,
-          Ckpt.partsFor(s, nSeeds * graphScale(s, dir)._1), "landmark BFS")
+          Ckpt.partsFor(s, nSeeds * t.nNodes), "landmark BFS")
         dists.filter(col("d") > 0)
           .groupBy("id").agg(sum(expr("1000000 div d")).as("h"))
           .orderBy(col("h").desc, col("id")).limit(50)
@@ -1242,21 +1217,21 @@ object GraphAlgos {
         // partition the nodes, so (comp, id) enumerates exactly the
         // (seed, id) pairs the root-seeded BFS can ever reach: the spine
         // is |V| rows, not seeds×|V|, and no cross join is needed.
-        val ue = undirectedEdges(s, dir)
-        val nodes = allNodes(s, dir)
-        val (labels, _) = deltaCC(nodes, ue, ccIters, nodeParts(s, dir))
+        val t = topology(s, dir)
+        val ue = t.undirected
+        val (labels, _) = deltaCC(t.nodes, ue, ccIters, t.nodeWidth)
         val spine = labels.select(col("comp").as("seed"), col("id"),
           when(col("id") === col("comp"), 0L).as("d"))
         val dists = frontierLoop(spine, Seq("seed", "id"),
           f => ue.join(f, ue("src") === f("id"))
             .select(col("seed"), ue("dst").as("id"), (col("d") + 1).as("cand"))
             .groupBy("seed", "id").agg(min("cand").as("cand")),
-          improve = false, bfsIters, "root BFS", nodeParts(s, dir))
+          improve = false, bfsIters, "root BFS", t.nodeWidth)
         // parity check over each DIRECTED edge (one row per edge, no
         // reciprocal double-count); the edge's component = its src's seed
         val du = dists.select(col("seed"), col("id").as("src"), col("d").as("ds"))
         val dv = dists.select(col("id").as("dst"), col("d").as("dt"))
-        val odd = allEdges(s, dir).join(du, "src").join(dv, "dst")
+        val odd = t.edges.join(du, "src").join(dv, "dst")
           .groupBy("seed")
           .agg(count(lit(1)).as("n_edges"),
             sum(when((col("ds") + col("dt")) % 2 === 0, 1L).otherwise(0L)).as("n_odd"))
@@ -1273,11 +1248,11 @@ object GraphAlgos {
     Q("g_connected_components",
       (s, dir) => {
         // Pre-partitioned loop-invariant edge frame, built once per
-        // (session, dir) and SHARED with g_bfs — each superstep's join
-        // only shuffles the (small) labels side, and the 2×|E| build
-        // shuffle is paid once per session, not once per operator.
-        val (labels, _) = deltaCC(allNodes(s, dir), undirectedEdges(s, dir), ccIters,
-          nodeParts(s, dir))
+        // topology and SHARED with g_bfs — each superstep's join only
+        // shuffles the (small) labels side, and the 2×|E| build shuffle
+        // is paid once per session, not once per operator.
+        val t = topology(s, dir)
+        val (labels, _) = deltaCC(t.nodes, t.undirected, ccIters, t.nodeWidth)
         labels.groupBy("comp").agg(count(lit(1)).as("n"))
       },
       Some(ccOracle)),
@@ -1295,14 +1270,15 @@ object GraphAlgos {
     // over the current edge set (shrinking fast).
     Q("g_connected_components_star",
       (s, dir) => {
-        val (comp, _) = starCC(allNodes(s, dir), allEdges(s, dir), maxRounds = 8)
+        val t = topology(s, dir)
+        val (comp, _) = starCC(t.nodes, t.edges, maxRounds = 8)
         comp.groupBy("comp").agg(count(lit(1)).as("n"))
       },
       Some(ccOracle)),
 
     // ---- PageRank: 8 fixed-point power iterations ---------------------
     Q("g_pagerank",
-      (s, dir) => fixedPageRank(s, dir)
+      (s, dir) => fixedPageRank(topology(s, dir))
         .orderBy(col("rank").desc, col("id")).limit(100),
       Some(prOracle)),
 
@@ -1313,7 +1289,7 @@ object GraphAlgos {
     // all. Out-degree only; nodes with no outgoing edge don't appear
     // (region/part/tag rows — consistent with the oracle's GROUP BY).
     Q("g_degree_dist",
-      (s, dir) => allEdges(s, dir)
+      (s, dir) => topology(s, dir).edges
         .groupBy(col("src")).agg(count(lit(1)).as("degree"))
         .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes")),
       Some(s"""WITH e AS ($edgeSql),
@@ -1332,7 +1308,7 @@ object GraphAlgos {
     // oracle, so the 6-dp result is bit-stable cross-engine.
     Q("g_assortativity",
       (s, dir) => {
-        val e = allEdges(s, dir)
+        val e = topology(s, dir).edges
         val deg = e.select(col("src").as("id"))
           .unionByName(e.select(col("dst").as("id")))
           .groupBy("id").agg(count(lit(1)).as("d"))
@@ -1407,7 +1383,7 @@ object GraphAlgos {
         // their own singleton components — restore them with a left
         // join so the oracle's full-vertex-set semantics hold.
         val out = Ckpt.eager(
-          allNodes(s, dir)
+          topology(s, dir).nodes
             .join(ccGraph.vertices.toDF("id", "comp"), Seq("id"), "left")
             .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
             .groupBy("comp").agg(count(lit(1)).as("n")))
@@ -1450,14 +1426,14 @@ object GraphAlgos {
         import sp.implicits._
         val prGraph = gxGraph(s, dir).staticPageRank(prIters)
         val gx = prGraph.vertices.toDF("gid", "grank")
-        val fixed = fixedPageRank(s, dir)
+        val fixed = fixedPageRank(topology(s, dir))
           .select(col("id"), (col("rank").cast("double") / 1e9).as("frank"))
         val joined = fixed.join(gx, col("id") === col("gid"), "left")
           .select(col("frank"), col("grank"))
         val scale = joined
           .agg((sum(when(col("grank").isNotNull, col("grank"))) /
                 sum(when(col("grank").isNotNull, col("frank")))).as("scale"))
-        val gate = allEdges(s, dir).groupBy(col("dst")).agg(count(lit(1)).as("d"))
+        val gate = topology(s, dir).edges.groupBy(col("dst")).agg(count(lit(1)).as("d"))
           .agg(greatest(lit(1e-4),
             max(col("d")).cast("double") * lit(1e-9) * prIters * 2 / 0.15).as("gate"))
         val out = Ckpt.eager(
@@ -1486,8 +1462,9 @@ object GraphAlgos {
     // neighborhood is small.
     Q("g_ppr",
       (s, dir) => {
-        val ranks = pageRank(allNodes(s, dir),
-          allEdges(s, dir).select(col("dst").as("src"), col("src").as("dst")), pprIters,
+        val t = topology(s, dir)
+        val ranks = pageRank(t.nodes,
+          t.edges.select(col("dst").as("src"), col("src").as("dst")), pprIters,
           restart = when(col("id") < 2000000000L, 1L).otherwise(0L))
         val out = Ckpt.eager(ranks.orderBy(col("rank").desc, col("id")).limit(100))
         Ckpt.drop(ranks)
@@ -1500,7 +1477,7 @@ object GraphAlgos {
     // before community detection at 100 TB) — plan shape on [[kcore]].
     // Output: the in-core degree histogram.
     Q("g_kcore",
-      (s, dir) => kcore(undirectedEdges(s, dir), kcoreK, kcoreIters)
+      (s, dir) => kcore(topology(s, dir).undirected, kcoreK, kcoreIters)
         .groupBy("c").agg(count(lit(1)).as("n_nodes"))
         .select(col("c").as("core_degree"), col("n_nodes")),
       Some(kcoreOracle)),
@@ -1644,7 +1621,7 @@ object GraphAlgos {
     // top-20 communities by size under the (n desc, comm) total order.
     Q("g_labelprop",
       (s, dir) => {
-        val labels = lpaLabels(s, dir)
+        val labels = lpaLabels(topology(s, dir))
         labels.groupBy(col("lbl").as("comm")).agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("comm")).limit(20)
       },
@@ -1658,8 +1635,9 @@ object GraphAlgos {
     // keyed aggregations on top of the shared LPA labels.
     Q("g_modularity",
       (s, dir) => {
-        val e = allEdges(s, dir)
-        val labels = lpaLabels(s, dir)
+        val t = topology(s, dir)
+        val e = t.edges
+        val labels = lpaLabels(t)
         val m = e.count()
         val ec = e
           .join(labels.select(col("id").as("src"), col("lbl").as("sl")), Seq("src"))
@@ -1667,7 +1645,7 @@ object GraphAlgos {
           .filter(col("sl") === col("tl"))
           .groupBy(col("sl").as("lbl")).agg(count(lit(1)).as("e_c"))
         // total community degree over BOTH orientations (so Σ d_c = 2m)
-        val dc = undirectedEdges(s, dir)
+        val dc = t.undirected
           .join(labels.select(col("id").as("src"), col("lbl")), Seq("src"))
           .groupBy("lbl").agg(count(lit(1)).as("d_c"))
         dc.join(ec, Seq("lbl"), "left")
@@ -1682,8 +1660,10 @@ object GraphAlgos {
     // ---- HITS hubs & authorities (round 15) ----------------------------
     // Top-20 authorities; formulation, bounds and plan shape on [[hits]].
     Q("g_hits",
-      (s, dir) => hits(allNodes(s, dir), allEdges(s, dir), hitsIters)
-        .orderBy(col("auth").desc, col("id")).limit(20),
+      (s, dir) => {
+        val t = topology(s, dir)
+        hits(t.nodes, t.edges, hitsIters).orderBy(col("auth").desc, col("id")).limit(20)
+      },
       Some(hitsOracle)),
 
     // ---- local clustering coefficient over part co-purchase ------------

@@ -27,12 +27,14 @@ object GraphOps {
 
   private val cfg = Engine.Config(strict = false)
 
-  private def exec(spark: SparkSession, dir: String, q: String): Engine.QueryResult = {
+  /** Runs program `q` (with `$name` query `params`) against the loaded
+    * graph. */
+  private def exec(spark: SparkSession, dir: String, q: String,
+      params: Map[String, graft.lang.Value] = Map.empty): Engine.QueryResult = {
     val (g, nextId) = GraphLoader.load(spark, dir)
-    Engine.runSourceOn(spark, header + q, g, nextId, cfg)
+    Engine.runSourceOn(spark, header + q, g, nextId, cfg, params)
   }
 
-  /** Program result = final binding table. */
   /** Unrolled undirected BFS from region 0 over the LOADED gql graph's
     * edge set (the FK edges [[GraphAlgos.edgeSql]] plus the derived
     * nnext successor chain; tagged/flagged start empty) — the oracle
@@ -46,12 +48,7 @@ object GraphOps {
          |  FROM ue JOIN d${i - 1} ON ue.src = d${i - 1}.id) x GROUP BY x.id)"""
         .stripMargin
     }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (${GraphAlgos.edgeSql}
-       |UNION ALL SELECT src, dst FROM (
-       |  SELECT n_nationkey + 2000000000 AS src,
-       |         2000000000 + LEAD(n_nationkey) OVER (
-       |           PARTITION BY n_regionkey ORDER BY n_nationkey) AS dst
-       |  FROM nation) x WHERE dst IS NOT NULL),
+    s"""WITH e AS MATERIALIZED ($gqlEdgeSql),
        |ue AS MATERIALIZED (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
        |d0 AS MATERIALIZED (SELECT CAST(1000000000 AS BIGINT) AS id, 0::BIGINT AS d),
        |$steps
@@ -216,15 +213,11 @@ object GraphOps {
        |FROM d9 WHERE d > 0 GROUP BY id ORDER BY h DESC, id LIMIT 50""".stripMargin
   }
 
-  private def bindings(q: String)(spark: SparkSession, dir: String): DataFrame =
-    exec(spark, dir, q).bindings
-
-  /** Like [[bindings]] with `$name` query parameters (round 12). */
-  private def bindingsP(q: String, params: Map[String, graft.lang.Value])(
-      spark: SparkSession, dir: String): DataFrame = {
-    val (g, nextId) = GraphLoader.load(spark, dir)
-    Engine.runSourceOn(spark, header + q, g, nextId, cfg, params).bindings
-  }
+  /** Program result = final binding table; `params` bind `$name` query
+    * parameters (round 12). */
+  private def bindings(q: String, params: Map[String, graft.lang.Value] = Map.empty)(
+      spark: SparkSession, dir: String): DataFrame =
+    exec(spark, dir, q, params).bindings
 
   /** Program result = a post-mutation graph frame (for create/delete/set,
     * whose observable output is the graph, not the table). */
@@ -1683,7 +1676,7 @@ object GraphOps {
     // hand-written constant. The int, string, AND call-argument forms
     // in one program.
     Q("gql_param",
-      bindingsP(
+      bindings(
         """match (n:nation) -[:nregion]-> (r:region)
           |where n.nationkey >= $lo and r.name starts with $pre
           |return n, r""".stripMargin,
@@ -1695,7 +1688,7 @@ object GraphOps {
 
     // …and a parameterized procedure argument: call bfs($src)
     Q("gql_param_call",
-      bindingsP(
+      bindings(
         """call bfs($src) yield id, dist
           |return dist, count(id) as n""".stripMargin,
         Map("src" -> graft.lang.IntV(1000000000L))),
@@ -1705,7 +1698,7 @@ object GraphOps {
     // param into the same foldable constant a literal gives, so the
     // TakeOrderedAndProject shaping is identical
     Q("gql_param_limit",
-      bindingsP(
+      bindings(
         """match (n:nation)
           |return n, n.name as name
           |order by n skip $off limit $k""".stripMargin,
@@ -1715,7 +1708,7 @@ object GraphOps {
 
     // $param as a procedure's relation-scope string argument
     Q("gql_param_call_rel",
-      bindingsP(
+      bindings(
         """call cc($rel) yield id, comp
           |where comp.val < 2000000000
           |return comp, count(id) as n""".stripMargin,

@@ -39,10 +39,14 @@ object GraftShim {
     * or long sessions (the 78-query bench) accumulate dead blocks until
     * the block manager thrashes. Safe ONLY once nothing live derives from
     * the checkpoint: a localCheckpoint has no lineage, so dropped blocks
-    * are gone, not recomputable. No-op for non-checkpoint frames. */
+    * are gone, not recomputable. The blocks are released through the
+    * context, not `RDD.unpersist`, which warns on every call that a
+    * locally checkpointed RDD cannot be recomputed — the point of the
+    * call here. No-op for non-checkpoint frames. */
   def unpersistCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD =>
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 

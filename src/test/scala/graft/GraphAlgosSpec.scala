@@ -18,7 +18,7 @@ class GraphAlgosSpec extends AnyFunSuite {
 
   private def collectedEdges(): Seq[(Long, Long)] = {
     val (g, _) = GraphLoader.load(spark, dir)
-    // FK edges only — mirror GraphAlgos.allEdges (tagged is mutable,
+    // FK edges only — mirror GraphAlgos.topology (tagged is mutable,
     // nnext is the derived varpath successor chain)
     val nonFk = Set("tagged", "nnext")
     g.edges.collect { case (key, df) if !nonFk(key._2) => df }
