@@ -123,9 +123,14 @@ object Bench {
     // family-band retry below defends against ambient contention; this
     // inner loop defends against per-query jitter when runs>1).
     def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+      // Each sample runs in its own checkpoint scope, whose release on
+      // exit is outside the timed section: without it, blocks from 130+
+      // queries accumulate and the back half of the run measures
+      // block-manager churn, not the operators (isolated runs were 2-3×
+      // faster than in-sequence).
       val samples = (1 to runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val r =
+        Ckpt.scope {
+          val t0 = System.nanoTime()
           try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
           catch {
             case e: Throwable =>
@@ -133,12 +138,7 @@ object Bench {
                 .linesIterator.next().take(200)
               None
           }
-        // Release the query's leftover checkpoints (outside the timed
-        // section): without this, blocks from 130+ queries accumulate and
-        // the back half of the run measures block-manager churn, not the
-        // operators (isolated runs were 2-3× faster than in-sequence).
-        Ckpt.drain()
-        r
+        }
       }
       if (samples.isEmpty) None else Some(samples.sorted.apply(samples.size / 2))
     }

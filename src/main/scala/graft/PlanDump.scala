@@ -16,11 +16,12 @@ object PlanDump {
     val spark = SparkEntry.cpuSession()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(outDir, s"$name.txt"), plan)
-      Ckpt.drain()
+      Ckpt.scope {
+        val df = SparkEntry.queries(name)(spark, dir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"$name.txt"), plan)
+      }
       System.err.println(s"[plandump] wrote $name")
     }
     spark.stop()

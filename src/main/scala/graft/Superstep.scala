@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
   *     theirs, and a join against one keeps that width or broadcasts the
   *     loop side (both in the sf0.001 superstep plans, plans/pr9/).
   *   - the checkpoint lifecycle, one rule for every loop: a superstep's
-  *     frame is checkpoint-MARKED ([[Ckpt.deferredPartitioned]] unless
-  *     the step names another mark) and its probe — a count or another
+  *     frame is checkpoint-MARKED ([[Ckpt.deferred]], planned without
+  *     AQE so the mark keeps its hash partitioning, unless the step
+  *     names another mark) and its probe — a count or another
   *     full-scan aggregate over the marked frame — is the job that
   *     materializes it, so a superstep runs one job (LocalRDDCheckpoint
   *     persists partitions as the probe computes them and tops up any it
@@ -27,8 +28,8 @@ import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
   *     of the state it replaces, and its own frame when the state does
   *     not read it. A kernel's `frames` names the checkpoints a state
   *     reads; the first state's frames belong to the loop, so a caller's
-  *     pinned input is never among them. The result state's frames stay
-  *     live for the caller (on the drain ledger).
+  *     input is never among them. The result state's frames stay live
+  *     for the caller.
   *   - the step counter, its limit and the one loud non-convergence
   *     error: a loop still going after `limit` supersteps fails with an
   *     IllegalArgumentException naming the loop — never a silent
@@ -53,7 +54,7 @@ object Superstep {
   /** Checkpoint `frame` with `mark`, materialize it with `probe`, and let
     * `next` decide from the marked frame and the probe's value. */
   final case class Probe[S](frame: DataFrame, probe: DataFrame => Long = _.count(),
-      mark: DataFrame => DataFrame = Ckpt.deferredPartitioned)(
+      mark: DataFrame => DataFrame = f => Ckpt.deferred(GraftShim.nonAdaptive(f)))(
       val next: (DataFrame, Long) => Step[S]) extends Step[S]
 
   /** Run `step` from `first` until it is [[Done]]; `step` also gets the

@@ -434,7 +434,7 @@ object Engine {
       val cols = yields.indices.map(k => s"__b${st.freshCounter + k}")
       val relScope: Option[String] = args.collectFirst { case StringV(r) => r }
       // the kernels' inputs for this graph version (hoist, endpoint
-      // spine, counts, triangle pins), built once per version
+      // spine, counts, triangle counts), built once per version
       val topo = graft.operators.Topology(spark, st.graph, rel => relScope.forall(_ == rel))
       val allNodes = topo.nodes
       val allEdges = topo.edges
@@ -616,8 +616,10 @@ object Engine {
       else if (st.bindings.isEmpty)
         // zero rows merge nothing (Cypher: MERGE runs per row) — the
         // binding column still appears, typed and empty; neither action
-        // fires (no row merged anything)
-        st.copy(bindings = st.bindings.withColumn(c, lit(null).cast(LongType)),
+        // fires (no row merged anything). `limit(0)` makes the table
+        // provably empty: a strict read of an empty label frame folds to a
+        // constant raise_error, which may run below a run-time filter.
+        st.copy(bindings = st.bindings.limit(0).withColumn(c, lit(null).cast(LongType)),
           env = (v, c) :: st.env, freshCounter = st.freshCounter + 1)
       else {
         val id = st.nextId
@@ -735,8 +737,8 @@ object Engine {
       // are globally unique, so anti-joining EVERY label frame removes
       // exactly the owning rows (other frames lose nothing), and every
       // relation frame drops incident edges on both endpoints. The
-      // doomed id set feeds one anti-join per frame, so it materializes
-      // once through the drain ledger instead of recomputing per frame.
+      // doomed id set feeds one anti-join per frame, so it is
+      // checkpointed once instead of recomputed per frame.
       // The hidden %label_ companion column unbinds with its owner so
       // the dead string column doesn't ride through later cross joins.
       val comp = s"%label_$v"

@@ -946,9 +946,7 @@ object DedupOps {
     * clustering/survivor pipeline, which share the whole
     * signature→band→verify pipeline: production materializes the pair
     * list exactly once before clustering, memoized per (session, dir)
-    * ([[graft.Ckpt.memo]]). cache() (not localCheckpoint) so the
-    * harnesses' Ckpt.drain() between queries can't invalidate the
-    * memoized frame. */
+    * ([[graft.Ckpt.memo]]). */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
     graft.Ckpt.memo(s, ("minhashPairs", dir)) {
       val df = buildMinhashPairs(s, dir).cache()

@@ -11,8 +11,8 @@ import graft.Superstep.{Done, More, Probe, doneIf}
   * SURVEY.md §7.2 M7). Three layers:
   *
   *   - inputs: a [[Topology]] — one graph version's directed edges, node
-  *     ids, pinned undirected hoist, endpoint spine, |V| and triangle
-  *     pins, memoized per version. The `g_*` queries read the loaded
+  *     ids, undirected hoist, endpoint spine, |V| and triangle counts,
+  *     memoized per version. The `g_*` queries read the loaded
   *     graph without its non-FK parts ([[topology]]); MiniGQL's `call`
   *     procedures read the current graph state through the same class.
   *   - kernels over (nodes, edges) frames, one per algorithm and shared
@@ -206,15 +206,9 @@ object GraphAlgos {
     * once per topology and shared: g_pagerank projects its top-100 and
     * g_pagerank_graphx cross-validates GraphX against it vertex by
     * vertex — the second consumer costs nothing beyond its own GraphX
-    * run. Pinned like the topology's hoist (outside the drain ledger). */
-  private def fixedPageRank(t: Topology): DataFrame =
-    t.memo("fixedPageRank") {
-      // re-pinned OUTSIDE the drain ledger, the [[lpaLabels]] discipline
-      val ranks = pageRank(t.nodes, t.edges, prIters)
-      val out = Ckpt.pinned(ranks)
-      Ckpt.drop(ranks)
-      out
-    }
+    * run. */
+  private[graft] def fixedPageRank(t: Topology): DataFrame =
+    t.memo("fixedPageRank")(pageRank(t.nodes, t.edges, prIters))
 
   /** Fixed-point integer PageRank over a DIRECTED (src,dst) edge frame:
     * `iters` power iterations from rank0 = 1e9·w, contributions
@@ -226,7 +220,7 @@ object GraphAlgos {
     * contributions — a zero rank adds 0 to every sum, so the filter is
     * exact for any w, and under a sparse restart vector message volume
     * tracks the reached set, not |V|. Returns (id, rank) for every node
-    * as a materialized checkpoint on the drain ledger. Shared by
+    * as a materialized checkpoint. Shared by
     * g_pagerank, g_ppr and `call pagerank()`.
     *
     * Loop-invariant precomputation, partitioned by the per-step join
@@ -501,7 +495,7 @@ object GraphAlgos {
 
   /** Iterative k-core peel over an UNDIRECTED, src-pre-partitioned edge
     * frame: returns the in-core degree (id, c) of every node of the
-    * k-core, materialized (drain ledger). Shared by g_kcore and
+    * k-core, materialized. Shared by g_kcore and
     * `call kcore(k)`.
     *
     * Each round: degrees over the surviving edge set (one co-partitioned
@@ -830,16 +824,9 @@ object GraphAlgos {
   }
 
   /** LPA labels memoized per topology: g_labelprop and g_modularity
-    * share the 6-round propagation. The memoized frame is re-pinned
-    * OUTSIDE the drain ledger (the loop's own final checkpoint is drained
-    * between queries, so it must not be the cached handle). */
+    * share the 6-round propagation. */
   private def lpaLabels(t: Topology): DataFrame =
-    t.memo("lpaLabels") {
-      val labels = labelProp(t.nodes, t.undirected, lpIters)
-      val out = Ckpt.pinned(labels)
-      Ckpt.drop(labels)
-      out
-    }
+    t.memo("lpaLabels")(labelProp(t.nodes, t.undirected, lpIters))
 
   /** Unrolled LPA steps for a DuckDB oracle: CTEs `l0..l{iters}` over
     * pre-bound `nn(id)` and `ue(src,dst)` CTEs. Every step references
@@ -898,7 +885,7 @@ object GraphAlgos {
   /** Per-node triangle corner counts and degrees over the part
     * co-purchase graph (distinct part pairs sharing an order) — the
     * shared build behind g_triangles and g_clustering, memoized per
-    * (session, dir) as pinned checkpoints. Returns (triCounts id→n_tri
+    * (session, dir) as checkpoints. Returns (triCounts id→n_tri
     * over participating nodes only, degrees id→d over every node of the
     * pair graph); the build is [[pinnedTriangles]]. The pairs are read
     * straight from parquet, so the key is the dir. */
@@ -942,7 +929,7 @@ object GraphAlgos {
     * acyclic orientation, so the per-node counts agree.
     *
     * Returns (triangle counts id→n_tri over participating nodes only,
-    * degrees id→d materialized on the drain ledger, the |E|-scale cached
+    * degrees id→d as a materialized checkpoint, the |E|-scale cached
     * intermediates the caller must unpersist once it has materialized
     * the outputs). */
   private[graft] def triangleCounts(
@@ -982,14 +969,13 @@ object GraphAlgos {
     (tc, deg, Seq(o, pairs))
   }
 
-  /** [[triangleCounts]] with its outputs pinned (drain-safe) and its
-    * |E|-scale intermediates released at once — a raw cache would
-    * otherwise pin edge-scale frames per query for the session's
-    * lifetime. For memoized builds: returns (triangle counts, degrees). */
+  /** [[triangleCounts]] with the counts materialized and its |E|-scale
+    * intermediates released at once — a raw cache would otherwise hold
+    * edge-scale frames per query for the session's lifetime. For
+    * memoized builds: returns (triangle counts, degrees). */
   private[operators] def pinnedTriangles(pairs: DataFrame): (DataFrame, DataFrame) = {
     val (tc, deg, cached) = triangleCounts(pairs)
-    val out = (Ckpt.pinned(tc), Ckpt.pinned(deg))
-    Ckpt.drop(deg)
+    val out = (Ckpt.eagerPartitioned(tc), deg)
     cached.foreach(_.unpersist(false))
     out
   }

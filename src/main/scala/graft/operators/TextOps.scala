@@ -65,14 +65,13 @@ object TextOps {
     * every R merge rounds, so round k's pair aggregate replays at most
     * R chained replaces on top of a materialized table instead of all
     * k — O(K·R) total replace work and bounded plan depth, not O(K²).
-    * The cut is a drain-ledger localCheckpoint (released between
-    * queries); the superseded one is dropped as soon as the next
-    * materializes. The EFFECTIVE cadence is derived from K (round 17,
-    * VERDICT r16 item 6): `max(8, K/32)` keeps the checkpoint count
-    * bounded at 32 while the replace-chain depth grows only with K/32 —
-    * at K=64 that is exactly the old 8, so the oracle-pinned path is
-    * byte-identical; at K=1024 it is 32 cuts of depth ≤ 32 instead of
-    * 128 materializations. */
+    * The cut is a localCheckpoint, dropped as soon as the next
+    * materializes (the last one when training ends). The EFFECTIVE
+    * cadence is derived from K (round 17, VERDICT r16 item 6):
+    * `max(8, K/32)` keeps the checkpoint count bounded at 32 while the
+    * replace-chain depth grows only with K/32 — at K=64 that is exactly
+    * the old 8, so the oracle-pinned path is byte-identical; at K=1024
+    * it is 32 cuts of depth ≤ 32 instead of 128 materializations. */
   private val bpeCkptEvery = 8
   private def bpeCkptCadence(k: Int): Int = math.max(bpeCkptEvery, k / 32)
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Package-private bridge: `Dataset.ofRows` is `private[sql]`, and a
@@ -32,23 +33,31 @@ object GraftShim {
   def nonAdaptive(df: DataFrame): DataFrame =
     execution.NonAdaptive(df.asInstanceOf[classic.Dataset[Row]])
 
-  /** Release the storage blocks behind an (eager local) checkpointed
-    * Dataset. `Dataset.localCheckpoint` persists the physical plan's RDD
-    * and wraps it in a LogicalRDD — there is no public API to unpersist
-    * it again, so long loops of checkpoints (iterative graph algorithms)
-    * or long sessions (the 78-query bench) accumulate dead blocks until
-    * the block manager thrashes. Safe ONLY once nothing live derives from
-    * the checkpoint: a localCheckpoint has no lineage, so dropped blocks
-    * are gone, not recomputable. The blocks are released through the
-    * context, not `RDD.unpersist`, which warns on every call that a
-    * locally checkpointed RDD cannot be recomputed — the point of the
-    * call here. No-op for non-checkpoint frames. */
-  def unpersistCheckpoint(ds: Dataset[_]): Unit =
-    ds.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
-      case _ => ()
-    }
+  /** The RDD behind a (local)checkpointed Dataset: its LogicalRDD leaf's. */
+  def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
+    Some(ds.queryExecution.analyzed).collect { case lr: execution.LogicalRDD => lr.rdd }
+
+  /** Release the storage blocks of a checkpoint's RDD. `localCheckpoint`
+    * persists the physical plan's RDD and wraps it in a LogicalRDD —
+    * there is no public API to unpersist it again, so long loops of
+    * checkpoints or long sessions accumulate dead blocks until the block
+    * manager thrashes. Safe ONLY once nothing live derives from the
+    * checkpoint: a localCheckpoint has no lineage, so dropped blocks are
+    * gone. Released through the context, not `RDD.unpersist`, which warns
+    * on every call that a locally checkpointed RDD cannot be recomputed. */
+  def unpersist(r: RDD[_]): Unit = r.sparkContext.unpersistRDD(r.id, blocking = false)
+
+  /** Ids of the RDDs `df` reads: each LogicalRDD leaf's RDD (subqueries
+    * included) and, below a leaf not checkpointed yet, its lineage down
+    * to the checkpointed RDDs. */
+  def rddsRead(df: DataFrame): Set[Int] = {
+    val seen = scala.collection.mutable.Set[Int]()
+    def walk(r: RDD[_]): Unit =
+      if (seen.add(r.id) && !r.isCheckpointed) r.dependencies.foreach(d => walk(d.rdd))
+    df.queryExecution.analyzed.collectWithSubqueries { case lr: execution.LogicalRDD => lr.rdd }
+      .foreach(walk)
+    seen.toSet
+  }
 
   /** Rebuild a (local)checkpointed Dataset's LogicalRDD leaf WITHOUT its
     * origin constraints. A checkpoint that appears MULTIPLE times in one

@@ -53,13 +53,20 @@ class MemoSpec extends AnyFunSuite {
   test("a build that throws is not cached; the next call builds again") {
     val key = ("MemoSpec", "throws")
     val builds = new AtomicInteger
+    def stored(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = stored()
+    var made = Set.empty[Int]
     val e = intercept[IllegalStateException] {
       Ckpt.memo[String](spark, key) {
         builds.incrementAndGet()
+        Ckpt.eager(spark.range(10).toDF("id"))
+        made = stored() -- before
         throw new IllegalStateException("build failed")
       }
     }
     assert(e.getMessage == "build failed")
+    // ... and the checkpoints it made are released
+    assert(made.size == 1 && (stored() & made).isEmpty, s"made $made")
     assert(Ckpt.memo(spark, key) { builds.incrementAndGet(); "built" } == "built")
     assert(Ckpt.memo(spark, key) { builds.incrementAndGet(); "again" } == "built")
     assert(builds.get == 2)
