@@ -54,7 +54,7 @@ object Engine {
 
   /** env: vname → internal binding column, latest binding first.
     * `nullable`: binding COLUMNS that may be NULL (optional-match
-    * targets) — drives the strict-mode null-guard in [[sql]]. */
+    * targets) — drives the strict-mode null-guard in [[column]]. */
   final case class ExecState(
       graph: PropertyGraph,
       bindings: DataFrame,
@@ -508,8 +508,8 @@ object Engine {
           val (counts, deg) = topo.triangles
           deg.filter(col("d") >= 2).join(counts, Seq("id"), "left")
             .select(col("id").as(cols(0)),
-              expr("(2000000 * coalesce(n_tri, 0)) div (d * (d - 1))")
-                .as(cols(1)))
+              call_function("div", lit(2000000) * coalesce(col("n_tri"), lit(0)),
+                col("d") * (col("d") - 1)).as(cols(1)))
         case "degreedist" =>
           // out-degree histogram over the scoped directed edge set —
           // the library g_degree_dist shape; nodes with no outgoing
@@ -556,7 +556,7 @@ object Engine {
             seeds, ue, maxIters = 20,
             graft.Ckpt.partsFor(spark, nSeeds * topo.nNodes), "call harmonic()")
           dists.filter(col("d") > 0)
-            .groupBy("id").agg(sum(expr("1000000 div d")).as("h"))
+            .groupBy("id").agg(sum(call_function("div", lit(1000000), col("d"))).as("h"))
             .select(col("id").as(cols(0)), col("h").as(cols(1)))
         case "scc" =>
           // strongly connected components over the scoped DIRECTED edge
@@ -646,7 +646,7 @@ object Engine {
       val newEdges0 = joinedC.select(
         col(st.colOf(sv)).as("src") +: col(st.colOf(tv)).as("dst") +:
           props.map { case (f, _, te) =>
-            expr(sql(te, refsC, st, cfg.strict)).as(f) }: _*)
+            column(te, refsC, st, cfg.strict).as(f) }: _*)
       val attrNames = old.columns.drop(2).toSeq // declared attr columns
       val withAll = attrNames.foldLeft(newEdges0) { (df, f) =>
         if (df.columns.contains(f)) df
@@ -907,7 +907,7 @@ object Engine {
 
     case RWhere(te) =>
       val (joined, refs) = joinAttrs(st, te :: Nil)
-      val filtered = joined.filter(expr(sql(te, refs, st, cfg.strict)))
+      val filtered = joined.filter(column(te, refs, st, cfg.strict))
       st.copy(bindings = filtered.select(st.bindings.columns.map(col): _*))
 
     case RUnwind(tes, alias, _) =>
@@ -920,7 +920,7 @@ object Engine {
       // strict mode).
       val (joinedU2, refsU) = joinAttrs(st, tes)
       val c2 = fresh(st)
-      val elems = tes.map(te => expr(sql(te, refsU, st, cfg.strict)))
+      val elems = tes.map(te => column(te, refsU, st, cfg.strict))
       val unwound = joinedU2.select(
         st.bindings.columns.map(col) :+ explode(array(elems: _*)).as(c2): _*)
       st.copy(bindings = unwound, env = (alias, c2) :: st.env,
@@ -949,7 +949,7 @@ object Engine {
       val c2 = fresh(st)
       val unwound = joinedE.select(
         st.bindings.columns.map(col) :+
-          explode(expr(sql(te, refsE, st, cfg.strict))).as(c2): _*)
+          explode(column(te, refsE, st, cfg.strict)).as(c2): _*)
       st.copy(bindings = unwound, env = (alias, c2) :: st.env,
         freshCounter = st.freshCounter + 1,
         nullable = st.nullable + c2)
@@ -964,7 +964,7 @@ object Engine {
       // per-row evaluation (spec, not the reference's first-row-only bug);
       // conflicting per-node values resolved deterministically by max.
       val upd = joined
-        .select(col(vc).as("id"), expr(sql(te, refs, st, cfg.strict)).as("__newv"))
+        .select(col(vc).as("id"), column(te, refs, st, cfg.strict).as("__newv"))
         .groupBy("id").agg(max("__newv").as("__newv"))
       val n2 = st.graph.nodes(lbl)
         .join(upd, Seq("id"), "left")
@@ -1007,7 +1007,7 @@ object Engine {
       val (cS, cD) = st.edgeColsOf(v)
       val upd = joinedS
         .select(col(cS).as("src"), col(cD).as("dst"),
-          expr(sql(te, refsS, st, cfg.strict)).as("__newv"))
+          column(te, refsS, st, cfg.strict).as("__newv"))
         .groupBy("src", "dst").agg(max("__newv").as("__newv"))
       val e2 = st.graph.edges(key)
         .join(upd, Seq("src", "dst"), "left")
@@ -1040,7 +1040,8 @@ object Engine {
     * for ALL long sums — the earlier (s - s%n)/n double route rounded
     * once |sum| exceeded 2^53 (ADVICE r08), a range 100 TB-scale sums
     * reach routinely. Same truncation rule as the expression language's
-    * `div` (sql compiler below) and the DuckDB oracle's integer `//`. */
+    * `div` (the expression compiler, [[column]]) and the DuckDB oracle's
+    * integer `//`. */
   private def intAvg(s: Column, n: Column): Column =
     call_function("div", s, n)
 
@@ -1101,7 +1102,7 @@ object Engine {
     def leafCol(it: RRet): Column = it match {
       case RRetVar(v)           => col(sub.colOf(v))
       case RRetAttr(v, _, f, _) => col(refs((v, f)))
-      case RRetExpr(te)         => expr(sql(te, refs, sub, strict))
+      case RRetExpr(te)         => column(te, refs, sub, strict)
       case _: RRetAgg           => throw new IllegalStateException("agg leaf")
     }
     val keys = keyCols.map(col)
@@ -1177,9 +1178,9 @@ object Engine {
       case RRetVar(v)             => col(st.colOf(v))
       case RRetAttr(v, _, f, _)   => col(refs((v, f)))
       // full-expression item / order key / aggregate argument: the same
-      // compiled-SQL column the where/set path uses (strict-mode
+      // compiled column the where/set path uses (strict-mode
       // unset-attr guards included) — stays inside the one projection
-      case RRetExpr(te)           => expr(sql(te, refs, st, strict))
+      case RRetExpr(te)           => column(te, refs, st, strict)
       case _: RRetAgg             => throw new IllegalStateException("agg leaf")
     }
     val hasAgg = items.exists(_.isInstanceOf[RRetAgg])
@@ -1328,7 +1329,7 @@ object Engine {
       collectAttrs(l) ++ p.toSeq.flatMap(collectAttrs) ++ m.toSeq.flatMap(collectAttrs)
     case Typing.TReduce(_, init, _, l, b) =>
       collectAttrs(init) ++ collectAttrs(l) ++ collectAttrs(b)
-    case _                => Nil
+    case _: TConst | _: Typing.TNullCheck | _: Typing.TIdFn | _: Typing.TLamVar => Nil
   }
 
   private def collectRetAttrs(it: RRet): Seq[TAttr] = it match {
@@ -1615,181 +1616,173 @@ object Engine {
         (if (path) Seq(col("path")) else Nil): _*)
   }
 
-  /** Compile a typed expression to a Spark SQL string. Integer division
-    * uses `div` (truncating, like OCaml's `/`, sem.ml:166) and `%` keeps
-    * the dividend's sign (like OCaml `mod`, sem.ml:167). With ANSI mode on,
-    * division by zero throws, matching the reference's Division_by_zero.
-    * String literals are safe to inline: the MiniGQL lexer only admits
-    * `[A-Za-z0-9 ]` inside strings (lexer.mll:26-27). */
-  private def sql(te: TExpr, refs: Map[(String, String), String],
-      st: ExecState, strict: Boolean): String =
-    te match {
-      case TConst(BoolV(b))   => if (b) "true" else "false"
-      case TConst(IntV(i))    => s"${i}L"
-      case TConst(StringV(s)) => s"'$s'"
-      case Typing.TNullCheck(v) => s"isnull(${st.colOf(v)})"
-      // id(v): the binding column IS the id; a NULL optional binding
-      // yields NULL (drops from predicates, recoverable via coalesce)
-      case Typing.TIdFn(v) => st.colOf(v)
-      case TAttr(v, _, f, tp) =>
-        val c = refs((v, f))
-        if (strict) {
-          val raise =
-            s"if(isnull($c), raise_error('attribute $f not set for variable $v'), $c)"
-          // rel bindings live in edgeEnv, not env — a matched edge
-          // always exists, so no binding-NULL guard applies (an unset
-          // edge attribute raises like an unset node attribute)
-          st.env.collectFirst { case (`v`, bc) => bc } match {
-            case Some(bc) if st.nullable(bc) =>
-              // optional-match binding: a NULL binding means "no
-              // witness", not "unset attribute" — don't raise, yield
-              // NULL (the row then drops from any predicate, SQL
-              // semantics), keeping optional match + attribute
-              // predicates usable under the reference-parity strict
-              // config (ADVICE r06)
-              s"if(isnull($bc), cast(null as ${sqlTp(tp)}), $raise)"
-            case _ => raise
-          }
-        } else c
-      case TBin(op, l, r, tpB) =>
-        val (a, b) = (sql(l, refs, st, strict), sql(r, refs, st, strict))
-        op match {
-          // string concatenation (typing routed string+string here;
-          // Spark `+` would try numeric coercion, so emit concat)
-          case BAadd if tpB == StringT => s"concat($a, $b)"
-          // string predicates compile to Spark's codegen'd functions
-          case BSstarts   => s"startswith($a, $b)"
-          case BSends     => s"endswith($a, $b)"
-          case BScontains => s"contains($a, $b)"
-          // codegen'd Java-regex find; dialect pin at [[graft.lang.BSregex]]
-          case BSregex    => s"($a RLIKE $b)"
-          case _ =>
-            val o = op match {
-              case BAadd => "+"; case BAsub => "-"; case BAmul => "*"
-              case BAdiv => "div"; case BAmod => "%"
-              case BCeq => "="; case BCne => "<>"
-              case BCge => ">="; case BCgt => ">"; case BCle => "<="; case BClt => "<"
-              case BLand => "AND"; case BLor => "OR"
-              case other => throw new IllegalStateException(s"unreachable binop $other")
+  /** Compile a typed expression to a Column tree. Integer division is
+    * Spark's `div` (truncating, like OCaml's `/`, sem.ml:166) and `%`
+    * keeps the dividend's sign (like OCaml `mod`, sem.ml:167). With ANSI
+    * mode on, division by zero throws, matching the reference's
+    * Division_by_zero. Constants are `lit` values, never program text, so
+    * a string constant (a `$param` value included) is data whatever
+    * characters it holds. `lams` maps each enclosing lambda variable to
+    * its closure argument, Spark's own fresh lambda variable: every frame
+    * column read here starts with `__`, so no column reference can
+    * resolve to it. */
+  private def column(te: TExpr, refs: Map[(String, String), String],
+      st: ExecState, strict: Boolean): Column = {
+    def go(te: TExpr, lams: Map[String, Column]): Column = {
+      def c(e: TExpr): Column = go(e, lams)
+      def lam(v: String, body: TExpr): Column => Column = x => go(body, lams + (v -> x))
+      te match {
+        case TConst(v) => valueLit(v)
+        case TNullCheck(v) => col(st.colOf(v)).isNull
+        // id(v): the binding column IS the id; a NULL optional binding
+        // yields NULL (drops from predicates, recoverable via coalesce)
+        case TIdFn(v) => col(st.colOf(v))
+        case TAttr(v, _, f, tp) =>
+          val a = col(refs((v, f)))
+          if (!strict) a
+          else {
+            val raise = when(a.isNull,
+              raise_error(lit(s"attribute $f not set for variable $v"))).otherwise(a)
+            // rel bindings live in edgeEnv, not env — a matched edge
+            // always exists, so no binding-NULL guard applies (an unset
+            // edge attribute raises like an unset node attribute)
+            st.env.collectFirst { case (`v`, bc) => bc } match {
+              case Some(bc) if st.nullable(bc) =>
+                // optional-match binding: a NULL binding means "no
+                // witness", not "unset attribute" — don't raise, yield
+                // NULL (the row then drops from any predicate, SQL
+                // semantics), keeping optional match + attribute
+                // predicates usable under the reference-parity strict
+                // config (ADVICE r06)
+                when(col(bc).isNull, lit(null).cast(PropertyGraph.sparkType(tp)))
+                  .otherwise(raise)
+              case _ => raise
             }
-            s"($a $o $b)"
-        }
-      case TUn(op, e, _) =>
-        val a = sql(e, refs, st, strict)
-        op match {
-          case USlower => s"lower($a)"
-          case USupper => s"upper($a)"
-          case UStrim  => s"trim($a)"
-          // Spark length()/size() are INT; the language's int is int64.
-          // size over a LIST operand (round 11) counts elements.
-          case USsize if e.tp.isInstanceOf[ListT] => s"cast(size($a) as bigint)"
-          case USsize  => s"cast(length($a) as bigint)"
-          case UStoStr => s"cast($a as string)"
-          case ULnot   => s"(NOT $a)"
-          // int magnitude/signum (round 11); abs(Long.MinValue)
-          // raises under ANSI — the strict-engine overflow rule
-          case UIabs   => s"abs($a)"
-          case UIsign  => s"cast(sign($a) as bigint)"
-          // string→int parse; non-numeric RAISES under ANSI (the
-          // strict flavor of Cypher's toInteger-null)
-          case UStoInt => s"cast($a as bigint)"
-        }
-      case TSubstr(e1, e2, e3) =>
-        // Spark's SQL substring: 1-based position, clamping, negative
-        // counts from the end (substringSQL); len<=0 yields ""
-        s"substring(${sql(e1, refs, st, strict)}, cast(${sql(e2, refs, st, strict)} as int), cast(${sql(e3, refs, st, strict)} as int))"
-      case TReplace(e1, e2, e3) =>
-        // replace-all of literal occurrences; empty find = no-op
-        s"replace(${sql(e1, refs, st, strict)}, ${sql(e2, refs, st, strict)}, ${sql(e3, refs, st, strict)})"
-      case TCase(whens, otherwise, _) =>
-        val ws = whens.map { case (c, v) =>
-          s"WHEN ${sql(c, refs, st, strict)} THEN ${sql(v, refs, st, strict)}"
-        }.mkString(" ")
-        s"(CASE $ws ELSE ${sql(otherwise, refs, st, strict)} END)"
-      case Typing.TInList(e, items, neg) =>
-        // SQL IN with its NULL semantics: a NULL tested value (a
-        // guarded optional-match attribute) yields NULL, dropping the
-        // row from any predicate — under both polarities
-        val list = items.map(sql(_, refs, st, strict)).mkString(", ")
-        val in = s"(${sql(e, refs, st, strict)} IN ($list))"
-        if (neg) s"(NOT $in)" else in
-      case Typing.TCoalesce(items, _) =>
-        s"coalesce(${items.map(sql(_, refs, st, strict)).mkString(", ")})"
-      case Typing.TIndex(e, ix, _) =>
-        // 0-based element access (Cypher's convention; Spark's SQL
-        // bracket is GetArrayItem, 0-based); out-of-range RAISES under
-        // the session's ANSI mode — the strict-engine flavor of
-        // Cypher's null, pinned in GoldenSpec
-        s"(${sql(e, refs, st, strict)})[cast(${sql(ix, refs, st, strict)} as int)]"
-      case Typing.TRange(lo, hi) =>
-        // inclusive a..b, EMPTY when a > b (Cypher's rule — Spark's
-        // sequence would descend there, so guard the direction)
-        val (a, b) = (sql(lo, refs, st, strict), sql(hi, refs, st, strict))
-        s"(case when $a <= $b then sequence($a, $b) " +
-          "else cast(array() as array<bigint>) end)"
-      case Typing.TInListE(e, le, neg) =>
-        val test = s"array_contains(${sql(le, refs, st, strict)}, " +
-          s"${sql(e, refs, st, strict)})"
-        if (neg) s"(NOT $test)" else test
-      case Typing.TSplit(s2, sep) =>
-        // literal-separator split: the separator is \Q...\E-quoted so
-        // Spark's regex split treats it verbatim (DuckDB's string_split
-        // is literal natively). Empty separator RAISES — the two
-        // engines disagree on that edge, so it is banned, not divergent.
-        val a = sql(s2, refs, st, strict)
-        val b = sql(sep, refs, st, strict)
-        s"if($b = '', raise_error('split separator must be non-empty'), " +
-          s"split($a, concat('\\\\Q', $b, '\\\\E')))"
-      case Typing.TSlice(e, lo, hi, _) =>
-        // clamped 0-based end-exclusive slice: start = max(lo,0),
-        // length = max(0, min(hi, size) - start); Spark slice is
-        // 1-based with a length argument. Operands are pure, so the
-        // repeated evaluation is unobservable (the CASE-duplication
-        // argument from the simple-case desugar).
-        val a = sql(e, refs, st, strict)
-        val l = sql(lo, refs, st, strict)
-        val h = sql(hi, refs, st, strict)
-        s"slice($a, cast(greatest($l, 0L) + 1 as int), " +
-          s"cast(greatest(least($h, size($a)) - greatest($l, 0L), 0L) as int))"
-      // lambda-bound reads compile to the lambda argument. The `__lam_`
-      // prefix keeps the SQL name out of every generated-column
-      // namespace (attr-join columns, binding columns) — typing already
-      // banned shadowing BOUND variables, and generated frame columns
-      // never start with __lam_, so capture is impossible.
-      case Typing.TLamVar(n, _) => s"__lam_$n"
-      case Typing.TListPred(kind, v, le, p) =>
-        // Spark's codegen'd higher-order functions; vacuous-truth
-        // semantics follow Cypher (all over [] = true, any/single = false)
-        val l = sql(le, refs, st, strict)
-        val body = s"__lam_$v -> ${sql(p, refs, st, strict)}"
-        kind match {
-          case "any"    => s"exists($l, $body)"
-          case "all"    => s"forall($l, $body)"
-          case "none"   => s"(NOT exists($l, $body))"
-          case "single" => s"(size(filter($l, $body)) = 1)"
-          case other    => throw new IllegalStateException(s"unreachable list predicate $other")
-        }
-      case Typing.TListComp(v, le, p, m, _) =>
-        // filter preserves the operand's canonical ascending order; a
-        // mapping arm may break monotonicity, so the result re-sorts —
-        // MiniGQL lists are pure functions of their element bag
-        val base = sql(le, refs, st, strict)
-        val filtered = p.fold(base)(pe =>
-          s"filter($base, __lam_$v -> ${sql(pe, refs, st, strict)})")
-        m.fold(filtered)(me =>
-          s"array_sort(transform($filtered, __lam_$v -> ${sql(me, refs, st, strict)}))")
-      case Typing.TReduce(acc, init, v, le, body) =>
-        // left fold over the canonical ascending order — deterministic
-        // for non-commutative bodies because the order is a value
-        // property, not an execution artifact
-        s"aggregate(${sql(le, refs, st, strict)}, ${sql(init, refs, st, strict)}, " +
-          s"(__lam_$acc, __lam_$v) -> ${sql(body, refs, st, strict)})"
+          }
+        case TBin(op, l, r, tpB) =>
+          val (a, b) = (c(l), c(r))
+          op match {
+            // string concatenation (typing routed string+string here;
+            // Spark `+` would try numeric coercion, so concat)
+            case BAadd if tpB == StringT => concat(a, b)
+            case BAadd => a + b
+            case BAsub => a - b
+            case BAmul => a * b
+            case BAdiv => call_function("div", a, b)
+            case BAmod => a % b
+            case BCeq => a === b
+            case BCne => a =!= b
+            case BCge => a >= b
+            case BCgt => a > b
+            case BCle => a <= b
+            case BClt => a < b
+            case BLand => a && b
+            case BLor => a || b
+            // string predicates compile to Spark's codegen'd functions
+            case BSstarts => startswith(a, b)
+            case BSends => endswith(a, b)
+            case BScontains => contains(a, b)
+            // codegen'd Java-regex find; dialect pin at [[graft.lang.BSregex]]
+            case BSregex => rlike(a, b)
+          }
+        case TUn(op, e, _) =>
+          val a = c(e)
+          op match {
+            case USlower => lower(a)
+            case USupper => upper(a)
+            case UStrim => trim(a)
+            // Spark length()/size() are INT; the language's int is int64.
+            // size over a LIST operand (round 11) counts elements.
+            case USsize if e.tp.isInstanceOf[ListT] => size(a).cast(LongType)
+            case USsize => length(a).cast(LongType)
+            case UStoStr => a.cast(StringType)
+            case ULnot => !a
+            // int magnitude/signum (round 11); abs(Long.MinValue)
+            // raises under ANSI — the strict-engine overflow rule
+            case UIabs => abs(a)
+            case UIsign => sign(a).cast(LongType)
+            // string→int parse; non-numeric RAISES under ANSI (the
+            // strict flavor of Cypher's toInteger-null)
+            case UStoInt => a.cast(LongType)
+          }
+        case TSubstr(e1, e2, e3) =>
+          // Spark's SQL substring: 1-based position, clamping, negative
+          // counts from the end (substringSQL); len<=0 yields ""
+          substring(c(e1), c(e2).cast(IntegerType), c(e3).cast(IntegerType))
+        case TReplace(e1, e2, e3) =>
+          // replace-all of literal occurrences; empty find = no-op
+          replace(c(e1), c(e2), c(e3))
+        case TCase((c0, v0) :: ws, otherwise, _) =>
+          ws.foldLeft(when(c(c0), c(v0))) { case (acc, (cw, v)) => acc.when(c(cw), c(v)) }
+            .otherwise(c(otherwise))
+        case TCase(Nil, otherwise, _) => c(otherwise)
+        case TInList(e, items, neg) =>
+          // SQL IN with its NULL semantics: a NULL tested value (a
+          // guarded optional-match attribute) yields NULL, dropping the
+          // row from any predicate — under both polarities
+          val in = c(e).isin(items.map(c): _*)
+          if (neg) !in else in
+        case TCoalesce(items, _) => coalesce(items.map(c): _*)
+        case TIndex(e, ix, _) =>
+          // 0-based element access (Cypher's convention; Spark's
+          // GetArrayItem is 0-based); out-of-range RAISES under the
+          // session's ANSI mode — the strict-engine flavor of Cypher's
+          // null, pinned in GoldenSpec
+          c(e)(c(ix).cast(IntegerType))
+        case TRange(lo, hi) =>
+          // inclusive a..b, EMPTY when a > b (Cypher's rule — Spark's
+          // sequence would descend there, so guard the direction)
+          val (a, b) = (c(lo), c(hi))
+          when(a <= b, sequence(a, b)).otherwise(array().cast(ArrayType(LongType)))
+        case TInListE(e, le, neg) =>
+          val test = array_contains(c(le), c(e))
+          if (neg) !test else test
+        case TSplit(s2, sep) =>
+          // literal-separator split: the separator is quoted the way
+          // java.util.regex.Pattern.quote does it — \Q…\E, each \E inside
+          // closed, escaped and reopened — so Spark's regex split treats
+          // it verbatim (DuckDB's string_split is literal natively).
+          // Empty separator RAISES — the two engines disagree on that
+          // edge, so it is banned, not divergent.
+          val (a, b) = (c(s2), c(sep))
+          val quoted = concat(lit("\\Q"), replace(b, lit("\\E"), lit("\\E\\\\E\\Q")), lit("\\E"))
+          when(b === lit(""), raise_error(lit("split separator must be non-empty")))
+            .otherwise(split(a, quoted))
+        case TSlice(e, lo, hi, _) =>
+          // clamped 0-based end-exclusive slice: start = max(lo,0),
+          // length = max(0, min(hi, size) - start); Spark slice is
+          // 1-based with a length argument. Operands are pure, so the
+          // repeated evaluation is unobservable (the CASE-duplication
+          // argument from the simple-case desugar).
+          val (a, h) = (c(e), c(hi))
+          val start = greatest(c(lo), lit(0L))
+          slice(a, (start + 1).cast(IntegerType),
+            greatest(least(h, size(a)) - start, lit(0L)).cast(IntegerType))
+        case TLamVar(n, _) => lams(n)
+        case TListPred(kind, v, le, p) =>
+          // Spark's codegen'd higher-order functions; vacuous-truth
+          // semantics follow Cypher (all over [] = true, any/single = false)
+          val (l, body) = (c(le), lam(v, p))
+          kind match {
+            case "any"    => exists(l, body)
+            case "all"    => forall(l, body)
+            case "none"   => !exists(l, body)
+            case "single" => size(filter(l, body)) === 1
+            case other    => throw new IllegalStateException(s"unreachable list predicate $other")
+          }
+        case TListComp(v, le, p, m, _) =>
+          // filter preserves the operand's canonical ascending order; a
+          // mapping arm may break monotonicity, so the result re-sorts —
+          // MiniGQL lists are pure functions of their element bag
+          val filtered = p.fold(c(le))(pe => filter(c(le), lam(v, pe)))
+          m.fold(filtered)(me => array_sort(transform(filtered, lam(v, me))))
+        case TReduce(acc, init, v, le, body) =>
+          // left fold over the canonical ascending order — deterministic
+          // for non-commutative bodies because the order is a value
+          // property, not an execution artifact
+          aggregate(c(le), c(init), (a, x) => go(body, lams + (acc -> a) + (v -> x)))
+      }
     }
-
-  private def sqlTp(tp: AttribTp): String = tp match {
-    case BoolT   => "boolean"
-    case IntT    => "bigint"
-    case StringT => "string"
-    case ListT(el) => s"array<${sqlTp(el)}>"
+    go(te, Map.empty)
   }
 }

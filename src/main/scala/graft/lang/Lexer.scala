@@ -54,10 +54,13 @@ object Lexer {
         val sb = new StringBuilder
         while (i < n && src(i) != '"') {
           val ch = src(i)
-          // printable ASCII, minus the three chars that would need an
-          // escape mechanism the grammar doesn't have: `"` closes the
-          // literal, `'` would break the engine's SQL string emission,
-          // `\` would break the \Q…\E literal-quoting split relies on.
+          // printable ASCII, minus `"`, which closes the literal (the
+          // grammar has no escape mechanism), and `'` and `\`, kept out
+          // of the language surface: a `\` in a pattern would open the
+          // regex escape classes (\d \w \b \Q…) on which `=~` and its
+          // DuckDB oracle disagree. The engine compiles every constant
+          // to a literal value, so neither char is unsafe there; a
+          // `$param` string may hold both.
           // (Round 11 — the reference corpus uses only [a-zA-Z0-9 ],
           // so every reference-legal program still lexes identically;
           // punctuation is what real text data needs.)

@@ -166,19 +166,12 @@ object TextOps {
     }
   }
 
-  /** A trained token as a Spark SQL string literal — backslashes and
-    * quotes escaped, so an arbitrary corpus alphabet (quotes in words)
-    * can't break or alter the generated expression. The current test
-    * corpus is [a-z0-9], but the encoder must not depend on that. */
-  private def sqlLit(s: String): String =
-    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-  /** SQL expression encoding one word column `w` with the trained
-    * merges: spaced form, then the K replaces in rank order. */
-  private def encodeSql(merges: Seq[(String, String)], w: String): String =
-    merges.foldLeft(s"concat(' ', regexp_replace($w, '(.)', '$$1 '))") {
-      case (acc, (a, b)) =>
-        s"replace($acc, ${sqlLit(s" $a $b ")}, ${sqlLit(s" $a$b ")})"
+  /** Encode one word column with the trained merges: spaced form, then
+    * the K replaces in rank order. Tokens are `lit` values, so any corpus
+    * alphabet (quotes or backslashes in words) is data. */
+  private def encode(merges: Seq[(String, String)], w: Column): Column =
+    merges.foldLeft(concat(lit(" "), regexp_replace(w, "(.)", "$1 "))) {
+      case (acc, (a, b)) => replace(acc, lit(s" $a $b "), lit(s" $a$b "))
     }
 
   /** The train CTE chain shared by both DuckDB oracles: w0 (spaced
@@ -250,11 +243,11 @@ object TextOps {
     // whole encode is a parquet scan at whole-stage-codegen speed.
     Q("p_text_bpe_encode",
       (s, dir) => {
-        val enc = encodeSql(bpeTrain(s, dir), "w")
+        val merges = bpeTrain(s, dir)
         docs(s, dir).select(col("doc_id"),
-          expr(s"""aggregate(transform(split(text, ' '),
-                     w -> cast(size(split(trim($enc), ' ')) as bigint)),
-                   cast(0 as bigint), (acc, x) -> acc + x)""").as("n_tokens"),
+          aggregate(transform(split(col("text"), " "),
+              w => size(split(trim(encode(merges, w)), " ")).cast("long")),
+            lit(0L), _ + _).as("n_tokens"),
           size(split(col("text"), " ")).cast("long").as("n_words"))
       },
       Some(bpeEncodeOracle)),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Engine
+import graft.lang.{StringV, Value}
 
 /** End-to-end golden tests ported from the reference corpus
   * ({tiny,entreprise,test2,test3}.q), all read off the classpath from
@@ -1291,6 +1292,52 @@ class GoldenSpec extends AnyFunSuite {
     assert(r4.bindings.collect().map(t =>
       (t.getLong(0), t.getLong(1), t.getLong(2), t.getString(3))).toSeq ==
       Seq((2L, 1L, 0L, "vv")))
+  }
+
+  test("split quotes a separator holding \\E: the split stays literal") {
+    // Pattern.quote's rule: an \E inside the separator must not close
+    // the \Q…\E quote early. Only a $param can carry a backslash.
+    val r = Engine.runSource(spark, "unwind split($s, $sep) as x\nreturn x",
+      params = Map("s" -> StringV("x\\E.yAz\\E.\\E"), "sep" -> StringV("\\E.")))
+    assert(r.bindings.collect().map(_.getString(0)).toSeq == Seq("x", "yAz", "\\E"))
+  }
+
+  /** Sorted first-column strings of `q` run after two named nodes. */
+  private def paramNames(q: String, params: (String, Value)*): Seq[String] =
+    Engine.runSource(spark,
+      "(:N {name string})\ncreate (a:N {name: \"Ann\"}) create (b:N {name: \"Bob\"})\n" + q,
+      params = params.toMap).bindings.collect().map(_.getString(0)).toSeq.sorted
+
+  test("$param strings are data: a quote cannot rewrite a predicate") {
+    assert(paramNames("match (n:N)\nwhere n.name = $p\nreturn n.name as m",
+      "p" -> StringV("x' or 'a' = 'a")) == Nil)
+  }
+
+  test("$param strings are data: a quoted name written by set is found again") {
+    assert(paramNames("match (n:N)\nwhere n.name = \"Bob\"\nset n.name = $q\n" +
+      "match (m:N)\nwhere m.name = $q\nreturn m.name as m",
+      "q" -> StringV("O'Brien")) == Seq("O'Brien"))
+  }
+
+  test("$param strings are data: backslashes round-trip unchanged") {
+    assert(paramNames("match (n:N)\nwhere n.name = \"Ann\"\nset n.name = $r\n" +
+      "match (m:N)\nwhere m.name = $r\nreturn m.name as m",
+      "r" -> StringV("a\\b\\c")) == Seq("a\\b\\c"))
+  }
+
+  test("nested lambdas: an inner body reads the outer lambda variable and an outer attribute") {
+    val src =
+      """(:N {x int})
+        |create (a:N {x: 3}) create (b:N {x: 1})
+        |create (c:N {x: 2}) create (d:N {x: 1})
+        |""".stripMargin
+    // xs = [1,1,2,3]; m keeps a row iff some y = x + m.x in xs:
+    // m.x = 1 (1+1=2) and 2 (1+2=3) do, m.x = 3 does not
+    val r = Engine.runSource(spark, src +
+      "match (n:N)\nwith collect(n.x) as xs\n" +
+        "match (m:N)\nwhere any(x in xs.val where any(y in xs.val where y.val = x.val + m.x))\n" +
+        "return m.x as mx")
+    assert(r.bindings.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 1L, 2L))
   }
 
   test("duplicate structural items with distinct aliases each get a column") {
