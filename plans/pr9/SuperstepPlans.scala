@@ -7,7 +7,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
 
 /** The SQL executions a query runs — action name and formatted executed
-  * plan, expression/plan ids and checkpoint RDD names normalized — one
+  * plan, expression/plan ids, lambda variable names and checkpoint RDD
+  * names normalized — one
   * file per query, `<query>.txt`. Next to it, `<query>.initial.txt` holds
   * only each execution's initial plan, normalized the same way: the
   * `== Initial Plan ==` subtree that adaptive execution fixes before any
@@ -42,7 +43,10 @@ object SuperstepPlans {
     val noPaths = paths.foldLeft(plan) { case (p, (from, to)) => p.replace(from, to) }
       .replaceAll(s"_tmp_${ProcessHandle.current().pid()}", "_tmp_<pid>")
     val noRdd = noPaths.replaceAll("""\w*RDD\[\d+\] at \w+ at [\w.$]+:\d+""", "RDD")
-    renumber(renumber(noRdd, """#(\d+)""".r, i => s"#$i"), """plan_id=(\d+)""".r, i => s"plan_id=$i")
+    // a lambda variable is named per its expression id: the Column API
+    // draws `x_<n>`/`y_<n>` from a JVM-wide counter
+    val noLambda = renumber(noRdd, """lambda \w+(?=#(\d+))""".r, i => s"lambda x_$i")
+    renumber(renumber(noLambda, """#(\d+)""".r, i => s"#$i"), """plan_id=(\d+)""".r, i => s"plan_id=$i")
   }
 
   /** The `== Initial Plan ==` subtree of an adaptive execution, or the

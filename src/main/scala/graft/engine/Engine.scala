@@ -104,9 +104,10 @@ object Engine {
   // --- pattern hops --------------------------------------------------
   // The reference executes a pattern hop `(a)-[:r]->(b:B)` literally: a
   // cartesian product with ALL b-labeled nodes followed by an existence
-  // semi-join (sem.ml:303-329) — O(|T|·|nodes|) intermediate. Each hop
-  // kind (directed, undirected, `[:a|b]`, `*lo..hi`) has ONE pair
-  // builder, [[hopPairs]], and two join shapes read its pair frame:
+  // semi-join (sem.ml:303-329) — O(|T|·|nodes|) intermediate. Both hop
+  // instructions (an edge match over its declared frames, a `*lo..hi`
+  // varpath) share ONE pair builder, [[hopPairs]], and two join shapes
+  // read its pair frame:
   //   - fused ([[expand]]): when the node instruction that introduces
   //     the new variable is immediately followed by the hop that
   //     constrains it, the pair is equivalent to ONE inner equi-join on
@@ -121,19 +122,16 @@ object Engine {
   /** A pattern hop's endpoint variables (sv, tv); None for every other
     * instruction. */
   private def hopEnds(in: RInstr): Option[(String, String)] = in match {
-    case h: RMatchEdge      => Some((h.sv, h.tv))
-    case h: RMatchEdgeUndir => Some((h.sv, h.tv))
-    case h: RMatchEdgeAlt   => Some((h.sv, h.tv))
-    case h: RVarPath        => Some((h.sv, h.tv))
-    case _                  => None
+    case h: RMatchEdge => Some((h.sv, h.tv))
+    case h: RVarPath   => Some((h.sv, h.tv))
+    case _             => None
   }
 
   /** The hop's pair frame in pattern orientation: the sv side as `svAs`,
-    * the tv side as `tvAs`. Reverse orientations (the undirected hop's
-    * declared `rev` frame, an alternation's `flipped` frames) read
-    * dst-as-sv; multi-frame hops are the plain union, so a pair may
-    * appear twice (reciprocal edges on a self-label relation, a pair
-    * connected by several listed types). A varpath adds its minimal hop
+    * the tv side as `tvAs`. Flipped frames read dst-as-sv; a multi-frame
+    * hop is the plain union of its frames, so a pair may appear twice
+    * (reciprocal edges on a self-label relation, a pair connected by
+    * several listed types). A varpath adds its minimal hop
     * count (`as d`) as `<c>_d` and its witness node list (named path) as
     * `<c>_p`; its closure expands FROM the distinct bound values of the
     * sv side if `seedSv`, else the tv side — work scales with the seeds'
@@ -146,11 +144,7 @@ object Engine {
       st.graph.edges(key).select(col(s).as(svAs), col(t).as(tvAs))
     }
     hop match {
-      case RMatchEdge(_, sl, rl, _, tl, _) => read((sl, rl, tl), flipped = false)
-      case RMatchEdgeUndir(_, sl, rl, _, tl, fwd, rev) =>
-        (Option.when(fwd)(read((sl, rl, tl), flipped = false)) ++
-          Option.when(rev)(read((tl, rl, sl), flipped = true))).reduce(_ unionByName _)
-      case RMatchEdgeAlt(_, _, _, _, frames) =>
+      case RMatchEdge(_, _, frames, _) =>
         frames.map { case (key, flipped) => read(key, flipped) }.reduce(_ unionByName _)
       case RVarPath(sv, key, lo, hi, tv, dist, undir, pathV, allPaths) =>
         val seeds = st.bindings.select(col(st.colOf(if (seedSv) sv else tv)).as("seed")).distinct()
@@ -165,10 +159,11 @@ object Engine {
 
   /** Fused `RMatchNode(v) :: hop` where `v` is exactly one of the hop's
     * endpoints: an inner equi-join of the bindings with the hop's pair
-    * frame on the bound side. The undirected and alternation pair dedup
-    * is load-bearing here (cross+semi yields ONE row per connected
-    * pair); the directed and varpath frames already hold one row per
-    * pair (per witness walk under allShortestPaths). */
+    * frame on the bound side. A multi-frame hop's pair dedup is
+    * load-bearing here (cross+semi yields ONE row per connected pair);
+    * a one-frame hop already holds one row per pair (edge frames are
+    * sets), and so does a varpath frame (per witness walk under
+    * allShortestPaths). */
   private def expand(st: ExecState, hop: RInstr, v: String): ExecState = {
     val (sv, tv) = hopEnds(hop).get
     val newIsTv = tv == v
@@ -177,8 +172,8 @@ object Engine {
     val (svAs, tvAs) = if (newIsTv) (eS, c) else (c, eS)
     val pairs0 = hopPairs(st, hop, svAs, tvAs, seedSv = newIsTv, c)
     val pairs = hop match {
-      case _: RMatchEdgeUndir | _: RMatchEdgeAlt => pairs0.dropDuplicates(svAs, tvAs)
-      case _                                     => pairs0
+      case h: RMatchEdge if h.frames.size > 1 => pairs0.dropDuplicates(svAs, tvAs)
+      case _                                  => pairs0
     }
     val joined = st.bindings
       .join(pairs, col(st.colOf(if (newIsTv) sv else tv)) === col(eS))
@@ -194,7 +189,7 @@ object Engine {
     * label per hop; relationships(p) reads it) is a lazy per-row
     * projection Catalyst prunes when unread. */
   private def bindHop(st: ExecState, hop: RInstr, c: String): ExecState = hop match {
-    case RMatchEdge(sv, _, _, tv, _, Some(r)) =>
+    case RMatchEdge(sv, tv, _, Some(r)) =>
       st.copy(edgeEnv = (r, (st.colOf(sv), st.colOf(tv))) :: st.edgeEnv)
     case RVarPath(_, key, _, _, _, dist, _, pathV, _) =>
       val (cD, cP, cR) = (s"${c}_d", s"${c}_p", s"${c}_r")
@@ -691,7 +686,7 @@ object Engine {
       bump(st.copy(graph = st.graph.copy(edges = st.graph.edges.updated(key, e2))),
         Right(key))
 
-    case hop @ (_: RMatchEdge | _: RMatchEdgeUndir | _: RMatchEdgeAlt | _: RVarPath) =>
+    case hop @ (_: RMatchEdge | _: RVarPath) =>
       // Both endpoints bound (normalize emits the node instructions
       // first): keep the rows whose pair is in the hop's pair frame — a
       // left_semi, which ignores multiplicity, so no pair dedup. A
@@ -858,23 +853,16 @@ object Engine {
         freshCounter = sub.freshCounter,
         nullable = st.nullable ++ freshCols)
 
-    case RExists(inner, bound) =>
-      // Positive pattern predicate: keep rows WITH a witness — the same
-      // distinct-probe witness sub-plan as not-exists, joined left_semi
-      // (match-edge's join type, but existential: no bindings, no row
-      // multiplication). A NULL bound column never equals a witness key
-      // and drops, the complement of its not-exists survival.
+    case RExists(inner, bound, neg) =>
+      // Pattern predicate: the distinct-probe witness sub-plan, joined
+      // left_semi (keep rows WITH a witness — match-edge's join type,
+      // but existential: no bindings, no row multiplication) or, when
+      // `neg`, left_anti (keep rows with NO witness). Witness keys are
+      // the bound columns only; a NULL bound column never equals one,
+      // so it drops under exists and survives under not exists,
+      // consistent with the optional-match NULL semantics.
       val (sub, boundCols) = innerWitness(spark, schema, st, inner, bound, cfg)
-      st.copy(bindings = joinWitness(st, sub, boundCols, "left_semi"),
-        freshCounter = sub.freshCounter)
-
-    case RNotExists(inner, bound) =>
-      // The mirror of match-edge's left_semi: keep rows with NO witness.
-      // Witness keys are the bound columns only (inner declarations are
-      // existential); a NULL bound column trivially has no witness and
-      // survives, consistent with the optional-match NULL semantics.
-      val (sub, boundCols) = innerWitness(spark, schema, st, inner, bound, cfg)
-      st.copy(bindings = joinWitness(st, sub, boundCols, "left_anti"),
+      st.copy(bindings = joinWitness(st, sub, boundCols, if (neg) "left_anti" else "left_semi"),
         freshCounter = sub.freshCounter)
 
     case Typing.RNamedPath(p, segs) =>

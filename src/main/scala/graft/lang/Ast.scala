@@ -540,20 +540,16 @@ final case class WithClause(
   * props filter INSIDE the witness computation, so a non-matching
   * property yields NULL bindings rather than dropping the row. */
 final case class OptMatch(pat: Pattern) extends Clause
-/** `where not exists (a) -[:r]-> (b:B)` (engine extension): keep only
-  * the rows for which NO expansion of the pattern exists. Declared
+/** `where exists (a) -[:r]-> (b:B)` (engine extension) — a pattern
+  * predicate (Cypher's `WHERE EXISTS { … }`): keep only the rows for
+  * which SOME expansion of the pattern exists, or, when `neg`
+  * (`where not exists …`), only those for which NONE does. Declared
   * pattern variables are existentially quantified (they do NOT bind);
-  * referenced variables must be bound. Compiles to a left_anti join —
-  * the mirror of match-edge's left_semi. */
-final case class NotExists(pat: Pattern) extends Clause
-/** `where exists (a) -[:r]-> (b:B)` (engine extension) — the POSITIVE
-  * pattern predicate (Cypher's `WHERE EXISTS { … }`): keep only the
-  * rows for which SOME expansion of the pattern exists. Unlike `match`,
-  * declared variables stay existential (bind nothing) and row
-  * MULTIPLICITY is preserved — a row with many witnesses appears once,
-  * where match-edge would multiply it per witness. Compiles to a
-  * left_semi join over the same witness sub-plan as [[NotExists]]. */
-final case class Exists(pat: Pattern) extends Clause
+  * referenced variables must be bound. Row MULTIPLICITY is preserved —
+  * a row with many witnesses appears once, where match-edge would
+  * multiply it per witness. Compiles to a left_semi join over the
+  * witness sub-plan, or a left_anti join when `neg`. */
+final case class Exists(pat: Pattern, neg: Boolean) extends Clause
 /** `unwind [e1, …, en] as x` (engine extension — Cypher's UNWIND over
   * an inline list; MiniGQL has no list values, so the literal bracket
   * form IS the list constructor). For each binding row, produce one row

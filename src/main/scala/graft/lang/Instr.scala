@@ -63,13 +63,11 @@ final case class IVarPathRel(act: Act, sv: String, rel: String, lo: Int, hi: Int
   *
   * `IOptPath`: left-outer witness expansion — declared inner variables
   * bind per complete witness, or ALL to NULL when none (all-or-nothing).
-  * `INotExists`: anti witness check — keep rows with NO witness; inner
-  * declarations are existential and bind nothing. */
+  * `IExists`: `where exists` — keep rows WITH a witness; when `neg`
+  * (`where not exists`), rows with NO witness. Inner declarations are
+  * existential and bind nothing. */
 final case class IOptPath(inner: List[Instruction]) extends Instruction
-final case class INotExists(inner: List[Instruction]) extends Instruction
-/** Positive pattern predicate `where exists` — keep rows WITH a
-  * witness; same inner shape as [[INotExists]], semi instead of anti. */
-final case class IExists(inner: List[Instruction]) extends Instruction
+final case class IExists(inner: List[Instruction], neg: Boolean) extends Instruction
 /** Node-form `merge (v:label {props})` (see [[Merge]]); the edge form
   * desugars to `IActOnRel(CreateAct, …)` in Normalize (create-edge's set
   * semantics ARE the edge upsert). Props must type to constants. */
@@ -323,21 +321,15 @@ object Normalize {
         IWhere(Bin(BCeq, AttribAcc(v, f), e)) }
       normNodePattern(MatchAct, head) ++ headProps :+
         IOptPath(stripMatchRelProps(innerTail) ++ relPropConjuncts(pat) ++ namedExtras)
-    case NotExists(pat0) =>
+    case Exists(pat0, neg) =>
       // the whole pattern is the predicate: referenced variables stay
       // outer, declared ones are existential — so head decls/props also
       // go INSIDE (a fresh head decl is just another existential)
       val pat = assignRelVars(pat0, fresh)
-      List(INotExists(stripMatchRelProps(normPattern(MatchAct, pat)) ++
-        declProps(pat).map { case (v, f, e) =>
-          IWhere(Bin(BCeq, AttribAcc(v, f), e)) } ++
-        relPropConjuncts(pat)))
-    case Exists(pat0) =>
-      val pat = assignRelVars(pat0, fresh)
       List(IExists(stripMatchRelProps(normPattern(MatchAct, pat)) ++
         declProps(pat).map { case (v, f, e) =>
           IWhere(Bin(BCeq, AttribAcc(v, f), e)) } ++
-        relPropConjuncts(pat)))
+        relPropConjuncts(pat), neg))
     case Unwind(items, alias) => List(IUnwind(items, alias))
     case UnwindVar(v, alias)  => List(IUnwindVar(v, alias))
     case UnwindExpr(e, alias) => List(IUnwindExpr(e, alias))

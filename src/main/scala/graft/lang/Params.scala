@@ -37,8 +37,7 @@ object Params {
         order.map { case (it, asc) => (sR(p)(it), asc) },
         skip.map(sE(p)), limit.map(sE(p)), distinct)
     case IOptPath(inner)      => IOptPath(inner.map(sI(p)))
-    case INotExists(inner)    => INotExists(inner.map(sI(p)))
-    case IExists(inner)       => IExists(inner.map(sI(p)))
+    case IExists(inner, neg)  => IExists(inner.map(sI(p)), neg)
     case IMergeNode(v, lbl, props, onCreate, onMatch) =>
       IMergeNode(v, lbl, props.map { case (f, e) => (f, sE(p)(e)) },
         onCreate.map { case (v2, f, e) => (v2, f, sE(p)(e)) },

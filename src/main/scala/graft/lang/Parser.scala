@@ -530,8 +530,8 @@ object Parser {
         case SimpPattern(_) =>
           fail(s"$what requires a path pattern with at least one hop")
         case _ => what match {
-          case "not exists" => NotExists(pat)
-          case "exists"     => Exists(pat)
+          case "not exists" => Exists(pat, neg = true)
+          case "exists"     => Exists(pat, neg = false)
           case _            => OptMatch(pat)
         }
       }

@@ -94,14 +94,27 @@ object Typing {
   final case class RCreateEdge(sv: String, srcLabel: String, rel: String,
       tv: String, tgtLabel: String,
       props: List[(String, AttribTp, TExpr)] = Nil) extends RInstr
-  /** `rv` (round-10): the optional rel-variable binding of a matched
-    * edge. An edge's identity is its (src, dst) pair within the
-    * relation type, so the binding aliases the two endpoint columns —
-    * `rv.f` reads the edge frame, `set rv.f` join-updates it,
-    * `delete rv` anti-joins it; returning/grouping the binding itself
-    * is rejected (no edge ids exist). */
-  final case class RMatchEdge(sv: String, srcLabel: String, rel: String,
-      tv: String, tgtLabel: String, rv: Option[String] = None) extends RInstr
+  /** A pattern hop: keep rows where ANY of `frames` connects `sv` to
+    * `tv`. Each frame is a declared relation triple plus its
+    * orientation relative to the pattern (`flipped` = read dst-as-src).
+    * Typing resolves exactly the declared combinations: a directed hop
+    * is one unflipped frame; an undirected hop `-[:r]-` carries each
+    * declared orientation (both on a self-label relation); an
+    * alternation `[:a|b]` or an any-relation hop `-[]->` carries every
+    * declared (type, orientation) combination. The executor unions the
+    * frames, so it does no name resolution. Per-PAIR existence
+    * semantics: a pair connected by several frames yields ONE row, like
+    * the cross+semi pair semantics of every match.
+    *
+    * `rv` (round-10): the optional rel-variable binding, only on a
+    * directed single-type hop. An edge's identity is its (src, dst)
+    * pair within the relation type, so the binding aliases the two
+    * endpoint columns — `rv.f` reads the edge frame, `set rv.f`
+    * join-updates it, `delete rv` anti-joins it; returning/grouping the
+    * binding itself is rejected (no edge ids exist). */
+  final case class RMatchEdge(sv: String, tv: String,
+      frames: List[((String, String, String), Boolean)],
+      rv: Option[String]) extends RInstr
   /** `set x.f = e` through a rel binding: join-update of the edge frame
     * on (src, dst), per-row evaluation, max conflict resolution —
     * mirror of [[RSet]]. */
@@ -112,28 +125,6 @@ object Typing {
     * edge binding owns no column (it aliases its endpoints'). */
   final case class RDeleteEdgeBinding(v: String,
       key: (String, String, String)) extends RInstr
-  /** Undirected edge match `-[:r]-` (extension): keep rows where the
-    * edge runs EITHER way between `sv` and `tv`. `fwd`/`rev` record
-    * which orientations the schema declares — (srcLabel,rel,tgtLabel)
-    * and (tgtLabel,rel,srcLabel) respectively; at least one holds (typing
-    * rejects otherwise), and on a self-label relation both do. The
-    * executor unions exactly the declared frames, so it still does no
-    * name resolution. */
-  final case class RMatchEdgeUndir(sv: String, srcLabel: String, rel: String,
-      tv: String, tgtLabel: String, fwd: Boolean, rev: Boolean) extends RInstr
-  /** `[:a|b]` alternation hop (round 10, match-only): keep rows where
-    * ANY of `frames` connects `sv` to `tv`. Each frame is a declared
-    * relation triple plus its orientation relative to the pattern
-    * (`flipped` = read dst-as-src — the undirected alternation's
-    * reverse orientations); typing resolves exactly the declared
-    * combinations, statically-empty alternatives are dropped (at least
-    * one must survive). Per-PAIR existence semantics: a pair connected
-    * by several listed types yields ONE row — consistent with the
-    * cross+semi pair semantics of every match and the undirected
-    * reciprocal dedup. */
-  final case class RMatchEdgeAlt(sv: String, srcLabel: String, tv: String,
-      tgtLabel: String,
-      frames: List[((String, String, String), Boolean)]) extends RInstr
   final case class RDeleteNode(v: String, label: String) extends RInstr
   /** Delete through an UNLABELED binding (round 14): deletion needs
     * only ids — the executor anti-joins every label frame (ids are
@@ -230,20 +221,15 @@ object Typing {
     * semantics). */
   final case class ROptPath(inner: List[RInstr], bound: List[String],
       fresh: List[(String, String)]) extends RInstr
-  /** `where not exists <pattern>`: keep rows with NO witness — a
-    * left_anti join on `bound`, the mirror of match-edge's left_semi.
-    * Inner declarations are existential; rows whose bound column is NULL
-    * (an unmatched optional binding) trivially have no witness and
-    * survive. */
-  final case class RNotExists(inner: List[RInstr], bound: List[String])
-      extends RInstr
-  /** `where exists <pattern>`: keep rows WITH a witness — a left_semi
-    * join on `bound`, sharing [[RNotExists]]'s witness sub-plan; row
-    * multiplicity preserved (unlike match-edge, which multiplies per
-    * witness). A NULL bound column has no witness and DROPS — the
-    * complement of its survival under not-exists. */
-  final case class RExists(inner: List[RInstr], bound: List[String])
-      extends RInstr
+  /** `where [not] exists <pattern>`: keep rows WITH a witness — a
+    * left_semi join on `bound` — or, when `neg`, rows with NO witness —
+    * a left_anti join over the same witness sub-plan. Inner
+    * declarations are existential and bind nothing; row multiplicity is
+    * preserved (unlike match-edge, which multiplies per witness). A
+    * NULL bound column (an unmatched optional binding) has no witness:
+    * it drops under exists and survives under not exists. */
+  final case class RExists(inner: List[RInstr], bound: List[String],
+      neg: Boolean) extends RInstr
   /** Node-form merge: bind every `label` node whose props equal the
     * constant `props` exactly, or create ONE such node and bind it to
     * every row when none matches (see [[graft.lang.Merge]]). */
@@ -836,6 +822,16 @@ object Typing {
     case UStoInt => "toInteger"
   }
 
+  /** The declared frames a match hop from `sl` to `tl` reads: per
+    * relation type, in `types` order, its forward frame and, on an
+    * undirected hop, its reverse (flipped) frame. */
+  private def hopFrames(schema: Schema, sl: String, tl: String,
+      types: List[String], undir: Boolean): List[((String, String, String), Boolean)] =
+    types.flatMap { l =>
+      Option.when(schema.relTypes((sl, l, tl)))(((sl, l, tl), false)) ++
+        Option.when(undir && schema.relTypes((tl, l, sl)))(((tl, l, sl), true))
+    }
+
   /** Per-instruction environment transformer (reference typing.ml:201-268). */
   private def tcInstr(schema: Schema, env: Env, in: Instruction): Either[String, (RInstr, Env)] =
     in match {
@@ -857,7 +853,7 @@ object Typing {
       case IActOnRel(act, sv, AnyRel(), tv, undir, rv, _, _) =>
         // any-relation hop `-[]->` (round 14 — Cypher's untyped
         // relationship): the union of EVERY declared relation type
-        // between the endpoint labels, riding the alternation machinery
+        // between the endpoint labels, in relation-triple order
         (lookup(env, sv), lookup(env, tv)) match {
           case (Some(sl), Some(tl)) =>
             if (act == CreateAct)
@@ -866,22 +862,18 @@ object Typing {
               Left(s"rel variable ${rv.get} cannot ride an any-relation " +
                 "hop -[]->: the matched relation type varies per row")
             else {
-              val frames = schema.relTypes.toList.sorted.flatMap { t =>
-                val f = if (t._1 == sl && t._3 == tl) List((t, false)) else Nil
-                val r = if (undir && t._1 == tl && t._3 == sl)
-                  List((t, true)) else Nil
-                f ++ r
-              }
+              val types = schema.relTypes.toList.map(_._2).distinct
+              val frames = hopFrames(schema, sl, tl, types, undir).sortBy(_._1)
               if (frames.isEmpty)
                 Left(s"no relation type is declared between (:$sl) and (:$tl)" +
                   (if (undir) " in either orientation" else ""))
-              else Right((RMatchEdgeAlt(sv, sl, tv, tl, frames), env))
+              else Right((RMatchEdge(sv, tv, frames, None), env))
             }
           case (None, _) => Left(s"variable $sv not bound")
           case (_, None) => Left(s"variable $tv not bound")
         }
 
-      case IActOnRel(act, sv, rl, tv, undir, rv, props, alts) if alts.nonEmpty =>
+      case IActOnRel(act, sv, rl, tv, undir, _, _, alts) if alts.nonEmpty =>
         // `[:a|b]` alternation (parser guarantees no rv/props here)
         (lookup(env, sv), lookup(env, tv)) match {
           case (Some(sl), Some(tl)) =>
@@ -890,19 +882,11 @@ object Typing {
                 s"[:${(rl :: alts).mkString("|")}] alternation is match-only")
             else {
               val labels = (rl :: alts).distinct
-              // keep exactly the DECLARED combinations; undirected
-              // alternation admits each label's reverse orientation too
-              val frames = labels.flatMap { l =>
-                val f = if (schema.relTypes((sl, l, tl)))
-                  List(((sl, l, tl), false)) else Nil
-                val r = if (undir && schema.relTypes((tl, l, sl)))
-                  List(((tl, l, sl), true)) else Nil
-                f ++ r
-              }
+              val frames = hopFrames(schema, sl, tl, labels, undir)
               if (frames.isEmpty)
                 Left(s"no declared relation type matches " +
                   s"[:${labels.mkString("|")}] between (:$sl) and (:$tl)")
-              else Right((RMatchEdgeAlt(sv, sl, tv, tl, frames), env))
+              else Right((RMatchEdge(sv, tv, frames, None), env))
             }
           case (None, _) => Left(s"variable $sv not bound")
           case (_, None) => Left(s"variable $tv not bound")
@@ -926,15 +910,15 @@ object Typing {
                 s"undirected hop -[:$rl]-: the matched edge's orientation " +
                 "(and with it its stored attributes) is ambiguous")
             else {
-              val fwd = schema.relTypes((sl, rl, tl))
-              val rev = schema.relTypes((tl, rl, sl))
-              if (!fwd && !rev)
+              val frames = hopFrames(schema, sl, tl, List(rl), undir = true)
+              if (frames.isEmpty)
                 Left(s"undeclared relation type (:$sl)-[:$rl]->(:$tl) " +
                   s"(or (:$tl)-[:$rl]->(:$sl))")
-              else Right((RMatchEdgeUndir(sv, sl, rl, tv, tl, fwd, rev), env))
+              else Right((RMatchEdge(sv, tv, frames, None), env))
             }
           case (Some(sl), Some(tl)) =>
-            if (!schema.relTypes((sl, rl, tl)))
+            val frames = hopFrames(schema, sl, tl, List(rl), undir = false)
+            if (frames.isEmpty)
               Left(s"undeclared relation type (:$sl)-[:$rl]->(:$tl)")
             else act match {
               case CreateAct =>
@@ -973,9 +957,8 @@ object Typing {
                     // node/scalar column with an edge alias — reject
                     Left(s"rel variable $x already bound")
                   case _ =>
-                    val key = (sl, rl, tl)
-                    val env2 = rv.fold(env)(x => (x, relLabel(key)) :: env)
-                    Right((RMatchEdge(sv, sl, rl, tv, tl, rv), env2))
+                    val env2 = rv.fold(env)(x => (x, relLabel((sl, rl, tl))) :: env)
+                    Right((RMatchEdge(sv, tv, frames, rv), env2))
                 }
             }
           case (None, _) => Left(s"variable $sv not bound")
@@ -1272,23 +1255,16 @@ object Typing {
               Right((ROptPath(ris, bound, fresh), fresh.reverse ::: env))
         }
 
-      case INotExists(inner) =>
-        tcInner(schema, env, inner, "not exists").flatMap {
+      case IExists(inner, neg) =>
+        val what = if (neg) "not exists" else "exists"
+        tcInner(schema, env, inner, what).flatMap {
           case (ris, bound, _) =>
             if (bound.isEmpty)
               // a fully-existential pattern is a global emptiness test,
               // not a per-row predicate — reject rather than silently
               // keeping all rows or none
-              Left("not exists pattern must reference at least one bound variable")
-            else Right((RNotExists(ris, bound), env)) // existential: env unchanged
-        }
-
-      case IExists(inner) =>
-        tcInner(schema, env, inner, "exists").flatMap {
-          case (ris, bound, _) =>
-            if (bound.isEmpty)
-              Left("exists pattern must reference at least one bound variable")
-            else Right((RExists(ris, bound), env))
+              Left(s"$what pattern must reference at least one bound variable")
+            else Right((RExists(ris, bound, neg), env)) // existential: env unchanged
         }
 
       case IVarPathRel(act, sv, rl, lo, hi, tv, dist, undir, pathV, allPaths) =>
@@ -1734,12 +1710,10 @@ object Typing {
         // (they alias endpoint columns, bind nothing projectable) —
         // exclude them from the outer-reference set like fresh decls
         val innerRels = ris.collect {
-          case RMatchEdge(_, _, _, _, _, Some(x)) => x
+          case RMatchEdge(_, _, _, Some(x)) => x
         }.toSet
         val refs = ris.flatMap {
-          case RMatchEdge(sv, _, _, tv, _, _) => Seq(sv, tv)
-          case RMatchEdgeUndir(sv, _, _, tv, _, _, _) => Seq(sv, tv)
-          case RMatchEdgeAlt(sv, _, tv, _, _) => Seq(sv, tv)
+          case RMatchEdge(sv, tv, _, _)    => Seq(sv, tv)
           case RVarPath(sv, _, _, _, tv, _, _, _, _) => Seq(sv, tv)
           case RWhere(te)                  => exprVars(te)
           case ROptPath(_, bound, _)       => bound
@@ -1915,11 +1889,16 @@ object Typing {
   private def mutationKind(ri: RInstr): Option[String] = ri match {
     case _: RCreateNode | _: RCreateEdge => Some("create")
     case _: RMergeNode                   => Some("merge")
-    case _: RDeleteNode | _: RDeleteEdge
+    case _: RDeleteNode | _: RDeleteAnyNode | _: RDeleteEdge
        | _: RDeleteEdgeBinding           => Some("delete")
     case _: RSet | _: RSetEdge           => Some("set")
     case _: RRemove | _: RRemoveEdge     => Some("remove")
-    case _                               => None
+    // every read instruction is named: a new RInstr case must be
+    // classified here (build.sbt makes a non-exhaustive match an error)
+    case _: RMatchNode | _: RMatchAnyNode | _: RMatchEdge | _: RVarPath
+       | _: ROptPath | _: RExists | _: RCallSub | _: RCallProc
+       | _: RNamedPath | _: RWhere | _: RReturn | _: RReturnExt | _: RWith
+       | _: RUnwind | _: RUnwindVar | _: RUnwindExpr | _: RUnion => None
   }
 
   def typecheck(np: NormProg): Either[String, TypedProg] =

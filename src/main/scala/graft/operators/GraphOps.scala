@@ -2429,7 +2429,7 @@ object GraphOps {
     // undirected hop where only the REVERSE orientation is declared
     // (snation is supplier->nation): `(n)-[:snation]-(s)` typechecks via
     // the (supplier,snation,nation) triple alone and reads that frame
-    // dst-as-src — the rev-only branch of RMatchEdgeUndir
+    // dst-as-src — an undirected RMatchEdge with one flipped frame
     Q("gql_match_undir_mixed",
       bindings(
         """match (n:nation) -[:snation]- (s:supplier)

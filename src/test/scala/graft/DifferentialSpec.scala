@@ -189,9 +189,9 @@ class DifferentialSpec extends AnyFunSuite {
                    else pick(Seq("create", "match", "merge"))
           val props = if (rl == "r" && kw == "create") s" {w: ${intExpr(1)}}" else ""
           // a third of MATCH hops are undirected `-[:r]-` (round 9+) —
-          // written from either side, so the rev-only orientation branch
-          // of RMatchEdgeUndir (e.g. `(q:Q)-[:r]-(p:P)` with only
-          // (P,r,Q) declared) is generated too
+          // written from either side, so the rev-only orientation (one
+          // flipped frame, e.g. `(q:Q)-[:r]-(p:P)` with only (P,r,Q)
+          // declared) is generated too
           if (kw == "match" && (rl == "s" || rl == "s2") && rnd.nextInt(3) == 0) {
             // `[:s|s2]` alternation (round 10): per-pair existence over
             // the two P→P relations, in all three directions
@@ -296,7 +296,7 @@ class DifferentialSpec extends AnyFunSuite {
         val vpStarts = Seq(("P", "s"), ("Q", "t"))
           .flatMap { case (l, rl) => bound(l).map(a => (a, rl, l)) }
         // a quarter of witness hops are undirected (round 9+): the
-        // witness sub-plan runs the same RMatchEdgeUndir / symmetrized
+        // witness sub-plan runs the same undirected RMatchEdge / symmetrized
         // closure inside the semi/anti probe
         val uh = if (rnd.nextInt(4) == 0) "-" else "->"
         if (vpStarts.nonEmpty && rnd.nextInt(3) == 0) {
@@ -539,6 +539,13 @@ class DifferentialSpec extends AnyFunSuite {
         if (env.nonEmpty && rnd.nextInt(3) == 0) {
           val (v, _) = env(rnd.nextInt(env.size))
           val lbl = latest(v)
+          // retire every variable whose LATEST label is dead, with all
+          // its entries: dropping only the dead-label entries would
+          // unshadow an older binding of a rebound variable (seed
+          // 55757: a merge rebinds v1 from P to Q, a Q delete retired
+          // (v1, Q), and a later draw read v1.x through (v1, P))
+          def retire(dead: String => Boolean): Unit =
+            env = env.filterNot { case (w, l) => dead(l) || latest(w).exists(dead) }
           if (lbl.contains(Typing.AnyLabel)) {
             // round 14: unlabeled delete works by id — it may remove
             // nodes of ANY label, so conservatively retire every node
@@ -546,14 +553,13 @@ class DifferentialSpec extends AnyFunSuite {
             // the known divergence point; %any bindings themselves only
             // admit id/return reads, which are total on both sides)
             sb ++= s"delete $v\n"
-            env = env.filterNot { case (_, l) =>
-              l == "P" || l == "Q" || l == Typing.AnyLabel }
+            retire(l => l == "P" || l == "Q" || l == Typing.AnyLabel)
           } else if (!lbl.exists(_.startsWith("%"))) {
             sb ++= s"delete $v\n"
             // conservatively retire every same-label binding: they may alias
             // the deleted nodes, and reads/sets through dangling bindings
             // are the one place engine and reference semantics diverge
-            env = env.filterNot { case (w, l) => w == v || lbl.contains(l) }
+            retire(lbl.contains)
           }
         }
     }
@@ -629,12 +635,15 @@ class DifferentialSpec extends AnyFunSuite {
   test("random well-typed programs agree with the in-memory reference interpreter") {
     // ScalaCheck property over generated seeds (scalatest-scalacheck
     // bridge isn't in the offline cache, so drive ScalaCheck directly)
+    val drawn = scala.collection.mutable.ArrayBuffer.empty[Long]
     val prop = Prop.forAll(Gen.choose(0L, 100000L)) { seed =>
-      runBoth(genProgram(seed)); true
+      drawn += seed; runBoth(genProgram(seed)); true
     }
     // 30 fresh programs per run (raised with the round-8 shape additions:
     // optional tails, varpath witnesses, zero-length bounds)
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    // reported either way, so any run's programs can be replayed
+    info(s"seeds drawn: ${drawn.mkString(", ")}")
     assert(res.passed, res.status.toString)
   }
 
@@ -651,7 +660,9 @@ class DifferentialSpec extends AnyFunSuite {
     // strict `where v2.nm = …` over the still-empty P frame — the folded
     // raise_error guard ran below the first filter, on rows no binding
     // held
-    for (seed <- Seq(1L, 7L, 42L, 1234L, 99999L, -1629L, 71069L, 74273L, 37204L))
+    // 55757: a delete retired a rebound variable's latest binding and
+    // the generator read an attribute through its older, shadowed label
+    for (seed <- Seq(1L, 7L, 42L, 1234L, 99999L, -1629L, 71069L, 74273L, 37204L, 55757L))
       runBoth(genProgram(seed))
   }
 
@@ -844,7 +855,7 @@ class DifferentialSpec extends AnyFunSuite {
         |return q2, w, src, d
         |""".stripMargin,
       // round 9: undirected hops — fixed hop from BOTH sides (fwd-only
-      // and rev-only orientations of RMatchEdgeUndir), the fused
+      // and rev-only orientations of an undirected RMatchEdge), the fused
       // undirected hop (fresh decl), and the undirected varpath incl. the
       // a-b-a walk self-pair and the distance binding over the
       // symmetrized closure

@@ -1741,7 +1741,7 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("undirected hop: interior node pairs with both chain neighbours") {
-    // bound-bound form (RMatchEdgeUndir semi-join)
+    // bound-bound form (the undirected RMatchEdge's semi-join)
     val r = Engine.runSource(spark, chainSrc +
       "match (a:N {x: 20})\nmatch (b:N)\nmatch (a) -[:next]- (b)\nreturn b")
     assert(r.bindings.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 3L))

@@ -224,7 +224,7 @@ class ParserSpec extends AnyFunSuite {
     val tp = Typing.compile(header + "(:Q {y int})\n(:P) -[:r]-> (:Q)\n" +
       "match (q:Q) <-[:r]- (p:P)\nreturn q, p")
     assert(tp.instrs.collect { case e: Typing.RMatchEdge => e } ==
-      List(Typing.RMatchEdge("p", "P", "r", "q", "Q")))
+      List(Typing.RMatchEdge("p", "q", List((("P", "r", "Q"), false)), None)))
     // mixed directions along one path
     val mixed = Parser.parse(header + "(:Q {y int})\n(:P) -[:r]-> (:Q)\n(:Q) -[:t]-> (:Q)\n" +
       "match (a:Q) <-[:r]- (b:P), (a) -[:t]-> (c:Q)\nreturn a, b, c")
@@ -243,17 +243,17 @@ class ParserSpec extends AnyFunSuite {
     val pats = p.query.clauses.collectFirst { case Match(ps) => ps }.get
     assert(pats == List(CompPattern(DeclPattern("p", "P"), "r",
       SimpPattern(DeclPattern("q", "Q")), dir = Undir)))
-    // the typed form records WHICH orientations the schema declares:
-    // here only (P,r,Q), so fwd alone
+    // the typed form carries exactly the orientations the schema
+    // declares: here only (P,r,Q), so one unflipped frame
     val tp = Typing.compile(header + "(:Q {y int})\n(:P) -[:r]-> (:Q)\n" +
       "match (p:P) -[:r]- (q:Q)\nreturn p, q")
-    assert(tp.instrs.collect { case e: Typing.RMatchEdgeUndir => e } ==
-      List(Typing.RMatchEdgeUndir("p", "P", "r", "q", "Q", fwd = true, rev = false)))
-    // written from the other side: rev-only
+    assert(tp.instrs.collect { case e: Typing.RMatchEdge => e } ==
+      List(Typing.RMatchEdge("p", "q", List((("P", "r", "Q"), false)), None)))
+    // written from the other side: one flipped frame
     val tp2 = Typing.compile(header + "(:Q {y int})\n(:P) -[:r]-> (:Q)\n" +
       "match (q:Q) -[:r]- (p:P)\nreturn q, p")
-    assert(tp2.instrs.collect { case e: Typing.RMatchEdgeUndir => e } ==
-      List(Typing.RMatchEdgeUndir("q", "Q", "r", "p", "P", fwd = false, rev = true)))
+    assert(tp2.instrs.collect { case e: Typing.RMatchEdge => e } ==
+      List(Typing.RMatchEdge("q", "p", List((("P", "r", "Q"), true)), None)))
     // undirected variable-length hop, distance binding riding along
     val vp = Parser.parse("(:N {})\n(:N) -[:next]-> (:N)\n" +
       "match (a:N) -[:next*1..3 as d]- (b:N)\nreturn a, b, d")
@@ -1038,7 +1038,7 @@ class ParserSpec extends AnyFunSuite {
     // the clause form still wins on the paren
     assert(Parser.parse(header +
       "match (a:P)\nwhere not exists (a) -[:r]-> (q:Q)\nreturn a")
-      .query.clauses(1).isInstanceOf[NotExists])
+      .query.clauses(1).asInstanceOf[Exists].neg)
   }
 
   test("pattern comprehensions [ pattern | expr ] desugar to collect subqueries (round 15 v2)") {

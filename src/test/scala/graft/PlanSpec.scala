@@ -101,6 +101,18 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("fused hop dedups pairs only over a multi-frame union") {
+    // cross+semi yields one row per connected pair: a two-frame hop
+    // (nnext's two orientations) pays one keys-only pair aggregate
+    // (partial + final); a one-frame hop (snation's flipped frame) gets
+    // it free, since edge frames are sets
+    val pairDedup = """HashAggregate\(keys=\[\w+#\d+L, \w+#\d+L\], functions=\[\]""".r
+    for ((q, n) <- Seq("gql_match_undir" -> 2, "gql_match_undir_mixed" -> 0)) {
+      val p = plan(q)
+      assert(pairDedup.findAllMatchIn(p).size == n, s"pair dedups in $q:\n$p")
+    }
+  }
+
   test("alternation hop fuses too: equi-join against the type union") {
     // cross+semi over any listed relation type fuses to
     // ONE equi-join against the pair-deduped union of the resolved

@@ -169,27 +169,16 @@ object RefInterp {
       st.copy(edges = st.edges ++ st.rows.map(r => (r(cs), rl, r(ct))),
         eattrs = st.eattrs ++ newAttrs)
 
-    case RMatchEdge(sv, _, rl, tv, _, rv) =>
-      val (cs, ct) = (st.colOf(sv), st.colOf(tv))
-      st.copy(rows = st.rows.filter(r => st.edges((r(cs), rl, r(ct)))),
-        edgeEnv = rv.fold(st.edgeEnv)(x => (x, (cs, ct)) :: st.edgeEnv))
-
-    case RMatchEdgeAlt(sv, _, tv, _, frames) =>
+    case RMatchEdge(sv, tv, frames, rv) =>
       // any-of existence over the resolved frames (flipped = reverse
-      // orientation); per-pair semantics like every match
+      // orientation); per-pair semantics like every match. The model
+      // keys edges by relation name only, so a frame's labels are moot.
       val (cs, ct) = (st.colOf(sv), st.colOf(tv))
       st.copy(rows = st.rows.filter(r => frames.exists {
         case ((_, l, _), flipped) =>
           if (flipped) st.edges((r(ct), l, r(cs)))
           else st.edges((r(cs), l, r(ct)))
-      }))
-
-    case RMatchEdgeUndir(sv, _, rl, tv, _, _, _) =>
-      // either-direction existence (the model ignores labels, so the
-      // declared-orientation flags are moot here)
-      val (cs, ct) = (st.colOf(sv), st.colOf(tv))
-      st.copy(rows = st.rows.filter(r =>
-        st.edges((r(cs), rl, r(ct))) || st.edges((r(ct), rl, r(cs)))))
+      }), edgeEnv = rv.fold(st.edgeEnv)(x => (x, (cs, ct)) :: st.edgeEnv))
 
     case RDeleteNode(v, _) => deleteNodeBinding(v)
 
@@ -286,26 +275,17 @@ object RefInterp {
           st.copy(env = (d, st.width) :: st.env, width = st.width + 1, rows = kept)
       }
 
-    case RExists(inner, bound) =>
-      // positive pattern predicate: keep rows WITH a witness (the
-      // left_semi mirror of RNotExists below); row multiplicity
-      // preserved — the witness count never multiplies the row
-      val idxE = bound.map(st.colOf)
-      val probeE = st.rows.map(r => idxE.map(r).toVector).distinct
-      val subE = St(st.nodes, st.edges, bound.zipWithIndex, bound.size, probeE, st.next, st.eattrs)
-      val witnessE = inner.foldLeft(subE)(exec).rows.map(_.take(bound.size)).toSet
-      st.copy(rows = st.rows.filter(r => witnessE(idxE.map(r).toVector)))
-
-    case RNotExists(inner, bound) =>
+    case RExists(inner, bound, neg) =>
       // existential check per distinct bound tuple: interpret the inner
       // pattern over a probe table of the bound columns, keep outer rows
-      // whose tuple produced NO witness — mirrors Engine's left_anti
-      // over the witness frame
+      // whose tuple produced a witness (or, when `neg`, none) — mirrors
+      // Engine's left_semi / left_anti over the witness frame; row
+      // multiplicity preserved
       val idx = bound.map(st.colOf)
       val probe = st.rows.map(r => idx.map(r).toVector).distinct
       val sub0 = St(st.nodes, st.edges, bound.zipWithIndex, bound.size, probe, st.next, st.eattrs)
       val witness = inner.foldLeft(sub0)(exec).rows.map(_.take(bound.size)).toSet
-      st.copy(rows = st.rows.filterNot(r => witness(idx.map(r).toVector)))
+      st.copy(rows = st.rows.filter(r => witness(idx.map(r).toVector) != neg))
 
     case ROptPath(inner, bound, freshVars) =>
       // All-or-nothing witness expansion, mirroring Engine.ROptPath: run

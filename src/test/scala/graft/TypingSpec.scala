@@ -357,15 +357,22 @@ class TypingSpec extends AnyFunSuite {
     assert(err(header + "create (a:P)\ncreate (b:P)\nmatch (a) -[:r]- (b)\nreturn a")
       .contains("undeclared relation type"))
     // fwd-only (P,r,Q) and rev-only (written Q-side) both typecheck,
-    // recording exactly the declared orientations
+    // carrying exactly the declared orientations: one unflipped frame,
+    // one flipped frame
     val fwd = Typing.compile(header +
       "create (a:P)\ncreate (b:Q)\nmatch (a) -[:r]- (b)\nreturn a, b")
-    assert(fwd.instrs.collect { case e: Typing.RMatchEdgeUndir => e } ==
-      List(Typing.RMatchEdgeUndir("a", "P", "r", "b", "Q", fwd = true, rev = false)))
+    assert(fwd.instrs.collect { case e: Typing.RMatchEdge => e } ==
+      List(Typing.RMatchEdge("a", "b", List((("P", "r", "Q"), false)), None)))
     val rev = Typing.compile(header +
       "create (a:P)\ncreate (b:Q)\nmatch (b) -[:r]- (a)\nreturn a, b")
-    assert(rev.instrs.collect { case e: Typing.RMatchEdgeUndir => e } ==
-      List(Typing.RMatchEdgeUndir("b", "Q", "r", "a", "P", fwd = false, rev = true)))
+    assert(rev.instrs.collect { case e: Typing.RMatchEdge => e } ==
+      List(Typing.RMatchEdge("b", "a", List((("P", "r", "Q"), true)), None)))
+    // a self-label relation declares both orientations: two frames
+    val both = Typing.compile(selfHeader +
+      "create (a:N)\ncreate (b:N)\nmatch (a) -[:next]- (b)\nreturn a, b")
+    assert(both.instrs.collect { case e: Typing.RMatchEdge => e } ==
+      List(Typing.RMatchEdge("a", "b",
+        List((("N", "next", "N"), false), (("N", "next", "N"), true)), None)))
   }
 
   test("undirected varpath: typed with the undir flag over the self-label relation") {
@@ -397,8 +404,8 @@ class TypingSpec extends AnyFunSuite {
     assert(opt.map(o => (o.bound, o.fresh)) ==
       List((List("a"), List(("b", "Q"), ("c", "Q")))))
     assert(opt.head.inner == List(
-      Typing.RMatchNode("b", "Q"), Typing.RMatchEdge("a", "P", "r", "b", "Q"),
-      Typing.RMatchNode("c", "Q"), Typing.RMatchEdge("b", "Q", "t", "c", "Q")))
+      Typing.RMatchNode("b", "Q"), Typing.RMatchEdge("a", "b", List((("P", "r", "Q"), false)), None),
+      Typing.RMatchNode("c", "Q"), Typing.RMatchEdge("b", "c", List((("Q", "t", "Q"), false)), None)))
   }
 
   test("optional match: bare node pattern rejected at parse time") {
@@ -412,7 +419,8 @@ class TypingSpec extends AnyFunSuite {
       header + "create (a:P)\noptional match (a) -[:r]-> (b:Q)\nreturn a, b")
     assert(tp.instrs.collect { case o: Typing.ROptPath => o } ==
       List(Typing.ROptPath(
-        List(Typing.RMatchNode("b", "Q"), Typing.RMatchEdge("a", "P", "r", "b", "Q")),
+        List(Typing.RMatchNode("b", "Q"),
+          Typing.RMatchEdge("a", "b", List((("P", "r", "Q"), false)), None)),
         List("a"), List(("b", "Q")))))
   }
 
@@ -445,8 +453,8 @@ class TypingSpec extends AnyFunSuite {
   test("not exists: declared variables are existential — not bound after") {
     val tp = Typing.compile(
       header + "create (a:P)\nwhere not exists (a) -[:r]-> (b:Q)\nreturn a")
-    assert(tp.instrs.collect { case n: Typing.RNotExists => (n.bound, n.inner.length) } ==
-      List((List("a"), 2)))
+    assert(tp.instrs.collect { case n: Typing.RExists => (n.bound, n.inner.length, n.neg) } ==
+      List((List("a"), 2, true)))
     assert(err(header + "create (a:P)\nwhere not exists (a) -[:r]-> (b:Q)\nreturn b")
       .contains("unbound variable"))
   }
@@ -454,7 +462,7 @@ class TypingSpec extends AnyFunSuite {
   test("not exists: inline props filter inside the predicate") {
     val tp = Typing.compile(
       header + "create (a:P)\nwhere not exists (a) -[:r]-> (b:Q {y: 3})\nreturn a")
-    val n = tp.instrs.collect { case n: Typing.RNotExists => n }.head
+    val n = tp.instrs.collect { case n: Typing.RExists if n.neg => n }.head
     assert(n.inner.count(_.isInstanceOf[Typing.RWhere]) == 1)
   }
 
@@ -659,12 +667,12 @@ class TypingSpec extends AnyFunSuite {
     // statically-empty alternatives drop; survivors resolve
     val tp = Typing.compile(ah +
       "match (a:P)\nmatch (b:Q)\nmatch (a) -[:r|s|t]-> (b)\nreturn a, b")
-    assert(tp.instrs.collectFirst { case Typing.RMatchEdgeAlt(_, _, _, _, fs) => fs }
+    assert(tp.instrs.collectFirst { case Typing.RMatchEdge(_, _, fs, _) => fs }
       .contains(List((("P", "r", "Q"), false), (("P", "s", "Q"), false))))
     // undirected alternation admits each label's declared reverse too
     val tpu = Typing.compile(ah +
       "match (a:P)\nmatch (b:Q)\nmatch (a) -[:r|t]- (b)\nreturn a, b")
-    assert(tpu.instrs.collectFirst { case Typing.RMatchEdgeAlt(_, _, _, _, fs) => fs }
+    assert(tpu.instrs.collectFirst { case Typing.RMatchEdge(_, _, fs, _) => fs }
       .contains(List((("P", "r", "Q"), false), (("Q", "t", "P"), true))))
   }
 
@@ -813,6 +821,10 @@ class TypingSpec extends AnyFunSuite {
       "match (a:P)\nmatch (b:Q)\nmatch (a) -[x:r]-> (b)\nremove x.w\nreturn a " +
       "union match (c:P) return c")
       .contains("read-only"))
+    // an unlabeled delete mutates too, though its binding has no label
+    assert(err(eh + "match (n)\nwhere id(n) = 1\ndelete n\nwith count(*) as k\nreturn k " +
+      "union match (c:P) with count(c) as k return k")
+      .contains("union branch 1 mutates the graph (delete)"))
   }
 
   test("in-list: element types must match the tested expression") {
