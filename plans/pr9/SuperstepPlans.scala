@@ -20,7 +20,11 @@ import java.nio.file.{Files, Paths}
   * output dir, a comma-separated list of `query:from-to` (1-based,
   * inclusive execution window; a query alone keeps all) and the data dir.
   * One session, queries in the given order, the Verify/Bench session
-  * settings at local[4], each query in its own checkpoint scope:
+  * settings at local[4] with the broadcast gate closed
+  * (`spark.graft.bcastRowCap` 0, so every gated join is planned shuffled
+  * and the cc and bfs/sssp kernels run their distributed superstep loops,
+  * which a graph this small would otherwise run on the driver), each
+  * query in its own checkpoint scope:
   *
   *   java -cp <this compiled>:target/scala-2.13/classes:<spark jars>:<scala-library> \
   *     graft.SuperstepPlans out g_bfs:3-4,g_scc:37-38 /path/to/sf0.001
@@ -71,6 +75,7 @@ object SuperstepPlans {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
+      .config(Bcast.confKey, "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // (full dump, initial plan) per execution

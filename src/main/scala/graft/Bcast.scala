@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /** Measured-count broadcast gate (VERDICT r15 item 1).
@@ -24,13 +24,19 @@ import org.apache.spark.sql.functions.broadcast
   * is ≈32 MB serialized REGARDLESS of schema width — a wide frame
   * degrades at proportionally fewer rows. Conf name kept for plan-test
   * compatibility; read it as "broadcast cell cap".
+  *
+  * The same cap gates the driver-local loops ([[collected]]): a frame
+  * the engine would broadcast is a frame the driver may hold, so a graph
+  * version whose undirected edge hoist fits the cap runs its cc and
+  * bfs/sssp recurrences on the driver ([[graft.operators.Topology]]).
+  * A cap of 0 closes both gates.
   */
 object Bcast {
   val confKey = "spark.graft.bcastRowCap"
   val defaultCap = 4000000L
 
-  def cap(df: DataFrame): Long =
-    Knob.long(confKey, df.sparkSession.conf.get(confKey, defaultCap.toString), min = 0)
+  def cap(s: SparkSession): Long =
+    Knob.long(confKey, s.conf.get(confKey, defaultCap.toString), min = 0)
 
   /** `broadcast(df)` when the MEASURED row count of the frame (or a
     * conservative upper bound on it — e.g. the edge count for a
@@ -38,5 +44,25 @@ object Bcast {
     * count, fits the cell cap; `df` untouched otherwise, degrading the
     * consuming join to its shuffled form. */
   def gated(df: DataFrame, measuredRows: Long): DataFrame =
-    if (measuredRows * math.max(1, df.schema.size) <= cap(df)) broadcast(df) else df
+    if (measuredRows * math.max(1, df.schema.size) <= cap(df.sparkSession)) broadcast(df) else df
+
+  /** The long columns of `df` on the driver, row-major in one array,
+    * when `copies` copies of the frame fit the cell cap; `None` above it.
+    * The cap allows cap / (copies × columns) rows. No job runs when it
+    * allows none, or when the plan's size estimate already holds more
+    * (Spark sizes a row of n longs at 8·(n + 1) bytes). The estimate is
+    * the lesser of the plan's statistics and the bytes its leaves read:
+    * Spark estimates a join at the product of its sides, so a mutated
+    * edge relation with a cross join in its plan reads as terabytes.
+    * Otherwise one collect ([[GraftShim.collectLongs]]) reads at most
+    * one row more than allowed, so it both measures the frame and loads
+    * it. */
+  def collected(df: DataFrame, copies: Int): Option[Array[Long]] = {
+    val width = math.max(1, df.schema.size)
+    val rows = math.min(cap(df.sparkSession) / (copies.toLong * width), Int.MaxValue / width - 1L)
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes.min(plan.collectLeaves().map(_.stats.sizeInBytes).sum)
+    if (rows <= 0 || bytes / (8 * (width + 1)) > rows) None
+    else Some(GraftShim.collectLongs(df.limit(rows.toInt + 1))).filter(_.length <= rows * width)
+  }
 }

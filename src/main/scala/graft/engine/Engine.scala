@@ -428,8 +428,9 @@ object Engine {
       // nodes surface as zero-degree / singleton components.
       val cols = yields.indices.map(k => s"__b${st.freshCounter + k}")
       val relScope: Option[String] = args.collectFirst { case StringV(r) => r }
-      // the kernels' inputs for this graph version (hoist, endpoint
-      // spine, counts, triangle counts), built once per version
+      // the kernels' inputs for this graph version (hoist or the edges
+      // on the driver, endpoint spine, counts, triangle counts), built
+      // once per version
       val topo = graft.operators.Topology(spark, st.graph, rel => relScope.forall(_ == rel))
       val allNodes = topo.nodes
       val allEdges = topo.edges
@@ -452,8 +453,7 @@ object Engine {
         case "cc" =>
           // component labels (comp = component min id) — the library
           // deltaCC, diameter-bound at 20 supersteps
-          val (labels, _) = graft.operators.GraphAlgos.deltaCC(
-            allNodes, topo.undirected, maxIters = 20, topo.nodeWidth)
+          val (labels, _) = graft.operators.GraphAlgos.deltaCC(topo, maxIters = 20)
           labels.select(col("id").as(cols(0)), col("comp").as(cols(1)))
         case "pagerank" =>
           // the library's fixed-point integer PageRank (8 iterations)
@@ -462,22 +462,13 @@ object Engine {
             .select(col("id").as(cols(0)), col("rank").as(cols(1)))
         case "bfs" | "sssp" =>
           // hop distances from the literal source id over the undirected
-          // edges (GraphAlgos.hopDistances): sssp is the weighted
+          // edges (GraphAlgos.reachDistances): sssp is the weighted
           // Bellman–Ford recurrence of g_sssp. Reached nodes in the
           // output; an absent source reaches nothing. The key universe
-          // is the REACHABLE one, not allNodes: the edge frame may be
-          // relation-scoped (call bfs over one relation's subgraph), and
-          // a full-|V| spine checkpointed per superstep measured 1.7×
-          // slower on the _rel variants at sf0.1 — a search can only
-          // reach edge endpoints plus the source. The endpoint set is
-          // pinned and counted per version, so the per-call distinct is
-          // |V|-scale, not |E|-scale, and its count sizes the loop.
-          val srcId = intArg(proc)
+          // is the reachable one: the edge endpoints plus the source.
           val weighted = proc == "sssp"
-          val dists = graft.operators.GraphAlgos.hopDistances(topo.undirected,
-            topo.endpoints.unionByName(allNodes.filter(col("id") === srcId)).distinct(),
-            srcId, weighted, maxIters = if (weighted) 24 else 20, s"call $proc()",
-            graft.Ckpt.partsFor(spark, topo.nEndpoints))
+          val (dists, _) = graft.operators.GraphAlgos.reachDistances(topo, intArg(proc),
+            weighted, maxIters = if (weighted) 24 else 20, s"call $proc()")
           dists.select(col("id").as(cols(0)), col("d").as(cols(1)))
         case "kcore" =>
           // the library k-core peel, k as the call argument: in-core

@@ -12,16 +12,20 @@ import graft.Superstep.{Done, More, Probe, doneIf}
   *
   *   - inputs: a [[Topology]] — one graph version's directed edges, node
   *     ids, undirected hoist, endpoint spine, |V| and triangle counts,
-  *     memoized per version. The `g_*` queries read the loaded
-  *     graph without its non-FK parts ([[topology]]); MiniGQL's `call`
-  *     procedures read the current graph state through the same class.
+  *     memoized per version; under the broadcast gate, its edges and node
+  *     ids on the driver instead of the hoist and spine. The `g_*`
+  *     queries read the loaded graph without its non-FK parts
+  *     ([[topology]]); MiniGQL's `call` procedures read the current graph
+  *     state through the same class.
   *   - kernels over (nodes, edges) frames, one per algorithm and shared
   *     by both doors: [[deltaCC]], [[starCC]], [[pageRank]], [[hits]],
   *     [[kcore]], [[labelProp]], [[triangleCounts]], [[coloringSCC]],
   *     [[frontierLoop]] (with [[hopDistances]] for BFS and SSSP) and
   *     [[multiSourceBfsLevels]]. Every iterative loop runs through
   *     [[graft.Superstep]], which owns its width, checkpoints, step
-  *     limit and the loud non-convergence error.
+  *     limit and the loud non-convergence error. cc and BFS/SSSP over a
+  *     version under the gate run the same recurrence on the driver,
+  *     through the same driver loop.
   *   - [[all]]: the `g_*` queries ([[Q]]), each a kernel call over the
   *     library topology plus its output projection, paired with an
   *     unrolled DuckDB oracle. Every result is integer (fixed-point
@@ -98,6 +102,78 @@ object GraphAlgos {
     }
     (labels, steps)
   }
+
+  /** [[deltaCC]] over a graph version: the node labels and the supersteps
+    * used. A version under the broadcast gate ([[Topology.localEdges]])
+    * runs the same recurrence on the driver ([[localCC]]), and only the
+    * labels it lowered come back as a local frame, joined lazily onto
+    * the nodes, so every other node keeps its own id; above the gate it
+    * is the distributed loop over the version's hoist. */
+  def deltaCC(t: Topology, maxIters: Int): (DataFrame, Int) =
+    (for (e <- t.localEdges; ids <- t.localNodes) yield {
+      val (comp, steps) = localCC(t.nodes.sparkSession, ids, e.pairs, maxIters)
+      val lowered = local(t.nodes.sparkSession, "lc",
+        ids.indices.filter(i => comp(i) != ids(i)).map(i => (ids(i), comp(i))))
+      (t.nodes.join(lowered, Seq("id"), "left")
+        .select(col("id"), coalesce(col("lc"), col("id")).as("comp")), steps)
+    }).getOrElse(deltaCC(t.nodes, t.undirected, maxIters, t.nodeWidth))
+
+  /** [[deltaCC]]'s recurrence on the driver, over the sorted distinct
+    * node ids `ids` and the directed edges `pairs` ((src, dst)
+    * row-major): an edge with an endpoint outside `ids` neither sends
+    * nor receives, as in the distributed join. Each superstep lowers a
+    * label to the least label a neighbor changed in the superstep before
+    * sent it, all from the labels before the superstep, so the labels,
+    * the superstep count and the step limit's error are those of
+    * [[deltaCC]]. Returns the labels, by index into `ids`, and the
+    * supersteps used. */
+  private def localCC(s: SparkSession, ids: Array[Long], pairs: Array[Long],
+      maxIters: Int): (Array[Long], Int) = {
+    val adj = new Adjacency(ids, pairs)
+    val comp = ids.clone()
+    val (_, steps) = Superstep.converge(s, "connected components", maxIters)(
+        ids.indices.toArray)(_ => Nil) { (changed, _) =>
+      val lowered = adj.relax(changed, (u, _) => comp(u)).filter { case (v, c) => c < comp(v) }
+      lowered.foreach { case (v, c) => comp(v) = c }
+      doneIf(lowered.isEmpty)(lowered.map(_._1))
+    }
+    (comp, steps)
+  }
+
+  /** The undirected adjacency of the directed edges `pairs` ((src, dst)
+    * row-major) over the sorted key universe `keys`, by key index: each
+    * edge whose endpoints are both keys appears in both orientations,
+    * with duplicates and self-loops kept, as in the hoist. */
+  private final class Adjacency(keys: Array[Long], pairs: Array[Long]) {
+    private val (start, nbr) = {
+      val ends = pairs.map(java.util.Arrays.binarySearch(keys, _))
+      val kept = (0 until ends.length / 2).filter(i => ends(2 * i) >= 0 && ends(2 * i + 1) >= 0)
+      val start = new Array[Int](keys.length + 1)
+      kept.foreach { i => start(ends(2 * i) + 1) += 1; start(ends(2 * i + 1) + 1) += 1 }
+      for (k <- 1 to keys.length) start(k) += start(k - 1)
+      val fill = start.clone()
+      val nbr = new Array[Int](start(keys.length))
+      def add(u: Int, v: Int): Unit = { nbr(fill(u)) = v; fill(u) += 1 }
+      kept.foreach { i => add(ends(2 * i), ends(2 * i + 1)); add(ends(2 * i + 1), ends(2 * i)) }
+      (start, nbr)
+    }
+
+    /** The least message each neighbor of `from` receives, where
+      * `msg(u, v)` is what u sends along (u, v); as (key index, value)
+      * pairs, one per receiver. */
+    def relax(from: Array[Int], msg: (Int, Int) => Long): Array[(Int, Long)] = {
+      val least = scala.collection.mutable.LongMap.empty[Long]
+      for (u <- from; k <- start(u) until start(u + 1)) {
+        val (v, m) = (nbr(k), msg(u, nbr(k)))
+        if (least.get(v).forall(m < _)) least(v) = m
+      }
+      least.iterator.map { case (v, m) => (v.toInt, m) }.toArray
+    }
+  }
+
+  /** A driver-side (id, `value`) frame of `rows`. */
+  private def local(s: SparkSession, value: String, rows: Seq[(Long, Long)]): DataFrame =
+    s.createDataFrame(rows).toDF("id", value)
 
   /** Alternating large-star/small-star CC (Kiveris et al., "Connected
     * Components in MapReduce and Beyond") over a directed (src,dst) edge
@@ -685,13 +761,13 @@ object GraphAlgos {
       improve: Boolean,
       maxIters: Int,
       what: String,
-      parts: Int): DataFrame = {
+      parts: Int): (DataFrame, Int) = {
     val better =
       if (improve) col("cand").isNotNull &&
         (col("d").isNull || col("cand") < col("d"))
       else col("d").isNull && col("cand").isNotNull
     // (distances, frontier, the checkpoint both read)
-    val ((dists, _, _), _) = Superstep.converge(spine.sparkSession, what, maxIters, parts)(
+    val ((dists, _, _), steps) = Superstep.converge(spine.sparkSession, what, maxIters, parts)(
         (spine, spine.filter(col("d").isNotNull), Option.empty[DataFrame]))(_._3.toSeq) {
       case (st @ (dists, frontier, _), _) =>
         Probe(dists.join(step(frontier), keyCols, "left"), _.filter(better).count()) {
@@ -704,7 +780,7 @@ object GraphAlgos {
               Some(joined)))
         }
     }
-    dists.filter(col("d").isNotNull)
+    (dists.filter(col("d").isNotNull), steps)
   }
 
   /** Hop distances from `src` over the undirected, src-partitioned edge
@@ -714,15 +790,84 @@ object GraphAlgos {
     * integer weight w(u,v) = 1 + (u + v) mod 2 (no weight column
     * materialized, exact in any engine), where a settled key re-enters
     * the frontier when its distance drops. Returns (id, d) for every
-    * reached key. Shared by g_bfs/g_sssp and `call bfs`/`call sssp`. */
+    * reached key and the supersteps used. The distributed loop of
+    * g_bfs/g_sssp and `call bfs`/`call sssp` ([[hopDistances(t:*]],
+    * [[reachDistances]]). */
   private[graft] def hopDistances(ue: DataFrame, keys: DataFrame, src: Long,
-      weighted: Boolean, maxIters: Int, what: String, parts: Int): DataFrame =
+      weighted: Boolean, maxIters: Int, what: String, parts: Int): (DataFrame, Int) =
     frontierLoop(keys.select(col("id"), when(col("id") === src, 0L).as("d")), Seq("id"),
       f => ue.join(f, ue("src") === f("id"))
         .select(ue("dst").as("id"), (if (weighted) col("d") + lit(1L) + (ue("src") + ue("dst")) % 2
           else col("d") + 1).as("cand"))
         .groupBy("id").agg(min("cand").as("cand")),
       improve = weighted, maxIters, what, parts)
+
+  /** [[hopDistances]] from `src` over every node of a graph version (the
+    * library door): on the driver ([[localHops]]) under the broadcast
+    * gate, else the distributed loop over the version's hoist. */
+  private[graft] def hopDistances(t: Topology, src: Long, weighted: Boolean, maxIters: Int,
+      what: String): (DataFrame, Int) =
+    (for (e <- t.localEdges; ids <- t.localNodes) yield {
+      val (d, steps) = localHops(t.nodes.sparkSession, ids, e.pairs, src, weighted, maxIters, what)
+      (reached(t.nodes.sparkSession, ids, d), steps)
+    }).getOrElse(hopDistances(t.undirected, t.nodes, src, weighted, maxIters, what, t.nodeWidth))
+
+  /** [[hopDistances]] from `src` over a graph version's edge endpoints,
+    * plus `src` when it is a node (the `call` door). The key universe is
+    * the reachable one, not every node: the edges may be scoped to one
+    * relation type, and a full-|V| spine checkpointed per superstep
+    * measured 1.7× slower on the `_rel` variants at sf0.1. Above the
+    * broadcast gate the endpoint spine is pinned and counted per version,
+    * so the per-call distinct is |V|-scale and its count sizes the loop.
+    * Under the gate the search runs on the driver over the endpoints
+    * alone, and a `src` that is no endpoint reaches only itself: its
+    * result is read lazily off the nodes, so the node ids are not
+    * collected. */
+  private[graft] def reachDistances(t: Topology, src: Long, weighted: Boolean,
+      maxIters: Int, what: String): (DataFrame, Int) = {
+    val s = t.nodes.sparkSession
+    t.localEdges.map { e =>
+      val (d, steps) = localHops(s, e.endpoints, e.pairs, src, weighted, maxIters, what)
+      (if (java.util.Arrays.binarySearch(e.endpoints, src) >= 0) reached(s, e.endpoints, d)
+        else t.nodes.filter(col("id") === src).select(col("id"), lit(0L).as("d")), steps)
+    }.getOrElse(hopDistances(t.undirected,
+      t.endpoints.unionByName(t.nodes.filter(col("id") === src)).distinct(),
+      src, weighted, maxIters, what, Ckpt.partsFor(s, t.nEndpoints)))
+  }
+
+  /** [[hopDistances]]'s recurrence on the driver, over the sorted
+    * distinct keys `keys` and the directed edges `pairs` ((src, dst)
+    * row-major): an edge with an endpoint outside `keys` neither sends
+    * nor receives, as in the distributed join. Each superstep relaxes the
+    * edges out of the last superstep's frontier, all from the distances
+    * before the superstep, and keeps the same improvements as
+    * [[frontierLoop]] (a first discovery, or with `weighted` any smaller
+    * distance), so the distances, the superstep count and the step
+    * limit's error are those of the distributed loop. Returns each key's
+    * distance by index (Long.MaxValue when unreached) and the supersteps
+    * used. */
+  private def localHops(s: SparkSession, keys: Array[Long], pairs: Array[Long],
+      src: Long, weighted: Boolean, maxIters: Int, what: String): (Array[Long], Int) = {
+    val adj = new Adjacency(keys, pairs)
+    val d = Array.fill(keys.length)(Long.MaxValue)
+    val from = java.util.Arrays.binarySearch(keys, src)
+    if (from >= 0) d(from) = 0L
+    val hop: (Int, Int) => Long =
+      if (weighted) (u, v) => d(u) + 1L + (keys(u) + keys(v)) % 2 else (u, _) => d(u) + 1L
+    val (_, steps) = Superstep.converge(s, what, maxIters)(
+        if (from >= 0) Array(from) else Array.empty[Int])(_ => Nil) { (frontier, _) =>
+      val better = adj.relax(frontier, hop)
+        .filter { case (v, c) => if (weighted) c < d(v) else d(v) == Long.MaxValue }
+      better.foreach { case (v, c) => d(v) = c }
+      doneIf(better.isEmpty)(better.map(_._1))
+    }
+    (d, steps)
+  }
+
+  /** The keys a [[localHops]] search reached, as a driver-side (id, d)
+    * frame. */
+  private def reached(s: SparkSession, keys: Array[Long], d: Array[Long]): DataFrame =
+    local(s, "d", keys.indices.filter(d(_) != Long.MaxValue).map(i => (keys(i), d(i))))
 
   /** Multi-source BFS over an undirected, src-pre-partitioned edge
     * frame: returns the (lazy union of) per-LEVEL distance frames
@@ -1112,12 +1257,12 @@ object GraphAlgos {
     // message volume ∝ improvements.
     Q("g_sssp",
       (s, dir) => {
-        // One-job-per-superstep spine loop (round 18 — see
+        // Over every node: on the driver under the broadcast gate, else
+        // the one-job-per-superstep spine loop (round 18 — see
         // [[frontierLoop]] for why this replaced the anti-join +
-        // full-outer-merge shape) over every node.
-        val t = topology(s, dir)
-        val dists = hopDistances(t.undirected, t.nodes, bfsSrc, weighted = true, ssspIters,
-          "SSSP", t.nodeWidth)
+        // full-outer-merge shape).
+        val (dists, _) = hopDistances(topology(s, dir), bfsSrc, weighted = true, ssspIters,
+          "SSSP")
         dists.groupBy(col("d").as("dist")).agg(count(lit(1)).as("n"))
       },
       Some(ssspOracle)),
@@ -1133,12 +1278,12 @@ object GraphAlgos {
     // edge frame as the CC delta iteration.
     Q("g_bfs",
       (s, dir) => {
-        // One-job-per-superstep spine loop (round 18 — see
-        // [[frontierLoop]]) over every node: the frontier is exactly the
-        // newly-discovered set, message volume each BFS level once.
-        val t = topology(s, dir)
-        val dists = hopDistances(t.undirected, t.nodes, bfsSrc, weighted = false, bfsIters,
-          "BFS", t.nodeWidth)
+        // Over every node: on the driver under the broadcast gate, else
+        // the one-job-per-superstep spine loop (round 18 — see
+        // [[frontierLoop]]): the frontier is exactly the newly-discovered
+        // set, message volume each BFS level once.
+        val (dists, _) = hopDistances(topology(s, dir), bfsSrc, weighted = false, bfsIters,
+          "BFS")
         dists.groupBy(col("d").as("dist")).agg(count(lit(1)).as("n"))
       },
       Some(bfsOracle)),
@@ -1208,7 +1353,7 @@ object GraphAlgos {
         val (labels, _) = deltaCC(t.nodes, ue, ccIters, t.nodeWidth)
         val spine = labels.select(col("comp").as("seed"), col("id"),
           when(col("id") === col("comp"), 0L).as("d"))
-        val dists = frontierLoop(spine, Seq("seed", "id"),
+        val (dists, _) = frontierLoop(spine, Seq("seed", "id"),
           f => ue.join(f, ue("src") === f("id"))
             .select(col("seed"), ue("dst").as("id"), (col("d") + 1).as("cand"))
             .groupBy("seed", "id").agg(min("cand").as("cand")),
@@ -1233,12 +1378,12 @@ object GraphAlgos {
     // ---- connected components: delta min-label propagation ------------
     Q("g_connected_components",
       (s, dir) => {
-        // Pre-partitioned loop-invariant edge frame, built once per
-        // topology and SHARED with g_bfs — each superstep's join only
-        // shuffles the (small) labels side, and the 2×|E| build shuffle
-        // is paid once per session, not once per operator.
-        val t = topology(s, dir)
-        val (labels, _) = deltaCC(t.nodes, t.undirected, ccIters, t.nodeWidth)
+        // Under the broadcast gate the labels come from the driver over
+        // the edges collected once per topology (shared with g_bfs);
+        // above it, from the pre-partitioned loop-invariant edge hoist,
+        // also built once per topology and shared, so each superstep's
+        // join only shuffles the (small) labels side.
+        val (labels, _) = deltaCC(topology(s, dir), ccIters)
         labels.groupBy("comp").agg(count(lit(1)).as("n"))
       },
       Some(ccOracle)),
@@ -1758,19 +1903,21 @@ object GraphAlgos {
     // edge counts (rounds only shrink the graph), so the whole FW-BW
     // machine runs at a volume-derived width — both counts are free off
     // the just-materialized checkpoints. The initial placement above
-    // stays at session width, and joins against it keep that width: in
-    // plans/pr9/g_scc_*.txt a shrink leaves the src-keyed copy
-    // hash-partitioned by dst at session width, and only the dst-keyed
-    // copy (an explicit repartition) lands at loop width.
+    // stays at session width, and joins against it keep that width.
     val parts = Ckpt.partsFor(s, math.max(g0.n, bySrc0.count()))
     def assign(g: SccRest, rows: DataFrame): DataFrame =
       Ckpt.eager(if (g.assigned == null) rows else g.assigned.unionByName(rows))
-    // shrink the remaining graph to `keep` (id-partitioned): src side
-    // co-partitioned semi, dst side against the dst-keyed copy
+    // shrink the remaining graph to `keep` (id-partitioned): the edges
+    // with both ends kept, checkpointed by src and by dst. The src copy's
+    // semi join on src comes last, so the copy stays partitioned by src:
+    // a broadcast join keeps the src partitioning it reads, a shuffled
+    // one places it by its key. Every consumer of the copy (the trim
+    // pass's `hasOut` distinct, the coloring join) is keyed on src; a
+    // copy partitioned by dst would be re-exchanged by each of them.
     def shrink(g: SccRest, keep: DataFrame, n: Long, assigned: DataFrame): SccRest = {
       val s2 = Ckpt.eagerPartitioned(
-        g.bySrc.join(keep, g.bySrc("src") === keep("id"), "left_semi")
-          .join(keep.withColumnRenamed("id", "id2"), col("dst") === col("id2"), "left_semi"))
+        g.bySrc.join(keep.withColumnRenamed("id", "id2"), col("dst") === col("id2"), "left_semi")
+          .join(keep, col("src") === keep("id"), "left_semi"))
       SccRest(keep, s2, Ckpt.eagerPartitioned(s2.repartition(col("dst"))), n, assigned)
     }
     // ---- 1. trim to fixpoint ---------------------------------------------

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Ckpt
+import graft.{Bcast, Ckpt}
 import graft.engine.PropertyGraph
 
 /** One graph version as the [[GraphAlgos]] kernels read it: the node
@@ -25,14 +25,23 @@ import graft.engine.PropertyGraph
   * trivial-convergence path reads the old spine). The loader returns one
   * graph per (session, dir), so the library door's entries are per
   * (session, dir) as well. The checkpoints an artifact holds belong to
-  * its memo entry ([[Ckpt]]); callers must not drop them. */
+  * its memo entry ([[Ckpt]]); callers must not drop them.
+  *
+  * A version whose undirected hoist passes the broadcast gate
+  * ([[Bcast.collected]]) is held on the driver instead: its kept edges
+  * ([[localEdges]], per edge version) and node ids ([[localNodes]], per
+  * node version) are collected once under the same keys and lifetime,
+  * plus the cap they were decided under, so a session whose cap changes
+  * decides again. The cc and bfs/sssp kernels then iterate over these
+  * arrays, and such a version builds neither [[undirected]] nor
+  * [[endpoints]]. */
 final class Topology private (s: SparkSession, g: PropertyGraph,
     rels: Set[(String, String, String)], labels: Set[String]) {
   private val edgeKey = (new Topology.GraphKey(g.edges), rels)
   private val nodeKey = (new Topology.GraphKey(g.nodes), labels)
 
-  private def onEdges[A](what: String)(build: => A): A = Ckpt.memo(s, (what, edgeKey))(build)
-  private def onNodes[A](what: String)(build: => A): A = Ckpt.memo(s, (what, nodeKey))(build)
+  private def onEdges[A](what: Any)(build: => A): A = Ckpt.memo(s, (what, edgeKey))(build)
+  private def onNodes[A](what: Any)(build: => A): A = Ckpt.memo(s, (what, nodeKey))(build)
 
   /** Memo for an artifact derived from both the nodes and the edges. */
   def memo[A](what: String)(build: => A): A = Ckpt.memo(s, (what, edgeKey, nodeKey))(build)
@@ -57,6 +66,20 @@ final class Topology private (s: SparkSession, g: PropertyGraph,
 
   /** Loop width for |V|-scale per-superstep frames ([[Ckpt.partsFor]]). */
   def nodeWidth: Int = Ckpt.partsFor(s, nNodes)
+
+  /** The kept (src, dst) edges on the driver, row-major, when the
+    * version's undirected hoist — 2·|E| rows of 2 cells — fits the
+    * broadcast gate; `None` above it. An edge with a null endpoint is
+    * left out: it joins nothing in the distributed loops either. */
+  def localEdges: Option[Topology.Edges] = onEdges(("localEdges", Bcast.cap(s))) {
+    Bcast.collected(edges.na.drop(), copies = 2).map(new Topology.Edges(_))
+  }
+
+  /** The kept node ids on the driver, sorted and distinct, when they fit
+    * the broadcast gate; `None` above it. */
+  def localNodes: Option[Array[Long]] = onNodes(("localNodes", Bcast.cap(s))) {
+    Bcast.collected(nodes.na.drop(), copies = 1).map(Topology.sortedDistinct)
+  }
 
   /** Both orientations of [[edges]] (2·|E| rows), hash-partitioned by
     * src and checkpointed: the loop-invariant frame every label and
@@ -91,6 +114,22 @@ final class Topology private (s: SparkSession, g: PropertyGraph,
 }
 
 object Topology {
+
+  /** One edge version's kept edges on the driver: `pairs` holds each
+    * (src, dst) row-major. */
+  final class Edges(val pairs: Array[Long]) {
+    /** The distinct endpoints, sorted. */
+    lazy val endpoints: Array[Long] = sortedDistinct(pairs)
+  }
+
+  /** `a`'s distinct values in ascending order, in a new array. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    val b = a.clone()
+    java.util.Arrays.sort(b)
+    var n = 0
+    for (x <- b) if (n == 0 || b(n - 1) != x) { b(n) = x; n += 1 }
+    java.util.Arrays.copyOf(b, n)
+  }
 
   /** The view of `g` that keeps the relation types `keepRel` accepts and
     * the node labels `keepLabel` accepts. */

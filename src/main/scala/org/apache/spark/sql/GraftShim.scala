@@ -33,6 +33,21 @@ object GraftShim {
   def nonAdaptive(df: DataFrame): DataFrame =
     execution.NonAdaptive(df.asInstanceOf[classic.Dataset[Row]])
 
+  /** `df`'s rows on the driver, row-major in one array; every column
+    * must be a non-null long. Planned without AQE, so the plan's
+    * shuffles (a limit's single-partition gather) run as stages of one
+    * job, not a job each (a broadcast in the plan still runs its own);
+    * each partition ships one packed array. */
+  def collectLongs(df: DataFrame): Array[Long] = {
+    val width = df.schema.size
+    execution.NonAdaptive(df.asInstanceOf[classic.Dataset[Row]]).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val out = Array.newBuilder[Long]
+        rows.foreach(r => (0 until width).foreach(i => out += r.getLong(i)))
+        Iterator.single(out.result())
+      }.collect().flatten
+  }
+
   /** The RDD behind a (local)checkpointed Dataset: its LogicalRDD leaf's. */
   def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
     Some(ds.queryExecution.analyzed).collect { case lr: execution.LogicalRDD => lr.rdd }

@@ -1,9 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ListenerBusProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, min, when}
 import graft.engine.{Engine, PropertyGraph}
+import graft.operators.{GraphAlgos, Topology}
 import graft.sources.GraphLoader
 
 /** In-JVM differential tests for the iterative graph analytics at
@@ -11,7 +14,10 @@ import graft.sources.GraphLoader
   * PageRank (the identical integer formula) over the collected edge list
   * and require exact equality — the algorithms are all-integer, so there
   * is no tolerance. The cc, PageRank, HITS, k-core and clustering
-  * replays also check the `call` door, over the whole loaded graph. */
+  * replays also check the `call` door, over the whole loaded graph. The
+  * cc and SSSP replays run under the default broadcast gate, where the
+  * sf0.001 graph iterates on the driver, and with the gate closed, where
+  * it runs the distributed loop. */
 class GraphAlgosSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -38,6 +44,28 @@ class GraphAlgosSpec extends AnyFunSuite {
     (g.nodes.values.flatMap(_.select(col("id")).collect().map(_.getLong(0))).toSeq,
       g.edges.values.flatMap(_.select(col("src"), col("dst")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))).toSeq)
+  }
+
+  /** `body` with the broadcast gate closed (`spark.graft.bcastRowCap` 0),
+    * so the cc and bfs/sssp kernels run their distributed loops. */
+  private def closedGate[A](body: => A): A = {
+    spark.conf.set(Bcast.confKey, "0")
+    try body finally spark.conf.unset(Bcast.confKey)
+  }
+
+  /** `check` under the default gate, then with the gate closed. */
+  private def underBothGates(check: String => Unit): Unit = {
+    check("default gate")
+    closedGate(check("closed gate"))
+  }
+
+  /** A one-label, one-relation graph version over `nodes` and `edges`, as
+    * a kernel reads it. */
+  private def version(nodes: Seq[Long], edges: Seq[(Long, Long)]): Topology = {
+    import spark.implicits._
+    val tp = graft.lang.Typing.compile("(:N {})\n(:N) -[:e]-> (:N)\nmatch (n:N) return n\n")
+    Topology(spark, PropertyGraph(tp.schema, Map("N" -> nodes.toDF("id")),
+      Map(("N", "e", "N") -> edges.toDF("src", "dst"))), _ => true)
   }
 
   /** Runs one MiniGQL program against the loaded graph; rows as longs. */
@@ -77,14 +105,17 @@ class GraphAlgosSpec extends AnyFunSuite {
   test("connected components equals in-memory union-find") {
     val comp = unionFind(collectedNodes(), collectedEdges())
     val expected = comp.values.groupBy(identity).map { case (c, xs) => c -> xs.size.toLong }
-    val got = SparkEntry.queries("g_connected_components")(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
-    // the call door: every node's label over the whole gql graph
     val (gn, ge) = gqlGraph()
-    val call = gql("call cc() yield id, comp\nreturn id, comp")
-      .map(r => r(0) -> r(1)).toMap
-    assert(call == unionFind(gn, ge))
+    val callExpected = unionFind(gn, ge)
+    underBothGates { gate =>
+      val got = SparkEntry.queries("g_connected_components")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, gate)
+      // the call door: every node's label over the whole gql graph
+      val call = gql("call cc() yield id, comp\nreturn id, comp")
+        .map(r => r(0) -> r(1)).toMap
+      assert(call == callExpected, gate)
+    }
   }
 
   test("weighted SSSP equals the in-memory Dijkstra replay") {
@@ -107,9 +138,64 @@ class GraphAlgosSpec extends AnyFunSuite {
     }
     val expected = dist.values.groupBy(identity)
       .map { case (d, vs) => d -> vs.size.toLong }
-    val got = SparkEntry.queries("g_sssp")(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
+    underBothGates { gate =>
+      val got = SparkEntry.queries("g_sssp")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, gate)
+    }
+  }
+
+  test("driver-local cc and bfs/sssp agree with the distributed loops") {
+    // Each graph runs every kernel twice on one version: under the
+    // default gate on the driver, and with the gate closed distributed.
+    // Random graphs carry isolated nodes (100, 101), self-loops,
+    // duplicate edges and endpoints that are not nodes (the ids left out
+    // of the node set and 40-44); the chain needs 20 supersteps.
+    val random = (1 to 3).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val nodes = (0L until 40L).filter(_ => rnd.nextInt(5) != 0) ++ Seq(100L, 101L)
+      val edges = Seq.fill(30)((rnd.nextInt(45).toLong, rnd.nextInt(45).toLong))
+      val loops = Seq.fill(3)(rnd.nextInt(40).toLong).map(i => (i, i))
+      (s"random graph $seed", nodes, edges ++ loops ++ edges.take(4))
+    }
+    val chain = ("20-node chain", (0L until 20L), (0L until 19L).map(i => (i, i + 1)))
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    for ((name, nodes, edges) <- random :+ chain) {
+      val t = version(nodes, edges)
+      assert(t.localEdges.isDefined && t.localNodes.isDefined, s"$name is over the gate")
+      def agree(what: String)(run: => (DataFrame, Int)): Unit = {
+        val (local, localSteps) = run
+        val (dist, distSteps) = closedGate {
+          assert(t.localEdges.isEmpty)
+          val (d, n) = run
+          (rows(d), n)
+        }
+        assert((rows(local), localSteps) == ((dist, distSteps)), s"$what on $name")
+      }
+      agree("cc")(GraphAlgos.deltaCC(t, 40))
+      val endpoints = edges.flatMap { case (a, b) => Seq(a, b) }.toSet
+      val sources = Seq(nodes.find(endpoints).get, 100L, 999L) ++
+        endpoints.find(!nodes.contains(_))
+      for (src <- sources; weighted <- Seq(false, true)) {
+        val what = s"${if (weighted) "SSSP" else "BFS"} from $src"
+        agree(s"$what over the nodes")(GraphAlgos.hopDistances(t, src, weighted, 40, what))
+        agree(s"$what over the endpoints")(GraphAlgos.reachDistances(t, src, weighted, 40, what))
+      }
+    }
+    // the same error at the same too-small limit
+    val t = version(chain._2, chain._3)
+    def sameError(run: => Any): Unit = {
+      val local = intercept[IllegalArgumentException](run).getMessage
+      val dist = closedGate(intercept[IllegalArgumentException](run).getMessage)
+      assert(local == dist && local.contains(" not converged after 3 supersteps"), local)
+    }
+    sameError(GraphAlgos.deltaCC(t, 3))
+    for (weighted <- Seq(false, true)) {
+      sameError(GraphAlgos.hopDistances(t, 0L, weighted, 3, "chain search"))
+      sameError(GraphAlgos.reachDistances(t, 0L, weighted, 3, "chain search"))
+    }
+    Ckpt.drain()
   }
 
   test("landmark harmonic centrality equals the in-memory multi-BFS replay") {
@@ -576,20 +662,23 @@ class GraphAlgosSpec extends AnyFunSuite {
     // number of supersteps. The whole graph needs ~8 supersteps at
     // sf0.001, the nregion scope 2. A first pass of each builds the
     // memoized edge hoist and node count, which are session pins, so
-    // the measured second pass excludes them.
-    val programs = Seq("call cc() yield id, comp\nreturn id, comp",
-      "call cc(\"nregion\") yield id, comp\nreturn id, comp")
-    programs.foreach(gql)
-    Ckpt.drain()
-    def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
-    val left = programs.map { p =>
-      val before = cachedRdds()
-      gql(p)
-      cachedRdds() - before
+    // the measured second pass excludes them. The gate is closed: under
+    // it the graph iterates on the driver, with no checkpoint at all.
+    closedGate {
+      val programs = Seq("call cc() yield id, comp\nreturn id, comp",
+        "call cc(\"nregion\") yield id, comp\nreturn id, comp")
+      programs.foreach(gql)
+      Ckpt.drain()
+      def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
+      val left = programs.map { p =>
+        val before = cachedRdds()
+        gql(p)
+        cachedRdds() - before
+      }
+      Ckpt.drain()
+      assert(left.forall(_ <= 2) && left.distinct.size == 1,
+        s"RDDs left cached per call (whole graph, nregion): $left")
     }
-    Ckpt.drain()
-    assert(left.forall(_ <= 2) && left.distinct.size == 1,
-      s"RDDs left cached per call (whole graph, nregion): $left")
   }
 
   test("call hits() leaves only the frames its result reads") {
@@ -633,6 +722,16 @@ class GraphAlgosSpec extends AnyFunSuite {
     val seeds = nodes.filter(col("id") === 0L)
       .select(col("id").as("seed"), col("id"), lit(0L).as("d"))
     fails("chain levels")(ga.multiSourceBfsLevels(seeds, undirected, 3, parts = 1, "chain levels"))
+    // the same kernels on the driver, under the broadcast gate
+    val local = version(0L until n, (0L until n - 1).map(i => (i, i + 1)))
+    assert(local.localEdges.isDefined && local.localNodes.isDefined)
+    fails("connected components")(ga.deltaCC(local, maxIters = 3))
+    for (weighted <- Seq(false, true)) {
+      fails(s"local search $weighted")(ga.hopDistances(local, 0L, weighted, 3,
+        s"local search $weighted"))
+      fails(s"local reach $weighted")(ga.reachDistances(local, 0L, weighted, 3,
+        s"local reach $weighted"))
+    }
 
     // SCC: each loop is exhausted on a graph that leaves the others short
     def scc(key: String, limit: Int, edges: Seq[(Long, Long)]): Unit = {
@@ -682,7 +781,12 @@ class GraphAlgosSpec extends AnyFunSuite {
     // it; an edge create makes a new edge map and exactly one new hoist.
     // A call also leaves its own drain-ledger frames (constant per call,
     // see the test above), so each delta is compared with a call on a
-    // version whose hoist already exists.
+    // version whose hoist already exists. The gate is closed: under it
+    // no hoist is built (see the next test).
+    closedGate(hoistPerVersion())
+  }
+
+  private def hoistPerVersion(): Unit = {
     val cc = "call cc() yield id, comp\nreturn id, comp"
     def cachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
     def run(g: PropertyGraph, nextId: Long, body: String): Engine.QueryResult = {
@@ -716,6 +820,61 @@ create (n) -[:tagged]-> (t)""")
     assert(set.graph.edges eq created.graph.edges)
     assert(added(set.graph) == perCall, "a node-only set must reuse the edge hoist")
     Ckpt.drain()
+  }
+
+  /** The jobs `body` runs and the RDDs it leaves stored. */
+  private def cost(body: => Any): (Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val count = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusProbe.flush(sc)
+    val stored = sc.getRDDStorageInfo.length
+    sc.addSparkListener(count)
+    try { body; ListenerBusProbe.flush(sc) }
+    finally sc.removeSparkListener(count)
+    (jobs.get, sc.getRDDStorageInfo.length - stored)
+  }
+
+  test("under the broadcast gate a call on a known edge version runs at most 3 jobs and pins nothing") {
+    // sf0.001 passes the default gate: a version's edges are collected
+    // once, and its calls iterate on the driver. A second call cc() and a
+    // call bfs on a node-only successor (same edge map) collect nothing
+    // and checkpoint nothing; what they run is their result.
+    def run(g: PropertyGraph, nextId: Long, body: String): Engine.QueryResult = {
+      val r = Engine.runSourceOn(spark, GraphLoader.headerGql + body, g, nextId,
+        Engine.Config(strict = false))
+      r.bindings.collect()
+      r
+    }
+    val cc = "call cc() yield id, comp\nreturn comp, count(id) as n"
+    val (g0, nextId) = GraphLoader.load(spark, dir)
+    run(g0, nextId, cc)
+    val second = cost(run(g0, nextId, cc))
+    assert(second._1 <= 3 && second._2 == 0, s"second call cc(): (jobs, stored RDDs) $second")
+    val set = run(g0, nextId, "match (p:part) where p.psize < 5 set p.psize = p.psize * 100 + 7")
+    assert(set.graph.edges eq g0.edges)
+    val bfs = cost(run(set.graph, set.nextId,
+      "call bfs(1000000000) yield id, dist\nreturn dist, count(id) as n"))
+    assert(bfs._1 <= 3 && bfs._2 == 0, s"call bfs on a node-only successor: (jobs, stored RDDs) $bfs")
+    Ckpt.drain()
+  }
+
+  test("a cap below the graph's size runs call cc() exactly as the closed gate does") {
+    // The sf0.001 hoist is ~78k cells: a 1000-cell cap fails the gate
+    // on the plan's size estimate, with no collect job. The first call
+    // under the small cap, which makes that decision, is compared with a
+    // second call under the closed gate: both read the version's hoist.
+    val cc = "call cc() yield id, comp\nreturn comp, count(id) as n"
+    closedGate(gql(cc))
+    Ckpt.drain()
+    val closed = closedGate(cost(gql(cc)))
+    Ckpt.drain()
+    spark.conf.set(Bcast.confKey, "1000")
+    val small = try cost(gql(cc)) finally spark.conf.unset(Bcast.confKey)
+    Ckpt.drain()
+    assert(small == closed, s"(jobs, stored RDDs) under a 1000-cell cap $small, closed gate $closed")
   }
 
   test("superstep partition knob rejects a bad value at entry, naming its key") {

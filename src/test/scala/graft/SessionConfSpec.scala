@@ -25,6 +25,15 @@ class SessionConfSpec extends AnyFunSuite {
 
   test("loops on two threads and on a second session agree with their single-threaded runs; session conf never moves") {
     val other = spark.newSession()
+    // the broadcast gate closed on both sessions: sf0.001 would otherwise
+    // run its cc and bfs loops on the driver, with no superstep to race
+    val sessions = Seq(spark, other)
+    sessions.foreach(_.conf.set(Bcast.confKey, "0"))
+    try concurrentLoops(other)
+    finally sessions.foreach(_.conf.unset(Bcast.confKey))
+  }
+
+  private def concurrentLoops(other: SparkSession): Unit = {
     // one list of runs per thread: the call door next to the library door
     val threads = Seq(
       Seq(spark -> "gql_call_cc", spark -> "gql_call_bfs"),

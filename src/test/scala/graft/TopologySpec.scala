@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ListenerBusProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.engine.PropertyGraph
 import graft.operators.Topology
 
@@ -38,5 +40,50 @@ class TopologySpec extends AnyFunSuite {
     assert(!(Topology(spark, newEdges, _ => true).undirected eq ue))
     // kept labels key the node artifacts
     assert(Topology(spark, g, _ => true, _ == "A").nNodes == 2)
+  }
+
+  test("the driver-side edges and node ids follow the hoist's keys and the gate's cap") {
+    import spark.implicits._
+    val tp = graft.lang.Typing.compile(
+      "(:A {})\n(:B {})\n(:A) -[:x]-> (:B)\n(:A) -[:y]-> (:B)\nmatch (a:A) return a\n")
+    val g = PropertyGraph(tp.schema,
+      Map("A" -> Seq(2L, 1L).toDF("id"), "B" -> Seq(20L, 10L).toDF("id")),
+      Map(("A", "x", "B") -> Seq((1L, 10L), (2L, 20L)).toDF("src", "dst"),
+        ("A", "y", "B") -> Seq((1L, 20L)).toDF("src", "dst")))
+    def pairs(t: Topology): Set[(Long, Long)] =
+      t.localEdges.get.pairs.grouped(2).map(p => (p(0), p(1))).toSet
+    val all = Topology(spark, g, _ => true)
+    val e = all.localEdges.get
+    assert(pairs(all) == Set((1L, 10L), (2L, 20L), (1L, 20L)))
+    assert(e.endpoints.toSeq == Seq(1L, 2L, 10L, 20L))
+    assert(all.localNodes.get.toSeq == Seq(1L, 2L, 10L, 20L), "sorted, distinct")
+    assert(Topology(spark, g, _ => true).localEdges.get eq e)
+    // a node-only successor keeps the edges, not the node ids
+    val nodeOnly = g.copy(nodes = g.nodes.updated("A", Seq(1L, 2L, 3L).toDF("id")))
+    assert(Topology(spark, nodeOnly, _ => true).localEdges.get eq e)
+    assert(Topology(spark, nodeOnly, _ => true).localNodes.get.toSeq == Seq(1L, 2L, 3L, 10L, 20L))
+    // another relation set collects its own edges
+    assert(pairs(Topology(spark, g, _ == "x")) == Set((1L, 10L), (2L, 20L)))
+    // the hoist is 3 edges × 2 orientations × 2 cells: 12 cells pass,
+    // 11 do not, and 0 closes the gate; none of the failures runs a job
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val count = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def under[A](cap: String)(body: => A): A = {
+      spark.conf.set(Bcast.confKey, cap)
+      try body finally spark.conf.unset(Bcast.confKey)
+    }
+    ListenerBusProbe.flush(sc)
+    sc.addSparkListener(count)
+    try {
+      assert(under("0")(all.localEdges.isEmpty && all.localNodes.isEmpty))
+      assert(under("11")(all.localEdges.isEmpty))
+      ListenerBusProbe.flush(sc)
+      assert(jobs.get == 0, s"a closed gate ran ${jobs.get} jobs")
+    } finally sc.removeSparkListener(count)
+    assert(under("12")(pairs(all)) == pairs(Topology(spark, g, _ => true)))
+    assert(!(under("12")(all.localEdges.get) eq e), "a new cap decides again")
   }
 }
