@@ -20,11 +20,8 @@ import java.nio.file.{Files, Paths}
   * output dir, a comma-separated list of `query:from-to` (1-based,
   * inclusive execution window; a query alone keeps all) and the data dir.
   * One session, queries in the given order, the Verify/Bench session
-  * settings at local[4] with the broadcast gate closed
-  * (`spark.graft.bcastRowCap` 0, so every gated join is planned shuffled
-  * and the cc and bfs/sssp kernels run their distributed superstep loops,
-  * which a graph this small would otherwise run on the driver), each
-  * query in its own checkpoint scope:
+  * settings at local[4], each query in its own checkpoint scope; the
+  * queries of [[driverKernels]] run with the broadcast gate closed:
   *
   *   java -cp <this compiled>:target/scala-2.13/classes:<spark jars>:<scala-library> \
   *     graft.SuperstepPlans out g_bfs:3-4,g_scc:37-38 /path/to/sf0.001
@@ -38,6 +35,16 @@ import java.nio.file.{Files, Paths}
   * the process id in temp names as `<pid>`. It is compiled with the test
   * sources. */
 object SuperstepPlans {
+  /** The queries whose cc or bfs/sssp kernel runs on the driver when the
+    * graph passes the broadcast gate ([[graft.operators.Topology]]), as
+    * any sf0.001 graph does. They run with the gate closed
+    * (`spark.graft.bcastRowCap` 0), so their dumps show the distributed
+    * superstep loops. Every other query runs at the default gate, so its
+    * gated joins plan as in dumps taken before the driver path existed. */
+  val driverKernels = Set("g_connected_components", "g_bfs", "g_sssp",
+    "gql_call_cc", "gql_call_cc_rel", "gql_call_bfs", "gql_call_bfs_rel",
+    "gql_call_sssp", "gql_call_sssp_rel", "gql_param_call", "gql_param_call_rel")
+
   def normalize(plan: String, paths: (String, String)*): String = {
     def renumber(s: String, re: scala.util.matching.Regex, fmt: Int => String): String = {
       val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
@@ -75,7 +82,6 @@ object SuperstepPlans {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
-      .config(Bcast.confKey, "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // (full dump, initial plan) per execution
@@ -96,6 +102,7 @@ object SuperstepPlans {
         case Array(n)    => (n, 1 to Int.MaxValue)
       }
       seen.clear()
+      if (driverKernels(name)) spark.conf.set(Bcast.confKey, "0") else spark.conf.unset(Bcast.confKey)
       var n = -1
       Ckpt.scope {
         SparkEntry.queries(name)(spark, dir).collect()

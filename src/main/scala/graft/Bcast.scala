@@ -25,11 +25,21 @@ import org.apache.spark.sql.functions.broadcast
   * degrades at proportionally fewer rows. Conf name kept for plan-test
   * compatibility; read it as "broadcast cell cap".
   *
-  * The same cap gates the driver-local loops ([[collected]]): a frame
-  * the engine would broadcast is a frame the driver may hold, so a graph
+  * The same cap gates the driver-local loops ([[collected]]): a graph
   * version whose undirected edge hoist fits the cap runs its cc and
   * bfs/sssp recurrences on the driver ([[graft.operators.Topology]]).
-  * A cap of 0 closes both gates.
+  * Here the cap is a driver memory budget, not a speed crossover: none
+  * was found. On 4 vCPUs (local[4], 10 alternating fresh-JVM pairs per
+  * size, `plans/pr17/README.md`) the driver loops were faster in every
+  * pair at sf0.001, sf0.01 and sf0.1, whose 7.86M hoist cells are twice
+  * the default cap: at sf0.1 a first cc took 13.3 s against 25.3 s and
+  * bfs on the same version 4.6 s against 12.3 s (medians); at the two
+  * smaller sizes the driver was 3.5-10× faster. What grows with the
+  * version is the driver's heap: at the default cap one version holds up
+  * to 16 MB of edges, 16 MB of their endpoints and 16 MB of node ids,
+  * and a running kernel about as much again in its adjacency; a session
+  * keeps at most twice the cap's cells of such arrays. A cap of 0 closes
+  * both gates.
   */
 object Bcast {
   val confKey = "spark.graft.bcastRowCap"
@@ -53,16 +63,26 @@ object Bcast {
     * (Spark sizes a row of n longs at 8·(n + 1) bytes). The estimate is
     * the lesser of the plan's statistics and the bytes its leaves read:
     * Spark estimates a join at the product of its sides, so a mutated
-    * edge relation with a cross join in its plan reads as terabytes.
-    * Otherwise one collect ([[GraftShim.collectLongs]]) reads at most
-    * one row more than allowed, so it both measures the frame and loads
-    * it. */
+    * edge relation with a cross join in its plan reads as terabytes. A
+    * cache the plan reads is built first ([[GraftShim.buildCaches]]): an
+    * unbuilt cache is estimated at its compressed files, which put the
+    * sf0.1 edges (≈2M) at a quarter of their rows, under the cap, and
+    * cost a 1M-row collect that was thrown away. Otherwise one collect
+    * ([[GraftShim.collectLongs]]) reads at most one row more than
+    * allowed, so it both measures the frame and loads it. */
   def collected(df: DataFrame, copies: Int): Option[Array[Long]] = {
     val width = math.max(1, df.schema.size)
     val rows = math.min(cap(df.sparkSession) / (copies.toLong * width), Int.MaxValue / width - 1L)
-    val plan = df.queryExecution.optimizedPlan
-    val bytes = plan.stats.sizeInBytes.min(plan.collectLeaves().map(_.stats.sizeInBytes).sum)
-    if (rows <= 0 || bytes / (8 * (width + 1)) > rows) None
+    if (rows <= 0 || estimatedRows(df) > rows) None
     else Some(GraftShim.collectLongs(df.limit(rows.toInt + 1))).filter(_.length <= rows * width)
+  }
+
+  /** `df`'s rows as its plan's size estimate puts them ([[collected]]). */
+  private def estimatedRows(df: DataFrame): BigInt = {
+    val plan = df.queryExecution.optimizedPlan
+    GraftShim.buildCaches(plan)
+    plan.invalidateStatsCache()
+    plan.stats.sizeInBytes.min(plan.collectLeaves().map(_.stats.sizeInBytes).sum) /
+      (8 * (math.max(1, df.schema.size) + 1))
   }
 }

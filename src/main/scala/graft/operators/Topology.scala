@@ -28,13 +28,18 @@ import graft.engine.PropertyGraph
   * its memo entry ([[Ckpt]]); callers must not drop them.
   *
   * A version whose undirected hoist passes the broadcast gate
-  * ([[Bcast.collected]]) is held on the driver instead: its kept edges
-  * ([[localEdges]], per edge version) and node ids ([[localNodes]], per
-  * node version) are collected once under the same keys and lifetime,
-  * plus the cap they were decided under, so a session whose cap changes
-  * decides again. The cc and bfs/sssp kernels then iterate over these
-  * arrays, and such a version builds neither [[undirected]] nor
-  * [[endpoints]]. */
+  * ([[Bcast.collected]]; a driver memory budget, as no speed crossover
+  * was found up to twice the default cap, see [[Bcast]]) is held on the
+  * driver instead: its kept edges ([[localEdges]], per edge version) and
+  * node ids ([[localNodes]], per node version). The decision is memoized
+  * under the same keys plus the cap it was taken under, so a session
+  * whose cap changes decides again. The arrays are not memo entries:
+  * they live in the session's [[Topology.Held]] store, which keeps at
+  * most twice the cap's cells (64 MB at the default cap) across all
+  * versions and drops the least recently read first; a dropped version
+  * collects again when it is read again. The cc and bfs/sssp kernels
+  * then iterate over these arrays, and such a version builds neither
+  * [[undirected]] nor [[endpoints]]. */
 final class Topology private (s: SparkSession, g: PropertyGraph,
     rels: Set[(String, String, String)], labels: Set[String]) {
   private val edgeKey = (new Topology.GraphKey(g.edges), rels)
@@ -72,14 +77,17 @@ final class Topology private (s: SparkSession, g: PropertyGraph,
     * broadcast gate; `None` above it. An edge with a null endpoint is
     * left out: it joins nothing in the distributed loops either. */
   def localEdges: Option[Topology.Edges] = onEdges(("localEdges", Bcast.cap(s))) {
-    Bcast.collected(edges.na.drop(), copies = 2).map(new Topology.Edges(_))
-  }
+    new Topology.Local(s, () => Bcast.collected(edges.na.drop(), copies = 2)
+      .map(new Topology.Edges(_)))(_.cells)
+  }.get
 
-  /** The kept node ids on the driver, sorted and distinct, when they fit
-    * the broadcast gate; `None` above it. */
+  /** The kept node ids on the driver, sorted and distinct, when twice
+    * their count fits the broadcast gate (so one version's arrays take at
+    * most 1.5 caps of cells); `None` above it. */
   def localNodes: Option[Array[Long]] = onNodes(("localNodes", Bcast.cap(s))) {
-    Bcast.collected(nodes.na.drop(), copies = 1).map(Topology.sortedDistinct)
-  }
+    new Topology.Local(s, () => Bcast.collected(nodes.na.drop(), copies = 2)
+      .map(Topology.sortedDistinct))(_.length.toLong)
+  }.get
 
   /** Both orientations of [[edges]] (2·|E| rows), hash-partitioned by
     * src and checkpointed: the loop-invariant frame every label and
@@ -120,7 +128,59 @@ object Topology {
   final class Edges(val pairs: Array[Long]) {
     /** The distinct endpoints, sorted. */
     lazy val endpoints: Array[Long] = sortedDistinct(pairs)
+
+    /** The cells these arrays may take: the pairs and, once read, at
+      * most as many endpoints. */
+    def cells: Long = 2L * pairs.length
   }
+
+  /** One session's driver arrays ([[Local]]), least recently read first.
+    * Once they take more than twice the broadcast cap's cells, the
+    * oldest are dropped; the entry just stored stays. */
+  private final class Held {
+    private val lru = new java.util.LinkedHashMap[AnyRef, (AnyRef, Long)](16, 0.75f, true)
+    private var cells = 0L
+
+    def get(k: AnyRef): Option[AnyRef] = synchronized(Option(lru.get(k)).map(_._1))
+
+    def put(s: SparkSession, k: AnyRef, v: AnyRef, n: Long): Unit = synchronized {
+      Option(lru.put(k, (v, n))).foreach(cells -= _._2)
+      cells += n
+      val it = lru.entrySet.iterator
+      while (cells > 2 * Bcast.cap(s) && it.hasNext) {
+        val e = it.next()
+        if (e.getKey ne k) { cells -= e.getValue._2; it.remove() }
+      }
+    }
+
+    /** The cells held, for tests. */
+    def size: Long = synchronized(cells)
+  }
+
+  /** One version's driver array under the gate: whether it fits is
+    * decided once, by the first `load`; the array itself lives in the
+    * session's [[Held]] store and is loaded again if the store dropped
+    * it. */
+  private final class Local[A <: AnyRef](s: SparkSession, load: () => Option[A])(cells: A => Long) {
+    private var over = false
+
+    def get: Option[A] = synchronized {
+      if (over) None
+      else held(s).get(this).map(_.asInstanceOf[A]).orElse {
+        val v = load()
+        v match {
+          case Some(a) => held(s).put(s, this, a, cells(a))
+          case None    => over = true
+        }
+        v
+      }
+    }
+  }
+
+  private def held(s: SparkSession): Held = Ckpt.memo(s, "Topology.held")(new Held)
+
+  /** The cells of driver arrays `s` holds ([[Held]]). */
+  private[graft] def heldCells(s: SparkSession): Long = held(s).size
 
   /** `a`'s distinct values in ascending order, in a new array. */
   private def sortedDistinct(a: Array[Long]): Array[Long] = {

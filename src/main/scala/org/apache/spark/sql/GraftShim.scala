@@ -48,6 +48,16 @@ object GraftShim {
       }.collect().flatten
   }
 
+  /** Builds every cached relation `plan` reads that is not built yet, so
+    * its statistics count the cache's rows and bytes instead of
+    * estimating them from the compressed files under it. A plan that
+    * reads the cache builds it anyway; this only runs that build first. */
+  def buildCaches(plan: LogicalPlan): Unit = plan.collectLeaves().foreach {
+    case r: execution.columnar.InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+      r.cacheBuilder.cachedColumnBuffers.count()
+    case _ =>
+  }
+
   /** The RDD behind a (local)checkpointed Dataset: its LogicalRDD leaf's. */
   def checkpointRdd(ds: Dataset[_]): Option[RDD[_]] =
     Some(ds.queryExecution.analyzed).collect { case lr: execution.LogicalRDD => lr.rdd }

@@ -85,5 +85,18 @@ class TopologySpec extends AnyFunSuite {
     } finally sc.removeSparkListener(count)
     assert(under("12")(pairs(all)) == pairs(Topology(spark, g, _ => true)))
     assert(!(under("12")(all.localEdges.get) eq e), "a new cap decides again")
+    // the session's driver arrays take at most twice the cap's cells:
+    // under a 12-cell cap two versions' edges (12 cells each, with their
+    // endpoints) fit, a third drops the least recently read, and a
+    // dropped version collects its equal edges again
+    under("12") {
+      val vs = (1 to 3).map(_ => Topology(spark, g.copy(edges = g.edges.toSeq.toMap), _ => true))
+      val first = vs.map(_.localEdges.get)
+      assert(Topology.heldCells(spark) == 24)
+      val again = vs.head.localEdges.get
+      assert(!(again eq first.head) && again.pairs.toSeq == first.head.pairs.toSeq)
+      assert(vs.last.localEdges.get eq first.last)
+      assert(Topology.heldCells(spark) == 24)
+    }
   }
 }
